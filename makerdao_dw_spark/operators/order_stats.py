@@ -91,6 +91,13 @@ _PARALLEL_INPUT_BYTES = 512 * (1 << 20)
 # pin the choice): "true"/"false", anything else/absent = auto.
 _PARALLEL_CONF = "spark.makerdao.rank.parallel"
 
+# monotonically_increasing_id() packs (partition id, position) as
+# pid * 2^33 + position, so the local ordinal mid - (pid << 33) is exact
+# only below 2^33 rows per range partition; past it the position spills
+# into the partition-id bits and ranks go silently wrong.
+_ORDINAL_BITS = 33
+_MAX_PARTITION_ROWS = 1 << _ORDINAL_BITS
+
 
 def use_parallel(
     spark: SparkSession,
@@ -198,25 +205,36 @@ def global_row_number(
     w_all = Window.orderBy(pid).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
+    # The ordinal bound is checked inside the offset column itself (an
+    # unused check column would be pruned): the broadcast of this
+    # <= #partitions-row frame evaluates it, with no extra job.
     offs = counts.select(
         pid,
-        F.coalesce(F.sum(cnt).over(w_prev), F.lit(0)).alias(off),
+        F.when(
+            F.col(cnt) >= F.lit(_MAX_PARTITION_ROWS),
+            F.raise_error(
+                F.lit(
+                    f"global_row_number: a range partition holds >= "
+                    f"{_MAX_PARTITION_ROWS} rows, past the exact range "
+                    "of the monotonically_increasing_id local ordinal"
+                )
+            ),
+        )
+        .otherwise(F.coalesce(F.sum(cnt).over(w_prev), F.lit(0)))
+        .alias(off),
         F.sum(cnt).over(w_all).alias(tot),
     )
-    ranked = (
+    return (
         base.join(F.broadcast(offs), pid)
         .withColumn(
             rank_col,
             F.col(mid)
-            - F.shiftleft(F.col(pid).cast("long"), 33)
+            - F.shiftleft(F.col(pid).cast("long"), _ORDINAL_BITS)
             + F.col(off)
             + F.lit(1),
         )
-        .drop(pid, mid, off)
+        .select(*df.columns, rank_col, *([total_col] if total_col else []))
     )
-    if total_col is None:
-        ranked = ranked.drop(tot)
-    return ranked
 
 
 def _idiv(a: Column, b: Column) -> Column:

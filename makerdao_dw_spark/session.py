@@ -10,6 +10,7 @@ engines and clusters.
 from __future__ import annotations
 
 import os
+import stat
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,15 +88,18 @@ def ship_package(spark: SparkSession) -> None:
     if key in _PKG_SHIPPED:
         return
     import shutil
-    import tempfile
+
+    from pyspark import SparkFiles
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # per-process archive dir: a fixed shared path races concurrent
-    # processes (one truncates the zip while another's addPyFile copy is
-    # in flight -> executors unzip a corrupt archive)
-    stem = os.path.join(
-        tempfile.mkdtemp(prefix="makerdao_dw_spark_pyfiles_"), "pkg"
-    )
+    # The archive is built inside the context's own SparkFiles root: a
+    # per-context dir (a fixed shared path races concurrent processes —
+    # one truncates the zip while another's addPyFile copy is in flight)
+    # that Spark deletes when the context stops, so no temp dir outlives
+    # the session. addPyFile's fetch into that root finds the file
+    # already in place; a cluster's executors fetch it through the
+    # context's file server for as long as the context lives.
+    stem = os.path.join(SparkFiles.getRootDirectory(), "makerdao_dw_spark_pkg")
     zip_path = shutil.make_archive(
         stem, "zip", root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir)
     )
@@ -249,6 +253,47 @@ def pandas_group_buckets(spark: SparkSession) -> int:
 _AUTO_SPREAD_BYTES = 48_000_000
 
 
+# Resolved base relations are cached per session (see load_table):
+# entries live in this attribute of the SparkSession object itself, so
+# they die with the session. A module-level WeakKeyDictionary keyed on
+# the session would never let go of it — every cached DataFrame holds
+# a strong reference back to its session.
+_TABLE_CACHE_ATTR = "_makerdao_table_cache"
+# Entries per session, oldest evicted first: the testdata catalog needs
+# at most 10 tables x 2 spread modes per sf dir, and a test run over
+# many tmp dirs must not grow the dict without bound.
+_TABLE_CACHE_MAX = 64
+
+
+def _input_signature(path: str) -> tuple | None:
+    """Cheap on-disk identity of a table input, compared on every cached
+    load: (inode, size, mtime_ns, ctime_ns) of a single file; for a
+    directory the sorted (relative path, inode, size, mtime_ns,
+    ctime_ns) of every data file under it (Spark's hidden-file rule:
+    names starting with "_" or "." are skipped). A rewrite, an added or
+    a removed file changes it; ctime also catches a same-size copy that
+    preserved the old mtime (cp -p).
+    None when the path cannot be stat'ed (missing, or a URI such as
+    s3a://): such loads bypass the cache."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for n in files:
+                if n.startswith(("_", ".")):
+                    continue
+                f = os.path.join(root, n)
+                fs = os.stat(f)
+                sig.append((os.path.relpath(f, path), fs.st_ino, fs.st_size,
+                            fs.st_mtime_ns, fs.st_ctime_ns))
+        return tuple(sorted(sig))
+    except OSError:
+        return None
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
 ) -> DataFrame:
@@ -258,6 +303,15 @@ def load_table(
     CPU-heavy stages. Default (None) = auto: spread only when the file
     is big enough to matter but is a single unsplittable row group.
     Tiny dimensions stay single-partition (they broadcast anyway).
+
+    The resolved relation is cached per session, keyed by (absolute
+    path, resolved spread); each entry carries the input's on-disk
+    signature (_input_signature) and is rebuilt when that changed. A
+    hit skips the schema-inference job of spark.read.parquet, the
+    footer probe and the timestamp rewrites. Only the lazy relation is
+    cached, never results: nothing here persists or collects it, so
+    every query still scans the current files. Paths that cannot be
+    stat'ed (URIs) always take the uncached path.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Micros-NTZ parquet must surface as plain TIMESTAMP at the SCAN (not
@@ -267,6 +321,20 @@ def load_table(
     # what the DuckDB oracle reads.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    if spread is None:
+        try:
+            spread = os.path.getsize(path) > _AUTO_SPREAD_BYTES
+        except OSError:
+            spread = False
+    key = (os.path.abspath(path), spread)
+    # taken BEFORE the read: a file replaced mid-read leaves a stale
+    # signature, so the next load misses instead of trusting the entry
+    sig = _input_signature(path)
+    if sig is not None:
+        with _MATERIALIZED_LOCK:
+            hit = spark.__dict__.get(_TABLE_CACHE_ATTR, {}).get(key)
+        if hit is not None and hit[0] == sig:
+            return hit[1]
     df = spark.read.parquet(path)
     for c in _NANO_TS_COLUMNS.get(name, ()):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
@@ -275,11 +343,6 @@ def load_table(
     for c, t in df.dtypes:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if spread is None:
-        try:
-            spread = os.path.getsize(path) > _AUTO_SPREAD_BYTES
-        except OSError:
-            spread = False
     # spread exists to parallelize inputs the SCAN cannot split (the
     # testdata ships single-file single-row-group tables). When the
     # input is already a multi-file directory with at least as many
@@ -288,36 +351,48 @@ def load_table(
     # measured at sf10 (28-file lineitem): q1 9.7 s -> 15.0 s with an
     # unconditional spread (r11). Gate on the split count so the same
     # query code is optimal at every scale.
-    if spread and _scan_splits(path) < spark.sparkContext.defaultParallelism:
+    if spread and _scan_splits(spark, path, sig) < spark.sparkContext.defaultParallelism:
         df = df.repartition(spark.sparkContext.defaultParallelism)
+    if sig is not None:
+        with _MATERIALIZED_LOCK:
+            entries = spark.__dict__.setdefault(_TABLE_CACHE_ATTR, {})
+            entries.pop(key, None)
+            entries[key] = (sig, df)
+            while len(entries) > _TABLE_CACHE_MAX:
+                del entries[next(iter(entries))]
     return df
 
 
-def _scan_splits(path: str) -> int:
+def _scan_splits(spark: SparkSession, path: str, sig: tuple | None) -> int:
     """Lower bound on the scan's split count: the number of data files
-    in a directory (each file is at least one split), and for a SINGLE
-    file its parquet row-group count read from the footer (r12, VERDICT
-    r11 item 8: a big single-file table with many row groups splits by
-    maxPartitionBytes on its own, so spreading it would add a pure
-    extra shuffle — the count-files-only probe assumed 1 and spread
-    it). The footer read is one metadata fetch, no data pages."""
+    in a directory (each file is at least one split), taken from its
+    _input_signature `sig` (None: unknown, so 1). For a SINGLE
+    file, Spark cuts the file into byte ranges of maxSplitBytes
+    (FilePartition.maxSplitBytes: min(maxPartitionBytes,
+    max(openCostInBytes, bytes per core))) and each range reads the
+    row groups whose midpoint it holds, so the count is
+    min(row groups, ceil(size / maxSplitBytes)), with the row-group
+    count read from the parquet footer (one metadata fetch, no data
+    pages). A big file with many row groups splits on its own, so
+    spreading it would add a pure extra shuffle (VERDICT r11 item 8);
+    a small file with many tiny row groups is ONE split and still
+    needs the spread."""
     if os.path.isdir(path):
-        try:
-            return sum(
-                1
-                for n in os.listdir(path)
-                if not n.startswith(("_", "."))
-            ) or 1
-        except OSError:
-            return 1
+        return max(len(sig or ()), 1)
     try:
         import pyarrow.parquet as pq
 
-        return max(pq.ParquetFile(path).metadata.num_row_groups, 1)
+        row_groups = pq.ParquetFile(path).metadata.num_row_groups
+        size = os.path.getsize(path)
     except Exception:
         # unreadable footer / pyarrow absent: the conservative answer
         # is 1 (spread) — a needless exchange beats a one-core scan
         return 1
+    max_part = _mem_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = _mem_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
+    per_core = (size + open_cost) // max(spark.sparkContext.defaultParallelism, 1)
+    split_bytes = max(min(max_part, max(open_cost, per_core)), 1)
+    return max(min(row_groups, -(-size // split_bytes)), 1)
 
 
 def query_table(

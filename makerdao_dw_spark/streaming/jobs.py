@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 from typing import Iterator
 
@@ -178,6 +179,9 @@ def _drain(
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
         )
+        # the memory sink holds the result; a finished drain is never
+        # resumed, so its checkpoint is dead weight in the temp dir
+        shutil.rmtree(ckpt, ignore_errors=True)
     return sdf.sparkSession.table(name)
 
 

@@ -34,25 +34,20 @@ ORDER = lambda: [F.col("score").desc_nulls_last(), F.col("doc_id").asc_nulls_las
 @pytest.mark.parametrize("n", [0, 1, 5, 1000])
 def test_global_row_number_matches_window(spark, n):
     df = _sample(spark, n)
-    got = {
-        r["doc_id"]: (r["rk"], r["n_all"])
-        for r in global_row_number(df, ORDER(), "rk", total_col="n_all").collect()
-    }
+    par = global_row_number(df, ORDER(), "rk", total_col="n_all")
+    got = {r["doc_id"]: (r["rk"], r["n_all"]) for r in par.collect()}
     w = Window.orderBy(*ORDER())
-    want = {
-        r["doc_id"]: (r["rk"], r["n_all"])
-        for r in df.withColumn("rk", F.row_number().over(w))
-        .withColumn(
-            "n_all",
-            F.count(F.lit(1)).over(
-                Window.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-        .collect()
-    }
+    ref = df.withColumn("rk", F.row_number().over(w)).withColumn(
+        "n_all",
+        F.count(F.lit(1)).over(
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ),
+    )
+    want = {r["doc_id"]: (r["rk"], r["n_all"]) for r in ref.collect()}
     assert got == want
+    # both forms emit the same columns in the same order
+    window = global_row_number(df, ORDER(), "rk", total_col="n_all", parallel=False)
+    assert par.columns == window.columns == ref.columns
 
 
 def test_global_row_number_nulls_last(spark):
@@ -85,6 +80,18 @@ def test_global_ntile_matches_window(spark, n, k):
         dict(global_ntile(df, ORDER(), k, "tile").dtypes)["tile"]
         == dict(df.withColumn("tile", F.ntile(k).over(Window.orderBy(*ORDER()))).dtypes)["tile"]
     )
+
+
+def test_partition_rows_past_ordinal_range_fail_loudly(spark, monkeypatch):
+    """A range partition at or past the local ordinal's exact range
+    (2^33 rows; patched down to 4 here) must raise, not rank wrong."""
+    from makerdao_dw_spark.operators import order_stats
+
+    monkeypatch.setattr(order_stats, "_MAX_PARTITION_ROWS", 4)
+    with pytest.raises(Exception, match="past the exact range"):
+        global_row_number(_sample(spark, 1000), ORDER(), "rk").collect()
+    monkeypatch.undo()
+    assert global_row_number(_sample(spark, 1000), ORDER(), "rk").count() == 1000
 
 
 def test_scratch_names_avoid_caller_columns(spark):

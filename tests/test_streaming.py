@@ -394,3 +394,17 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     out = _drain(deduped.select("event_id"), "append")
     got = sorted(r.event_id for r in out.collect())
     assert got == [1, 2, 3], got
+
+
+def test_drain_leaves_no_temp_entries(spark, sf_dir):
+    """A finished drain removes its checkpoint dir: the temp dir holds
+    the same entries after a drain as before it."""
+    import tempfile
+
+    from makerdao_dw_spark.streaming.jobs import run_windowed_counts
+
+    tmp = tempfile.gettempdir()
+    run_windowed_counts(spark, sf_dir).collect()  # lazily created dirs settle
+    before = set(os.listdir(tmp))
+    assert run_windowed_counts(spark, sf_dir).count() > 0
+    assert set(os.listdir(tmp)) ^ before == set()
