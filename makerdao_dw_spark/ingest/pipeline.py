@@ -209,8 +209,6 @@ def demux_and_write(
     loop serializes hundreds of fixed per-job overheads while the
     cluster idles. The cached raw frame is materialized ONCE up front so
     concurrent jobs read the cache instead of racing to populate it."""
-    spark = raw_logs.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     raw = raw_logs.persist()
     try:
         raw.count()  # materialize the cache before fan-out
@@ -227,7 +225,9 @@ def demux_and_write(
                 # data files cannot be read back schemalessly); the
                 # reference instead pre-creates empty tables via DDL
                 if n > 0:
-                    decoded.write.mode("overwrite").partitionBy("block_range").parquet(path)
+                    decoded.write.mode("overwrite").option(
+                        "partitionOverwriteMode", "dynamic"
+                    ).partitionBy("block_range").parquet(path)
                 return spec.table, n
             finally:
                 decoded.unpersist()

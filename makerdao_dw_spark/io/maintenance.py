@@ -103,7 +103,6 @@ def compact_table(
         df.coalesce(int(n_out)).write.mode("overwrite").parquet(path + "_compacted")
         _swap(path, path + "_compacted")
     else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Per-partition-value split counts from on-disk bytes: hashing by
         # partition_col ALONE routes each value to one task, so an
         # oversized partition could never split below target size. The
@@ -130,9 +129,9 @@ def compact_table(
         )
         salted.repartition(
             max(int(n_out), 1), F.col(partition_col), F.col("__salt")
-        ).drop("__salt").write.mode("overwrite").partitionBy(partition_col).parquet(
-            path + "_compacted"
-        )
+        ).drop("__salt").write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(path + "_compacted")
         _swap(path, path + "_compacted")
     after = table_layout_stats(spark, path)
     return {"before": before, "after": after}

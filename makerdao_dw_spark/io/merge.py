@@ -33,14 +33,15 @@ def merge_into_partitioned(
     import os
 
     spark = updates.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
     # explicit existence check, NOT try/except: a transient read failure
     # must fail the merge loudly — swallowing it would take the
     # first-write branch and dynamic-overwrite every touched partition
     # with ONLY the update rows, silently deleting pre-existing data
     if not os.path.isdir(target_path):
-        updates.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
+        updates.write.partitionBy(partition_col).mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(target_path)
         return
     target = spark.read.parquet(target_path).filter(F.col(partition_col).isin(touched))
     merged = merge_dataframes(target, updates, keys)
@@ -48,4 +49,4 @@ def merge_into_partitioned(
     # reads the same files the overwrite is about to replace.
     merged.localCheckpoint(eager=True).write.partitionBy(partition_col).mode(
         "overwrite"
-    ).parquet(target_path)
+    ).option("partitionOverwriteMode", "dynamic").parquet(target_path)

@@ -58,12 +58,10 @@ bit-identical to ``F.ntile`` by tests/test_order_stats.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize_lazy
+from ..session import input_bytes, materialize_lazy
 
 __all__ = [
     "global_row_number",
@@ -118,19 +116,8 @@ def use_parallel(
         v = ""
     if v in ("true", "false"):
         return v == "true"
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(path, n))
-                for n in os.listdir(path)
-                if not n.startswith(("_", "."))
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return True
-    return size > threshold_bytes
+    size = input_bytes(sf_dir, table)
+    return size is None or size > threshold_bytes
 
 
 def _scratch(df: DataFrame, stem: str) -> str:

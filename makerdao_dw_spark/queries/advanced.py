@@ -16,13 +16,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
-from ..session import configure, load_table, pandas_group_buckets, query_table
+from ..session import load_table, pandas_group_buckets
 from .registry import query
 
 DEC = DecimalType(38, 6)
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -91,7 +88,7 @@ def asof_join_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL-key states excluded too: the window PARTITIONS BY key, and
     # Spark groups NULL keys into one partition — a NULL-user state
     # would match a NULL-custkey probe, which join equality never does
-    e = configure(spark) and load_table(spark, sf_dir, "events", spread=False)
+    e = load_table(spark, sf_dir, "events", spread=False)
     e = e.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull()).select(
         F.col("user_id").alias("k"),
         F.col("ts").alias("t"),
@@ -100,7 +97,7 @@ def asof_join_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("last_event_type"),
         F.lit(None).cast("long").alias("o_orderkey"),
     )
-    o = configure(spark) and load_table(spark, sf_dir, "orders", spread=False)
+    o = load_table(spark, sf_dir, "orders", spread=False)
     o = o.select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
@@ -182,7 +179,7 @@ ORDER BY user_id, session_id
     tags=("session", "B11", "B12"),
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     flagged = e.withColumn("prev_ts", F.lag("ts").over(w)).withColumn(
         "new_session",
@@ -223,7 +220,7 @@ ORDER BY user_id
     tags=("pivot",),
 )
 def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     kinds = ["click", "view", "purchase", "signup", "error"]
     return (
         e.groupBy("user_id")
@@ -253,7 +250,7 @@ ORDER BY o_orderpriority
     tags=("percentile",),
 )
 def percentile_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -283,8 +280,8 @@ ORDER BY nation
     tags=("stringagg", "collect"),
 )
 def ordered_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    c = load_table(spark, sf_dir, "customer")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
     return (
         c.join(n, c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
@@ -318,7 +315,7 @@ def minby_maxby_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_by/max_by: deterministic because (o_totalprice, o_orderkey)
     pairs are unique per customer in this data; arg_min on the unique
     orderkey is always deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(
@@ -346,7 +343,7 @@ ORDER BY user_id
     tags=("firstlast", "nth"),
 )
 def first_last_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -386,7 +383,7 @@ ORDER BY event_id
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXTRACT(dow): DuckDB numbers Sunday=0..Saturday=6; Spark's dayofweek
     is Sunday=1..7, so subtract 1 to align."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.date_trunc("day", "ts").alias("day_start"),
@@ -430,7 +427,7 @@ def secondary_sort_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     n = spark.sparkContext.defaultParallelism
     part = ev.repartition(n, "user_id").sortWithinPartitions("user_id", "ts", "event_id")
 
@@ -570,7 +567,7 @@ def event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropping them. The Spark path-string is built with array_sort over
     (ts, event_id, sym) structs + array_join — no UDF, no
     MATCH_RECOGNIZE engine needed for linear-pattern funnels."""
-    return _pattern_match_frame(_t(spark, sf_dir, "events"), _PATH_CAP)
+    return _pattern_match_frame(load_table(spark, sf_dir, "events"), _PATH_CAP)
 
 
 # --------------------------------------------------------------------------
@@ -641,12 +638,12 @@ def cogroup_order_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets = pandas_group_buckets(spark)
     # NULL entity keys excluded (matches the oracle's declared domain;
     # pandas groupby would silently drop the NaN key anyway)
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull()).select(
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull()).select(
         F.col("user_id").alias("k"),
         "ts",
         F.pmod(F.hash(F.col("user_id")), F.lit(n_buckets)).alias("b"),
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull()).select(
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull()).select(
         F.col("o_custkey").alias("k"),
         "o_orderdate",
         F.pmod(F.hash(F.col("o_custkey")), F.lit(n_buckets)).alias("b"),
@@ -731,7 +728,6 @@ def asof_backward_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same 100 TB shape as the forward as-of: one hash exchange on the
     key, one sort, linear — no per-probe range scan."""
-    configure(spark)
     # untimestamped events excluded; a NULL-t PROBE would sort NULLS
     # FIRST with the whole partition in its following frame — nulled
     # out explicitly below (no "as of" point)

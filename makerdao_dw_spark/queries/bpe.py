@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, materialize, materialize_lazy
+from ..session import load_table, materialize, materialize_lazy
 from .registry import query
 from .text_common import tokens_arr, tokens_arr_duck
 
@@ -149,7 +149,7 @@ def _spark_train(spark: SparkSession, sf_dir: str, words: DataFrame | None = Non
     vocabulary cache (one TakeOrdered job per step, no eager count,
     no BroadcastExchange build)."""
     if words is None:
-        d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+        d = load_table(spark, sf_dir, "documents", spread=True)
         words = (
             d.select(F.explode(tokens_arr("text")).alias("word"))
             .groupBy("word")
@@ -262,7 +262,7 @@ def bpe_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a (lang x vocab)-sized rollup of it (SUM over lang) — feeding
     the trainer its own tokenize would re-explode the same corpus a
     second time for zero information."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     langw = materialize(
         d.select("lang", F.explode(tokens_arr("text")).alias("word"))
         .groupBy("lang", "word")

@@ -32,10 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 
-_t = query_table
 
 _K_ANON = 5
 _QID_BUCKET = 50  # n_chars quantized to 50-char buckets as the third QID
@@ -77,7 +76,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     would drop. Two chained integer aggregations (QID groups, then the
     stratum rollup) — one shuffle each, the second over group-count
     cardinality; the fact table is touched once."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     qid = d.select(
         "lang",
         "source",
@@ -154,7 +153,7 @@ def dp_noised_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside for the oracle check — a real release would drop it.
     Map-side noise over a source-cardinality count table: one shuffle
     total at any scale."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_true"))
     draw = counts.withColumn("u", F.expr(_U_SPARK) - 0.5)
     noise = (
@@ -212,7 +211,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast 1-row aggregate and everything after the single count
     shuffle is arithmetic. exp_share > 0 always (digit >= 1), so the
     chi2 denominator never vanishes on a non-empty corpus."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     digits = o.filter(F.col("o_totalprice") > 0).select(
         F.floor(
             F.col("o_totalprice")

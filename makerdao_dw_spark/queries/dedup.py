@@ -32,7 +32,7 @@ from ..operators.text_features import (
     shingles_sql_duckdb,
     sorted_pairs_expr,
 )
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 from .similarity import (
     _NORM_POS_DUCK,
@@ -64,7 +64,7 @@ ORDER BY content_hash
     tags=("dedup", "B7"),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash"))
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -101,7 +101,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no byte-exact dups — the check then covers every doc's
     normalization). Same 100 TB shape as dedup_exact: normalization is
     map-side codegen, then ONE shuffle on a uniform 128-bit key."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     return (
         d.select(
             "doc_id",
@@ -152,7 +152,7 @@ ORDER BY doc_a, doc_b
 def _lsh_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared shingle→minhash→band pipeline: one scan, signatures
     computed exactly once, one (doc_id, band, h) row per band."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sigs = d.select("doc_id", shingles_expr("text").alias("shingles")).select(
         "doc_id", minhash_signature("shingles", NUM_HASHES).alias("sig")
     )
@@ -315,7 +315,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (theta) join anywhere — at 100 TB the cost is |candidates| * set
     intersection, never O(N^2). (A brute-force probe variant lives in
     tests/ as the oracle-of-the-oracle.)"""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sh = d.select("doc_id", F.array_distinct(shingles_expr("text")).alias("sset"))
     cand = _lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     inter = F.size(F.array_intersect(F.col("a.sset"), F.col("b.sset")))
@@ -411,7 +411,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import _dot_expr
 
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     # zero-norm vectors excluded: cosine undefined, and the division
     # throws under Spark's default ANSI mode (oracle filters identically)
     from ..session import materialize
@@ -542,7 +542,7 @@ def dedup_embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..session import materialize
     from .similarity import _dot_expr
 
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     band_arr = "array(" + ", ".join(
         _srp_band_spark("embedding", k * _EC_PLANES_PER_BAND, _EC_PLANES_PER_BAND)
         for k in range(_EC_BANDS)
@@ -654,7 +654,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fold from hex digits); semantics additionally pinned in
     tests/test_extensions.py against a pure-python reference.
     """
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sim = d.select("doc_id", F.expr(_SIMHASH_SPARK).alias("simhash"))
     return sim.select(
         "doc_id",
@@ -752,7 +752,6 @@ def near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata joins hit the slim (doc_id, source) projection — broadcast
     at dimension size, hash join on the uniform doc key otherwise; the
     rollup is |source-pairs|-sized."""
-    configure(spark)
     # unsorted pairs: the joins and rollup destroy any ordering, so the
     # registered dedup_minhash_lsh's presentation sort must not leak in
     pairs = _lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -801,7 +800,7 @@ def dedup_apply_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform doc key; the rollup is |sources|-sized."""
     from ..operators.graph import connected_components
 
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     pairs = _lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     cc = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -864,7 +863,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy (16-bit uniform keys); DISTINCT dedups pairs that share
     both halves; production would add the same bucket-size cap as
     LSH_BUCKET_CAP."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # ONE evaluation of the signature pipeline: both 16-bit halves
     # explode into (half, k) bucket rows, so the two half-joins become
     # ONE self-join on the SAME (half, k) exchange — AQE dedupes the
@@ -963,7 +962,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed table (write-once shuffle) and each daily batch joins
     against it with zero corpus re-shuffling; the LSH_BUCKET_CAP guard
     applies to the index build exactly as in _lsh_buckets."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     is_batch = F.col("doc_id") % 10 == 9
     batch = d.filter(is_batch)
     corpus = d.filter(~is_batch)
@@ -1128,7 +1127,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       when any shingle's df approaches sqrt(|cand| x n̄)."""
     from ..session import gc_hint, rows_per_task_budget, stage, stage_bucketed
 
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # staged (round 9), not persisted: the token table has FIVE
     # consumers (df counts, ranked prefix, both legs of the overlap
     # self-join, set sizes) — a single build is mandatory either way,

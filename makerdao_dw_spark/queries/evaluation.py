@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .similarity import PROBE_ID_CAP, _cos_duck, _cos_spark, _NORM_POS_DUCK, _dot_expr
 
@@ -103,7 +103,7 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over it; the fixed probe panel bounds the O(panel x N)
     exact side — the inherent cost of ground truth, which is why this
     is a sampled eval job at any scale."""
-    e = query_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     nz = e.filter(F.expr(f"{_dot_expr('embedding', 'embedding')} > 0"))
     # the 200-row probe panel has two consumers (pair build + the
     # keep-every-probe left join) — checkpoint once

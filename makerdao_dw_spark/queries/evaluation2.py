@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .similarity import _dot_expr, _dot_sql_duckdb, _NORM_POS_DUCK
 from .text_common import ws_words_arr, ws_words_duck
@@ -45,7 +45,6 @@ from .training6 import (
     knn_predictions_ann,
 )
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # Per-class precision/recall/F1 of the KNN label classifier
@@ -217,7 +216,7 @@ def cohens_kappa_labelers(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the tiny double addition is order-free. Perfect-agreement
     corpora (pe = 1) surface NULL kappa via NULLIF, not a division
     error."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     lab = d.select(
         F.when(F.col("n_chars") < _CHAR_SHORT, "short")
         .when(F.col("n_chars") < _CHAR_MID, "mid")
@@ -337,7 +336,7 @@ def rrf_fusion_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixed panel bounds the O(panel x N) pair table; per-probe
     windows partition by query_id, so corpus growth widens partitions,
     never skews them."""
-    e = _t(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     nz = e.filter(F.expr(f"{_dot_expr('embedding', 'embedding')} > 0"))
     # materialize the tiny panel so the probe subtree doesn't re-scan
     # the embeddings parquet next to the candidate scan

@@ -35,11 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .basket_common import basket_ctes_duck, basket_pair_join, frequent_baskets
 from .registry import query
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # Kaplan-Meier survival over per-user activity spans
@@ -113,7 +112,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size, so the single-partition windows are safe); the censor
     anchor is a broadcast 1-row aggregate off the checkpointed span
     rollup (two consumers)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     peruser = (
         ev.groupBy("user_id")
         .agg(
@@ -233,7 +232,7 @@ def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate: scales as a single pass at any corpus size. Degenerate
     arms (empty corpus, one-arm corpus) surface as NULL rate/z rather
     than a division error (NULLIF on every denominator)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     assigned = ev.groupBy("user_id").agg(
         F.max(F.expr(_ARM_SPARK)).alias("arm"),
         F.max(
@@ -338,7 +337,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles on both engines. The basket build is the
     SHARED scaffold (basket_common.py) — label_propagation_communities
     walks the same graph."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets, freq, b_freq = frequent_baskets(li, _MB_MIN_ITEM)
     n_orders = F.broadcast(
         baskets.select("o").distinct().agg(F.count(F.lit(1)).alias("n"))

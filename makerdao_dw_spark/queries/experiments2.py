@@ -39,11 +39,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_ntile, use_parallel
-from ..session import query_table
+from ..session import load_table
 from .experiments import _ARM_DUCK, _ARM_SPARK
 from .registry import query
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # Bag-of-Little-Bootstraps CI for the mean order value
@@ -144,7 +143,7 @@ def bootstrap_blb_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (subsample, replicate), and every window runs over s*B rows. At
     100 TB production BLB draws n^0.6-sized subsamples instead of
     full hash partitions — one predicate swap, same plan."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # r11: spread the narrow projection BEFORE the B-fold fan-out. The
     # testdata ships one row group per file, so without this the entire
     # resampling CPU (B+1 = 41 md5 draws per order) ran on ONE core —
@@ -279,7 +278,7 @@ def ab_uplift_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile window runs over user cardinality; per-segment z uses
     the pooled-variance SE with NULLIF on every degenerate
     denominator."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     assigned = ev.groupBy("user_id").agg(
         F.max(F.expr(_ARM_SPARK)).alias("arm"),
         F.max(
@@ -382,7 +381,7 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream metric. Same md5 arm anchor as the readout queries.
     One per-user rollup plus a global aggregate; pure integer counts
     into IEEE-exact arithmetic."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     assigned = ev.groupBy("user_id").agg(F.max(F.expr(_ARM_SPARK)).alias("arm"))
     agg = assigned.agg(
         F.coalesce(F.sum(F.when(F.col("arm") == 0, 1)), F.lit(0)).alias("n_a"),

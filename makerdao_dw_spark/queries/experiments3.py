@@ -28,11 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .experiments import _ARM_DUCK, _ARM_SPARK
 from .registry import query
 
-_t = query_table
 
 _DEC = "decimal(38,6)"
 
@@ -113,7 +112,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup, then arm-cardinality math; the corpus midpoint and theta
     are broadcast 1-row aggregates. Same md5 arm anchor as the whole
     experiments family."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     # midpoint in INTEGER MICROSECONDS: floor((min+max span)/2) is
@@ -265,7 +264,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic over one per-user rollup; the z constants are shared
     literals; NULLIF everywhere a degenerate arm would divide by
     zero. NULL user_id rows are excluded (no assignable unit)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     assigned = ev.groupBy("user_id").agg(
         F.max(F.expr(_ARM_SPARK)).alias("arm"),
         F.max(

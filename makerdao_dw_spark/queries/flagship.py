@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 DEC = DecimalType(38, 6)
@@ -71,7 +71,6 @@ ORDER BY dt DESC, category
 
 
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
     # spread=False: the branch stages are cheap filter+projects and the
     # window immediately hash-exchanges on user_id — an auto-spread
     # round-robin exchange before that is pure overhead.

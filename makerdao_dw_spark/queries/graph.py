@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import bfs_distances
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 _BFS_ORACLE = """
@@ -53,7 +53,6 @@ def bfs_part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the trailing distinct makes element order irrelevant), and the
     oracle keeps the join formulation. Measured warm at sf0.1:
     4.4 s -> 2.5 s to the checkpointed edge list."""
-    configure(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges = (
         li.groupBy("l_orderkey")
@@ -109,7 +108,6 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-degree nodes. The two joins shuffle on node keys; the standard
     production refinement (orient by DEGREE, so high-degree nodes get
     low out-degree) drops the worst-case join fan-out to O(m^1.5)."""
-    configure(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_partkey") % 10 == 0)
@@ -220,7 +218,6 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; lineage cut per round, reliable-checkpoint-aware."""
     from ..operators.graph import pagerank
 
-    configure(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_partkey") % 10 == 0)

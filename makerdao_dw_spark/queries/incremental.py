@@ -22,15 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 _CUTOFF = "1999-01-01"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @query(
@@ -59,7 +54,7 @@ def ivm_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups|-row table read, and only the delta branch touches the
     fact. AVG re-derives from merged (sum, count) — the canonical
     non-mergeable aggregate handled via its mergeable decomposition."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cutoff = F.lit(_CUTOFF).cast("timestamp")
 
     def rollup(part: DataFrame) -> DataFrame:

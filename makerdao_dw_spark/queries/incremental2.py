@@ -33,10 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 
-_t = query_table
 
 _DEC = "decimal(38,6)"
 
@@ -108,7 +107,7 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim costs one pass. NULL priorities survive via null-safe
     grouping joins; NULL line numbers are excluded (no delta
     membership)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         (F.col("o_orderkey") % 7 == 0).alias("o_delta"),
@@ -117,7 +116,7 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread: single-row-group lineitem (q1 rationale, change #17) —
         # the broadcast join + decimal partial sums otherwise run on one
         # core; exact decimal sums are partitioning-invariant
-        _t(spark, sf_dir, "lineitem", spread=True)
+        load_table(spark, sf_dir, "lineitem", spread=True)
         .filter(F.col("l_linenumber").isNotNull())
         .select(
             "l_orderkey",
@@ -249,7 +248,7 @@ def zorder_morton_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer bit math identical on both engines. Rows missing either
     dimension are excluded (no cell)."""
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
         .select("o_custkey", F.to_date("o_orderdate").alias("o_day"))
         .transform(materialize)
@@ -358,7 +357,7 @@ def watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     by (excluded); NULL event_type is a real group on both engines."""
     shard_rows = 1 << 20  # arrival-ids per shard; ~n/1M shards per type
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select(
             "event_type",

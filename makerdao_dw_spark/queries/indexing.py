@@ -17,15 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 
 
-_t = query_table  # shared helper (session.py), was a per-module copy
-
-
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
 
 

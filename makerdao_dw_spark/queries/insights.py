@@ -35,17 +35,14 @@ ROW_NUMBER over (count DESC, label ASC); ln carries the accepted
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, materialize_lazy, query_table
+from ..session import input_bytes, load_table, materialize, materialize_lazy
 from .basket_common import basket_ctes_duck, basket_pair_join, frequent_baskets
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # PMI collocations
@@ -109,7 +106,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass per gram arity) — the two explodes produce different streams,
     and a corpus-sized token checkpoint measured slower than the
     rescan (the containment-join lesson)."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(tokens_arr("text", 2).alias("ts"))
     # explode_outer + isNotNull: bare explode() infers size(ts) > 0,
     # which pushes the tokenizer lambda below the spread exchange
@@ -220,7 +217,7 @@ def user_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment sums, doubles only in the final expressions; users need
     >= 2 gaps for a sample std. One window pass over (user, ts), one
     rollup — two shuffles on the user key at any scale."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -302,10 +299,8 @@ def _lpa_small_corpus(sf_dir: str, fb: DataFrame, rows_per_task: int) -> bool:
     bound on the staged pair count (cross-order duplicate pairs
     collapse in the join's distinct). Inputs past _LPA_EST_INPUT_BYTES
     skip even the estimate job (see its comment)."""
-    try:
-        if os.path.getsize(os.path.join(sf_dir, "lineitem.parquet")) > _LPA_EST_INPUT_BYTES:
-            return False
-    except OSError:
+    size = input_bytes(sf_dir, "lineitem")
+    if size is None or size > _LPA_EST_INPUT_BYTES:
         return False
     est = (
         fb.groupBy("o")
@@ -386,7 +381,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         stage_bucketed,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets, freq, fb = frequent_baskets(li, _LPA_MIN_ITEM)
     # stage_bucketed(), not materialize() or plain stage() (round 10):
     # the u<v pair table is the round checkpoint. A persist would keep
@@ -624,7 +619,7 @@ def label_propagation_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
         stage_bucketed,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     baskets, freq, fb = frequent_baskets(li, _LPA_MIN_ITEM)
     pairs_uv = (
         basket_pair_join(fb)

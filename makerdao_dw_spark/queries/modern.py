@@ -28,11 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -61,14 +58,14 @@ def udtf_split_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-generating Python table function via LATERAL correlated join
     (every 10th document keeps the output bounded)."""
     spark.udtf.register("split_words", _SplitWords)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, s.pos, s.word
-        FROM docs_udtf d, LATERAL split_words(d.text) s
+        FROM {docs} d, LATERAL split_words(d.text) s
         WHERE d.doc_id % 10 = 0
         ORDER BY d.doc_id, s.pos
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -99,7 +96,7 @@ def csv_line_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     field serializes as an EMPTY field (coalesce-to-'' + plain concat):
     concat_ws would silently DROP the field and its separator, shifting
     every later column one slot left on NULL-bearing rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     lines = ev.select(
         F.concat(
             F.coalesce(F.col("event_id").cast("string"), F.lit("")),
@@ -143,7 +140,7 @@ FROM parsed GROUP BY t ORDER BY t
 def xml_line_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML record line -> `from_xml` typed struct -> aggregate (oracle
     parses the same lines with regexp — independent implementations)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # NULL fields serialize as EMPTY elements (coalesce-to-''): bare
     # concat would NULL the whole line when any field is NULL
     lines = ev.select(
@@ -184,7 +181,7 @@ def variant_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL variants instead of failing the whole job (oracle twin:
     TRY_CAST(props AS JSON)) — ingest pipelines always contain a few
     broken JSON blobs."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = ev.select(
         "event_type", F.variant_get(F.try_parse_json("props"), "$.k", "int").alias("k")
     )
@@ -232,7 +229,7 @@ def url_parse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     component are excluded from synthesis on both engines — a real
     pipeline parses a stored URL column, where parse_url(NULL) is
     simply NULL."""
-    d = _t(spark, sf_dir, "documents").filter(
+    d = load_table(spark, sf_dir, "documents").filter(
         F.col("source").isNotNull()
         & F.col("lang").isNotNull()
         & F.col("n_chars").isNotNull()
@@ -287,7 +284,7 @@ def collation_ci_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of materializing a normalized shadow column; the deterministic
     label is min() over the group (the collated GROUP BY key's own
     display value is first-seen, i.e. nondeterministic)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cased = d.select(
         F.when(F.col("doc_id") % 2 == 0, F.upper("source"))
         .otherwise(F.col("source"))
@@ -324,7 +321,7 @@ def provenance_file_rowcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized at scan time, costs nothing in the file, and survives
     predicate pushdown. Testdata is one file per table, so the oracle
     pins the single expected (file_name, counts) row."""
-    _t(spark, sf_dir, "events")  # side effect: session conf incl. NANOS handling
+    load_table(spark, sf_dir, "events")  # side effect: session conf incl. NANOS handling
     # load_table may have repartitioned away from the scan node; re-read
     # with metadata directly so _metadata binds to the file scan
     import os

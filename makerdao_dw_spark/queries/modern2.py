@@ -13,12 +13,12 @@ hour three on one malformed row.
 
 from __future__ import annotations
 
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
 
-from ..session import configure, load_table, materialize_lazy, stage
+from ..session import conf_override, input_bytes, load_table, materialize_lazy, stage
 from .registry import query
 
 # Loop-exchange sizing for the recursive CTE (r11, guide §2): one
@@ -33,9 +33,8 @@ _LOOP_PART_TARGET_BYTES = 32 << 20
 
 def _loop_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
+    size = input_bytes(sf_dir, table)
+    if size is None:
         return shuffle_parts
     return min(shuffle_parts, max(8, -(-size // _LOOP_PART_TARGET_BYTES)))
 
@@ -134,10 +133,16 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     explain still prints the logical step subtree). DuckDB
     materializes CTEs by default, so the oracle is unchanged.
     """
-    configure(spark)
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_rec_lineitem")
-    edges = materialize_lazy(spark.sql(_REACH_EDGES_SQL.format(lineitem="_rec_lineitem")))
-    edges.createOrReplaceTempView("_rec_edges")
+    edges = materialize_lazy(
+        spark.sql(_REACH_EDGES_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
+    )
+    # A named view, not a spark.sql argument: the argument's view is
+    # dropped right after analysis, and dropping a view uncaches the
+    # persisted frame behind it before the loop reads it. The uuid keeps
+    # concurrent invocations apart; the view is dropped once stage() has
+    # run the loop.
+    edges_view = f"_rec_edges_{uuid.uuid4().hex}"
+    edges.createOrReplaceTempView(edges_view)
     # r11 loop-execution conf (guide §1.2/§2): with AQE on, EVERY
     # UnionLoop iteration pays adaptive stage-materialization barriers
     # + re-optimization on a frontier-sized step — measured 2x the
@@ -150,23 +155,18 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # configure(). They must hold at execution time and the loop frame
     # is lazy, so the loop is executed HERE through stage() — a hard
     # lineage cut to a node-cardinality parquet (the house iterative-
-    # query idiom) whose read-back plan is conf-independent — and the
-    # prior conf values are reinstated in a finally, the same contract
-    # the streaming drains keep (streaming/jobs.py).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_loop_partitions(spark, sf_dir, "lineitem")),
-    )
+    # query idiom) whose read-back plan is conf-independent — inside
+    # conf_override, the same contract the streaming drains keep
+    # (streaming/jobs.py).
+    loop_confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(_loop_partitions(spark, sf_dir, "lineitem")),
+    }
     try:
-        return stage(
-            spark.sql(_REACH_LOOP_SQL.format(edges="_rec_edges")), "rec_reach"
-        )
+        with conf_override(spark, loop_confs):
+            return stage(spark.sql(_REACH_LOOP_SQL.format(edges=edges_view)), "rec_reach")
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        spark.catalog.dropTempView(edges_view)
 
 
 # --------------------------------------------------------------------------
@@ -199,8 +199,6 @@ def try_arithmetic_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRY_CAST / CASE guards / list_extract's NULL-on-OOB. All map-side
     expressions — the battery adds zero exchanges to the scan.
     """
-    configure(spark)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("_try_orders")
     return spark.sql(
         """
         SELECT o_orderkey,
@@ -208,10 +206,11 @@ def try_arithmetic_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
                try_cast(o_orderstatus AS INT) AS status_as_int,
                try_element_at(split(o_orderpriority, '-'), 3) AS third_token,
                try_cast(substr(o_orderpriority, 1, 1) AS INT) AS priority_digit
-        FROM _try_orders
+        FROM {orders}
         WHERE o_orderkey % 100 < 5
         ORDER BY o_orderkey
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -244,8 +243,6 @@ def groupby_all_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     the alias chain evaluates in order (net first, then gross) with
     identical double math before the per-row decimal cast.
     """
-    configure(spark)
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_gba_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
@@ -256,9 +253,10 @@ def groupby_all_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT l_returnflag, l_linestatus,
                  l_extendedprice * (1 - l_discount) AS net,
                  net * (1 + l_tax) AS gross
-          FROM _gba_lineitem
+          FROM {lineitem}
         )
         GROUP BY ALL
         ORDER BY l_returnflag, l_linestatus
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )

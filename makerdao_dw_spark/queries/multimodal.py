@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import attach_fake_payload, decode_media
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 
@@ -33,7 +33,7 @@ ORDER BY doc_id
     tags=("multimodal",),
 )
 def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     m = attach_fake_payload(d)
     return m.select(
         "doc_id",
@@ -70,7 +70,7 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     math is SQL-expressible, so (like the frame sampler) this carries a
     FULL DuckDB oracle: the driver value-checks the mapInPandas decode
     stage, not just its row count."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     decoded = decode_media(attach_fake_payload(d))
     return (
         decoded.groupBy("media_type")
@@ -114,7 +114,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frame_bytes excluded: derived from the digest, binary)."""
     from ..operators.multimodal import sample_frames
 
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     frames = sample_frames(attach_fake_payload(d), k=8)
     return frames.select("doc_id", "n_frames", "frame_idx", "frame_digest").orderBy(
         "doc_id", "frame_idx"
@@ -167,7 +167,7 @@ def multimodal_chunk_cas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # char-based chunking on both sides (DuckDB cannot slice BLOBs);
     # the fake payload is the utf-8 encoding of text, so char chunks
     # cast to binary digest identically in both engines
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     media = (
         F.when(F.col("doc_id") % 3 == 0, "image/png")
         .when(F.col("doc_id") % 3 == 1, "audio/wav")
@@ -249,7 +249,7 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     production. 100 TB shape: fan-out happens executor-side inside
     Arrow batches (one window-matrix reduction per batch, no per-sample
     Python), output is window-count-sized, input never collected."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     m = attach_fake_payload(d)
     from ..operators.multimodal import audio_window_features
 

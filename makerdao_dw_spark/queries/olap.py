@@ -12,11 +12,8 @@ from pyspark.sql import functions as F
 
 from ..operators.order_stats import use_parallel
 from ..operators.skew import salted_join
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -35,7 +32,7 @@ ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST
     tags=("cube", "rollup-family"),
 )
 def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderpriority", "o_orderstatus")
         .agg(
@@ -66,18 +63,17 @@ ORDER BY g_type, g_year, event_type NULLS FIRST, y NULLS FIRST
     tags=("grouping-sets",),
 )
 def grouping_sets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    e.createOrReplaceTempView("_gs_events")
-    return e.sparkSession.sql(
+    return spark.sql(
         """
         SELECT event_type, CAST(year(ts) AS BIGINT) AS y,
                CAST(grouping(event_type) AS BIGINT) AS g_type,
                CAST(grouping(CAST(year(ts) AS BIGINT)) AS BIGINT) AS g_year,
                COUNT(*) AS n
-        FROM _gs_events
+        FROM {events}
         GROUP BY GROUPING SETS ((event_type), (CAST(year(ts) AS BIGINT)), ())
         ORDER BY g_type, g_year, event_type NULLS FIRST, y NULLS FIRST
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -104,8 +100,8 @@ def range_join_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash join with a residual range filter — the scalable shape (the
     pure-range-condition variant degenerates to a broadcast-nested-loop;
     always give the planner an equi-key when the domain has one)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0)
-    e = _t(spark, sf_dir, "events")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 20 == 0)
+    e = load_table(spark, sf_dir, "events")
     cond = (
         (F.col("e.user_id") == F.col("o.o_custkey"))
         & (F.col("e.ts") >= F.col("o.o_orderdate"))
@@ -138,7 +134,7 @@ ORDER BY o_orderkey
     tags=("window", "ntile", "percent_rank"),
 )
 def distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     wd = Window.partitionBy("o_orderpriority").orderBy("o_custkey")
     return o.select(
@@ -168,16 +164,15 @@ ORDER BY event_id
 def range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding count over an event-time range (true RANGE frame on a
     timestamp ordering — rows at any density, frame bounded by value)."""
-    e = _t(spark, sf_dir, "events")
-    e.createOrReplaceTempView("_rf_events")
-    return e.sparkSession.sql(
+    return spark.sql(
         """
         SELECT event_id, user_id, ts,
                COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
                               RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS n_last_hour
-        FROM _rf_events
+        FROM {events}
         ORDER BY event_id
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -195,7 +190,7 @@ ORDER BY vec_id, pos
     tags=("lateral", "posexplode"),
 )
 def posexplode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0)
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0)
     return (
         e.select("vec_id", F.posexplode(F.slice("embedding", 1, 8)).alias("pos", "c"))
         .select("vec_id", "pos", F.round(F.col("c").cast("double"), 6).alias("component"))
@@ -221,7 +216,7 @@ ORDER BY vec_id
 def array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """filter/transform/aggregate/exists over the embedding arrays —
     all JVM-side lambda expressions, zero Python."""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0)
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0)
     return e.select(
         "vec_id",
         F.size(F.filter("embedding", lambda x: x > 0)).alias("n_positive"),
@@ -267,7 +262,7 @@ def approx_aggregates_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     error vs exact — is portable). At 100 TB the approx aggregates are
     the one-pass mergeable answers; their exact companions here are the
     correctness bound."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     agg = e.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
         F.countDistinct("user_id").alias("exact_users"),
@@ -302,7 +297,7 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     these are THE mergeable one-pass answers; exact companions exist
     here to bound error (asserted <5% rsd / exact-rank neighborhood in
     tests/test_extensions.py)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(
@@ -337,7 +332,7 @@ def histogram_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """20-bin equi-width histogram. The bounds are a 2-value broadcast
     (crossJoin of a 1-row aggregate), the binning a pure map expression:
     one shuffle total at any scale."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bounds = o.agg(F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi"))
     return (
         o.crossJoin(F.broadcast(bounds))
@@ -393,7 +388,7 @@ def unpivot_lineitem_charges(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics across engines: DuckDB's UNPIVOT silently excludes NULL
     cells while Spark's stack() keeps them — on any NULL charge column
     the two would disagree on row count without the explicit filter."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
     wide = li.select(
         "l_orderkey",
         "l_linenumber",
@@ -434,19 +429,17 @@ ORDER BY c_custkey
 def exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS/NOT EXISTS — decorrelated by Catalyst into a
     semi join + anti join (the only scalable execution)."""
-    configure(spark)
-    for t in ("customer", "orders", "events"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"_ex_{t}")
     return spark.sql(
         """
         SELECT c_custkey, c_name
-        FROM _ex_customer c
-        WHERE EXISTS (SELECT 1 FROM _ex_orders o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-          AND NOT EXISTS (SELECT 1 FROM _ex_events e
+          AND NOT EXISTS (SELECT 1 FROM {events} e
                           WHERE e.user_id = c.c_custkey AND e.event_type = 'error')
         ORDER BY c_custkey
-        """
+        """,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders", "events")},
     )
 
 
@@ -481,7 +474,7 @@ def median_mode_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode(col, true) breaks frequency ties by lowest value; the oracle
     spells the same tie-break as an explicit count+rank) + distinct
     aggregation."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(
@@ -529,7 +522,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a silent 5e-7/row drift vs DuckDB's exact wider product) — the
     precision budget IS the correctness contract here. |value| < 1e12
     is the domain bound this buys it."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = F.col("value").cast("decimal(38,6)")
     v18 = F.col("value").cast("decimal(18,6)")
     s = e.groupBy("event_type").agg(
@@ -579,7 +572,7 @@ def map_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     types are excluded on BOTH engines: Spark maps cannot hold a NULL
     key (NULL_MAP_KEY throw), so the operator's declared domain is
     non-NULL keys."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     pc = (
         e.filter(F.col("event_type").isNotNull())
         .groupBy("user_id", "event_type")
@@ -629,7 +622,7 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics corner every SQL engine must pin down (Spark's <=> is
     DuckDB's IS NOT DISTINCT FROM; nanvl exists only Spark-side, the
     oracle spells it as an isnan CASE)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 40 == 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 40 == 0)
     status_or_null = F.nullif(F.col("o_orderstatus"), F.lit("O"))
     maybe_nan = F.when(
         F.col("o_orderkey") % 7 == 0, F.expr("cast('NaN' as double)")
@@ -650,7 +643,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver registry (the fully-oracled hash-based twin
     `sample_stratified_exact` is); per-stratum fraction bounds asserted
     in test_extensions."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     fr = {"click": 0.2, "view": 0.2, "purchase": 1.0, "signup": 1.0, "error": 1.0}
     return (
         e.sampleBy("event_type", fractions=fr, seed=42)
@@ -681,7 +674,7 @@ ORDER BY user_id
 def bitwise_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise AND/OR/XOR aggregates (flag-column compaction: fold
     per-event feature bits into one word per user) + scalar shifts."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bits = (F.col("event_id") % 256).cast("long")
     return (
         e.groupBy("user_id")
@@ -722,19 +715,19 @@ def recursive_cte_date_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTEs handle without needing the UNION-dedup Spark doesn't
     support yet. sequence()+explode stays the preferred plan (one map
     stage, no iteration); this pins the recursive operator itself."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0)
-    e.createOrReplaceTempView("_rc_events")
-    return e.sparkSession.sql(
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0)
+    return spark.sql(
         """
         WITH RECURSIVE grid(user_id, day, max_day) AS (
             SELECT user_id, CAST(MIN(ts) AS DATE), CAST(MAX(ts) AS DATE)
-            FROM _rc_events GROUP BY user_id
+            FROM {events} GROUP BY user_id
             UNION ALL
             SELECT user_id, date_add(day, 1), max_day FROM grid WHERE day < max_day
         )
         SELECT user_id, day FROM grid
         ORDER BY user_id, day
-        """
+        """,
+        events=e,
     )
 
 
@@ -784,7 +777,7 @@ def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     full table). This is THE pattern for weighted corpus subsampling at
     100 TB: one scan, k rows out.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # zero/negative weight = zero inclusion probability: excluded BEFORE
     # the key (w = 0 would divide by zero under ANSI; DuckDB yields NULL)
     o = o.filter(F.col("o_totalprice") > 0)
@@ -828,7 +821,7 @@ def sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform on both sides (1e6 buckets) so no float-division ulp can
     flip a membership decision. Scale: one scan, no shuffle before the
     tiny rollup; the filter is codegen'd string+hash math."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     unif = (
         F.expr(
             "cast(conv(substring(md5(concat('strat:', cast(event_id as string))), 1, 8), 16, 10) as bigint)"
@@ -886,7 +879,7 @@ def skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs on |distinct prices| rows, not facts; at 100 TB shard it
     like the sweep-line: per-shard frontiers union'd then re-swept
     (frontier size is tiny, so the re-sweep is driver-trivial)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_price = o.groupBy(F.col("o_totalprice").alias("price")).agg(
         F.max("o_orderdate").alias("mx_date")
     )
@@ -990,7 +983,7 @@ def quantile_bin_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is a map-side array op; the rollup is a 10-group
     aggregation. At 100 TB swap percentile -> approx_percentile (same
     shape, mergeable sketch pass)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bounds = o.agg(
         F.expr(
             "transform(percentile(cast(o_totalprice as double),"
@@ -1049,7 +1042,7 @@ def weighted_sample_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank<=k filter as WindowGroupLimit, so each reducer keeps a k-row
     heap per group instead of materializing and sorting whole strata —
     the per-group analog of TakeOrderedAndProject."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     es_key = F.expr(_ES_KEY_SQL)
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("es_key_raw").desc(), "o_orderkey"
@@ -1102,7 +1095,7 @@ def percentile_disc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash exchange on the group key shared by both
     windows and the final aggregate — rank assignment and the rollup
     never re-shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wp = Window.partitionBy("o_orderpriority")
     ranked = o.select(
         "o_orderpriority",
@@ -1162,7 +1155,7 @@ def skew_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the key-count rollup is the only fact-sized shuffle;
     the profile reduces |keys| rows to one. At 100 TB you run this on a
     sample or on the partial-agg output — same plan."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     kc = e.groupBy(F.col("event_type").alias("key")).agg(F.count(F.lit(1)).alias("n"))
     stats = kc.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -1223,7 +1216,7 @@ def whale_key_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_whale_keys.py) drives a 1M-row single-key fact table
     through salted_join and asserts no post-shuffle partition holds
     more than ~2/salt of the whale's rows."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     whale = o.select(
         F.when(F.col("o_custkey") % 10 == 0, F.col("o_custkey"))
         .otherwise(F.lit(1))
@@ -1232,7 +1225,7 @@ def whale_key_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(38,4)").alias("price"),
     )
     dim = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
         .hint("shuffle_hash")
     )

@@ -34,10 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_row_number, use_parallel
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # Deequ-style per-column profile (long form)
@@ -102,7 +101,7 @@ def table_profile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial aggregation on ONE core. Every aggregate here is exact
     # and order-free (count/min/max/distinct), so partitioning cannot
     # change the result.
-    o = _t(spark, sf_dir, "orders", spread=True)
+    o = load_table(spark, sf_dir, "orders", spread=True)
     cols = [
         ("o_orderkey", "bigint"),
         ("o_custkey", "bigint"),
@@ -202,7 +201,7 @@ def mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact interpolated medians are identical IEEE arithmetic on both
     engines; NULL values never enter ABS (NULL adev rows count in
     neither the outlier sum nor n_vals)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     med = (
         e.groupBy("event_type")
         .agg(F.median("value").alias("med"), F.count("value").alias("n_vals"))
@@ -314,7 +313,7 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     both splits (NULL-SAFE: a NULL priority is a model class); the
     rank selection runs over calibration cardinality; the radius is a
     broadcast 1-row aggregate for the test pass."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice").isNotNull())
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice").isNotNull())
     base = o.select(
         "o_orderkey",
         "o_orderpriority",

@@ -45,24 +45,31 @@ _DEPTH = _threading.local()
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
     """Decorator registering a Spark query implementation.
 
-    The registered fn is wrapped to release the PREVIOUS query's
-    materialized intermediates (session.materialize keeps persisted
-    frames pinned so the returned plan's consumers can reuse them; the
-    next query's entry is the earliest safe point to drop them —
-    without the release, per-query caches accumulate across the
-    one-session-many-queries driver runs). The release is skipped for
-    NESTED invocations (see _DEPTH above)."""
+    The registered fn is wrapped as the single per-query entry. At a
+    top-level call the wrapper configures the session
+    (session.configure, so a vanilla session such as the driver
+    harness's comes out right and query bodies just call load_table)
+    and releases the PREVIOUS query's materialized intermediates
+    (session.materialize keeps persisted frames pinned so the returned
+    plan's consumers can reuse them; the next query's entry is the
+    earliest safe point to drop them — without the release, per-query
+    caches accumulate across the one-session-many-queries driver runs).
+    NESTED invocations (see _DEPTH above) skip both: they run inside a
+    query that already did them. The decorator returns the raw fn, so
+    calling it directly bypasses the wrapper and expects a configured
+    session."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from ..session import release_materialized
+            from ..session import configure, release_materialized
 
             depth = getattr(_DEPTH, "v", 0)
             if depth == 0:
                 release_materialized()
+                configure(spark)
             _DEPTH.v = depth + 1
             try:
                 return fn(spark, sf_dir)

@@ -17,13 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 
 DEC = DecimalType(38, 6)
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -54,7 +51,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushes the filter and projection through Repartition) and every
     # aggregate here is an exact decimal sum / count, so partitioning
     # cannot change the result. Measured 2.4–3.2 → 1.5–2.1 s at sf0.1.
-    li = _t(spark, sf_dir, "lineitem", spread=True)
+    li = load_table(spark, sf_dir, "lineitem", spread=True)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2024-11-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -87,7 +84,7 @@ WHERE l_discount > 0.05 AND l_quantity <> 0 AND l_returnflag <> 'N'
     tags=("B2", "B4"),
 )
 def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter((F.col("l_discount") > 0.05) & (F.col("l_quantity") != 0) & (F.col("l_returnflag") != "N")).select(
         "l_orderkey",
         "l_linenumber",
@@ -113,14 +110,14 @@ FROM orders WHERE o_orderstatus = 'F'
     tags=("B3", "B5"),
 )
 def union_typed_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.lit("customer").alias("kind"),
         F.col("c_custkey").alias("party_key"),
         F.col("c_name").alias("party_name"),
         F.col("c_acctbal").cast(DEC).alias("balance"),
         F.lit(None).cast(DEC).alias("order_total"),
     )
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         F.col("o_totalprice").cast(DEC).alias("order_total"),
         F.lit("order").alias("kind"),
         F.col("o_orderkey").alias("party_key"),
@@ -148,9 +145,9 @@ ORDER BY region, nation
     tags=("B22", "B7", "B20"),
 )
 def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
+    c = load_table(spark, sf_dir, "customer")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
+    r = F.broadcast(load_table(spark, sf_dir, "region"))
     return (
         c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
@@ -183,11 +180,11 @@ ORDER BY revenue DESC, nation
     tags=("B22", "B7", "B18", "B20"),
 )
 def multiway_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
-    c = _t(spark, sf_dir, "customer")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE")))
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
+    c = load_table(spark, sf_dir, "customer")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
+    r = F.broadcast(load_table(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE")))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -217,8 +214,8 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     tags=("B23", "B5"),
 )
 def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     active = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_name", F.lit("active").alias("status")
     )
@@ -244,8 +241,8 @@ GROUP BY c.c_custkey, c.c_mktsegment
     tags=("B22", "B7"),
 )
 def outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_mktsegment")
@@ -265,7 +262,7 @@ def outer_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("distinct",),
 )
 def distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()
+    return load_table(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()
 
 
 @query(
@@ -284,8 +281,8 @@ SELECT * FROM (
     tags=("intersect", "except"),
 )
 def intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_discount") > 0.08).select(F.col("l_orderkey").alias("orderkey"))
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 1000).select(F.col("o_orderkey").alias("orderkey"))
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_discount") > 0.08).select(F.col("l_orderkey").alias("orderkey"))
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 1000).select(F.col("o_orderkey").alias("orderkey"))
     both = li.intersect(o).select("orderkey", F.lit("both").alias("tag"))
     only_orders = o.subtract(li).select("orderkey", F.lit("only_orders").alias("tag"))
     return both.unionByName(only_orders)
@@ -304,7 +301,7 @@ FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
         .select("o_orderkey", F.col("o_totalprice").cast(DEC).alias("total"))
         .limit(25)
@@ -334,7 +331,7 @@ SELECT * FROM (
 def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window-first plan: scan is cheap and the window hash-exchanges
     # immediately; skip the auto-spread round-robin exchange
-    o = configure(spark) and load_table(spark, sf_dir, "orders", spread=False)
+    o = load_table(spark, sf_dir, "orders", spread=False)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.select(
@@ -362,7 +359,7 @@ FROM events
     tags=("B11",),
 )
 def window_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = configure(spark) and load_table(spark, sf_dir, "events", spread=False)
+    e = load_table(spark, sf_dir, "events", spread=False)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return e.select(
         "event_id",
@@ -395,7 +392,7 @@ def global_window_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan). The aggregate is the same exact DECIMAL sum/max the window
     # computed, so every derived value is bit-identical; the broadcast
     # relation is one row.
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = F.broadcast(
         o.agg(
             F.sum(F.col("o_totalprice").cast(DEC)).alias("_gsum"),
@@ -435,7 +432,7 @@ FROM marked
     tags=("B12", "B16"),
 )
 def locf_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
     marked = e.select(
         "event_id",
@@ -472,7 +469,7 @@ FROM bounds
     tags=("B9", "B7"),
 )
 def gap_fill_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day_idx = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
     bounds = e.groupBy("user_id").agg(F.min(day_idx).alias("d0"), F.max(day_idx).alias("d1"))
     return bounds.select(
@@ -498,7 +495,7 @@ ORDER BY user_id, week_bucket
     tags=("B14", "B7", "B20"),
 )
 def bucketed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day_idx = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
     return (
         e.groupBy(
@@ -528,7 +525,7 @@ GROUP BY 1 ORDER BY category
     tags=("B18", "B7"),
 )
 def case_categorize_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     cat = (
         F.when(F.col("p_type").like("PROMO%"), "promo")
         .when(F.col("p_type").like("%BRUSHED%"), "brushed")
@@ -558,7 +555,7 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
     tags=("rollup", "grouping"),
 )
 def rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").alias("g_flag"),
         F.grouping("l_linestatus").alias("g_status"),
@@ -585,7 +582,7 @@ WHERE o.o_totalprice > a.avg_total
     tags=("B22", "subquery"),
 )
 def above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     avg = o.groupBy(F.col("o_custkey").alias("k")).agg(
         (F.sum(F.col("o_totalprice").cast(DEC)).cast("double") / F.count(F.lit(1))).alias("avg_total")
     )
@@ -613,7 +610,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B-plane JSON path extraction. Spark's get_json_object is NULL on
     malformed input; the oracle needs TRY_CAST(props AS JSON) for the
     same tolerance (bare json_extract_string throws on e.g. '')."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.select("event_id", k.alias("k"), "event_type").filter(k > 50)
 
@@ -631,7 +628,7 @@ FROM events WHERE value > 0
     tags=("B10",),
 )
 def math_rescale_pow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.filter(F.col("value") > 0).select(
         "event_id",
         (F.pow(F.lit(1.0) + F.col("value") / F.lit(1e6), F.lit(3600 * 24 * 365)) - 1).alias("apy"),
@@ -660,7 +657,7 @@ FROM part
     tags=("B15", "strings"),
 )
 def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_brand").alias("brand_upper"),
@@ -713,9 +710,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort materialization).
     """
     cutoff = F.lit("1998-07-01").cast("timestamp")
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -759,14 +756,14 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE converts the big->orders join to broadcast at runtime once the
     HAVING filter collapses the build side.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("sum_qty"))
         .filter(F.col("sum_qty") > 150)
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -818,7 +815,7 @@ def null_semantics_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     One aggregation shuffle; the dim side is |groups|-sized
     (broadcast). The null-safe join compiles to a regular hash join on
     the key's null-flag — no nested loop."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.select(
         F.when(F.col("o_custkey") % 7 == 0, None)
         .otherwise(F.col("o_custkey") % 7)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 DIM = 64
@@ -99,7 +99,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles to a per-pair recompute — sqrt of the same left-fold — but
     O(N) instead of O(Q*N) norm evaluations; only the dot product is
     per-pair work)."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     nz = e.withColumn(
         "nrm", F.expr(f"sqrt({_dot_expr('embedding', 'embedding')})")
     ).filter(F.col("nrm") > 0)
@@ -147,7 +147,7 @@ ORDER BY bucket, vec_a, vec_b
 def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style search: candidates restricted to the same coarse bucket
     (label = stand-in centroid assignment), probe subset vec_id % 25 = 0."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     en = e.withColumn(
         "nrm", F.expr(f"sqrt({_dot_expr('embedding', 'embedding')})")
     ).filter(F.col("nrm") > 0)
@@ -277,7 +277,7 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at production scale that one-time driver cost is noise, and the
     map-side literal design beats the alternative (a broadcast plane
     table) which would add two N-row shuffles to every run."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     en = e.select(
         "vec_id",
         "embedding",
@@ -326,7 +326,7 @@ ORDER BY label
 )
 def embedding_norms_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket vector-norm stats (sanity/monitoring operator)."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     norm = F.expr(f"round(sqrt({_dot_expr('embedding', 'embedding')}), 6)")
     return (
         e.select("label", norm.cast("decimal(38,6)").alias("nrm"))
@@ -366,7 +366,7 @@ def quantize_embeddings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     max|x| = 0 throws under Spark's default ANSI mode (and yields a
     meaningless inf scale in DuckDB) — a zero vector has no symmetric
     quantization."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     e = e.filter(F.col("vec_id") % 10 == 0)
     max_abs = F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
     scaled = e.filter(max_abs > 0).withColumn("scale_raw", F.lit(127.0) / max_abs)
@@ -483,7 +483,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical."""
     from ..operators.kmeans import assign_clusters, kmeans_fit
 
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     e = e.select("vec_id", "embedding").filter(
         F.expr(f"{_dot_expr('embedding', 'embedding')} > 0")
     )
@@ -616,7 +616,7 @@ def semdedup_kmeans_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import assign_clusters, kmeans_fit
     from ..session import materialize
 
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     e = e.select("vec_id", "embedding").filter(
         F.expr(f"{_dot_expr('embedding', 'embedding')} > 0")
     )
@@ -719,7 +719,7 @@ def embedding_centroids_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     component); ONE hash exchange on (label, pos) with map-side partial
     decimal sums — the shuffle carries scalars, never vectors. The full
     64-dim centroid is the same plan with pos unrestricted."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     comp = e.filter(F.col("embedding").isNotNull()).select(
         "label", F.posexplode(F.slice("embedding", 1, 8)).alias("pos", "c")
     ).select(
@@ -801,7 +801,7 @@ def ann_quantized_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine). 100 TB shape: quantization is map-side; same-bucket pairs
     bound the candidate join (O(N^2/buckets)); the rescore touches only
     8 rows per query."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     max_abs = F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
     qv = (
         e.filter(max_abs > 0)
@@ -910,7 +910,7 @@ def embedding_covariance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation collapses each partition to 2016 rows before
     the one tiny exchange; nothing is ever vector-count-sized past the
     scan. Final top-k is TakeOrderedAndProject."""
-    e = configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     # Per-vector (i < j) pair expansion straight off the embedding ARRAY
     # (r11, guide §2.4): the old element-long-form self-join shuffled
     # the exploded table TWICE by vec_id and joined it back to itself —

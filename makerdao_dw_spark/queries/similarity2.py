@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.kmeans import assign_clusters, dists_arr, kmeans_fit_multi
-from ..session import configure, load_table, materialize
+from ..session import load_table, materialize
 from .registry import query
 from .similarity import PROBE_ID_CAP
 
@@ -201,7 +201,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB CTEs (the ann_ivf_kmeans technique, once per subspace).
     Measured shortlist recall@3 vs brute force: see SCALE.md."""
     e = (
-        (configure(spark) and load_table(spark, sf_dir, "embeddings", spread=True))
+        (load_table(spark, sf_dir, "embeddings", spread=True))
         .select("vec_id", "embedding")
         .filter(F.col("embedding").isNotNull())
     )

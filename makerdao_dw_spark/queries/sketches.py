@@ -33,13 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------
@@ -56,7 +51,7 @@ def sketch_hll_daily_active_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     of |days| sketches. Union-of-parts == sketch-of-whole exactly,
     because HLL merge is a register-wise max. Untimestamped rows have
     no day to roll into — excluded (matches the checked surface)."""
-    e = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     daily = e.groupBy(F.to_date("ts").alias("d")).agg(
         F.hll_sketch_agg("user_id").alias("sk")
     )
@@ -97,7 +92,7 @@ def sketch_hll_daily_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded on both engines (they'd otherwise form a NULL scope
     that the equi-join silently drops on one engine only)."""
     est = sketch_hll_daily_active_raw(spark, sf_dir)
-    e = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     exact_day = e.groupBy(F.to_date("ts").cast("string").alias("scope")).agg(
         F.countDistinct("user_id").alias("exact_users")
     )
@@ -134,7 +129,7 @@ def sketch_theta_userday_overlap_raw(spark: SparkSession, sf_dir: str) -> DataFr
     algebra it's a merge of two persisted summaries. Items are
     user-day strings so the sets only partially overlap (every user
     eventually does everything; user-days discriminate)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     keyed = e.filter(
         F.col("event_type").isin("click", "purchase")
         & F.col("user_id").isNotNull()
@@ -201,7 +196,7 @@ def sketch_theta_userday_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     error model for theta intersections. Raw estimates:
     sketch_theta_userday_overlap_raw (pinned in tests/test_sketches.py)."""
     est = sketch_theta_userday_overlap_raw(spark, sf_dir)
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = (
         # a user-day identity needs BOTH parts: concat_ws would
         # silently collapse a NULL user/ts to a partial key while the
@@ -268,7 +263,7 @@ def sketch_kll_value_quantiles_raw(spark: SparkSession, sf_dir: str) -> DataFram
     Same scale story as the HLL rollup but for quantiles: percentile
     questions over any segment union become sketch merges, replacing
     exact `percentile()` sorts that shuffle the full column."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sk = e.groupBy("event_type").agg(
         F.kll_sketch_agg_double("value").alias("sk"),
         F.count("value").alias("nv"),
@@ -324,7 +319,7 @@ def sketch_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible in DuckDB. Raw estimates: sketch_kll_value_quantiles_raw
     (envelope pinned in tests/test_sketches.py)."""
     ests = sketch_kll_value_quantiles_raw(spark, sf_dir)
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     # the ALL row is a GLOBAL aggregate (always exactly one row, even
     # on an empty corpus — the oracle's UNION ALL branch always emits
     # one), NOT an 'ALL'-labeled union of values (which vanishes when

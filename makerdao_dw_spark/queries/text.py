@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text_features import STOPWORDS, let_bound
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 _SW = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -39,7 +39,7 @@ ORDER BY doc_id
     tags=("text", "quality"),
 )
 def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     t = d.select(
         "doc_id",
         "lang",
@@ -75,7 +75,7 @@ ORDER BY doc_id
 )
 def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace + a BPE-ish regex splitter."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     return d.select(
         "doc_id",
         F.size(F.expr(r"regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)")).alias("n_bpe_ish_tokens"),
@@ -128,7 +128,7 @@ ORDER BY doc_id
 def langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID: argmax over per-language hit counts with
     first-match (declaration-order) tie-break — identical CASE both sides."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     scored = d.select(
         "doc_id",
         F.col("lang").alias("actual_lang"),
@@ -170,7 +170,7 @@ def doc_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprint: 8-char-gram md5 hashes, min per
     sliding window of 4, distinct + sorted. (Rolling-hash fingerprinting
     re-expressed with cryptographic gram hashes so both engines agree.)"""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # let-bind the gram-hash array: referenced by size() and per-element
     # slice(); without binding, the md5 pass would re-run O(n) times.
     fp_expr = let_bound(
@@ -192,7 +192,7 @@ GROUP BY ROLLUP(lang, source)
     tags=("text", "rollup"),
 )
 def lang_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     return d.rollup("lang", "source").agg(
         F.grouping("lang").alias("g_lang"),
         F.grouping("source").alias("g_source"),
@@ -246,7 +246,7 @@ def doc_rolling_hash_rabin(spark: SparkSession, sf_dir: str) -> DataFrame:
     char codes, one fold per block, zero shuffles before the final sort;
     the fingerprint columns are what a dedup pass would shuffle, never
     the text."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     fold = "(acc, c) -> (acc * 257 + c) % 2147483647"
     expr = let_bound(
         "transform(sequence(1, length(coalesce(text, ''))), i -> ascii(substring(coalesce(text, ''), i, 1)))",

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.skew import salted_agg
-from ..session import configure, load_table, materialize
+from ..session import load_table, materialize
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck
 
@@ -47,7 +47,6 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized — at 100 TB it broadcasts; the big shuffles carry
     only (doc_id, term, count) triples, never text.
     """
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     # one regex pass (split on non-letter runs) — token-identical to the
     # oracle's replace+split, ~20% cheaper (text_common.tokens_arr note)
@@ -111,7 +110,6 @@ def salted_skew_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase salting — result identical to the direct aggregation
     (decimal/long merges are associative), reduction work spread over
     16 salted subkeys per hot key."""
-    configure(spark)
     e = load_table(spark, sf_dir, "events")
     return salted_agg(
         e,
@@ -149,7 +147,6 @@ def ngram_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-50 word bigrams (n >= 5). Bigrams are built with
     a JVM-side transform over the token array (zip of the array with its
     tail) — no Python, one shuffle on the bigram key."""
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(tokens_arr("text", 2).alias("ts"))
     grams = toks.select(
@@ -228,7 +225,6 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale you run 2-3 complementary blocking passes (phonetic key,
     sorted-neighborhood) and union, same dataflow per pass. NULL names
     are unmatchable and excluded on both engines."""
-    configure(spark)
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_name").isNotNull() & (F.col("c_custkey") % 25 == 0)
     )
@@ -291,7 +287,6 @@ def regexp_extract_all_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — one scan of documents, no shuffle except the final sort
     for display determinism.
     """
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     ops = F.regexp_extract_all(F.col("text"), F.lit("scan|sort|join|merge"), 0)
     return d.select(
@@ -346,7 +341,7 @@ def vocab_oov_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the final doc_id aggregation. At 100 TB the vocab stays KB-MB
     regardless of corpus size (K is fixed), so the plan shape is
     scan + 2 small shuffles, never a big-big join."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     freq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     # top-K via orderBy+limit = TakeOrderedAndProject: per-partition
@@ -444,7 +439,6 @@ def lm_bigram_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6 decimals, weighted by the exact integer occurrence count and
     summed as DECIMAL(38,6) — arrival order can never flip a bit (ln
     inputs are exact-integer ratios, identical in both engines)."""
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", tokens_arr("text", 2).alias("ts"))
     db = toks.filter(F.size("ts") >= 2).select(

@@ -24,11 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -73,7 +70,7 @@ def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bigint shift never overflows and value*2^rn stays well inside
     double range). Scale: two narrow windows over the same (user_id)
     hash partitioning — one exchange, no join, no iteration."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w_desc = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -160,7 +157,7 @@ def interpolate_daily_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, no shuffle beyond the user_id grouping); anchors are two
     opposite-direction frames over the SAME (user_id, d) sort, so the
     second window reuses the first's exchange+sort."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.col("ts").cast("date").alias("d")
     ).agg(
@@ -253,7 +250,7 @@ def class_balance_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     language balance from drifting. Per-term contributions are cast to
     DECIMAL(38,12) before the SUM so the handful-of-langs addition
     order can't flip a low bit (house determinism rule)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
     w_src = Window.partitionBy("source")
     totals = counts.select(
@@ -323,7 +320,7 @@ def hopping_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries window-struct + type keys only. Empty windows
     don't exist by construction (count >= 1), matching the oracle's
     inner join."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.window("ts", "60 minutes", "30 minutes").alias("w"),
@@ -388,7 +385,7 @@ def session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-ts rows carry no event time and belong to no session — the
     built-in drops them implicitly; the filter makes that contract
     explicit and keeps the oracle in lockstep."""
-    e = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     return (
         e.groupBy("user_id", F.session_window("ts", "4 hours").alias("sw"))
         .agg(
@@ -449,7 +446,7 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     window passes over ONE (user_id) exchange+sort, fully
     decimal-exact, deterministic. Flags days where accumulated drift
     above k=50/day exceeds 500."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.groupBy("user_id", F.col("ts").cast("date").alias("d"))
         .agg(
@@ -522,7 +519,7 @@ def rolling_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one exchange on user_id; the frame is day-RANGE so sparse
     series window correctly (missing days shrink n, they don't
     shift a fixed ROWS frame)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.groupBy("user_id", F.col("ts").cast("date").alias("d"))
         .agg(
@@ -612,7 +609,7 @@ def regression_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (user, day) aggregation, then a user-level aggregation
     of 5 numbers — the window for x reuses nothing heavy; moments are
     map-side combinable."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("user_id", F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(18,6)").alias("y")
     )
@@ -682,7 +679,7 @@ def trailing_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     small rollup and 7x the fact table. (The sketch alternative — daily
     HLL + 7-way merge — is sketch_hll_daily_active's pattern; this is
     the exact path.)"""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("d"), "user_id").distinct()
     contrib = du.select(
         F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"), "d", "user_id"
@@ -739,7 +736,7 @@ def seasonal_decompose_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seasonal table is 7 rows (broadcast), the global mean 1 row.
     dayofweek parity: Spark's dayofweek() is 1=Sunday..7, DuckDB's is
     0=Sunday..6 — normalized via (dayofweek - 1)."""
-    e = configure(spark) and load_table(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("d")).agg(
         F.sum(F.col("value").cast("decimal(38,6)")).alias("total")
     )

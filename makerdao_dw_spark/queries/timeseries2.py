@@ -30,10 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 
-_t = query_table
 
 _ALPHA = 0.5  # level smoothing (dyadic)
 _BETA = 0.25  # trend smoothing (dyadic)
@@ -100,7 +99,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rollup is the distributed pass; the array and fold are
     calendar-bounded (365 values/year regardless of corpus size) on a
     single row — the correct residence for sequential state."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
@@ -189,7 +188,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup, checkpointed once for the pair join (both sides) and the
     intercept pass. Exact interpolated medians; slope denominators
     are distinct integer day offsets (never zero)."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
     daily = ev.groupBy(F.to_date("ts").alias("d")).agg(

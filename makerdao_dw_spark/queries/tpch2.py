@@ -28,12 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 from .tpch_common import REV
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 _REV = REV  # single definition: tpch_common.py
@@ -70,15 +67,15 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. The nation-equality cycle (c_nationkey = s_nationkey) arrives
     as a residual on the supplier join, not a second shuffle.
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
@@ -123,13 +120,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition heaps + a single driver merge of 20-row heads, never a
     global sort (the difference between O(n log 20) and a full shuffle
     at 100 TB). Tie-break on c_custkey makes top-20 unique."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
@@ -168,11 +165,11 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from the two exact decimal sums with a single double
     division (deterministic across engines), not decimal division
     (whose result scale rules differ between Spark and DuckDB)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.expr(_REV)
     promo = F.sum(F.when(F.col("p_type") == "PROMO", rev)).alias("promo_revenue")
     total = F.sum(rev).alias("total_revenue")
@@ -218,8 +215,8 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst additionally extracts the common single-table implications
     (p_brand IN (...), p_size <= 35, l_quantity <= 30) and pushes them
     below the join into the scans — asserted in test_plan_shape.py."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey")).filter(
         F.expr(_Q19_PRED)
     )
@@ -254,11 +251,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS decorrelates to a LEFT SEMI join: the fact side is scanned
     once, the filter prunes orders before the join, and no lineitem
     columns survive the semi-join into the aggregate."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         o.join(li, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
         .groupBy("o_orderpriority")
@@ -294,8 +291,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable key, then the distribution over counts. Scale: first agg
     shuffles on c_custkey (pre-partitioned by the join), second input
     is |distinct counts| rows — negligible."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(~F.col("o_orderpriority").like("1-%"))
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(~F.col("o_orderpriority").like("1-%"))
     per_cust = (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -346,9 +343,9 @@ def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg(decimal) yields DECIMAL(38,10) while DuckDB AVG(DECIMAL) is
     DOUBLE — and a boundary customer could flip membership between
     engines. No engine rounds inside a predicate."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o_keys = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
         .select("o_custkey")
     )
@@ -405,15 +402,15 @@ def q7_nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR evaluates as a residual afterwards. The year extraction groups
     on a derived column — computed pre-shuffle (map-side), so the
     exchange carries (name, name, year) keys only."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     pair = ("NATION_1", "NATION_2")
-    n1 = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair)).select(
+    n1 = load_table(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair)).select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair)).select(
+    n2 = load_table(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair)).select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     return (
@@ -458,8 +455,8 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the orders⋈lineitem join shuffles both sides on orderkey
     once (or goes exchange-free on bucketed tables); the CASE counts
     fold map-side into a 3-group aggregate."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 from .tpch_common import REV
 
@@ -32,9 +32,6 @@ _REV = REV  # single definition: tpch_common.py
 # is modeled off p_retailprice. Double math FIRST (identical expression
 # order on both engines), one cast to exact decimal per row.
 _PROFIT = "CAST(l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity * 0.05 AS DECIMAL(38,6))"
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -78,13 +75,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numerator and denominator come from ONE aggregation pass (CASE
     inside SUM), so the fact spine is scanned once.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     cn = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_regionkey"))
     sn = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
     rev = F.expr(_REV)
@@ -146,11 +143,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan via runtime filtering at cluster scale); supplier and
     nation broadcast; lineitem⋈orders is the only shuffle.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
@@ -198,7 +195,7 @@ def setops_all_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full row (count-per-key on each side, then per-key arithmetic)
     — no sort, no row explosion.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_discount") > 0.08).select(F.col("l_orderkey").alias("k"))
     b = li.filter(F.col("l_quantity") > 30).select(F.col("l_orderkey").alias("k"))
     inter = (
@@ -263,8 +260,8 @@ def embedding_metadata_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     the means derive from the exact sums with one double division +
     ROUND at the end.
     """
-    e = _t(spark, sf_dir, "embeddings")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    e = load_table(spark, sf_dir, "embeddings")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     nrm6 = F.round(F.expr(_NORM_SPARK), 6).cast("decimal(38,6)")
     return (
         e.join(F.broadcast(d), F.col("vec_id") == F.col("doc_id"))
@@ -314,7 +311,7 @@ def text_normalize_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen span — zero UDFs, zero shuffles (scan → project → filter);
     at 100 TB this runs at parquet-scan speed.
     """
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     head60 = F.substring("text", 1, 60)
     return d.select(
         "doc_id",

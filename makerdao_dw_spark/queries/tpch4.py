@@ -34,15 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 from .tpch_common import QTY, REV
 
 _REV = REV  # single definition: tpch_common.py
 _QTY = QTY  # single definition: tpch_common.py
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +67,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries 32 partial rows. At 100 TB this is the
     I/O-bound lower bound every other query is measured against.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -120,10 +117,10 @@ def q2_cheapest_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed — the equality tests a value against a MIN drawn from the
     same column, which is exact in IEEE754 on both engines.
     """
-    p = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    p = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     cheapest = (
         p.withColumn("min_price", F.min("p_retailprice").over(Window.partitionBy("p_type")))
         .filter(F.col("p_retailprice") == F.col("min_price"))
@@ -164,7 +161,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `rev * 1500 > total` — exact decimal multiplication, no division
     anywhere, so the boundary part can't flip between engines.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_part = (
         li.select(F.col("l_partkey").alias("partkey"), F.expr(_REV).alias("rev"))
         .groupBy("partkey")
@@ -209,8 +206,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single row. Ties are kept (exact decimal equality — TPC-H's own
     spec note about ties applies), supplier names arrive by broadcast.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
     # The explicit isnotnull matches the constraint the supplier equi-join
     # pushes into the probe side; with it on BOTH consumers of `revenue`,
     # the two aggregation subtrees canonicalize identically and AQE reuses
@@ -264,11 +261,11 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the only fact-sized work is the DISTINCT pair shuffle,
     which COUNT(DISTINCT) then reuses as its own first phase.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_size").isin(1, 14, 23, 45) & (F.col("p_brand") != "Brand#3")
     )
-    deny = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    deny = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
     return (
         pairs.join(F.broadcast(deny), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
@@ -313,9 +310,9 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-scaled exact decimals, so no division and no rounding can
     disagree across engines. Both passes scan only brand lines.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     brand_parts = (
-        _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select("p_partkey")
+        load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#4").select("p_partkey")
     )
     brand_lines = li.join(F.broadcast(brand_parts), F.col("p_partkey") == F.col("l_partkey"))
     pq = (
@@ -369,10 +366,10 @@ def q20_concentrated_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. supplier/nation attach by broadcast after the aggregate
     (|suppliers| rows, not fact-sized).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%blue%")).select("p_partkey")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%blue%")).select("p_partkey")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     in_1997 = (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp")) & (
         F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")
     )
@@ -434,9 +431,9 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniquely holds the order's max shipdate and isn't alone in the
     order. Two formulations, one hash-compare: a real cross-check.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
+    s = load_table(spark, sf_dir, "supplier")
     lines = (
         li.select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
 
 CHUNK_SIZE = 50
@@ -53,7 +53,6 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. At 100 TB this runs at parquet-read speed and the downstream
     writer controls file sizing.
     """
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(
         "doc_id",
@@ -121,7 +120,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bin id derives from the running sum already computed under that
     partitioning, so packing adds zero extra exchanges.
     """
-    configure(spark)
     d = load_table(spark, sf_dir, "documents", spread=True)
     sized = d.select(
         "source",

@@ -37,11 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.pca import centered_projection, power_iteration_pc1
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .text_common import ws_words_arr, ws_words_duck
 
-_t = query_table
 
 _PI_DIM = 64
 _PI_ITER = 2
@@ -136,7 +135,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     at 100 TB this is 4 scans total (mean, 2 growth steps, final agg)
     and one narrow dim-group shuffle per pass, nothing resident."""
     e = (
-        _t(spark, sf_dir, "embeddings", spread=True)
+        load_table(spark, sf_dir, "embeddings", spread=True)
         .select("vec_id", "label", "embedding")
         .filter(F.col("embedding").isNotNull())
     )
@@ -182,7 +181,7 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimizer can't infer a size()>0 filter carrying the tokenizer
     lambda below the spread repartition (the round-6 pushed-Filter
     hazard, NOTES)."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(
         "source", F.explode_outer(ws_words_arr("text")).alias("word")
     ).filter(F.col("word").isNotNull())

@@ -36,12 +36,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_ntile, use_parallel
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .text_common import ws_words_arr, ws_words_duck
 from .training9 import _IS_BATCH_DUCK, _IS_BATCH_SPARK
 
-_t = query_table
 
 _SMOOTH_M = 10.0  # m-estimate pseudo-count toward the global prior
 
@@ -84,7 +83,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode pass over the fact table. Exact DECIMAL(38,6) sums make
     (group_sum - own_target) deterministic; NULLIF turns singleton
     groups into NULL instead of a divide-by-zero."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     xd = F.col("o_totalprice").cast("decimal(38,6)")
     # one stats scan: the per-category table is O(categories) rows,
     # eager-checkpointed because BOTH the broadcast join and the
@@ -163,7 +162,7 @@ def feature_hash_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines. One tokenize pass, one 32-group shuffle — the doc
     x bucket feature matrix itself would be emitted by the same plan
     with doc_id kept in the grouping key."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(F.explode_outer(ws_words_arr("text")).alias("word")).filter(
         F.col("word").isNotNull()
     )
@@ -225,7 +224,7 @@ def ks_feature_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ordered global window is over a small domain at any scale; the
     heavy work is one groupBy(x) count shuffle. Empty samples yield
     NULL ECDFs via NULLIF (never 0/0) on both engines."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # NULL lengths are not ECDF sample points — and they MUST be
     # filtered for cross-engine parity: Spark's Window.orderBy sorts
     # NULLS FIRST, DuckDB's OVER (ORDER BY x) NULLS LAST, so a single
@@ -317,7 +316,7 @@ def session_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the quantile windows run over the user-cardinality table;
     the recency anchor is a broadcast 1-row aggregate derived from the
     SAME rollup (checkpointed once — two consumers)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     peruser = (
         ev.groupBy("user_id")
         .agg(

@@ -27,11 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck, ws_words_arr, ws_words_duck
 
-_t = query_table
 
 # ---------------------------------------------------------------------------
 # Curation threshold grid
@@ -81,7 +80,7 @@ def curation_threshold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     once map-side; the 9-row literal grid cross-joins onto it and one
     grouped aggregation emits the table — corpus scanned once at any
     scale. NULL text/chars count as empty (kept by no config)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     docs = d.select(
         F.coalesce("n_chars", F.lit(0)).alias("nc"),
         F.size(ws_words_arr(F.coalesce("text", F.lit("")))).alias("nw"),
@@ -201,7 +200,7 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary by drawn rank. Note: a draw may collide with a true
     context (standard negative-sampling noise — trainers tolerate it;
     the label column records the source)."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(tokens_arr("text", 2).alias("ts"))
     uni = (
         toks.select(F.explode_outer("ts").alias("w"))

@@ -31,15 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table
+from ..session import load_table
 from .registry import query
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
-) -> DataFrame:
-    configure(spark)
-    return load_table(spark, sf_dir, name, spread=spread)
 
 
 # --------------------------------------------------------------------------
@@ -94,7 +87,7 @@ def pii_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_all + 3 replace) to one core — the round-robin exchange
     carries (doc_id, text) once and the per-row work is trivially
     partitioning-invariant; measured 7.1–7.4 → ~2.9 s at sf1."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     seeded = d.select(
         "doc_id",
         F.concat(
@@ -196,7 +189,7 @@ def gopher_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1); per-row computation, so partitioning cannot change the
     # result, and the round-robin exchange is not a hash shuffle (the
     # no-hash-exchange plan assertion still holds)
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", F.expr(_W).alias("w"))
     grams = toks.select(
         "doc_id",
@@ -288,7 +281,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inferred size(g2)>0 predicate cannot be pushed below the spread
     # repartition and re-evaluate the whole zip single-threaded in the
     # one-file scan (the split_leakage_audit hazard; 1.23 s -> 0.6 s)
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     grams = d.select(
         "doc_id",
         "source",
@@ -379,7 +372,7 @@ def table_diff_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the plan is a single co-partitioned shuffle join on the key
     (bucketed-by-key snapshots via io/bucketing.py would eliminate even
     that); classification and rollup are narrow."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(38,6)")
     v1 = o.select(
         F.col("o_orderkey").alias("k"),

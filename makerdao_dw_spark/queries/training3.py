@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
 from .text_common import NORM_HASH_DUCK, norm_hash
 
@@ -29,9 +29,6 @@ from .text_common import NORM_HASH_DUCK, norm_hash
 # this anchor, e.g. operators/text_features.py, all cast before the mod).
 _BUCKET_SPARK = "cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 100"
 _BUCKET_DUCK = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100"
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -65,7 +62,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     most |sources|·3 groups. Audited here by per-split doc counts,
     char mass, and the first doc id per cell.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bucket = F.expr(_BUCKET_SPARK)
     return (
         d.withColumn(
@@ -115,7 +112,7 @@ def mixture_resample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg on the same key). The hash order makes the draw uniform
     without any RNG state; doc_id breaks md5 ties exactly.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
     kept = F.col("rn") <= 15
     return (
@@ -171,7 +168,7 @@ def rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup re-keys |doc x token| pre-aggregated rows, never raw
     tokens.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
         .filter(F.col("tok").isNotNull())
@@ -222,21 +219,20 @@ def lateral_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop reading would imply. c_custkey breaks balance ties so
     the kept pair is unique.
     """
-    configure(spark)
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("_lat_nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("_lat_customer")
     return spark.sql(
         """
         SELECT n_name, c.c_custkey, c.c_name, c.c_acctbal
-        FROM _lat_nation, LATERAL (
+        FROM {nation}, LATERAL (
           SELECT c_custkey, c_name, c_acctbal
-          FROM _lat_customer
+          FROM {customer}
           WHERE c_nationkey = n_nationkey
           ORDER BY c_acctbal DESC, c_custkey
           LIMIT 2
         ) c
         ORDER BY n_name, c_acctbal DESC, c_custkey
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -271,7 +267,7 @@ def curation_gate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the 20-byte prefix; the per-source rollup re-aggregates only
     survivors. Nothing Python, nothing fact-sized after the dedup key.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy(F.substring("text", 1, 20)).orderBy("doc_id")
     return (
         d.filter((F.col("lang") == "en") & F.col("n_chars").between(100, 450))
@@ -326,7 +322,7 @@ def contrastive_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only shuffle is the join of (anchors x k) against the doc metadata
     on the uniform hashed id — and in a real corpus the metadata side is
     the slim (id, source) projection, not documents."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # ring modulus as a 1-row broadcast, NOT d.count(): the query stays
     # one lazy plan with no driver-side job at DataFrame-build time
     nd = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
@@ -397,7 +393,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles, and a bare double SUM() OVER () accumulates in arrival
     order — a low bit in the denominator could flip a ROUND boundary
     between runs/engines."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     s = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("n_chars_total"),
@@ -466,7 +462,7 @@ def corpus_end_to_end_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly TWO shuffles at any corpus size — the dedup window's hash
     exchange and the final rollup — where a stage-materialized version
     pays a write+read round-trip per stage."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     normed = d.select(
         "doc_id", "source", "n_chars", "text", norm_hash("text").alias("norm_hash")
     )
@@ -526,7 +522,7 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the reporting rollup. Compare `split_train_val_test`, the per-doc
     variant: same mechanism, different key, complementary guarantees
     (per-doc = exact proportions, per-group = no cross-split leakage)."""
-    d = configure(spark) and load_table(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     h = (
         F.expr(
             "cast(conv(substring(md5(concat('gsplit:', source)), 1, 8), 16, 10) as bigint)"

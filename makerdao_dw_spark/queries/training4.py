@@ -37,11 +37,9 @@ from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_row_number, use_parallel
 from ..operators.text_features import shingles_sql_duckdb
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .text_common import tokens_arr, tokens_arr_duck
-
-_t = query_table
 
 
 # --------------------------------------------------------------------------
@@ -112,7 +110,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     data: re-ingesting or repartitioning the corpus never changes
     which documents survive — the same split-hygiene argument as
     split_train_val_test."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     dw = (
         d.select(
             "doc_id", "source", "lang", F.explode(tokens_arr("text", 2)).alias("w")
@@ -244,7 +242,7 @@ def dedup_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade (recall on boilerplate-only overlap is not a dedup goal)."""
     from ..operators.text_features import shingles_expr
 
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     # NOT checkpointed, measured: unlike lm_bigram's db2 (50x smaller
     # than its token stream), the shingle index is corpus-sized — at
     # sf1 materializing it costs MORE than the consumers' recomputes
@@ -314,7 +312,7 @@ def next_event_training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear streaming work (the sessionize argument, sessionize_events
     docstring); the rollup output is bounded by |event types|^4, not
     by corpus size."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ctx = e.select(
         "event_id",

@@ -31,12 +31,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_ntile, use_parallel
-from ..session import query_table
+from ..session import load_table
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck, ws_words_arr, ws_words_duck
 from .training3 import _BUCKET_DUCK, _BUCKET_SPARK
-
-_t = query_table
 
 
 # --------------------------------------------------------------------------
@@ -80,7 +78,7 @@ def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens| (the naive per-token explode is ~1000x more rows at web
     scale). Pair space is bounded (alphabet²), the rollup is one tiny
     exchange, top-20 via TakeOrdered — no global sort."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     wc = (
         d.select(F.explode(tokens_arr("text")).alias("w"))
         .groupBy("w")
@@ -148,7 +146,7 @@ def curriculum_quality_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one global sort (|docs| rows of (score, id) — at extreme scale
     swap for approx-quantile phase boundaries broadcast back, same
     output contract); the rollup is one exchange."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     scored = d.select(
         "doc_id",
         "source",
@@ -234,7 +232,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is gram-keyed equi (never doc-pair); per-doc rollup is one
     exchange. Same discipline as contamination_ngram_overlap, but the
     'benchmark' side is derived, not a given source."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     split = d.select(
         "doc_id",
         "text",

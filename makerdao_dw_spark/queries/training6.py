@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .registry import query
 from .similarity import (
     _KM_ITER,
@@ -47,7 +47,6 @@ from .similarity import (
 )
 from .text_common import tokens_arr, tokens_arr_duck
 
-_t = query_table
 
 # --------------------------------------------------------------------------
 # Boilerplate chunk detection
@@ -101,7 +100,7 @@ def boilerplate_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     df counting never materializes per-chunk doc lists. The `if` guard
     (not a filter) keeps the heavy tokenize lambda out of
     optimizer-inferred pushed predicates (NOTES.md hazard class)."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     inst = (
         d.select("doc_id", "source", tokens_arr("text").alias("w"))
         .select(
@@ -200,7 +199,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-partition/day rollup of these tables IS the mergeable sketch
     store. Deterministic: md5 arithmetic-hash anchor (NOTES.md), no
     RNG, so estimates are value-oracled, not tolerance-gated."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = (
         d.select(F.explode_outer(tokens_arr("text")).alias("token"))
         .filter(F.col("token").isNotNull())
@@ -357,7 +356,7 @@ def _knn_vote(topk: DataFrame) -> DataFrame:
 def _knn_scored_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact panel x full-corpus cosine scoring (the correctness
     anchor): broadcast fixed probe panel, one corpus pass."""
-    e = _t(spark, sf_dir, "embeddings", spread=True)
+    e = load_table(spark, sf_dir, "embeddings", spread=True)
     nz = e.withColumn(
         "nrm", F.expr(f"sqrt({_dot_expr('embedding', 'embedding')})")
     ).filter(F.col("nrm") > 0)
@@ -502,7 +501,7 @@ def _knn_scored_ann(
     from ..operators.kmeans import _sq_l2, assign_clusters, codebook_lit, kmeans_fit
 
     e = (
-        _t(spark, sf_dir, "embeddings", spread=True)
+        load_table(spark, sf_dir, "embeddings", spread=True)
         .select("vec_id", "label", "embedding")
         .filter(F.expr(f"{_dot_expr('embedding', 'embedding')} > 0"))
     )

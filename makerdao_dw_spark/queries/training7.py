@@ -30,11 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import query_table
+from ..session import load_table
 from .registry import query
 from .text_common import tokens_arr, tokens_arr_duck, ws_words_arr, ws_words_duck
 
-_t = query_table
 
 # --------------------------------------------------------------------------
 # Padding waste by power-of-two length bucket
@@ -95,7 +94,7 @@ def padding_waste_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup rows over an EMPTY corpus where DuckDB emits the ()-group
     total — the known engine-semantic divergence pinned in
     tests/test_degenerate_inputs.py SKIP_EMPTY_COMPARE."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sized = d.select(F.size(tokens_arr("text")).alias("n_tokens"))
     bucketed = sized.select(
         _bucket_case_spark(F.col("n_tokens")).cast("long").alias("bucket_len"),
@@ -162,7 +161,7 @@ def quality_calibrated_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans without a second exchange. At extreme per-source cardinality
     swap NTILE for approx-quantile boundaries — output contract
     unchanged."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     scored = d.select(
         "doc_id",
         "source",
@@ -230,7 +229,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization); the rollup groups on |langs| keys. This is the
     cheap screen run per tokenizer candidate BEFORE committing a full
     re-encode of the corpus."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sized = d.select(
         "lang",
         F.size(ws_words_arr("text")).alias("n_words"),

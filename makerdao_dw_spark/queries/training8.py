@@ -44,7 +44,7 @@ from ..operators.text_features import (
     shingles_sql_duckdb,
     sorted_pairs_expr,
 )
-from ..session import materialize, query_table
+from ..session import load_table, materialize
 from .dedup import LSH_BUCKET_CAP, NUM_HASHES
 from .registry import query
 from .text_common import (
@@ -55,7 +55,6 @@ from .text_common import (
     ws_words_duck,
 )
 
-_t = query_table
 
 # --------------------------------------------------------------------------
 # Cross-document duplicated-span coverage (substring-dedup screen)
@@ -120,7 +119,7 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-sized. posexplode_outer + isNotNull keeps the optimizer
     from pushing the 4-gram lambda chain below the spread repartition
     (the inferred size()>0 hazard, NOTES round-6)."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     toks = d.select(
         "doc_id", "source", ws_words_arr("text").alias("w")
     )
@@ -225,7 +224,7 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATIC id-range bucket from a broadcast 1-row MAX aggregate — no
     global NTILE sort over the corpus. Docs-per-decile comes from the
     slim documents projection so gram-free deciles still appear."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     mx = F.broadcast(d.agg(F.max("doc_id").alias("max_id")))
     toks = d.select("doc_id", ws_words_arr("text").alias("w"))
     grams = toks.select(
@@ -340,7 +339,7 @@ def lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands past ~500k pairs. Estimated-Jaccard aggregates use exact
     integer match-counts (one divide at the end) — no double-sum
     ordering. All per-config stats group on 3 keys; output is 3 rows."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     sigs = d.select("doc_id", shingles_expr("text").alias("sh")).select(
         "doc_id", minhash_signature("sh", NUM_HASHES).alias("sig")
     )

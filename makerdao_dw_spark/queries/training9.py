@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.order_stats import global_ntile, use_parallel
-from ..session import query_table
+from ..session import load_table
 from .dedup import _CC_CORE, _lsh_candidate_pairs
 from .registry import query
 from .text_common import (
@@ -41,7 +41,6 @@ from .text_common import (
     ws_words_duck,
 )
 
-_t = query_table
 
 _G3_SPARK = gram_md5_arr_spark(3)
 _G3_DUCK = gram_md5_arr_duck(3)
@@ -98,7 +97,7 @@ def novelty_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle); the batch probe is a hash join on the uniform gram
     key; the rollup is |sources|-sized. Docs-per-source comes from the
     slim documents projection so gram-free sources still appear."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     is_batch = F.expr(_IS_BATCH_SPARK)
     toks = d.select(
         "doc_id", "source", ws_words_arr("text").alias("w")
@@ -250,7 +249,7 @@ def quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); the rollup groups 10 keys."""
     from ..operators.graph import connected_components
 
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = load_table(spark, sf_dir, "documents", spread=True)
     pairs = _lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     cc = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), "component"

@@ -31,13 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..session import configure, load_table, pandas_group_buckets
+from ..session import load_table, pandas_group_buckets
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _make_gini_udaf():
@@ -95,7 +90,7 @@ def udaf_gini_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same exact-decimal Gini formula in DuckDB — proving the Arrow
     decimal round-trip and the UDAF's arithmetic agree with a
     relational engine to the last rounded digit."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # Spark disallows mixing a GROUPED_AGG pandas UDAF with built-in
     # aggregates in one agg() [INVALID_PANDAS_UDF_PLACEMENT]; the count
     # comes from a separate agg joined back on the (tiny) group key.
@@ -166,7 +161,7 @@ def grouped_map_minmax_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_buckets = pandas_group_buckets(spark)
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "event_id", "value")
         .withColumn("b", F.pmod(F.hash("user_id"), F.lit(n_buckets)))
     )

@@ -23,11 +23,8 @@ from ..operators.quality import (
     run_suite,
     unique_key,
 )
-from ..session import configure, load_table, query_table
+from ..session import load_table
 from .registry import query
-
-
-_t = query_table  # shared helper (session.py), was a per-module copy
 
 
 # --------------------------------------------------------------------------
@@ -71,8 +68,8 @@ def dq_orders_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately tight (p > 400k fails) so the suite demonstrably
     catches violations rather than vacuously passing.
     """
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     scalar = [
         not_null("o_custkey"),
         in_range("o_totalprice", lo=0, hi=400000),
@@ -124,7 +121,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning, so the whole build is ONE shuffle of (user, type, ts,
     id) — no payload columns — followed by map-side run aggregation.
     """
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_typ = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     runs = e.withColumn("grp", F.row_number().over(w_all) - F.row_number().over(w_typ))
@@ -179,7 +176,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     time predicate prunes before aggregation. Latency sums are exact
     integer microseconds (no double accumulation).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = e.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("t_view"))
     c = (
         e.filter(F.col("event_type") == "click")
@@ -245,7 +242,7 @@ def winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles shuffle the value column once; at petabyte scale swap in
     approx_percentile with the same downstream shape.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     q = e.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.05)).alias("p05"),
         F.percentile("value", F.lit(0.95)).alias("p95"),
@@ -309,7 +306,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-cardinality-sized and broadcasts. Nothing wide carries payload
     columns.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first = e.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("cohort_day"))
     act = (
         e.filter(F.col("event_type") == "purchase")
@@ -374,7 +371,7 @@ def concurrency_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale a single range partition suffices and Spark's window handles
     it in one pass.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     starts = e.select(F.col("ts").alias("t"), F.lit(1).alias("delta"), "event_id")
     ends = e.select(
         (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("t"),
@@ -465,7 +462,7 @@ def pit_join_purchase_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplifies. Dimension-version tables are |state changes|-sized, far
     smaller than the fact; with a broadcastable dimension this becomes
     a map-only lookup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     browse = e.filter(F.col("event_type").isin("signup", "view", "click")).select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -536,7 +533,7 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces exactly what a dedicated aggregation pass would."""
     from pyspark.sql import Observation
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     obs = Observation()
     observed = e.observe(
         obs,
@@ -618,7 +615,7 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion; the linear weight conv_value/n_touches is rounded to 9
     decimals and summed as DECIMAL(38,9) (the repo determinism rule:
     arrival order can never flip a bit)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     conv = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         "user_id",
@@ -721,7 +718,7 @@ def cdc_net_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number trick runs per micro-batch and the result MERGEs into
     the serving table (streaming/jobs.py::stream_serving_aggregates
     shows the streaming wiring)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     changes = e.filter(
         F.col("event_type").isin("signup", "purchase", "error")
     ).select(

@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import stat
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,13 +109,16 @@ def ship_package(spark: SparkSession) -> None:
     _PKG_SHIPPED.add(key)
 
 
-def configure(spark: SparkSession) -> SparkSession:
+def configure(spark: SparkSession) -> None:
     """Apply runtime-settable semantics knobs to an externally-owned session.
 
     The driver harness owns its SparkSession; these confs are all
     runtime-mutable and keep query semantics deterministic (UTC
     timestamps match how the parquet testdata is interpreted by the
-    DuckDB oracle, which is timezone-naive).
+    DuckDB oracle, which is timezone-naive). The registry wrapper
+    (queries/registry.py) runs it once per top-level query; the other
+    entry points (ingest and streaming sources, the warehouse
+    dashboard) run it themselves.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -156,7 +161,23 @@ def configure(spark: SparkSession) -> SparkSession:
     if ckpt_dir and not spark.sparkContext.getCheckpointDir():
         spark.sparkContext.setCheckpointDir(ckpt_dir)
     ship_package(spark)
-    return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of a with-block. On exit each
+    key gets its prior value back, or is unset if it had none."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -274,7 +295,9 @@ def _input_signature(path: str) -> tuple | None:
     a removed file changes it; ctime also catches a same-size copy that
     preserved the old mtime (cp -p).
     None when the path cannot be stat'ed (missing, or a URI such as
-    s3a://): such loads bypass the cache."""
+    s3a://): such loads bypass the cache.
+    input_bytes() sizes a table from the same walk, so the cache key
+    and the size agree on which files make up a table."""
     try:
         st = os.stat(path)
         if not stat.S_ISDIR(st.st_mode):
@@ -294,15 +317,34 @@ def _input_signature(path: str) -> tuple | None:
         return None
 
 
+def _sig_bytes(sig: tuple) -> int:
+    """Data bytes an _input_signature covers: the file's size, or the
+    sum over a directory's data files."""
+    if not sig or isinstance(sig[0], tuple):
+        return sum(entry[2] for entry in sig)
+    return sig[1]
+
+
+def input_bytes(sf_dir: str, table: str) -> int | None:
+    """On-disk size of a table: a single parquet file's size, or the sum
+    of a part-file directory's data files (recursive, Spark's hidden-file
+    rule, the files _input_signature walks). None when the path cannot
+    be stat'ed; each scale gate picks its own answer for that case."""
+    sig = _input_signature(os.path.join(sf_dir, f"{table}.parquet"))
+    return None if sig is None else _sig_bytes(sig)
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
 ) -> DataFrame:
     """Load a testdata table.
 
     spread round-robins the rows across the session's parallelism before
-    CPU-heavy stages. Default (None) = auto: spread only when the file
-    is big enough to matter but is a single unsplittable row group.
-    Tiny dimensions stay single-partition (they broadcast anyway).
+    CPU-heavy stages. Default (None) = auto: spread only when the input
+    is big enough to matter (its data bytes, taken from the signature
+    below, so a part-file directory counts its files, not its directory
+    entry) but the scan cannot split it (_scan_splits). Tiny dimensions
+    stay single-partition (they broadcast anyway).
 
     The resolved relation is cached per session, keyed by (absolute
     path, resolved spread); each entry carries the input's on-disk
@@ -321,15 +363,12 @@ def load_table(
     # what the DuckDB oracle reads.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if spread is None:
-        try:
-            spread = os.path.getsize(path) > _AUTO_SPREAD_BYTES
-        except OSError:
-            spread = False
-    key = (os.path.abspath(path), spread)
     # taken BEFORE the read: a file replaced mid-read leaves a stale
     # signature, so the next load misses instead of trusting the entry
     sig = _input_signature(path)
+    if spread is None:
+        spread = sig is not None and _sig_bytes(sig) > _AUTO_SPREAD_BYTES
+    key = (os.path.abspath(path), spread)
     if sig is not None:
         with _MATERIALIZED_LOCK:
             hit = spark.__dict__.get(_TABLE_CACHE_ATTR, {}).get(key)
@@ -377,13 +416,15 @@ def _scan_splits(spark: SparkSession, path: str, sig: tuple | None) -> int:
     spreading it would add a pure extra shuffle (VERDICT r11 item 8);
     a small file with many tiny row groups is ONE split and still
     needs the spread."""
+    if sig is None:
+        return 1
     if os.path.isdir(path):
-        return max(len(sig or ()), 1)
+        return max(len(sig), 1)
+    size = _sig_bytes(sig)
     try:
         import pyarrow.parquet as pq
 
         row_groups = pq.ParquetFile(path).metadata.num_row_groups
-        size = os.path.getsize(path)
     except Exception:
         # unreadable footer / pyarrow absent: the conservative answer
         # is 1 (spread) — a needless exchange beats a one-core scan
@@ -393,18 +434,6 @@ def _scan_splits(spark: SparkSession, path: str, sig: tuple | None) -> int:
     per_core = (size + open_cost) // max(spark.sparkContext.defaultParallelism, 1)
     split_bytes = max(min(max_part, max(open_cost, per_core)), 1)
     return max(min(row_groups, -(-size // split_bytes)), 1)
-
-
-def query_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
-) -> DataFrame:
-    """configure + load_table in one call — the standard entry for query
-    modules (previously copy-pasted as a private _t helper per module).
-    NOTE: many modules also use `configure(spark) and load_table(...)`,
-    which relies on configure RETURNING the session (truthy) — that
-    return contract is pinned by tests/test_functions.py."""
-    configure(spark)
-    return load_table(spark, sf_dir, name, spread=spread)
 
 
 _MATERIALIZED: list[DataFrame] = []
@@ -808,14 +837,3 @@ def release_materialized() -> None:
             pass  # session already stopped; nothing to release
     for d in doomed:
         _rm_staged(d)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table as a DataFrame keyed by name."""
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata tables as temp views for spark.sql() queries."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -34,6 +34,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import conf_override, input_bytes
 from .sources import stream_table
 
 _SEQ = itertools.count()
@@ -72,22 +73,6 @@ _STATE_PARTS_CONF = "spark.makerdao.streaming.state.partitions"
 _FINAL_WM_BATCH_CONF = "spark.makerdao.streaming.drain.finalWatermarkBatch"
 
 
-def _input_bytes(sf_dir: str, table: str) -> int:
-    """Size of a testdata table (single parquet file or part-file dir)."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 0
-
-
 def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
     """Scale-adaptive state-store partition count for a streaming drain:
     one partition per _STATE_PART_TARGET_BYTES of source input, at least
@@ -103,7 +88,7 @@ def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
             raise ValueError(f"{_STATE_PARTS_CONF} must be positive, got {n}")
         return n
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    total = sum(_input_bytes(sf_dir, t) for t in tables)
+    total = sum(input_bytes(sf_dir, t) or 0 for t in tables)
     return min(shuffle_parts, max(4, -(-total // _STATE_PART_TARGET_BYTES)))
 
 
@@ -142,43 +127,33 @@ def _drain(
     name = f"stream_sink_{next(_SEQ)}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
     spark = sdf.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    if state_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     final_wm = spark.conf.get(_FINAL_WM_BATCH_CONF, "false") == "true"
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if final_wm else "false",
-    )
+    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": str(final_wm).lower()}
+    if state_parts is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_parts)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
+        with conf_override(spark, confs):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(timeout_s):
+                q.stop()
+                raise TimeoutError(
+                    f"streaming drain {name!r} did not finish in {timeout_s}s — "
+                    "refusing to return a partially-filled sink table"
+                )
+            prog = q.lastProgress
+            if prog and prog.get("stateOperators"):
+                LAST_STATE_ROWS[caller] = sum(
+                    op.get("numRowsTotal", 0) for op in prog["stateOperators"]
+                )
             q.stop()
-            raise TimeoutError(
-                f"streaming drain {name!r} did not finish in {timeout_s}s — "
-                "refusing to return a partially-filled sink table"
-            )
-        prog = q.lastProgress
-        if prog and prog.get("stateOperators"):
-            LAST_STATE_ROWS[caller] = sum(
-                op.get("numRowsTotal", 0) for op in prog["stateOperators"]
-            )
-        q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
-        )
         # the memory sink holds the result; a finished drain is never
         # resumed, so its checkpoint is dead weight in the temp dir
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -77,15 +77,10 @@ def transform_with_state_type_stats(spark: SparkSession, sf_dir: str) -> DataFra
             "transformWithStateInPandas needs the protobuf package, "
             "not present in this environment"
         )
-    from ..session import configure
+    from ..session import conf_override
     from .jobs import _drain
     from .sources import stream_table
 
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     ev = stream_table(spark, sf_dir, "events")
     out = ev.groupBy("event_type").transformWithStateInPandas(
         statefulProcessor=TypeStatsProcessor(),
@@ -93,4 +88,6 @@ def transform_with_state_type_stats(spark: SparkSession, sf_dir: str) -> DataFra
         outputMode="Update",
         timeMode="None",
     )
-    return _drain(out, "update")
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_override(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
+        return _drain(out, "update")

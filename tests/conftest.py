@@ -15,7 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from makerdao_dw_spark.session import TESTDATA_TABLES, get_spark
+from makerdao_dw_spark.session import TESTDATA_TABLES, configure, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_T2 = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
@@ -24,6 +24,10 @@ SF_DIR_T2 = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("makerdao-dw-spark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    # Registered queries configure the session at entry (registry
+    # wrapper); tests that call a raw query fn directly bypass it, so the
+    # fixture configures up front, whichever test runs first.
+    configure(s)
     yield s
     s.stop()
 

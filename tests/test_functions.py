@@ -82,13 +82,3 @@ def test_wad_ray_keep_full_precision(spark):
     # the ~5%/yr MakerDAO duty rate, rounded HALF_UP at digit 18
     assert row.duty == Decimal("1.000000001547125958"), row.duty
 
-
-def test_configure_returns_the_session(spark):
-    """Many query modules use the `configure(spark) and load_table(...)`
-    idiom, which silently binds None (then AttributeErrors) if configure
-    ever stops returning the session — pin the return contract."""
-    from makerdao_dw_spark.session import configure, query_table
-
-    assert configure(spark) is spark
-    # and the shared helper loads a frame end-to-end
-    assert query_table(spark, "/root/testdata/sf0.001", "nation").count() == 25

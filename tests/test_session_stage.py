@@ -68,7 +68,7 @@ def test_configure_honors_shuffle_partition_override(spark, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256")
         S.configure(spark)
         assert spark.conf.get(key) == "256"
-        # and a query-layer entry (query_table -> configure) keeps it too
+        # (the registry wrapper's per-query entry runs this same configure)
         monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
         S.configure(spark)
         assert spark.conf.get(key) == str(
