@@ -154,25 +154,49 @@ def _scratch_gb(spark) -> float:
 CONTENTION_DRIFT = 0.20
 
 
-def _time_query(spark, name: str) -> float:
-    """Per-query estimator (round 11, VERDICT r10 item 1): one UNTIMED
-    warm-up run (pays codegen/JIT/page-cache population — the state a
-    cross-session comparison cannot control), then MEDIAN of 3 timed
-    runs. The old min-of-3 was cold-inclusive and min-estimated: a
-    single lucky sample set the number, so two clean sessions of
-    identical code spread ~25%. Median-after-warmup is robust to one
-    spike in either direction and measures the same steady state in
-    every session."""
-    fn = REGISTRY[name].fn
-    rows = fn(spark, SF_DIR).collect()  # warm-up, untimed
-    assert rows is not None
-    samples = []
-    for _ in range(3):
+def _engine_consume(df) -> None:
+    """Consume EVERY output column JVM-side: xxhash64 over all columns
+    (cast to string for type-uniformity), summed as decimal so ANSI mode
+    cannot overflow. No column pruning can drop plan work and no rows
+    cross the JVM/Python boundary, so for a query whose output grows
+    with the corpus this times the plan, not driver materialization."""
+    df.select(
+        F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h")
+    ).agg(F.sum(F.col("h").cast("decimal(38,0)"))).collect()
+
+
+def time_query(
+    spark, fn, sf_dir: str, reps: int = 3, engine: bool = False
+) -> tuple[float, list[float]]:
+    """Time `fn(spark, sf_dir)` to completion: one first run (pays
+    codegen/JIT/page-cache population — the state a cross-session
+    comparison cannot control), then `reps` timed runs. Returns
+    (first_s, runs). Each run builds the plan and collects it, or with
+    `engine` consumes it JVM-side (_engine_consume).
+
+    The suite's per-query estimator (round 11, VERDICT r10 item 1) is
+    the MEDIAN of the runs, the first run excluded. The old min-of-3 was
+    cold-inclusive and min-estimated: a single lucky sample set the
+    number, so two clean sessions of identical code spread ~25%.
+    Median-after-warmup is robust to one spike in either direction and
+    measures the same steady state in every session."""
+
+    def once() -> float:
         t0 = time.perf_counter()
-        rows = fn(spark, SF_DIR).collect()
-        samples.append(time.perf_counter() - t0)
-        assert rows is not None
-    return statistics.median(samples)
+        df = fn(spark, sf_dir)
+        if engine:
+            _engine_consume(df)
+        else:
+            df.collect()
+        return time.perf_counter() - t0
+
+    first = once()
+    return first, [once() for _ in range(reps)]
+
+
+def _median_s(spark, name: str) -> float:
+    _first, runs = time_query(spark, REGISTRY[name].fn, SF_DIR)
+    return round(statistics.median(runs), 3)
 
 
 def _run_suite(spark) -> dict:
@@ -192,14 +216,14 @@ def _run_suite(spark) -> dict:
         # measured as a 1.7s-vs-9.0s cross-session whipsaw on the
         # suite's last query while the same query ran a steady
         # 3.4-4.6s standalone. ~100ms per query buys state-independent
-        # timings (the same reason tools/bench_third_decade gc's
-        # between queries).
+        # timings (the same reason tools/measure.py gc's between
+        # queries).
         gc_hint(spark)
-        timings[name] = round(_time_query(spark, name), 3)
+        timings[name] = _median_s(spark, name)
         scratch[name] = _scratch_gb(spark)
     for name in STREAMING:
         gc_hint(spark)
-        streaming[name] = round(_time_query(spark, name), 3)
+        streaming[name] = _median_s(spark, name)
     calib_end = calibrate(spark)
     start_med = statistics.median(calib_start)
     end_med = statistics.median(calib_end)

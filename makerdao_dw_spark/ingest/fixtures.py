@@ -11,13 +11,16 @@ duty near 1e27 ray.
 
 from __future__ import annotations
 
+import os
 import random
 
 from ..abi.loader import load_abi
 from ..abi.schema import TableSpec, compile_contract
 from .rpc import ContractSim, MockChain
 
-REF_CONF = "/root/reference/conf"
+# Hand-written vat frob/grab/fold and jug 3-arg file entries: the four
+# tables the chain emits, so the fixture needs no upstream ABI tree.
+ABI_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "maker_abi")
 
 ILKS = [
     "PSM-USDC-A", "USDC-A", "USDT-A", "ETH-A", "ETH-B", "WBTC-A",
@@ -63,8 +66,8 @@ def maker_value_gen(spec: TableSpec, rng: random.Random) -> list:
 
 
 def maker_specs() -> tuple[list[TableSpec], list[TableSpec]]:
-    vat = compile_contract("vat", load_abi(f"{REF_CONF}/makermcd/vat.abi"))
-    jug = compile_contract("jug", load_abi(f"{REF_CONF}/makermcd/jug.abi"))
+    vat = compile_contract("vat", load_abi(os.path.join(ABI_DIR, "vat.abi")))
+    jug = compile_contract("jug", load_abi(os.path.join(ABI_DIR, "jug.abi")))
     vat_used = [s for s in vat if s.table in ("vat_call_frob", "vat_call_grab", "vat_call_fold")]
     jug_used = [s for s in jug if s.table == "jug_call_file"]  # 3-arg overload = bare name
     assert {s.table for s in vat_used} == {"vat_call_frob", "vat_call_grab", "vat_call_fold"}

@@ -647,6 +647,45 @@ def cleanup_staged(all_threads: bool = True) -> None:
         _rm_staged(d)
 
 
+def _new_staged_dir(
+    spark: SparkSession, name: str, caller: str, table: str | None = None
+) -> str:
+    """Create a staged dir under _staging_root() and register it (and its
+    catalog table, if any) for the two-generation lifecycle before the
+    caller writes into it, so a failed write is still cleaned up. The
+    driver-local tempdir fallback is refused off a local[*] master."""
+    import tempfile
+    import uuid
+
+    global _STAGED_ATEXIT_REGISTERED
+    root = _staging_root(spark)
+    if root is None:
+        master = spark.sparkContext.master
+        if not master.startswith("local"):
+            raise RuntimeError(
+                f"session.{caller}() needs a SHARED staging root on a cluster "
+                f"(master={master!r}): set spark.makerdao.staging.dir, "
+                "$SPARK_GRAFT_STAGING_DIR, or a checkpoint dir — a "
+                "driver-local temp path would silently drop executor-"
+                "written partitions on read-back"
+            )
+        d = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
+    else:
+        d = root.rstrip("/") + f"/spark_graft_{name}_{uuid.uuid4().hex}"
+        if "://" not in d:
+            os.makedirs(d, exist_ok=True)
+    with _MATERIALIZED_LOCK:
+        _STAGED_LIVE.append((threading.get_ident(), d))
+        if table is not None:
+            _STAGED_TABLES[d] = table
+        if not _STAGED_ATEXIT_REGISTERED:
+            import atexit
+
+            atexit.register(cleanup_staged)
+            _STAGED_ATEXIT_REGISTERED = True
+    return d
+
+
 def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     """HARD lineage cut for shuffle-heavy iterative queries: write `df`
     to a session-scoped temp parquet, read it back, drop what the JVM
@@ -681,36 +720,9 @@ def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     driver-local tempdir fallback is only taken under a local[*]
     master. All still-live dirs are removed at interpreter exit
     (cleanup_staged, atexit) so long driver sessions don't leak."""
-    import tempfile
-    import uuid
-
-    global _STAGED_ATEXIT_REGISTERED
     spark = df.sparkSession
-    root = _staging_root(spark)
-    if root is None:
-        master = spark.sparkContext.master
-        if not master.startswith("local"):
-            raise RuntimeError(
-                "session.stage() needs a SHARED staging root on a cluster "
-                f"(master={master!r}): set spark.makerdao.staging.dir, "
-                "$SPARK_GRAFT_STAGING_DIR, or a checkpoint dir — a "
-                "driver-local temp path would silently drop executor-"
-                "written partitions on read-back"
-            )
-        d = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
-    else:
-        d = root.rstrip("/") + f"/spark_graft_{name}_{uuid.uuid4().hex}"
-        if "://" not in d:
-            os.makedirs(d, exist_ok=True)
-    path = d + "/data"
+    path = _new_staged_dir(spark, name, "stage") + "/data"
     df.write.mode("overwrite").parquet(path)
-    with _MATERIALIZED_LOCK:
-        _STAGED_LIVE.append((threading.get_ident(), d))
-        if not _STAGED_ATEXIT_REGISTERED:
-            import atexit
-
-            atexit.register(cleanup_staged)
-            _STAGED_ATEXIT_REGISTERED = True
     return spark.read.parquet(path)
 
 
@@ -737,27 +749,13 @@ def stage_bucketed(
     the bucket layout with it. Same two-generation lifecycle and shared
     staging-root rules as stage(); the catalog entry is dropped with
     the files."""
-    import tempfile
     import uuid
 
-    global _STAGED_ATEXIT_REGISTERED
     spark = df.sparkSession
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    root = _staging_root(spark)
-    if root is None:
-        master = spark.sparkContext.master
-        if not master.startswith("local"):
-            raise RuntimeError(
-                "session.stage_bucketed() needs a SHARED staging root on "
-                f"a cluster (master={master!r}) — see stage()"
-            )
-        d = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
-    else:
-        d = root.rstrip("/") + f"/spark_graft_{name}_{uuid.uuid4().hex}"
-        if "://" not in d:
-            os.makedirs(d, exist_ok=True)
     tbl = f"spark_graft_staged_{name}_{uuid.uuid4().hex[:12]}"
+    d = _new_staged_dir(spark, name, "stage_bucketed", tbl)
     (
         df.repartition(n_buckets, F.col(key))
         .write.mode("overwrite")
@@ -766,14 +764,6 @@ def stage_bucketed(
         .option("path", d + "/data")
         .saveAsTable(tbl)
     )
-    with _MATERIALIZED_LOCK:
-        _STAGED_LIVE.append((threading.get_ident(), d))
-        _STAGED_TABLES[d] = tbl
-        if not _STAGED_ATEXIT_REGISTERED:
-            import atexit
-
-            atexit.register(cleanup_staged)
-            _STAGED_ATEXIT_REGISTERED = True
     return spark.table(tbl)
 
 

@@ -43,9 +43,9 @@ _SEQ = itertools.count()
 # Final-micro-batch state-store row count of the most recent _drain,
 # keyed by the `run_*` helper that invoked it (one entry per helper,
 # overwritten on every run — bounded across a long-lived session).
-# Observability only (tools/bench_streaming_scale.py reads it to verify
-# the bounded-state claim at growing input sizes); no query logic
-# depends on it.
+# Observability only (tools/measure.py reports it as a query's
+# `state_rows` to check the bounded-state claim at growing input
+# sizes); no query logic depends on it.
 LAST_STATE_ROWS: dict[str, int] = {}
 
 
@@ -67,9 +67,9 @@ _STATE_PARTS_CONF = "spark.makerdao.streaming.state.partitions"
 # Set to "true" to run the trailing no-data micro-batch in _drain after
 # all — the watermark then advances once more and EVICTS expired state
 # before the query stops. Sink output is identical either way (see
-# _drain); the knob exists for state-observability harnesses
-# (tools/bench_streaming_scale.py measures post-eviction state rows to
-# prove the bounded-state claim).
+# _drain); the knob exists for state-observability runs that want
+# post-eviction state rows (tools/measure.py's `state_rows` are read at
+# the drain's last data batch unless it is set).
 _FINAL_WM_BATCH_CONF = "spark.makerdao.streaming.drain.finalWatermarkBatch"
 
 
