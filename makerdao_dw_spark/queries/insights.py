@@ -21,12 +21,12 @@ machinery.
   the DuckDB oracle (the pagerank/kmeans unrolling technique), so the
   vote — including its tie-break — is value-checked.
 - `label_propagation_convergence` (round 11): per-round convergence
-  telemetry (label churn, community count) for K=4 UNIFORM vote
-  rounds against a K-unrolled oracle — the monitoring curve that
-  decides when a real LPA job stops, and the value-level proof that
-  the bucketed-staging round body is correct for arbitrary K, not
-  just the unrolled K=2 above. The fixpoint-bounded operator form is
-  `operators/graph.py::label_propagation`.
+  telemetry (label churn, community count) for K=4 vote rounds
+  against a K-unrolled oracle — the monitoring curve that decides
+  when a real LPA job stops.
+
+Both LPA queries run `operators/graph.py::label_propagation`, the
+engine's one LPA, with max_rounds 2 and 4.
 
 Determinism: exact integer counts everywhere; every argmax is a
 ROW_NUMBER over (count DESC, label ASC); ln carries the accepted
@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import input_bytes, load_table, materialize, materialize_lazy
+from ..operators.graph import label_propagation
+from ..session import load_table, materialize
 from .basket_common import basket_ctes_duck, basket_pair_join, frequent_baskets
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck
@@ -263,52 +264,31 @@ _SIG_PLUS_MU = (
 
 
 # ---------------------------------------------------------------------------
-# Two-round synchronous label propagation over the co-purchase graph
+# Label propagation over the co-purchase graph (operators/graph.py)
 # ---------------------------------------------------------------------------
 _LPA_MIN_ITEM = 5  # frequent-item gate for the pair join (apriori)
-# Per-task state bytes for LPA's fused vote stage rows: ~24 B of
-# hash-aggregate state per (node, label, count) entry. The rows-per-task
-# budget itself is DERIVED from the session's memory config
-# (session.rows_per_task_budget — round 11; the former hard-coded
-# 8_000_000 literal encoded this node's 48g/32-core harness) so the
-# bucket/partition self-scaling is portable to any executor
-# memory/core ratio.
-_LPA_VOTE_ROW_BYTES = 24
-
-# Above this lineitem file size the small-corpus gate is decided without
-# the Σ C(w,2) estimate job: ~1 GiB of lineitem is ~70M rows and ~140M
-# candidate pairs — no plausible rows_per_task_budget() (which would
-# need ~3.4 GB of per-task execution memory at 24 B/row) calls that
-# small, so the estimate aggregate would be a pure waste of a
-# fact-sized pass on the very inputs where passes are expensive.
-_LPA_EST_INPUT_BYTES = 1 << 30
 
 
-def _lpa_small_corpus(sf_dir: str, fb: DataFrame, rows_per_task: int) -> bool:
-    """True when the WHOLE candidate pair set fits one task's budget —
-    the scale gate for the staged-bucketed LPA layout (r11, guide §2:
-    derive partitioning strategy from input size, not a constant).
-
-    The bucketed staging pays 2 extra table writes + per-round bucket
-    scans to elide edge-sized exchanges; when every vote round's total
-    state fits ONE task budget there is no exchange worth eliding and
-    the fixed staging cost dominates (measured at sf0.1: 13.1 s staged
-    vs 10.4 s unstaged, flat rounds both ways). The gate is the exact
-    pre-distinct pair count Σ C(basket_width, 2) — one narrow aggregate
-    over fb, strictly cheaper than the pair join it sizes, and an upper
-    bound on the staged pair count (cross-order duplicate pairs
-    collapse in the join's distinct). Inputs past _LPA_EST_INPUT_BYTES
-    skip even the estimate job (see its comment)."""
-    size = input_bytes(sf_dir, "lineitem")
-    if size is None or size > _LPA_EST_INPUT_BYTES:
-        return False
-    est = (
-        fb.groupBy("o")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum(F.expr("(c * (c - 1)) div 2")).alias("n"))
-        .collect()[0]["n"]
+def _co_purchase_lpa(
+    spark: SparkSession, sf_dir: str, max_rounds: int, stats: dict | None = None
+) -> DataFrame:
+    """operators/graph.py::label_propagation for at most `max_rounds`
+    rounds over the co-purchase graph. The edge build is the SHARED
+    apriori-gated basket scaffold (basket_common.py — market_basket_lift
+    mines the same graph): frequent items only, pair expansion bounded
+    by basket width, sort-merge hinted (see basket_pair_join for why
+    the un-hinted plan broadcasts the fact side). The operator
+    canonicalizes, dedups and stages the pairs, then releases the basket
+    caches before its first round."""
+    li = load_table(spark, sf_dir, "lineitem")
+    baskets, freq, fb = frequent_baskets(li, _LPA_MIN_ITEM)
+    edges = basket_pair_join(fb).select(
+        F.col("b1.p").alias("src"), F.col("b2.p").alias("dst")
     )
-    return int(est or 0) <= rows_per_task
+    labels, _ = label_propagation(
+        edges, max_rounds=max_rounds, stats=stats, release=(baskets, freq)
+    )
+    return labels
 
 
 @query(
@@ -349,173 +329,18 @@ ORDER BY l2.node
 )
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two synchronous label-propagation rounds over the co-purchase
-    graph: round 1 collapses the unique-initial-label tie to the
-    smallest neighbor id; round 2 is a genuine majority vote over the
-    round-1 labels (ties to the smallest label via a max(struct)
-    argmax — highest vote count, then smallest label via the negated
-    key, a hash aggregate with map-side partials instead of a
-    row_number window's partition sort). The cheap community splitter
-    next to connected components. Edge build reuses the apriori-gated
-    basket pair join (frequent items only, pair expansion bounded by
-    basket width; sort-merge hinted — see
-    basket_common.basket_pair_join for why the un-hinted plan
-    broadcasts the fact side). Only the u<v pair table is
-    checkpointed (half the edge volume), as TWO BUCKETED staged
-    copies (round 10; round 9 used a plain staged parquet) — not a
-    persist: staging releases the entire pair-build working set
-    (basket caches + four fact-sized shuffles) MID-QUERY, so peak
-    scratch is max-over-stages (the round-9 fix for the sf100
-    single-node disk ceiling), and bucketing by each endpoint elides
-    the edge-sided exchange from every per-round consumer keyed on
-    it, so a vote round moves ONE edge-sized shuffle instead of
-    three — O(E) data motion per round with no driver state, the LPA
-    shape that scales to any edge count. Both rounds (and the
-    tie-breaks) unroll into the DuckDB oracle. The basket build is
-    the SHARED scaffold (basket_common.py) — market_basket_lift mines
-    the same graph."""
-    from ..session import (
-        drop_materialized,
-        gc_hint,
-        rows_per_task_budget,
-        stage,
-        stage_bucketed,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets, freq, fb = frequent_baskets(li, _LPA_MIN_ITEM)
-    # stage_bucketed(), not materialize() or plain stage() (round 10):
-    # the u<v pair table is the round checkpoint. A persist would keep
-    # the whole pair-build lineage (~half the query's shuffle temp)
-    # pinned through both vote rounds — the measured single-node
-    # ceiling at sf100 (round 8); the staged cut + mid-query release
-    # turns peak scratch into max-over-stages (round 9). Round 10
-    # stages TWO BUCKETED copies (by u and by v): every per-round
-    # consumer keyed on the bucket key — both direction-wise min
-    # aggregates and both vote joins — plans with the edge-sided
-    # exchange ELIDED, so a vote round's data motion drops from ~three
-    # edge-sized shuffles to ONE (the repartition feeding the vote
-    # argmax below). That is the iterative-graph idiom at 100 TB: pay
-    # the edge partitioning once at stage time, not K times per round.
-    pairs_uv = (
-        basket_pair_join(fb)
-        .select(F.col("b1.p").alias("u"), F.col("b2.p").alias("v"))
-        .distinct()
-    )
-    # plain cut FIRST: it ends the pair-build phase (so its four
-    # fact-sized shuffles are reclaimable before anything else runs)
-    # and its count sizes the bucket layout — a bucketed scan is one
-    # task per bucket, so the BUCKET count must grow with the data
-    # exactly like the vote partitions below (measured at sf100:
-    # 1.2B pairs / 32 buckets = 37.5M rows/task streaming into the
-    # fused sort+SMJ+shuffle-write stage = SparkOutOfMemoryError;
-    # /150 buckets completes). Cost: one extra E-row parquet
-    # write+read (~1 GB at sf100) — noise next to the shuffles the
-    # layout removes.
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rows_per_task = rows_per_task_budget(spark, _LPA_VOTE_ROW_BYTES)
-    # r11 scale gate (guide §2, measure-first): when the whole pair set
-    # fits ONE task's budget there is no edge-sized exchange worth
-    # eliding, and the two bucketed table writes + per-round bucketed
-    # scans are pure fixed cost (measured at sf0.1: 13.1 s staged vs
-    # 10.4 s with the plain staged parquet reused for both directions).
-    # The plain stage() stays on BOTH paths: it is the lineage cut that
-    # releases the pair-build shuffles mid-query AND keeps each round's
-    # logical plan bottoming out at a 1-node scan (persist-based frames
-    # nest the full pair-build subtree twice per round — measured
-    # exponential planning blowup, 1.3 -> 14.8 s/round by round 4).
-    small = _lpa_small_corpus(sf_dir, fb, rows_per_task)
-    pairs0 = stage(pairs_uv, "lpa_pairs_raw")
-    drop_materialized(baskets, freq)
-    baskets = freq = fb = pairs_uv = None
-    gc_hint(spark)
-    if small:
-        by_u = by_v = pairs0
-    else:
-        n_pairs = pairs0.count()
-        n_buckets = max(shuffle_parts, -(-n_pairs // rows_per_task))
-        by_u = stage_bucketed(pairs0, "u", "lpa_pairs_u", n_buckets)
-        by_v = stage_bucketed(pairs0, "v", "lpa_pairs_v", n_buckets)
-    # round 1: min neighbor over both directions — each directional min
-    # is a zero-exchange aggregate on its aligned copy; the full-outer
-    # merge is node-cardinality. least() skips NULLs on both engines.
-    l1 = (
-        by_u.groupBy(F.col("u").alias("node"))
-        .agg(F.min("v").alias("mv"))
-        .join(
-            by_v.groupBy(F.col("v").alias("node")).agg(F.min("u").alias("mu")),
-            "node",
-            "full",
-        )
-        .select("node", F.least("mv", "mu").alias("label"))
-        # node-cardinality, TWO consumers (both vote joins below) —
-        # without the materialization the full-outer merge of the two
-        # directional min-aggregates recomputes per consumer: two extra
-        # bucketed scans of the edge table per query (ADVICE r10),
-        # mirroring the existing materialize of l2
-        .transform(materialize)
-    )
-    # round 2 votes: each pair (u,v) contributes u <- label(v) (from the
-    # v-bucketed copy) and v <- label(u) (from the u-bucketed copy) —
-    # the pair side of both joins needs no exchange. The explicit
-    # repartition on the voter key is the round's ONE edge-sized
-    # shuffle: HashPartitioning(u) satisfies the (u,label) grouping AND
-    # the argmax's (u) grouping, so both aggregates below it are
-    # exchange-free.
-    va = by_v.join(l1.withColumnRenamed("node", "v"), "v").select("u", "label")
-    vb = by_u.join(l1.withColumnRenamed("node", "u"), "u").select(
-        F.col("v").alias("u"), "label"
-    )
-    # The explicit repartition sizes ITSELF from the edge count instead
-    # of inheriting spark.sql.shuffle.partitions: the fused stage below
-    # it (SMJ + union + two chained hash aggregates, all exchange-free)
-    # holds more per-task state than the old many-exchange plan, and a
-    # pinned-low partition count puts a whole-corpus fraction in one
-    # task (measured at sf100: 2.4B vote rows / 32 = 75M rows/task =
-    # SparkOutOfMemoryError; /256 = 9.4M rows/task completes). This is
-    # the per-operator form of AQE's initialPartitionNum: partition
-    # count grows with the data, bounded per-task working set. The
-    # count() is a cheap columnar count-star on the staged table.
-    # r12 (VERDICT r11 item 6), measured REFUTED: replacing this
-    # repartition+complete-aggregate with a partial (map-side combined)
-    # groupBy(u,label) over pre-sized shuffle partitions — combine
-    # before the exchange, but a second votes-cardinality exchange for
-    # the argmax — was a WASH at sf1 (interleaved 2x2 fresh-session
-    # A/B, warm walls: current 15.15/15.87 s vs combined 14.92/16.75).
-    # Two vote rounds leave the (u,label) dedup factor too low for the
-    # combine to pay for the extra exchange; the single hash(u)
-    # exchange below stays (it serves BOTH aggregates).
-    voters = va.unionByName(vb)
-    if not small:
-        # the large path's ONE edge-sized shuffle, self-sized from the
-        # pair count (see the comment above); the small path skips the
-        # explicit repartition entirely and lets AQE coalesce the
-        # grouping exchanges to the data (sub-task-budget by the gate)
-        n_parts = max(shuffle_parts, -(-2 * n_pairs // rows_per_task))
-        voters = voters.repartition(n_parts, F.col("u"))
-    votes = voters.groupBy(F.col("u").alias("node"), "label").agg(
-        F.count(F.lit(1)).alias("n_votes")
-    )
-    # node-cardinality result, TWO consumers (community sizes + the
-    # join-back) — without the checkpoint the whole 24M-edge vote
-    # chain runs twice (measured at sf1: 48s -> 18s)
-    l2 = (
-        votes.groupBy("node")
-        .agg(
-            F.max(
-                F.struct(F.col("n_votes"), (-F.col("label")).alias("neg_label"))
-            ).alias("m")
-        )
-        .select("node", (-F.col("m.neg_label")).alias("label"))
-        .transform(materialize)
-    )
-    sizes = l2.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
+    graph, with community sizes — the cheap community splitter next to
+    connected components. Round 1's unique-label vote collapses to the
+    smallest neighbor id (the oracle's MIN round); round 2 is a genuine
+    majority vote, ties to the smallest label. The result is
+    materialized: the node-sized join is computed once, and the
+    consuming plan reads only the cache."""
+    labels = _co_purchase_lpa(spark, sf_dir, 2)
+    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
     return (
-        l2.join(sizes, "label")
-        .select(
-            "node",
-            F.col("label").alias("community"),
-            "community_size",
-        )
+        labels.join(sizes, "label")
+        .select("node", F.col("label").alias("community"), "community_size")
+        .transform(materialize)
         .orderBy("node")
     )
 
@@ -586,123 +411,18 @@ def label_propagation_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
     """Per-round convergence telemetry for K=4 (_LPA_SWEEP_ROUNDS) uniform
     synchronous label-propagation rounds over the co-purchase graph:
     (round_no, nodes_changed, n_communities) — the monitoring curve an
-    operator of a 100 TB LPA job actually watches to decide when to
-    stop (label churn per round, community-count trajectory).
+    operator of a large LPA job watches to decide when to stop (label
+    churn per round, community-count trajectory), value-checked K deep
+    against the K-unrolled DuckDB oracle.
 
-    Exercises the bucketed-staging idiom BEYOND the unrolled K=2 of
-    `label_propagation_communities` through the driver's value oracle:
-    the two bucketed edge copies (by u, by v) are staged once, and each
-    of the K rounds consumes them with the pair-side exchange elided,
-    moving exactly ONE edge-sized shuffle (the vote repartition) — so
-    per-round cost is invariant in the round number (the operator-level
-    fixpoint variant lives in operators/graph.py::label_propagation;
-    its per-round plan constancy is pinned by tests/test_lpa_fixpoint
-    .py, and this query pins K-deep VALUE correctness against the
-    K-unrolled DuckDB oracle). Unlike the main query, round 1 is not
-    special-cased to MIN(v): all K rounds run the identical vote body
-    from l0 (label = own id; a unique-label vote IS the min-neighbor
-    collapse), which is exactly what makes the loop body reusable K
-    times.
-
-    Per round the driver pulls back TWO scalars (label churn + distinct
-    labels, one aggregate job on the node-sized join of consecutive
-    label frames); the result frame is built from those K scalar rows —
-    data never collects. Round frames are materialized (two consumers:
-    next round's votes + the telemetry join) and released as soon as
-    the next round lands, so steady-state memory is two node-sized
-    frames regardless of K."""
-    from ..session import (
-        drop_materialized,
-        gc_hint,
-        rows_per_task_budget,
-        stage,
-        stage_bucketed,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets, freq, fb = frequent_baskets(li, _LPA_MIN_ITEM)
-    pairs_uv = (
-        basket_pair_join(fb)
-        .select(F.col("b1.p").alias("u"), F.col("b2.p").alias("v"))
-        .distinct()
-    )
-    # same staged layout as label_propagation_communities (see its
-    # docstring for the scratch/exchange rationale): plain cut first to
-    # release the pair-build working set and size the bucket layout,
-    # then the two bucketed copies every round consumes exchange-free
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rows_per_task = rows_per_task_budget(spark, _LPA_VOTE_ROW_BYTES)
-    # same r11 scale gate as label_propagation_communities (see the
-    # comment there): staged-bucketed layout only when a vote round's
-    # state exceeds one task's budget; small corpora reuse the plain
-    # staged parquet for both directions and let AQE size the exchanges
-    small = _lpa_small_corpus(sf_dir, fb, rows_per_task)
-    pairs0 = stage(pairs_uv, "lpa_sweep_pairs_raw")
-    drop_materialized(baskets, freq)
-    baskets = freq = fb = pairs_uv = None
-    gc_hint(spark)
-    if small:
-        by_u = by_v = pairs0
-        n_parts = None
-    else:
-        n_pairs = pairs0.count()
-        n_buckets = max(shuffle_parts, -(-n_pairs // rows_per_task))
-        by_u = stage_bucketed(pairs0, "u", "lpa_sweep_u", n_buckets)
-        by_v = stage_bucketed(pairs0, "v", "lpa_sweep_v", n_buckets)
-        n_parts = max(shuffle_parts, -(-2 * n_pairs // rows_per_task))
-    # l0: every endpoint labeled with its own id — both selects are
-    # zero-exchange bucketed scans; the distinct is node-sized
-    labels = materialize(
-        by_u.select(F.col("u").alias("node"))
-        .unionByName(by_v.select(F.col("v").alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    rows: list[tuple[int, int, int]] = []
-    for r in range(1, _LPA_SWEEP_ROUNDS + 1):
-        va = by_v.join(labels.withColumnRenamed("node", "v"), "v").select(
-            "u", "label"
-        )
-        vb = by_u.join(labels.withColumnRenamed("node", "u"), "u").select(
-            F.col("v").alias("u"), "label"
-        )
-        voters = va.unionByName(vb)
-        if n_parts is not None:
-            voters = voters.repartition(n_parts, F.col("u"))
-        # lazy persist (r11): the churn/community aggregate right below
-        # is the first consumer and forces the cache in its own job —
-        # an eager count here was one extra vote-sized job per round
-        new_labels = materialize_lazy(
-            voters.groupBy(F.col("u").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("n_votes"))
-            .groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("n_votes"), (-F.col("label")).alias("neg_label")
-                    )
-                ).alias("m")
-            )
-            .select("node", (-F.col("m.neg_label")).alias("label"))
-        )
-        # churn + community count in ONE aggregate job over the
-        # node-sized join of consecutive label frames (the node set is
-        # identical every round: every node has a neighborhood)
-        st = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .agg(
-                F.sum(
-                    (F.col("n.label") != F.col("o.label")).cast("long")
-                ).alias("ch"),
-                F.count_distinct(F.col("n.label")).alias("nc"),
-            )
-            .collect()[0]
-        )
-        rows.append((r, int(st["ch"] or 0), int(st["nc"])))
-        drop_materialized(labels)
-        labels = new_labels
-    drop_materialized(labels)
+    The rows are the operator's per-round stats (two collected scalars
+    per round; the labels never collect). If the labels reach a fixpoint before
+    round K, the remaining rounds are (r, 0, last n_communities) —
+    exact, because a fixpoint of the synchronous update stays one."""
+    stats: dict = {}
+    _co_purchase_lpa(spark, sf_dir, _LPA_SWEEP_ROUNDS, stats)
+    rows = [(r, ch, nc) for r, (ch, nc) in enumerate(stats["rounds"], 1)]
+    rows += [(r, 0, rows[-1][2]) for r in range(len(rows) + 1, _LPA_SWEEP_ROUNDS + 1)]
     return spark.createDataFrame(
         rows, "round_no int, nodes_changed bigint, n_communities bigint"
     ).orderBy("round_no")

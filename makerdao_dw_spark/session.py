@@ -138,7 +138,7 @@ def configure(spark: SparkSession) -> None:
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if shuffle_parts:
         # validate HERE (ADVICE r10): an unvalidated value is accepted by
-        # conf.set and only fails later inside a query (insights.py's
+        # conf.set and only fails later inside a query (label_propagation's
         # int(conf.get(...)) or at plan time) far from the cause
         try:
             valid = int(shuffle_parts) > 0
@@ -737,8 +737,8 @@ def stage_bucketed(
 
     This is the iterative-query idiom at 100 TB: an edge table consumed
     K times per round pays its partitioning shuffle ONCE at stage time
-    instead of K times per round — for label propagation it removes two
-    edge-sized exchanges per vote round (see queries/insights.py).
+    instead of K times per round — for label propagation it elides the
+    arc-side exchange of every vote round (operators/graph.py).
     repartition(n, key) before the write yields exactly one file per
     bucket (without it, every writer task emits a file per bucket:
     tasks x buckets files, and multi-file buckets lose the sort

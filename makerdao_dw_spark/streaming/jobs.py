@@ -100,7 +100,8 @@ def _drain(
     state_parts: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to a memory sink with AvailableNow and
-    return the sink table. Unique query names allow repeated invocation
+    return the sink's rows as a frame (the sink's temp view is dropped).
+    Unique query names allow repeated invocation
     in one session (the driver calls each query at least twice).
 
     `state_parts` (from `state_partitions()`) sets the shuffle-partition
@@ -157,7 +158,11 @@ def _drain(
         # the memory sink holds the result; a finished drain is never
         # resumed, so its checkpoint is dead weight in the temp dir
         shutil.rmtree(ckpt, ignore_errors=True)
-    return sdf.sparkSession.table(name)
+    out = spark.table(name)
+    # the frame keeps the sink's rows; the temp view would pin them in
+    # memory for the rest of the session
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def run_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

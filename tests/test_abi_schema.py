@@ -1,13 +1,18 @@
-"""ABI compiler parity tests against all 29 checked-in reference ABIs.
+"""ABI compiler parity tests.
 
-SURVEY.md §1.2/§2.A5: 29 ABI files across 5 schemas must compile to
-305 call tables + 107 evt tables; overload suffixes follow ABI order
-(first bare, then name0, name1, ...); repr-format ABI files load.
+Compiler behaviour (repr-format loading, overload suffixes in ABI order
+— first bare, then name0, name1, ... — dispatch keys, column naming and
+types) is checked on the hand-written ABIs of the fixture tree
+`tests/fixtures/makerdao/conf/`. The exact inventory of the upstream
+makerdao-dw tree (SURVEY.md §1.2/§2.A5: 29 ABI files across 5 schemas
+compile to 305 call tables + 107 evt tables) is checked only where that
+checkout is present, and skipped with the reason otherwise.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -16,20 +21,33 @@ from makerdao_dw_spark.abi.loader import load_abi
 from makerdao_dw_spark.abi.schema import SchemaCompiler, compile_contract, dispatch_index
 
 REF_CONF = "/root/reference/conf"
+FIXTURE_CONF = os.path.join(os.path.dirname(__file__), "fixtures", "makerdao", "conf")
 
 ABI_FILES = sorted(glob.glob(os.path.join(REF_CONF, "*", "*.abi")))
 
+needs_reference_tree = pytest.mark.skipif(
+    not os.path.isdir(REF_CONF),
+    reason="exact inventory of the upstream makerdao-dw ABI tree "
+    "(29 ABIs, 305 call + 107 evt tables); that checkout is not present",
+)
 
+
+@needs_reference_tree
 def test_found_all_29_abis():
     assert len(ABI_FILES) == 29
 
 
 def test_repr_format_abis_load():
-    for name in ("makermcd/vat.abi", "ethereum/transactions.abi", "centrifuge/shelf.abi"):
-        abi = load_abi(os.path.join(REF_CONF, name))
+    for name in ("makermcd/vat.abi", "ethereum/transactions.abi"):
+        path = os.path.join(FIXTURE_CONF, name)
+        with open(path) as fh:
+            with pytest.raises(json.JSONDecodeError):
+                json.load(fh)  # the fixture really is the repr cache format
+        abi = load_abi(path)
         assert isinstance(abi, list) and all(isinstance(e, dict) for e in abi)
 
 
+@needs_reference_tree
 def test_total_table_inventory():
     calls = evts = 0
     for path in ABI_FILES:
@@ -41,13 +59,13 @@ def test_total_table_inventory():
 
 
 def test_jug_file_overload_suffixes():
-    specs = compile_contract("jug", load_abi(os.path.join(REF_CONF, "makermcd", "jug.abi")))
+    specs = compile_contract("jug", load_abi(os.path.join(FIXTURE_CONF, "makermcd", "jug.abi")))
     file_tables = [s.table for s in specs if s.table.startswith("jug_call_file")]
     assert file_tables == ["jug_call_file", "jug_call_file0", "jug_call_file1"]
 
 
 def test_dispatch_keys_shape():
-    specs = compile_contract("dai", load_abi(os.path.join(REF_CONF, "makermcd", "dai.abi")))
+    specs = compile_contract("dai", load_abi(os.path.join(FIXTURE_CONF, "makermcd", "dai.abi")))
     idx = dispatch_index(specs)
     transfer_evt = next(s for s in specs if s.table == "dai_evt_transfer")
     # universally-known ERC-20 Transfer topic0
@@ -60,7 +78,7 @@ def test_dispatch_keys_shape():
 
 
 def test_common_columns_and_param_naming():
-    specs = compile_contract("vat", load_abi(os.path.join(REF_CONF, "makermcd", "vat.abi")))
+    specs = compile_contract("vat", load_abi(os.path.join(FIXTURE_CONF, "makermcd", "vat.abi")))
     frob = next(s for s in specs if s.table == "vat_call_frob")
     names = [f.name for f in frob.schema.fields]
     assert names[:6] == [

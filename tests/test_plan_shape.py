@@ -954,9 +954,9 @@ def test_wave20_plan_hygiene(spark):
     """Insights wave: pmi_collocations' token totals are broadcast
     1-row aggregates and no lambda-laden Filter pushes below the
     spread exchange; user_interarrival_burstiness is one events scan
-    into a window + rollup; label_propagation_communities checkpoints
-    the basket and edge tables (each feeds multiple rounds) — the
-    consuming plan reads LogicalRDDs only."""
+    into a window + rollup; label_propagation_communities materializes
+    its result (the operator's labels joined to the community sizes) —
+    the consuming plan reads InMemoryRelation leaves only."""
     df = run(spark, "pmi_collocations")
     assert not _heavy_pushed_filters(df)
 

@@ -397,8 +397,10 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
 
 
 def test_drain_leaves_no_temp_entries(spark, sf_dir):
-    """A finished drain removes its checkpoint dir: the temp dir holds
-    the same entries after a drain as before it."""
+    """A finished drain removes its checkpoint dir and its memory-sink
+    temp view: the temp dir holds the same entries after a drain as
+    before it, no `stream_sink_*` view is left in the catalog, and the
+    returned frame still counts."""
     import tempfile
 
     from makerdao_dw_spark.streaming.jobs import run_windowed_counts
@@ -408,3 +410,5 @@ def test_drain_leaves_no_temp_entries(spark, sf_dir):
     before = set(os.listdir(tmp))
     assert run_windowed_counts(spark, sf_dir).count() > 0
     assert set(os.listdir(tmp)) ^ before == set()
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    assert views == [], views
