@@ -10,14 +10,24 @@ loops (/root/reference/eth-blocks.py:59-80, eth-contract.py:77-146):
   provider caps; in the partitioned design the cap maps to window size,
   and AQE handles downstream size skew.
 - decode + demultiplex (A7-A9): one JVM-side topic filter + one
-  Arrow-batched decode stage per target table, from a cached raw-log DF.
+  Arrow-batched decode stage per target table, from a cached raw-log DF,
+  the tables written concurrently. `demux_and_write` is the one demux
+  body of the batch backfill and of the streaming ingest's foreachBatch.
 - sink (A12/A13): parquet tables partitioned by block range
-  (block_number div `partition_blocks`), written with
-  dynamic-partition-overwrite so re-ingesting a range is idempotent
-  (replaces A14's max-probe resume with safe re-runs; A19's
-  per-range transaction becomes an atomic partition overwrite).
+  (block_number div `partition_blocks`). Every table of a call is
+  written to a staging dir outside the table dirs, then published by
+  rename (A19's per-range transaction):
+  - batch (no `batch_id`): each staged partition replaces the table's,
+    a dynamic partition overwrite, so re-ingesting a range is
+    idempotent (replaces A14's max-probe resume with safe re-runs);
+  - streaming (`batch_id=b`): the files join the table as `batch-b-*`
+    after every earlier-published file of b is deleted, so a replayed
+    micro-batch lands exactly once. The contract: after the rerun of a
+    batch that failed or crashed at any point, the warehouse holds all
+    of it, once.
 - resume (A14): `resume_block` probes max(block_number)+1 across the
-  contract's tables, falling back to the creation block.
+  contract's tables with their known schemas, falling back to the
+  creation block; only a table not written yet is skipped.
 
 At 100 TB: raw logs land first as an append-only bronze table
 partitioned by block range; per-table decode reads only the new
@@ -28,10 +38,14 @@ is the optional proxy-dedup (dropDuplicates on transaction_hash).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -75,6 +89,9 @@ BLOCK_SCHEMA = StructType(
         StructField("size", LongType()),
     ]
 )
+
+# Tables decoded and written concurrently by one demux_and_write call.
+_TABLE_WORKERS = 8
 
 
 def _windows(from_block: int, to_block: int, step: int) -> list[tuple[int, int]]:
@@ -196,49 +213,73 @@ def demux_and_write(
     out_dir: str,
     schema_name: str,
     partition_blocks: int = 1_000_000,
-    table_parallelism: int = 8,
+    batch_id: int | None = None,
 ) -> dict[str, int]:
     """Topic dispatch (A7) + decode (A8/A9) + partitioned parquet sink
     (A12/A13). Unknown topics are dropped (fixes the reference's
-    stale-dispatch bug). Returns rows written per table.
+    stale-dispatch bug). Returns rows written per table. The one demux
+    body of both ingest paths: `backfill_contract` and the foreachBatch
+    body of `streaming.jobs.stream_ingest_logs`.
 
-    Per-table decode+write jobs are submitted CONCURRENTLY from a thread
-    pool: each table's job is independent (distinct topic filter,
-    distinct output path), and a contract warehouse has hundreds of
-    mostly-small tables (the reference compiles 412), so a sequential
-    loop serializes hundreds of fixed per-job overheads while the
-    cluster idles. The cached raw frame is materialized ONCE up front so
-    concurrent jobs read the cache instead of racing to populate it."""
+    The raw frame is persisted and counted ONCE, then the per-table
+    decode+write jobs are submitted CONCURRENTLY from a thread pool: each
+    table's job is independent (distinct topic filter, distinct output
+    path), and a contract warehouse has hundreds of mostly-small tables
+    (the reference compiles 412), so a sequential loop serializes
+    hundreds of fixed per-job overheads while the cluster idles.
+
+    Each table is written to a staging dir next to (never inside) its
+    table dir, counted from the staged parquet footers (no extra job)
+    and published by rename only once every table of the call has
+    staged; the staging is removed on success and on failure. Publish:
+    - `batch_id=None` (backfill): each staged `block_range=` dir
+      replaces the table's (dynamic partition overwrite), so
+      re-ingesting a range is idempotent.
+    - `batch_id=b` (a streaming micro-batch): the staged files join the
+      table's `block_range=` dirs as `batch-b-*`, after every published
+      file of b is deleted. A replayed batch (foreachBatch is
+      at-least-once) therefore ends with all of b exactly once, however
+      far its previous attempt got.
+    One writer per table: a staging dir is keyed by table only, and a
+    batch id is the stream's checkpointed id. Tables with no rows stay
+    absent on disk; readers take them as empty (`resume_block`,
+    `queries.assets_per_type`)."""
     raw = raw_logs.persist()
+    staging = {s.table: os.path.join(out_dir, schema_name, f"_staging_{s.table}") for s in specs}
     try:
         raw.count()  # materialize the cache before fan-out
+        if batch_id is not None:  # a replay: drop whatever b published before
+            for spec in specs:
+                table = os.path.join(out_dir, schema_name, spec.table)
+                for f in glob.glob(os.path.join(table, "*", f"batch-{batch_id}-*")):
+                    os.remove(f)
 
-        def one_table(spec: TableSpec) -> tuple[str, int]:
+        def stage(spec: TableSpec) -> tuple[str, int]:
+            # a crashed run may have left this table's staging behind
+            shutil.rmtree(staging[spec.table], ignore_errors=True)
             decoded = decode_logs_for_table(raw, spec).withColumn(
                 "block_range", F.expr(f"block_number div {partition_blocks}")
             )
-            path = os.path.join(out_dir, schema_name, spec.table)
-            decoded.persist()
-            try:
-                n = decoded.count()
-                # empty tables stay absent on disk (a parquet dir with no
-                # data files cannot be read back schemalessly); the
-                # reference instead pre-creates empty tables via DDL
-                if n > 0:
-                    decoded.write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("block_range").parquet(path)
-                return spec.table, n
-            finally:
-                decoded.unpersist()
+            decoded.write.mode("overwrite").partitionBy("block_range").parquet(staging[spec.table])
+            files = glob.glob(os.path.join(staging[spec.table], "block_range=*", "*.parquet"))
+            return spec.table, sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        workers = max(1, min(table_parallelism, len(specs)))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            counts = dict(pool.map(one_table, specs))
+        with ThreadPoolExecutor(max_workers=min(_TABLE_WORKERS, len(specs) or 1)) as pool:
+            counts = dict(pool.map(stage, specs))
+        prefix = "" if batch_id is None else f"batch-{batch_id}-"
+        for spec in specs:
+            table = os.path.join(out_dir, schema_name, spec.table)
+            for part in glob.glob(os.path.join(staging[spec.table], "block_range=*")):
+                dst = os.path.join(table, os.path.basename(part))
+                if batch_id is None and os.path.isdir(dst):  # dynamic partition overwrite
+                    shutil.rmtree(dst)
+                os.makedirs(dst, exist_ok=True)
+                for f in glob.glob(os.path.join(part, "*.parquet")):
+                    os.replace(f, os.path.join(dst, prefix + os.path.basename(f)))
         return counts
     finally:
+        for d in staging.values():
+            shutil.rmtree(d, ignore_errors=True)
         raw.unpersist()
 
 
@@ -246,14 +287,15 @@ def resume_block(
     spark: SparkSession, out_dir: str, schema_name: str, specs: list[TableSpec], creation_block: int
 ) -> int:
     """Incremental resume (A14): max(block_number)+1 across the contract's
-    tables, else the contract's creation block."""
+    tables, else the contract's creation block. Reads with each spec's
+    schema (no inference job); a table not written yet (no dir) is
+    skipped, an empty one reads as empty, any other error raises."""
     start = creation_block
     for spec in specs:
         path = os.path.join(out_dir, schema_name, spec.table)
-        try:
-            m = spark.read.parquet(path).agg(F.max("block_number")).collect()[0][0]
-        except Exception:
+        if not os.path.isdir(path):
             continue
+        m = spark.read.schema(spec.schema).parquet(path).agg(F.max("block_number")).collect()[0][0]
         if m is not None and m + 1 > start:
             start = m + 1
     return start

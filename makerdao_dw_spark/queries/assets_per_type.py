@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..ingest.fixtures import maker_specs
 from ..session import configure
 
 TABLES = ("vat_call_frob", "vat_call_grab", "vat_call_fold", "jug_call_file")
@@ -34,13 +35,13 @@ TABLES = ("vat_call_frob", "vat_call_grab", "vat_call_fold", "jug_call_file")
 SPARK_SQL = """
 WITH lending_assets_1 AS (
     SELECT i AS ilk, block_number, dart AS dart, CAST(NULL AS DECIMAL(38,0)) AS rate
-    FROM vat_call_frob WHERE dart <> 0.0
+    FROM {vat_call_frob} WHERE dart <> 0.0
     UNION ALL
     SELECT i AS ilk, block_number, dart AS dart, CAST(0.0 AS DECIMAL(38,0)) AS rate
-    FROM vat_call_grab WHERE dart <> 0.0
+    FROM {vat_call_grab} WHERE dart <> 0.0
     UNION ALL
     SELECT i AS ilk, block_number, CAST(NULL AS DECIMAL(38,0)) AS dart, rate AS rate
-    FROM vat_call_fold WHERE rate <> 0.0
+    FROM {vat_call_fold} WHERE rate <> 0.0
 ),
 ilks AS (
     SELECT ilk, MIN(block_number) AS starting_use, MAX(block_number) AS end_use
@@ -58,7 +59,7 @@ noop_filling AS (
 rates AS (
     SELECT block_number, ilk,
            pow(CAST(data AS DOUBLE) / 1e27, 3600 * 24 * 365) - 1 AS sf
-    FROM jug_call_file
+    FROM {jug_call_file}
 ),
 lending_assets_1_with_filling AS (
     SELECT ilk, block_number, dart, rate, CAST(NULL AS DOUBLE) AS sf FROM lending_assets_1
@@ -114,7 +115,7 @@ ORDER BY dt DESC, collateral
 # DuckDB golden twin: identical plan, DuckDB dialect (// integer division,
 # unnest(generate_series), blob decode).
 DUCKDB_SQL = (
-    SPARK_SQL.replace(
+    SPARK_SQL.format(**{t: t for t in TABLES}).replace(
         "LATERAL VIEW explode(sequence(starting_use, end_use, 1000)) AS d",
         ", UNNEST(GENERATE_SERIES(starting_use, end_use, 1000)) AS t(d)",
     )
@@ -125,13 +126,23 @@ DUCKDB_SQL = (
 )
 
 
-def register_warehouse_views(spark: SparkSession, warehouse_dir: str, schema_name: str = "makermcd") -> None:
-    for t in TABLES:
-        spark.read.parquet(os.path.join(warehouse_dir, schema_name, t)).createOrReplaceTempView(t)
-
-
 def assets_per_type(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    """Run the flagship analytics query over an ingested warehouse dir."""
+    """Run the flagship analytics query over an ingested warehouse dir.
+
+    The tables are read with the decoder's schemas (`maker_specs()`): no
+    inference job, and a table with no rows yet (an empty dir, or none
+    at all) reads as an empty frame instead of failing. Partition
+    discovery still appends `block_range`. They are passed as query
+    arguments, so the session keeps no temp view of them and two
+    warehouses never read each other's."""
     configure(spark)
-    register_warehouse_views(spark, warehouse_dir)
-    return spark.sql(SPARK_SQL)
+    vat, jug = maker_specs()  # exactly the four TABLES
+    frames = {}
+    for spec in vat + jug:
+        path = os.path.join(warehouse_dir, "makermcd", spec.table)
+        frames[spec.table] = (
+            spark.read.schema(spec.schema).parquet(path)
+            if os.path.isdir(path)
+            else spark.createDataFrame([], spec.schema)
+        )
+    return spark.sql(SPARK_SQL, **frames)

@@ -416,30 +416,26 @@ def stream_ingest_logs(
     """Checkpointed incremental ingest: watch a raw-log landing directory,
     decode + demultiplex each micro-batch into the per-table parquet
     layout. The checkpoint replaces the reference's max(block_number)
-    resume probe (classes.py:32-50): a restart continues from the last
-    committed batch, exactly-once per file.
+    resume probe (classes.py:32-50): a restart continues from the first
+    batch without a commit entry.
 
     foreachBatch is the right tool: one decoded micro-batch fans out to
     N table sinks — multi-sink writes aren't expressible as a single
-    streaming sink.
+    streaming sink. Its body is `ingest.pipeline.demux_and_write`, keyed
+    on `batch_id`. foreachBatch is at-least-once: a batch whose writes
+    finished (or failed part way) without its commit entry runs again on
+    restart, with the same rows. demux_and_write first deletes whatever
+    that batch published before, so after the rerun every table holds
+    the batch exactly once; before the rerun it may hold none, part or
+    all of it.
     """
-    from ..decode.decoders import decode_logs_for_table
-    from ..ingest.pipeline import RAW_LOG_SCHEMA
+    from ..ingest.pipeline import RAW_LOG_SCHEMA, demux_and_write
     from .sources import stream_dir
 
     raw = stream_dir(spark, landing_dir, RAW_LOG_SCHEMA)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for spec in specs:
-                decoded = decode_logs_for_table(batch_df, spec).withColumn(
-                    "block_range", F.expr(f"block_number div {partition_blocks}")
-                )
-                path = os.path.join(out_dir, schema_name, spec.table)
-                decoded.write.mode("append").partitionBy("block_range").parquet(path)
-        finally:
-            batch_df.unpersist()
+        demux_and_write(batch_df, specs, out_dir, schema_name, partition_blocks, batch_id=batch_id)
 
     q = (
         raw.writeStream.foreachBatch(write_batch)

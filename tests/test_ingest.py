@@ -132,3 +132,13 @@ def test_python_datasource_blocks(spark):
     a = sorted(tuple(r) for r in via_ds.collect())
     b = sorted(tuple(r) for r in via_pipeline.collect())
     assert len(a) == 300 and a == b
+
+
+def test_dashboard_leaves_no_temp_view(warehouse, spark):
+    """The dashboard passes its tables as query arguments: the session
+    lists no new temp view afterwards, none under a table name."""
+    out, _, _ = warehouse
+    before = {t.name for t in spark.catalog.listTables()}
+    assert assets_per_type(spark, out).count() > 10
+    after = {t.name for t in spark.catalog.listTables()}
+    assert after == before and not after & set(TABLES), after - before

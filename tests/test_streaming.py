@@ -1,8 +1,10 @@
-"""Streaming plane tests: the checkpointed incremental ingest (exactly-
-once resume across restarts — the Structured-Streaming replacement for
-the reference's max(block_number) probe) and multi-batch stateful
-accumulation. The windowed/session/stateful query results themselves
-are oracle-gated in test_queries_oracle via the registry."""
+"""Streaming plane tests: the checkpointed incremental ingest and
+multi-batch stateful accumulation. The ingest tests cover a clean
+restart (only new files are read), a replayed batch after a lost commit
+entry and a batch that failed part way, which must land exactly once
+after the rerun, and tables that have no rows yet. The windowed/session/
+stateful query results themselves are oracle-gated in
+test_queries_oracle via the registry."""
 
 from __future__ import annotations
 
@@ -12,7 +14,12 @@ import pandas as pd
 import pytest
 
 from makerdao_dw_spark.ingest.fixtures import VAT_ADDRESS, maker_chain, maker_specs
-from makerdao_dw_spark.ingest.pipeline import fetch_raw_logs
+from makerdao_dw_spark.ingest.pipeline import (
+    RAW_LOG_SCHEMA,
+    decode_logs_for_table,
+    fetch_raw_logs,
+    resume_block,
+)
 from makerdao_dw_spark.streaming.jobs import stream_ingest_logs
 
 
@@ -55,6 +62,157 @@ def test_incremental_ingest_resumes_from_checkpoint(spark, landing, tmp_path):
     # both waves' block ranges present
     mn, mx = df.agg({"block_number": "min"}).first()[0], df.agg({"block_number": "max"}).first()[0]
     assert mn < 300 <= mx
+
+
+@pytest.fixture(scope="module")
+def vat_landing(spark, tmp_path_factory):
+    """VAT logs of blocks 0-299 landed as one file; tests drain it into
+    their own warehouse and checkpoint."""
+    d = str(tmp_path_factory.mktemp("vat_landing"))
+    raw = fetch_raw_logs(spark, maker_chain(head=300), [VAT_ADDRESS], 0, 299, step=100)
+    raw.coalesce(1).write.mode("overwrite").parquet(d)
+    return d
+
+
+def _ingest(spark, landing_dir, specs, out, ckpt):
+    stream_ingest_logs(spark, landing_dir, specs, out, "makermcd", ckpt, partition_blocks=200)
+
+
+def _no_staging(out):
+    assert [f for f in os.listdir(os.path.join(out, "makermcd")) if f.startswith("_")] == []
+
+
+def test_replay_after_lost_commit_lands_once(spark, vat_landing, tmp_path):
+    """foreachBatch is at-least-once: a batch whose writes finished but
+    whose commit entry did not is run again on restart. Dropping the last
+    commit entry stands in for that crash; the replay must not add rows."""
+    out, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
+    frob = [s for s in maker_specs()[0] if s.table == "vat_call_frob"]
+    _ingest(spark, vat_landing, frob, out, ckpt)
+    p = os.path.join(out, "makermcd", "vat_call_frob")
+    n1 = spark.read.parquet(p).count()
+    assert n1 > 0
+
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    # the .crc must go too, or the restart refuses the checkpoint
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    _ingest(spark, vat_landing, frob, out, ckpt)
+
+    df = spark.read.parquet(p)
+    assert df.count() == n1
+    assert df.dropDuplicates(["block_number", "log_index"]).count() == n1
+    _no_staging(out)
+
+
+def test_failed_batch_rerun_lands_once(spark, vat_landing, tmp_path, monkeypatch):
+    """A write that fails after the first of two tables was written (the
+    second table's write lands, then raises) fails the drain; the rerun
+    of the uncommitted batch leaves each table with exactly its decodable
+    rows."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
+    specs = [s for s in maker_specs()[0] if s.table in ("vat_call_frob", "vat_call_grab")]
+    real_parquet = DataFrameWriter.parquet
+    failed = []
+
+    def write_then_fail_once(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if specs[1].table in path and not failed:
+            failed.append(path)
+            raise RuntimeError("injected failure after the write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail_once)
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        _ingest(spark, vat_landing, specs, out, ckpt)
+    assert failed
+    _no_staging(out)
+
+    _ingest(spark, vat_landing, specs, out, ckpt)
+    raw = spark.read.schema(RAW_LOG_SCHEMA).parquet(vat_landing)
+    for spec in specs:
+        df = spark.read.parquet(os.path.join(out, "makermcd", spec.table))
+        n = decode_logs_for_table(raw, spec).count()
+        assert n > 0
+        assert df.count() == n, spec.table
+        assert df.dropDuplicates(["block_number", "log_index"]).count() == n, spec.table
+    _no_staging(out)
+
+
+@pytest.fixture(scope="module")
+def vat_only_warehouse(spark, vat_landing, tmp_path_factory):
+    """VAT-only logs drained through the vat AND jug specs: jug_call_file
+    gets no rows, so the ingest leaves no dir for it."""
+    out = str(tmp_path_factory.mktemp("vat_only"))
+    vat_specs, jug_specs = maker_specs()
+    _ingest(spark, vat_landing, vat_specs + jug_specs, out, os.path.join(out, "_ckpt"))
+    return out
+
+
+def _jug_table(src, dst, state):
+    """Copy the warehouse src to dst with its jug_call_file dir missing
+    (how the ingest leaves a table with no rows) or an empty dir holding
+    only _SUCCESS (how an empty append leaves it)."""
+    import shutil
+
+    shutil.copytree(src, dst)
+    d = os.path.join(dst, "makermcd", "jug_call_file")
+    shutil.rmtree(d, ignore_errors=True)
+    if state == "empty dir":
+        os.makedirs(d)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+
+
+@pytest.mark.parametrize("jug", ["missing", "empty dir"])
+def test_dashboard_reads_table_with_no_rows(spark, vat_only_warehouse, tmp_path, jug):
+    """A table with no rows yet, missing or an empty dir, reads as empty:
+    the dashboard matches DUCKDB_SQL over the same tables, with an empty
+    jug_call_file."""
+    import math
+
+    import duckdb
+
+    from makerdao_dw_spark.queries.assets_per_type import DUCKDB_SQL, TABLES, assets_per_type
+
+    out = str(tmp_path / "wh")
+    _jug_table(vat_only_warehouse, out, jug)
+    s_rows = [tuple(r) for r in assets_per_type(spark, out).collect()]
+    assert s_rows
+
+    con = duckdb.connect()
+    for t in TABLES[:3]:
+        pattern = os.path.join(out, "makermcd", t, "**", "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}', hive_partitioning=1)")
+    con.execute("CREATE TABLE jug_call_file (block_number BIGINT, ilk BLOB, data DECIMAL(38,0))")
+    d_rows = con.execute(DUCKDB_SQL).fetchall()
+    con.close()
+
+    assert len(s_rows) == len(d_rows)
+    for a, b in zip(s_rows, d_rows):
+        assert a[:2] == b[:2], (a, b)
+        assert math.isclose(a[2], b[2], rel_tol=1e-9, abs_tol=1e-4), (a, b)
+        assert a[3] is None and b[3] is None and a[4] is None and b[4] is None, (a, b)
+
+
+def test_resume_block_skips_only_missing_tables(spark, vat_only_warehouse, tmp_path):
+    """resume_block: a table not written yet (no dir) or empty (only
+    _SUCCESS) gives the creation block; an unreadable table raises
+    instead of silently restarting the contract from its creation."""
+    _, jug_specs = maker_specs()
+    for state in ("missing", "empty dir"):
+        out = str(tmp_path / state)
+        _jug_table(vat_only_warehouse, out, state)
+        assert resume_block(spark, out, "makermcd", jug_specs, 7) == 7
+
+    part = os.path.join(out, "makermcd", "jug_call_file", "block_range=0")
+    os.makedirs(part)
+    with open(os.path.join(part, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        resume_block(spark, out, "makermcd", jug_specs, 7)
 
 
 def test_stateful_accumulates_across_batches(spark, tmp_path):
