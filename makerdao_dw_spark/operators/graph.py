@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import (
-    drop_materialized,
+    current_scope,
     gc_hint,
     materialize,
     rows_per_task_budget,
@@ -339,7 +339,7 @@ def label_propagation(
         .distinct(),
         "lpa_pairs",
     )
-    drop_materialized(*release)
+    current_scope(spark).drop(*release)
     gc_hint(spark)
     n_pairs = pairs.count()
     labels = _cut_lineage(
@@ -424,5 +424,5 @@ def label_propagation(
         if changed == 0:
             break
     if small:
-        drop_materialized(arcs)
+        current_scope(spark).drop(arcs)
     return labels, rounds

@@ -18,6 +18,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import query_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -32,49 +34,32 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Registered-query nesting depth (thread-local: concurrent driver
-# threads each see their own depth). release_materialized() must run
-# only at TOP-LEVEL query entry — a registered query invoked through
-# REGISTRY from inside another (composite pipelines) must not unpersist
-# the outer query's pinned frames mid-flight.
-import threading as _threading
-
-_DEPTH = _threading.local()
-
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
     """Decorator registering a Spark query implementation.
 
-    The registered fn is wrapped as the single per-query entry. At a
-    top-level call the wrapper configures the session
-    (session.configure, so a vanilla session such as the driver
-    harness's comes out right and query bodies just call load_table)
-    and releases the PREVIOUS query's materialized intermediates
-    (session.materialize keeps persisted frames pinned so the returned
-    plan's consumers can reuse them; the next query's entry is the
-    earliest safe point to drop them — without the release, per-query
-    caches accumulate across the one-session-many-queries driver runs).
-    NESTED invocations (see _DEPTH above) skip both: they run inside a
-    query that already did them. The decorator returns the raw fn, so
-    calling it directly bypasses the wrapper and expects a configured
-    session."""
+    The registered fn is wrapped as the single per-query entry: it runs
+    inside session.query_scope, which at a top-level call configures
+    the session (so a vanilla session such as the driver harness's
+    comes out right and query bodies just call load_table), opens the
+    QueryScope that owns what the query materializes and stages, and
+    releases the same thread's earlier scopes (frames one query back,
+    staged dirs two: the returned plan's consumers run after the fn
+    returns, so the next entry is the earliest safe point; without the
+    release, per-query caches accumulate across the one-session-
+    many-queries driver runs). A NESTED call (a registered query
+    invoked through REGISTRY from inside another) joins the outer
+    query's scope and does neither. The decorator returns the raw fn,
+    so calling it directly bypasses the wrapper and expects a
+    configured session."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from ..session import configure, release_materialized
-
-            depth = getattr(_DEPTH, "v", 0)
-            if depth == 0:
-                release_materialized()
-                configure(spark)
-            _DEPTH.v = depth + 1
-            try:
+            with query_scope(spark):
                 return fn(spark, sf_dir)
-            finally:
-                _DEPTH.v = depth
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

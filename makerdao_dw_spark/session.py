@@ -9,6 +9,7 @@ engines and clusters.
 
 from __future__ import annotations
 
+import atexit
 import os
 import stat
 import threading
@@ -115,9 +116,9 @@ def configure(spark: SparkSession) -> None:
     The driver harness owns its SparkSession; these confs are all
     runtime-mutable and keep query semantics deterministic (UTC
     timestamps match how the parquet testdata is interpreted by the
-    DuckDB oracle, which is timezone-naive). The registry wrapper
-    (queries/registry.py) runs it once per top-level query; the other
-    entry points (ingest and streaming sources, the warehouse
+    DuckDB oracle, which is timezone-naive). query_scope() runs it once
+    per top-level registered query (the registry wrapper enters it);
+    the other entry points (ingest and streaming sources, the warehouse
     dashboard) run it themselves.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -284,6 +285,9 @@ _TABLE_CACHE_ATTR = "_makerdao_table_cache"
 # at most 10 tables x 2 spread modes per sf dir, and a test run over
 # many tmp dirs must not grow the dict without bound.
 _TABLE_CACHE_MAX = 64
+# Guards the relation cache and the lifecycle state below (every
+# QueryScope's lists and _SCOPES).
+_LOCK = threading.RLock()
 
 
 def _input_signature(path: str) -> tuple | None:
@@ -370,7 +374,7 @@ def load_table(
         spread = sig is not None and _sig_bytes(sig) > _AUTO_SPREAD_BYTES
     key = (os.path.abspath(path), spread)
     if sig is not None:
-        with _MATERIALIZED_LOCK:
+        with _LOCK:
             hit = spark.__dict__.get(_TABLE_CACHE_ATTR, {}).get(key)
         if hit is not None and hit[0] == sig:
             return hit[1]
@@ -393,7 +397,7 @@ def load_table(
     if spread and _scan_splits(spark, path, sig) < spark.sparkContext.defaultParallelism:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     if sig is not None:
-        with _MATERIALIZED_LOCK:
+        with _LOCK:
             entries = spark.__dict__.setdefault(_TABLE_CACHE_ATTR, {})
             entries.pop(key, None)
             entries[key] = (sig, df)
@@ -436,8 +440,166 @@ def _scan_splits(spark: SparkSession, path: str, sig: tuple | None) -> int:
     return max(min(row_groups, -(-size // split_bytes)), 1)
 
 
-_MATERIALIZED: list[DataFrame] = []
-_MATERIALIZED_LOCK = threading.RLock()
+class QueryScope:
+    """What one top-level registered query pinned, and its release.
+
+    `frames` are the DataFrames materialize()/materialize_lazy()
+    persisted; `dirs` are the (staged dir, catalog table or None) pairs
+    stage()/stage_bucketed() wrote. query_scope() opens one scope per
+    top-level query on the calling thread and releases it on that
+    thread's later entries (see there). The scope keeps the session it
+    was created with: the catalog DROP of a bucketed stage runs on it."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+        self.frames: list[DataFrame] = []
+        self.dirs: list[tuple[str, str | None]] = []
+
+    def _pin(self, attr: str, item) -> None:
+        with _LOCK:
+            getattr(self, attr).append(item)
+            _SCOPES.add(self)
+
+    def drop(self, *dfs: DataFrame) -> None:
+        """Unpersist these frames now instead of at the next entry — for
+        a query that stage()d a checkpoint and no longer needs the
+        upstream working set (its cache blocks and the shuffle files its
+        lineage pins). A straggler read only costs recompute."""
+        ids = {id(df) for df in dfs}
+        with _LOCK:
+            self.frames = [df for df in self.frames if id(df) not in ids]
+        _unpersist(dfs)
+
+    def release(self) -> None:
+        """Unpersist every frame, delete every staged dir and drop its
+        catalog table. An entry whose DROP failed on a still-usable
+        session stays in `dirs` for the next sweep (a popped entry would
+        leave a table over deleted files that nothing drops later)."""
+        with _LOCK:
+            frames, self.frames = self.frames, []
+            doomed, self.dirs = self.dirs, []
+        _unpersist(frames)
+        kept = [e for e in doomed if not self._remove(*e)]
+        with _LOCK:
+            self.dirs.extend(kept)
+            if not (self.frames or self.dirs):
+                _SCOPES.discard(self)
+
+    def _remove(self, d: str, table: str | None) -> bool:
+        """Delete a staged dir — local paths via shutil, URI schemes
+        (hdfs://, s3a://, file://) via the JVM's Hadoop FileSystem — and
+        drop its catalog table. False when the DROP failed while the
+        session is still usable; a stopped session's in-memory catalog
+        died with it."""
+        live = _session_usable(self.spark)
+        done = True
+        if table is not None and live:
+            try:
+                self.spark.sql(f"DROP TABLE IF EXISTS {table}")
+            except Exception:
+                # the session may have stopped mid-call, catalog and all
+                done = not _session_usable(self.spark)
+        if "://" not in d:
+            import shutil
+
+            shutil.rmtree(d, ignore_errors=True)
+        elif live:
+            try:
+                jvm = self.spark.sparkContext._jvm
+                hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
+                path = jvm.org.apache.hadoop.fs.Path(d)
+                path.getFileSystem(hconf).delete(path, True)
+            except Exception:
+                pass  # best-effort: a leaked DFS dir beats a crashed release
+        return done
+
+
+class _ThreadScopes(threading.local):
+    """Per-thread lifecycle state. A thread-local, not a thread-ident
+    tag: a new thread inherits nothing from an ended one whose ident it
+    reuses."""
+
+    scope: QueryScope | None = None  # the open scope
+    prev: QueryScope | None = None  # the one before it
+    inside = False  # a registered query is running on this thread
+
+
+_THREAD = _ThreadScopes()
+_SCOPES: set[QueryScope] = set()  # scopes still holding a frame or a dir
+
+
+def _unpersist(dfs) -> None:
+    for df in dfs:
+        try:
+            df.unpersist()
+        except Exception:  # pragma: no cover — session already stopped
+            pass
+
+
+def _session_usable(spark: SparkSession) -> bool:
+    """True when the session's JVM context is still alive (stop() nulls
+    the underlying _jsc)."""
+    try:
+        return spark.sparkContext._jsc is not None
+    except Exception:  # pragma: no cover — context already torn down
+        return False
+
+
+def current_scope(spark: SparkSession) -> QueryScope:
+    """The calling thread's open scope: the running registered query's,
+    or the last one's once it returned, so a caller's own materialize()
+    or stage() outside any query (tests, tools) joins it. Opened on
+    first use."""
+    if _THREAD.scope is None:
+        _THREAD.scope = QueryScope(spark)
+    return _THREAD.scope
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[QueryScope]:
+    """The per-query entry: the registry wrapper runs every registered
+    query inside it. A top-level entry on this thread deletes the staged
+    dirs of the scope from two entries back, unpersists the previous
+    scope's frames, configures the session and opens a fresh scope.
+    Release happens at the NEXT entry, not at this one's exit, because
+    the returned plan's consumers run after the query fn returns; staged
+    dirs get one generation more than caches because a deleted staged
+    file is a FileNotFound on re-read, not a recompute. A nested entry
+    (a registered query invoked through REGISTRY from inside another)
+    joins the open scope and does none of this, so the outer query's
+    frames and dirs stay pinned mid-flight. Only this thread's scopes
+    are released here: a scope whose thread has ended waits for
+    release_all(), so a result handed to another thread stays
+    readable."""
+    t = _THREAD
+    if t.inside:
+        yield t.scope
+        return
+    if t.prev is not None:
+        t.prev.release()
+    if t.scope is not None:
+        t.scope.drop(*t.scope.frames)
+    configure(spark)
+    t.prev, t.scope, t.inside = t.scope, QueryScope(spark), True
+    try:
+        yield t.scope
+    finally:
+        t.inside = False
+
+
+def release_all() -> None:
+    """Release every scope still holding a frame or a dir, whichever
+    thread opened it: the interpreter-exit hook, registered below (the
+    per-entry release never reaches the last query's dirs, nor an ended
+    thread's). Not for use while another thread's query may still read
+    its stages."""
+    with _LOCK:
+        scopes = list(_SCOPES)
+    for s in scopes:
+        s.release()
+
+
+atexit.register(release_all)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -453,9 +615,9 @@ def materialize(df: DataFrame) -> DataFrame:
     one session, and the pile-up is measurable (LPA at sf1: run 1
     24.6s -> run 3 53.8s with checkpoints; 22.7s -> 9.2s with
     persist + release). Cached blocks are LRU-evictable under memory
-    pressure and are explicitly dropped by release_materialized() at
-    the next registered query's entry (queries/registry.py wraps every
-    query fn), so steady-state storage is one query's working set.
+    pressure, and the frame is pinned in the thread's open QueryScope,
+    which unpersists it at the thread's next registered-query entry
+    (query_scope), so steady-state storage is one query's working set.
 
     NOT a replacement where the checkpoint is load-bearing:
     io/merge.py materializes before overwriting the files the plan
@@ -464,29 +626,22 @@ def materialize(df: DataFrame) -> DataFrame:
     loss on a real cluster. Those keep true checkpoints."""
     df = df.persist()
     df.count()
-    with _MATERIALIZED_LOCK:
-        _MATERIALIZED.append((threading.get_ident(), df))
+    current_scope(df.sparkSession)._pin("frames", df)
     return df
 
 
 def materialize_lazy(df: DataFrame) -> DataFrame:
-    """persist + cleanup registration WITHOUT the eager count — for a
+    """persist + scope registration WITHOUT the eager count — for a
     multi-consumer intermediate whose consumers run strictly
     sequentially anyway (e.g. the anchor then the step executions of a
     recursive CTE, r11): the first consumer builds the cache, later
     ones read it, and skipping the forcing count() saves one full pass
     over the input. NOT for frames a broadcast consumer races to build
     (materialize()'s docstring case) — there the eager count is the
-    point. Same release_materialized() lifecycle."""
+    point. Same QueryScope lifecycle."""
     df = df.persist()
-    with _MATERIALIZED_LOCK:
-        _MATERIALIZED.append((threading.get_ident(), df))
+    current_scope(df.sparkSession)._pin("frames", df)
     return df
-
-
-_STAGED_PENDING: list[tuple[int, str]] = []  # staged dirs awaiting deletion
-_STAGED_LIVE: list[tuple[int, str]] = []  # staged dirs the current query may read
-_STAGED_ATEXIT_REGISTERED = False
 
 
 def _staging_root(spark: SparkSession) -> str | None:
@@ -524,7 +679,7 @@ def _staging_root(spark: SparkSession) -> str | None:
             # filesystem path. Only this derived source is normalized:
             # an EXPLICITLY configured URI root (conf/env, any scheme
             # incl. file://) is honored verbatim and handled by the
-            # Hadoop-FileSystem branch of stage()/_rm_staged — which is
+            # Hadoop-FileSystem branch of stage()/QueryScope._remove — which is
             # exactly the code path an object-store root (s3a://,
             # hdfs://) takes on a real cluster (round-11: lets the
             # branch be pinned by a file://-rooted test).
@@ -535,129 +690,16 @@ def _staging_root(spark: SparkSession) -> str | None:
     return root
 
 
-# staged dir -> catalog table name, for stage_bucketed() cleanup (the
-# table entry must be dropped along with its files; a stopped session's
-# in-memory catalog dies with it, so the drop is best-effort)
-_STAGED_TABLES: dict[str, str] = {}
-
-
-def _any_session() -> SparkSession | None:
-    """The session to run cleanup SQL/FS calls on: the thread's active
-    session, else the process-wide default. getActiveSession() is
-    THREAD-LOCAL in PySpark (ADVICE r10) — a stage cleaned from a
-    different thread (or at atexit, where no thread has an active
-    session) must fall back to the default instead of silently skipping
-    the catalog drop. builder.getOrCreate() is deliberately NOT used:
-    cleanup must never construct a new JVM."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        spark = getattr(SparkSession, "_instantiatedSession", None)
-    return spark
-
-
-def _session_usable(spark: SparkSession) -> bool:
-    """True when the session's JVM context is still alive (stop() nulls
-    the underlying _jsc)."""
-    try:
-        return spark.sparkContext._jsc is not None
-    except Exception:  # pragma: no cover — context already torn down
-        return False
-
-
-def _rm_staged(d: str) -> None:
-    """Delete a staged dir. Local paths via shutil; URI schemes (hdfs://,
-    s3a://, file://) via the JVM's Hadoop FileSystem. Bucketed stages
-    also drop their catalog entry — the _STAGED_TABLES record is only
-    popped after a successful drop or a session-gone determination
-    (ADVICE r10: popping first made a transiently-failed drop leave a
-    stale external-table entry, pointing at deleted files, that could
-    never be dropped later; cleanup_staged retries leftovers)."""
-    tbl = _STAGED_TABLES.get(d)
-    if tbl is not None:
-        spark = _any_session()
-        if spark is None or not _session_usable(spark):
-            # no live session anywhere: the in-memory catalog died with it
-            _STAGED_TABLES.pop(d, None)
-        else:
-            try:
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                _STAGED_TABLES.pop(d, None)
-            except Exception:
-                # the session may have stopped mid-call (catalog gone
-                # with it) — only a still-usable session keeps the entry
-                # for a later cleanup_staged retry
-                if not _session_usable(spark):
-                    _STAGED_TABLES.pop(d, None)
-    if "://" not in d:
-        import shutil
-
-        shutil.rmtree(d, ignore_errors=True)
-        return
-    try:
-        spark = _any_session()
-        if spark is None or not _session_usable(spark):
-            return
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(d)
-        path.getFileSystem(hconf).delete(path, True)
-    except Exception:
-        pass  # best-effort: a leaked DFS dir beats a crashed cleanup
-
-
-def cleanup_staged(all_threads: bool = True) -> None:
-    """Remove still-registered staged dirs — the session-stop/atexit
-    hook (round-10 fix for the long-driver leak: the two-generation
-    lifecycle only deletes a dir when the SAME thread issues two more
-    registered queries, so the final query's staged dirs — and any
-    stopped thread's — survived the process).
-
-    all_threads=True sweeps EVERY thread's dirs, including a concurrent
-    driver thread's in-flight stage, whose reads then become
-    FileNotFound (ADVICE r10) — that mode is for interpreter exit /
-    final session stop ONLY, when no query can still be running. A
-    mid-session caller (e.g. a test or a long-lived app rotating
-    sessions while other driver threads keep working) must pass
-    all_threads=False to restrict the sweep to its OWN thread's dirs,
-    preserving the thread-ownership rule the rest of the lifecycle
-    enforces. Also retries any catalog drop a previous cleanup had to
-    skip (see _rm_staged)."""
-    me = threading.get_ident()
-    with _MATERIALIZED_LOCK:
-        if all_threads:
-            doomed = [d for _, d in _STAGED_PENDING] + [d for _, d in _STAGED_LIVE]
-            _STAGED_PENDING.clear()
-            _STAGED_LIVE.clear()
-        else:
-            doomed = [d for o, d in _STAGED_PENDING if o == me] + [
-                d for o, d in _STAGED_LIVE if o == me
-            ]
-            _STAGED_PENDING[:] = [(o, d) for o, d in _STAGED_PENDING if o != me]
-            _STAGED_LIVE[:] = [(o, d) for o, d in _STAGED_LIVE if o != me]
-    for d in doomed:
-        _rm_staged(d)
-    # orphaned catalog entries from drops that failed transiently: their
-    # dirs are no longer registered ANYWHERE (doomed handled above;
-    # still-live/pending dirs — e.g. another thread's in-flight stage
-    # under all_threads=False — are NOT orphans and must not be touched)
-    with _MATERIALIZED_LOCK:
-        registered = {d for _, d in _STAGED_PENDING} | {d for _, d in _STAGED_LIVE}
-        orphans = [d for d in _STAGED_TABLES if d not in registered]
-    for d in orphans:
-        _rm_staged(d)
-
-
 def _new_staged_dir(
     spark: SparkSession, name: str, caller: str, table: str | None = None
 ) -> str:
-    """Create a staged dir under _staging_root() and register it (and its
-    catalog table, if any) for the two-generation lifecycle before the
+    """Create a staged dir under _staging_root() and pin it (and its
+    catalog table, if any) in the thread's open QueryScope before the
     caller writes into it, so a failed write is still cleaned up. The
     driver-local tempdir fallback is refused off a local[*] master."""
     import tempfile
     import uuid
 
-    global _STAGED_ATEXIT_REGISTERED
     root = _staging_root(spark)
     if root is None:
         master = spark.sparkContext.master
@@ -674,15 +716,7 @@ def _new_staged_dir(
         d = root.rstrip("/") + f"/spark_graft_{name}_{uuid.uuid4().hex}"
         if "://" not in d:
             os.makedirs(d, exist_ok=True)
-    with _MATERIALIZED_LOCK:
-        _STAGED_LIVE.append((threading.get_ident(), d))
-        if table is not None:
-            _STAGED_TABLES[d] = table
-        if not _STAGED_ATEXIT_REGISTERED:
-            import atexit
-
-            atexit.register(cleanup_staged)
-            _STAGED_ATEXIT_REGISTERED = True
+    current_scope(spark)._pin("dirs", (d, table))
     return d
 
 
@@ -705,11 +739,12 @@ def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     scratch (checkpoint + truncate per round).
 
     Cost: one parquet write+read of the staged frame (snappy, columnar
-    — a few % of the shuffle volume it releases). Staged dirs live for
-    TWO top-level query entries (deleted one release-cycle later than
-    caches): a deleted stage file would be a FileNotFound on re-read,
-    not a recompute, so the lifecycle is deliberately one generation
-    more conservative than unpersist.
+    — a few % of the shuffle volume it releases). The dir is pinned in
+    the thread's open QueryScope and lives for TWO top-level query
+    entries on that thread (one release-cycle longer than caches): a
+    deleted stage file would be a FileNotFound on re-read, not a
+    recompute, so the lifecycle is deliberately one generation more
+    conservative than unpersist.
 
     Placement (round 10): dirs root at _staging_root() — a shared,
     configurable location (session conf spark.makerdao.staging.dir,
@@ -718,8 +753,8 @@ def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     partitions to their own filesystems; a driver-local path reads back
     partial data) — exactly setCheckpointDir's rule, enforced here: the
     driver-local tempdir fallback is only taken under a local[*]
-    master. All still-live dirs are removed at interpreter exit
-    (cleanup_staged, atexit) so long driver sessions don't leak."""
+    master. Dirs still pinned at interpreter exit are removed there
+    (release_all, atexit) so long driver sessions don't leak."""
     spark = df.sparkSession
     path = _new_staged_dir(spark, name, "stage") + "/data"
     df.write.mode("overwrite").parquet(path)
@@ -778,52 +813,3 @@ def gc_hint(spark: SparkSession) -> None:
         spark.sparkContext._jvm.System.gc()
     except Exception:  # pragma: no cover — session already stopped
         pass
-
-
-def drop_materialized(*dfs: DataFrame) -> None:
-    """Unpersist specific frames registered by materialize() EARLY —
-    for queries that stage() a checkpoint and no longer need the
-    upstream working set (its cache blocks + lineage-pinned shuffle
-    files). A stale straggler read only costs recompute."""
-    idset = {id(df) for df in dfs}
-    with _MATERIALIZED_LOCK:
-        _MATERIALIZED[:] = [(o, df) for o, df in _MATERIALIZED if id(df) not in idset]
-    for df in dfs:
-        try:
-            df.unpersist()
-        except Exception:  # pragma: no cover — session already stopped
-            pass
-
-
-def release_materialized() -> None:
-    """Unpersist every frame pinned by materialize() since the last
-    call. Invoked at the NEXT registered query's entry (not this one's
-    exit: the returned DataFrame's consumers run after the query fn
-    returns), and ONLY for top-level invocations — the registry wrapper
-    skips the release when a registered query is invoked from inside
-    another (queries/registry.py tracks nesting), so an outer query's
-    pinned frames are never dropped mid-flight on the same thread.
-    Frames are owner-tagged by thread: a concurrent driver thread's
-    release drops only ITS OWN pinned frames, never another thread's
-    in-flight materialization (which would silently void the
-    single-build guarantee and recompute the upstream once per
-    consumer). A frame unpersisted while a straggler consumer still
-    references it only costs recompute, never correctness (all lineages
-    are deterministic)."""
-    me = threading.get_ident()
-    with _MATERIALIZED_LOCK:
-        mine = [df for owner, df in _MATERIALIZED if owner == me]
-        _MATERIALIZED[:] = [(o, df) for o, df in _MATERIALIZED if o != me]
-        # staged parquet dirs age one extra generation: pending (two
-        # query entries old) are deleted now, live ones become pending
-        doomed = [d for owner, d in _STAGED_PENDING if owner == me]
-        _STAGED_PENDING[:] = [(o, d) for o, d in _STAGED_PENDING if o != me]
-        _STAGED_PENDING.extend((o, d) for o, d in _STAGED_LIVE if o == me)
-        _STAGED_LIVE[:] = [(o, d) for o, d in _STAGED_LIVE if o != me]
-    for df in mine:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to release
-    for d in doomed:
-        _rm_staged(d)

@@ -82,7 +82,7 @@ def _run(spark, pairs, layout, monkeypatch, max_rounds=10):
         stats: dict = {}
         labels_df, rounds = label_propagation(edges, max_rounds=max_rounds, stats=stats)
         got = {r["node"]: r["label"] for r in labels_df.collect()}
-        S.cleanup_staged(all_threads=False)  # release the operator's staged dirs
+        S.current_scope(spark).release()  # release the operator's staged dirs
     # one bucketed copy, keyed by voter unless the labels cannot broadcast
     want_calls = ["v" if no_bcast else "u"] if layout.startswith("bucketed") else []
     assert calls == want_calls, (layout, calls)

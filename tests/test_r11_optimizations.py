@@ -7,8 +7,8 @@ operators:
    literal) must be BIT-IDENTICAL to the unrolled per-centroid fold it
    replaced — same doubles element-by-element, and the assignment
    built on it unchanged.
-2. session.materialize_lazy must register the frame for the standard
-   release lifecycle (so registry cleanup still drops it) WITHOUT
+2. session.materialize_lazy must register the frame in the open
+   QueryScope (so the next registered query's entry drops it) WITHOUT
    eagerly computing it, and the cache must actually be populated by
    the first action.
 """
@@ -23,11 +23,7 @@ from makerdao_dw_spark.operators.kmeans import (
     assign_clusters,
     dists_arr,
 )
-from makerdao_dw_spark.session import (
-    _MATERIALIZED,
-    materialize_lazy,
-    release_materialized,
-)
+from makerdao_dw_spark.session import current_scope, materialize_lazy, query_scope
 
 _CENTROIDS = [
     [0.25, -1.5, 3.0],
@@ -85,10 +81,9 @@ def test_materialize_lazy_registers_without_computing(spark):
         return x
 
     base = spark.range(10).select(F.col("id"))
-    before = len(_MATERIALIZED)
     df = materialize_lazy(base.select(F.sum("id").alias("s")))
     # registered for the standard release lifecycle...
-    assert len(_MATERIALIZED) == before + 1
+    assert current_scope(spark).frames[-1] is df
     # ...but nothing ran yet (no job needed to check: storage level is
     # set lazily; the frame is cached only once an action executes)
     assert df.storageLevel.useMemory  # persist() was applied
@@ -96,7 +91,10 @@ def test_materialize_lazy_registers_without_computing(spark):
     # second consumer reads the cache (InMemoryTableScan in the plan)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
-    release_materialized()
+    # ...which unpersists it at the next top-level entry
+    with query_scope(spark):
+        pass
+    assert not df.storageLevel.useMemory
 
 
 def test_state_partitions_derivation(spark, tmp_path):

@@ -1,12 +1,17 @@
-"""Lifecycle tests for session.stage() / drop_materialized() / gc_hint()
-(round 9): the staged-parquet lineage cut that bounds iterative queries'
-shuffle scratch (LPA, prefix-filter Jaccard — see SCALE.md sf100 rows).
+"""Lifecycle tests for session.stage() / QueryScope / gc_hint(): the
+staged-parquet lineage cut that bounds iterative queries' shuffle
+scratch (LPA, prefix-filter Jaccard — see SCALE.md sf100 rows) and the
+per-query scope that owns and releases it.
 
-The load-bearing contract is the TWO-generation deletion: a staged file
-is read lazily by the returned DataFrame (and possibly re-read by a
+What materialize() and stage() register goes to the calling thread's
+open QueryScope; each top-level entry (session.query_scope, which the
+registry wrapper runs) releases that thread's earlier scopes. The
+load-bearing contract is the TWO-generation deletion: a staged file is
+read lazily by the returned DataFrame (and possibly re-read by a
 straggler consumer after the query function returns), and a deleted
 stage file is a FileNotFound, not a recompute — so staged dirs must
-survive exactly one release cycle longer than caches."""
+survive exactly one entry longer than caches. Only the owning thread's
+entries release a scope; release_all() is the exit sweep."""
 
 from __future__ import annotations
 
@@ -16,8 +21,15 @@ from makerdao_dw_spark import session as S
 
 
 def _staged_dirs() -> list[str]:
-    with S._MATERIALIZED_LOCK:
-        return [d for _, d in S._STAGED_LIVE] + [d for _, d in S._STAGED_PENDING]
+    """Every staged dir some scope still holds, on any thread."""
+    with S._LOCK:
+        return [d for scope in S._SCOPES for d, _ in scope.dirs]
+
+
+def _entry(spark) -> None:
+    """One top-level registered-query entry on this thread."""
+    with S.query_scope(spark):
+        pass
 
 
 def test_stage_roundtrip_and_two_generation_deletion(spark):
@@ -32,24 +44,23 @@ def test_stage_roundtrip_and_two_generation_deletion(spark):
     assert sorted(tuple(r) for r in staged.collect()) == sorted(
         tuple(r) for r in df.collect()
     )
-    # generation 1: dir survives the first release (live -> pending)
-    S.release_materialized()
+    # generation 1: dir survives the first entry
+    _entry(spark)
     assert os.path.isdir(d), "staged dir must survive one release cycle"
     # the staged frame is still readable (the straggler-consumer case)
     assert staged.count() == 100
-    # generation 2: second release deletes it
-    S.release_materialized()
+    # generation 2: the second entry deletes it
+    _entry(spark)
     assert not os.path.exists(d), "staged dir must be deleted after two cycles"
 
 
-def test_drop_materialized_releases_early(spark):
+def test_scope_drop_releases_early(spark):
     df = S.materialize(spark.range(50).selectExpr("id"))
     assert df.storageLevel.useMemory or df.storageLevel.useDisk
-    with S._MATERIALIZED_LOCK:
-        assert any(m is df for _, m in S._MATERIALIZED)
-    S.drop_materialized(df)
-    with S._MATERIALIZED_LOCK:
-        assert not any(m is df for _, m in S._MATERIALIZED)
+    scope = S.current_scope(spark)
+    assert any(m is df for m in scope.frames)
+    scope.drop(df)
+    assert not any(m is df for m in scope.frames)
     # unpersisted: storage level is NONE (no memory, no disk)
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
     # recompute still correct (lineage intact — drop only costs recompute)
@@ -104,7 +115,7 @@ def test_stage_honors_custom_staging_root(spark, tmp_path, monkeypatch):
         assert len(newest) == 1 and newest[0].startswith(str(tmp_path / "conf_root"))
     finally:
         spark.conf.unset("spark.makerdao.staging.dir")
-    S.cleanup_staged()
+    S.current_scope(spark).release()
 
 
 def test_stage_bucketed_layout_and_lifecycle(spark):
@@ -117,9 +128,8 @@ def test_stage_bucketed_layout_and_lifecycle(spark):
     staged = S.stage_bucketed(df, "k", "unitb", n_buckets=8)
     new = [d for d in _staged_dirs() if d not in before]
     assert len(new) == 1
-    d = new[0]
-    assert d in S._STAGED_TABLES
-    tbl = S._STAGED_TABLES[d]
+    d, tbl = S.current_scope(spark).dirs[-1]
+    assert d == new[0] and tbl is not None
     assert spark.catalog.tableExists(tbl)
     # value identity
     assert sorted(tuple(r) for r in staged.collect()) == sorted(
@@ -130,18 +140,18 @@ def test_stage_bucketed_layout_and_lifecycle(spark):
     agg_plan = staged.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in agg_plan, agg_plan
     # two-generation deletion drops the dir AND the catalog entry
-    S.release_materialized()
+    _entry(spark)
     assert os.path.isdir(d) and spark.catalog.tableExists(tbl)
-    S.release_materialized()
+    _entry(spark)
     assert not os.path.exists(d)
     assert not spark.catalog.tableExists(tbl)
-    assert d not in S._STAGED_TABLES
+    assert d not in _staged_dirs()
 
 
-def test_cleanup_staged_removes_everything(spark):
-    """The atexit/session-stop hook: the two-generation lifecycle only
-    deletes a dir after two MORE registered queries on the same thread,
-    so the final query's staged dirs leak without this (ADVICE r9)."""
+def test_release_all_removes_everything(spark):
+    """The atexit hook: the two-generation lifecycle only deletes a dir
+    after two MORE registered queries on the same thread, so the final
+    query's staged dirs, and an ended thread's, leak without it."""
     import threading
 
     before = set(_staged_dirs())
@@ -149,23 +159,42 @@ def test_cleanup_staged_removes_everything(spark):
     # a dir staged by a thread that never issues another query
     t = threading.Thread(target=lambda: S.stage(spark.range(3), "leak_b"))
     t.start()
-    t.join()
-    # and one already aged into pending
+    t.join(timeout=300)
+    assert not t.is_alive()
+    # and one aged one entry
     S.stage(spark.range(3), "leak_c")
-    S.release_materialized()
+    _entry(spark)
     leaked = [d for d in _staged_dirs() if d not in before]
     assert len(leaked) == 3
-    S.cleanup_staged()
+    S.release_all()
     assert not _staged_dirs()
+    assert not S._SCOPES
     for d in leaked:
-        assert not os.path.exists(d), f"cleanup_staged left {d}"
-    # registered with atexit so a plain interpreter exit also cleans up
-    assert S._STAGED_ATEXIT_REGISTERED
+        assert not os.path.exists(d), f"release_all left {d}"
+
+
+def test_interpreter_exit_releases_scopes(tmp_path):
+    """release_all is registered with atexit, so a plain interpreter
+    exit removes what a scope still holds (a session-less scope: only
+    the local dir removal runs)."""
+    import subprocess
+    import sys
+
+    d = tmp_path / "spark_graft_exit"
+    d.mkdir()
+    code = (
+        "from makerdao_dw_spark import session as S\n"
+        "s = S.QueryScope(None)\n"
+        f"s._pin('dirs', ({str(d)!r}, None))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True, timeout=120)
+    assert not d.exists()
 
 
 def test_stage_dirs_are_thread_owned(spark):
-    """A release on another thread must not delete this thread's staged
-    dirs (same owner-tagging rule as materialize)."""
+    """An entry on another thread must not delete this thread's staged
+    dirs (the same ownership rule as materialize's frames)."""
     import threading
 
     before = set(_staged_dirs())
@@ -173,13 +202,14 @@ def test_stage_dirs_are_thread_owned(spark):
     mine = [d for d in _staged_dirs() if d not in before]
     assert len(mine) == 1
 
-    t = threading.Thread(target=S.release_materialized)
+    t = threading.Thread(target=lambda: [_entry(spark) for _ in range(2)])
     t.start()
-    t.join()
-    assert os.path.isdir(mine[0]), "other-thread release must not touch my dirs"
-    # clean up: two releases on THIS thread
-    S.release_materialized()
-    S.release_materialized()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert os.path.isdir(mine[0]), "other-thread entries must not touch my dirs"
+    # clean up: two entries on THIS thread
+    _entry(spark)
+    _entry(spark)
     assert not os.path.exists(mine[0])
 
 
@@ -212,9 +242,9 @@ def test_stage_bucketed_uri_rooted_staging_dir(spark, tmp_path):
         staged = S.stage_bucketed(df, "k", "urib", n_buckets=4)
         new = [d for d in _staged_dirs() if d not in before]
         assert len(new) == 1 and new[0].startswith(root), new
-        d = new[0]
+        d, tbl = S.current_scope(spark).dirs[-1]
+        assert d == new[0] and tbl is not None
         assert "://" in d  # the URI branch, not the local-path branch
-        tbl = S._STAGED_TABLES[d]
         assert spark.catalog.tableExists(tbl)
         # files actually landed under the URI root
         local = plain_root + d[len(root):]
@@ -228,27 +258,26 @@ def test_stage_bucketed_uri_rooted_staging_dir(spark, tmp_path):
         # plain stage() takes the same branch
         staged2 = S.stage(spark.range(30), "uris")
         assert staged2.count() == 30
-        # cleanup must delete through the Hadoop FileSystem AND drop the table
-        S.cleanup_staged()
+        # release must delete through the Hadoop FileSystem AND drop the table
+        S.current_scope(spark).release()
         assert not os.path.exists(local)
         assert not spark.catalog.tableExists(tbl)
-        assert d not in S._STAGED_TABLES
+        assert d not in _staged_dirs()
     finally:
         spark.conf.unset("spark.makerdao.staging.dir")
-        S.cleanup_staged()
+        S.current_scope(spark).release()
 
 
 def test_rm_staged_keeps_catalog_entry_on_transient_drop_failure(spark, tmp_path, monkeypatch):
-    """ADVICE r10: _rm_staged popped _STAGED_TABLES before the DROP —
-    a transiently-failed drop left a stale external-table entry that
-    could never be dropped later. The entry must survive the failure
-    and be retried by the next cleanup_staged()."""
+    """ADVICE r10: forgetting the catalog table before the DROP succeeded
+    left a stale external-table entry that could never be dropped later.
+    The entry must stay in its scope after the failure and be retried by
+    the next sweep."""
     df = spark.range(60).selectExpr("id % 7 AS k")
     staged = S.stage_bucketed(df, "k", "retry", n_buckets=2)
     assert staged.count() == 60
-    with S._MATERIALIZED_LOCK:
-        d = [dd for _, dd in S._STAGED_LIVE][-1]
-    tbl = S._STAGED_TABLES[d]
+    scope = S.current_scope(spark)
+    d, tbl = scope.dirs[-1]
 
     calls = {"n": 0, "failing": True}
     real_sql = type(spark).sql
@@ -261,41 +290,38 @@ def test_rm_staged_keeps_catalog_entry_on_transient_drop_failure(spark, tmp_path
         return real_sql(self, q, *a, **kw)
 
     monkeypatch.setattr(type(spark), "sql", flaky_sql)
-    S.cleanup_staged()
-    # drops failed but the session is alive -> entry retained for retry
-    # (cleanup_staged retried once within the same sweep, also failing)
-    assert d in S._STAGED_TABLES, "entry must survive a transient drop failure"
+    scope.release()
+    # the drop failed but the session is alive -> entry retained for retry
+    assert (d, tbl) in scope.dirs, "entry must survive a transient drop failure"
+    assert scope in S._SCOPES
     assert calls["n"] >= 1
     calls["failing"] = False
-    S.cleanup_staged()  # the retry sweep picks up the orphan
-    assert d not in S._STAGED_TABLES
+    S.release_all()  # the retry sweep picks up the kept entry
+    assert (d, tbl) not in scope.dirs
     assert not spark.catalog.tableExists(tbl)
 
 
-def test_cleanup_staged_own_thread_only(spark):
-    """ADVICE r10: all_threads=True mid-session would delete a
-    concurrent driver thread's in-flight stage (its reads become
-    FileNotFound). all_threads=False must restrict the sweep to the
-    caller's own dirs."""
+def test_release_leaves_other_threads_scope_alone(spark):
+    """Releasing my scope, or entering queries on my thread, must not
+    touch a scope another thread opened, even one whose thread ended:
+    its result may have been handed on (a reused thread ident must not
+    make it mine). Only the exit sweep releases it."""
     import threading
 
     before = set(_staged_dirs())
     S.stage(spark.range(3), "mine_r11")
-    other_dir = []
-
-    def _other():
-        other_dir.append(S.stage(spark.range(3), "theirs_r11"))
-        with S._MATERIALIZED_LOCK:
-            pass
-
-    t = threading.Thread(target=_other)
+    mine = [d for d in _staged_dirs() if d not in before]
+    t = threading.Thread(target=lambda: S.stage(spark.range(3), "theirs_r11"))
     t.start()
-    t.join()
-    new = [d for d in _staged_dirs() if d not in before]
-    assert len(new) == 2
-    S.cleanup_staged(all_threads=False)
-    survivors = [d for d in _staged_dirs() if d not in before]
-    assert len(survivors) == 1, "the other thread's dir must survive"
-    assert os.path.isdir(survivors[0])
-    S.cleanup_staged()  # full sweep for test hygiene
+    t.join(timeout=300)
+    assert not t.is_alive()
+    theirs = [d for d in _staged_dirs() if d not in before and d not in mine]
+    assert len(mine) == len(theirs) == 1
+    S.current_scope(spark).release()
+    _entry(spark)
+    _entry(spark)
+    assert not os.path.exists(mine[0])
+    assert os.path.isdir(theirs[0]), "the other thread's dir must survive"
+    S.release_all()
+    assert not os.path.exists(theirs[0])
     assert not [d for d in _staged_dirs() if d not in before]
