@@ -25,9 +25,10 @@ loops (/root/reference/eth-blocks.py:59-80, eth-contract.py:77-146):
     micro-batch lands exactly once. The contract: after the rerun of a
     batch that failed or crashed at any point, the warehouse holds all
     of it, once.
-- resume (A14): `resume_block` probes max(block_number)+1 across the
-  contract's tables with their known schemas, falling back to the
-  creation block; only a table not written yet is skipped.
+- resume (A14): `resume_block` takes max(block_number)+1 across the
+  contract's tables from the parquet footers (no Spark job), falling
+  back to the creation block; only a table not written yet is skipped.
+  `backfill_contract` re-ingests from the partition holding that max.
 
 At 100 TB: raw logs land first as an append-only bronze table
 partitioned by block range; per-table decode reads only the new
@@ -45,6 +46,7 @@ from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -231,7 +233,10 @@ def demux_and_write(
     Each table is written to a staging dir next to (never inside) its
     table dir, counted from the staged parquet footers (no extra job)
     and published by rename only once every table of the call has
-    staged; the staging is removed on success and on failure. Publish:
+    staged; the staging is removed on success and on failure. Publish
+    runs partition-major (ascending `block_range`, every table's
+    partition before the next one), so a crash part way leaves the
+    partitions below the one being published complete in every table.
     - `batch_id=None` (backfill): each staged `block_range=` dir
       replaces the table's (dynamic partition overwrite), so
       re-ingesting a range is idempotent.
@@ -267,15 +272,21 @@ def demux_and_write(
         with ThreadPoolExecutor(max_workers=min(_TABLE_WORKERS, len(specs) or 1)) as pool:
             counts = dict(pool.map(stage, specs))
         prefix = "" if batch_id is None else f"batch-{batch_id}-"
-        for spec in specs:
-            table = os.path.join(out_dir, schema_name, spec.table)
-            for part in glob.glob(os.path.join(staging[spec.table], "block_range=*")):
-                dst = os.path.join(table, os.path.basename(part))
-                if batch_id is None and os.path.isdir(dst):  # dynamic partition overwrite
-                    shutil.rmtree(dst)
-                os.makedirs(dst, exist_ok=True)
-                for f in glob.glob(os.path.join(part, "*.parquet")):
-                    os.replace(f, os.path.join(dst, prefix + os.path.basename(f)))
+        # partition-major: a crash leaves every partition below the one
+        # being published complete in every table (backfill_contract
+        # resumes from there)
+        parts = sorted(
+            (int(os.path.basename(part).split("=", 1)[1]), spec.table, part)
+            for spec in specs
+            for part in glob.glob(os.path.join(staging[spec.table], "block_range=*"))
+        )
+        for _, table, part in parts:
+            dst = os.path.join(out_dir, schema_name, table, os.path.basename(part))
+            if batch_id is None and os.path.isdir(dst):  # dynamic partition overwrite
+                shutil.rmtree(dst)
+            os.makedirs(dst, exist_ok=True)
+            for f in glob.glob(os.path.join(part, "*.parquet")):
+                os.replace(f, os.path.join(dst, prefix + os.path.basename(f)))
         return counts
     finally:
         for d in staging.values():
@@ -287,18 +298,35 @@ def resume_block(
     spark: SparkSession, out_dir: str, schema_name: str, specs: list[TableSpec], creation_block: int
 ) -> int:
     """Incremental resume (A14): max(block_number)+1 across the contract's
-    tables, else the contract's creation block. Reads with each spec's
-    schema (no inference job); a table not written yet (no dir) is
-    skipped, an empty one reads as empty, any other error raises."""
+    tables, else the contract's creation block. The max comes from the
+    data files' parquet footer statistics, so no Spark job runs; a table
+    not written yet (no dir) or with no data files is skipped, and a
+    file that is not parquet or whose row group has no block_number
+    statistics raises."""
     start = creation_block
     for spec in specs:
-        path = os.path.join(out_dir, schema_name, spec.table)
-        if not os.path.isdir(path):
-            continue
-        m = spark.read.schema(spec.schema).parquet(path).agg(F.max("block_number")).collect()[0][0]
+        m = _footer_max_block(os.path.join(out_dir, schema_name, spec.table))
         if m is not None and m + 1 > start:
             start = m + 1
     return start
+
+
+def _footer_max_block(path: str) -> int | None:
+    """max(block_number) over the row-group statistics of the parquet
+    footers under `path` (pyarrow's dataset discovery skips the same
+    "_"/"." files Spark does); None when there is no row. A row group
+    without block_number statistics raises KeyError."""
+    if not os.path.isdir(path):
+        return None
+    return max(
+        (
+            rg.statistics["block_number"]["max"]
+            for frag in ds.dataset(path, format="parquet").get_fragments()
+            for rg in frag.row_groups
+            if rg.num_rows
+        ),
+        default=None,
+    )
 
 
 def backfill_contract(
@@ -318,15 +346,23 @@ def backfill_contract(
     """End-to-end contract pipeline (the reference's eth-contract.py main
     loop, §3.2): resume -> partitioned fetch -> decode fan-out -> sink.
 
-    The resume point snaps DOWN to a block_range partition boundary: the
-    sink overwrites whole partitions, so a partition must always be
-    re-ingested in full (refetching a range is idempotent by design).
+    The fetch starts at the block_range partition that holds the
+    committed max (`resume_block` - 1), from its first block: the sink
+    overwrites whole partitions, so a partition is always re-ingested in
+    full (refetching a range is idempotent by design), and the publish
+    is partition-major, so after a crash every partition below that one
+    is complete in every table while that one may be partly published.
+    A caught-up call therefore refetches its last partition. A head
+    below the committed max (an earlier, lower `to_block`, or a node
+    lagging behind an earlier call) returns {}: refetching that
+    partition only up to head would overwrite it without the committed
+    rows above head.
     """
     head = to_block if to_block is not None else rpc.block_number()
-    start = resume_block(spark, out_dir, schema_name, specs, creation_block)
-    if start > head:
+    resume = resume_block(spark, out_dir, schema_name, specs, creation_block)
+    if head < resume - 1:
         return {}
-    start = max(creation_block, (start // partition_blocks) * partition_blocks)
+    start = max(creation_block, ((resume - 1) // partition_blocks) * partition_blocks)
     raw = fetch_raw_logs(
         spark, rpc, addresses, start, head, step=step, proxy_filter_address=proxy_filter_address
     )

@@ -38,16 +38,18 @@ def table_layout_stats(spark: SparkSession, path: str) -> dict:
 
 
 def recover_swap(path: str) -> str | None:
-    """Complete crash recovery for an interrupted `_swap` (the recovery
+    """Complete crash recovery for an interrupted `swap` (the recovery
     contract documented in SCALE.md and pinned by
-    tests/test_crash_consistency.py).
+    tests/test_crash_consistency.py). `compact_table` and the streaming
+    serving upsert (streaming/jobs.stream_serving_aggregates) call it
+    before they read the table.
 
     The swap's only unsafe window is between its two renames: `path` has
     been moved aside to the uniquely-named `<path>_old-<uuid>` backup but
     the staged dir has not yet been renamed in. Recovery restores the
     backup — the known-good committed snapshot — and discards staged
-    work (compaction is idempotent; re-running it reproduces the staged
-    result). If `path` exists the swap either completed or never
+    work (both writers are idempotent; re-running one reproduces the
+    staged result). If `path` exists the swap either completed or never
     started, and any backups/staged dirs are crash leftovers to sweep.
 
     Returns "restored" if a backup was renamed back into place, None if
@@ -101,7 +103,7 @@ def compact_table(
     n_out = max(1, before["total_bytes"] // target_file_bytes)
     if partition_col is None:
         df.coalesce(int(n_out)).write.mode("overwrite").parquet(path + "_compacted")
-        _swap(path, path + "_compacted")
+        swap(path, path + "_compacted")
     else:
         # Per-partition-value split counts from on-disk bytes: hashing by
         # partition_col ALONE routes each value to one task, so an
@@ -132,7 +134,7 @@ def compact_table(
         ).drop("__salt").write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(partition_col).parquet(path + "_compacted")
-        _swap(path, path + "_compacted")
+        swap(path, path + "_compacted")
     after = table_layout_stats(spark, path)
     return {"before": before, "after": after}
 
@@ -145,18 +147,23 @@ def _dir_bytes(root: str) -> int:
     )
 
 
-def _swap(path: str, staged: str) -> None:
-    """Rename-aside swap (object stores: pointer flip). The backup name
-    is unique so a crash can never wedge the NEXT compaction on a stale
-    `<path>_old` (os.rename onto a non-empty dir raises ENOTEMPTY); a
-    crash between the renames leaves the table one rename away at the
-    uniquely-named backup, and stale backups are swept on the next run."""
+def swap(path: str, staged: str) -> None:
+    """Publish the `staged` dir at `path` by rename-aside (object stores:
+    pointer flip); a missing `path` (a table's first write) is a plain
+    rename. The backup name is unique so a crash can never wedge the
+    NEXT swap on a stale `<path>_old` (os.rename onto a non-empty dir
+    raises ENOTEMPTY); a crash between the renames leaves the table one
+    rename away at the uniquely-named backup (`recover_swap` puts it
+    back), and stale backups are swept on the next run."""
     import glob
     import shutil
     import uuid
 
     for stale in glob.glob(path + "_old-*"):
         shutil.rmtree(stale, ignore_errors=True)
+    if not os.path.isdir(path):
+        os.rename(staged, path)
+        return
     backup = f"{path}_old-{uuid.uuid4().hex[:8]}"
     os.rename(path, backup)
     os.rename(staged, path)

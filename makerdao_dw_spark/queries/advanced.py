@@ -82,13 +82,12 @@ def asof_join_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     way. The property test test_semantics_properties.py generates
     deliberate ties against DuckDB.
     """
-    # window-first plan: skip auto-spread (see window_rank_lag note).
     # Untimestamped events are never "latest prior" — excluded (their
     # NULL t would sort NULLS FIRST into every probe's preceding frame)
     # NULL-key states excluded too: the window PARTITIONS BY key, and
     # Spark groups NULL keys into one partition — a NULL-user state
     # would match a NULL-custkey probe, which join equality never does
-    e = load_table(spark, sf_dir, "events", spread=False)
+    e = load_table(spark, sf_dir, "events")
     e = e.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull()).select(
         F.col("user_id").alias("k"),
         F.col("ts").alias("t"),
@@ -97,7 +96,7 @@ def asof_join_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("last_event_type"),
         F.lit(None).cast("long").alias("o_orderkey"),
     )
-    o = load_table(spark, sf_dir, "orders", spread=False)
+    o = load_table(spark, sf_dir, "orders")
     o = o.select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
@@ -732,7 +731,7 @@ def asof_backward_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIRST with the whole partition in its following frame — nulled
     # out explicitly below (no "as of" point)
     e = (
-        load_table(spark, sf_dir, "events", spread=False)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .groupBy("user_id", "ts")
         .agg(F.min("event_id").alias("event_id"))
@@ -744,7 +743,7 @@ def asof_backward_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("long").alias("o_orderkey"),
         )
     )
-    o = load_table(spark, sf_dir, "orders", spread=False).select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
         F.lit(1).alias("is_probe"),

@@ -755,7 +755,7 @@ def near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unsorted pairs: the joins and rollup destroy any ordering, so the
     # registered dedup_minhash_lsh's presentation sort must not leak in
     pairs = _lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    d = load_table(spark, sf_dir, "documents", spread=False).select("doc_id", "source")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     da = d.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     db = d.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
     return (
@@ -1158,7 +1158,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 48g sf100 harness ≈ the measured-good layout). The doc count is a
     # metadata count-star on an UNSPREAD scan (the spread repartition
     # would turn it into a full exchange).
-    n_docs = load_table(spark, sf_dir, "documents", spread=False).count()
+    n_docs = load_table(spark, sf_dir, "documents").count()
     est_tok_rows = n_docs * 64
     rows_per_task = rows_per_task_budget(spark, row_bytes=24)
     tok_rel = d.select(

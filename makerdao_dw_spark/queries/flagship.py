@@ -71,10 +71,7 @@ ORDER BY dt DESC, category
 
 
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread=False: the branch stages are cheap filter+projects and the
-    # window immediately hash-exchanges on user_id — an auto-spread
-    # round-robin exchange before that is pure overhead.
-    events = load_table(spark, sf_dir, "events", spread=False)
+    events = load_table(spark, sf_dir, "events")
 
     base = events.filter(F.col("value") != 0.0)
 

@@ -329,9 +329,7 @@ SELECT * FROM (
     tags=("B17", "lag", "lead", "rank"),
 )
 def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # window-first plan: scan is cheap and the window hash-exchanges
-    # immediately; skip the auto-spread round-robin exchange
-    o = load_table(spark, sf_dir, "orders", spread=False)
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.select(
@@ -359,7 +357,7 @@ FROM events
     tags=("B11",),
 )
 def window_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events", spread=False)
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return e.select(
         "event_id",

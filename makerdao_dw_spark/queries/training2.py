@@ -275,9 +275,8 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     an EVAL SET — kilobytes against a 100 TB corpus — so it must
     broadcast (asserted: BroadcastHashJoin, no SortMergeJoin); the only
     hash exchange is the per-doc rollup of hit counts."""
-    # spread=True: this is a CPU-heavy text load (per-doc bigram zip),
-    # exactly the class the auto-spread note reserves explicit spread
-    # for; and explode_OUTER + NULL filter instead of explode, so the
+    # spread=True: this is a CPU-heavy text load (per-doc bigram zip);
+    # and explode_OUTER + NULL filter instead of explode, so the
     # inferred size(g2)>0 predicate cannot be pushed below the spread
     # repartition and re-evaluate the whole zip single-threaded in the
     # one-file scan (the split_leakage_audit hazard; 1.23 s -> 0.6 s)

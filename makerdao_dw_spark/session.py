@@ -260,21 +260,6 @@ def pandas_group_buckets(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-# Files above this size get auto-spread: the driver testdata is written
-# as ONE parquet row group per file, so Spark can never split the scan —
-# without a repartition, every map-side stage (partial agg, projection,
-# hashing) runs on one core regardless of cluster size. Real tables have
-# many row groups/files and never hit this branch.
-#
-# Threshold calibration (measured at sf0.1): for RELATIONAL queries the
-# round-robin exchange costs MORE than single-core map work saves below
-# ~50 MB (q1 shape: 0.5s unspread vs 1.0s spread — the agg/join shuffles
-# on its key anyway, so spread is an extra exchange). CPU-heavy text/
-# embedding queries pass spread=True explicitly, so the auto path only
-# guards the genuinely-starved case: a big single-row-group file.
-_AUTO_SPREAD_BYTES = 48_000_000
-
-
 # Resolved base relations are cached per session (see load_table):
 # entries live in this attribute of the SparkSession object itself, so
 # they die with the session. A module-level WeakKeyDictionary keyed on
@@ -339,19 +324,17 @@ def input_bytes(sf_dir: str, table: str) -> int | None:
 
 
 def load_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
     """Load a testdata table.
 
-    spread round-robins the rows across the session's parallelism before
-    CPU-heavy stages. Default (None) = auto: spread only when the input
-    is big enough to matter (its data bytes, taken from the signature
-    below, so a part-file directory counts its files, not its directory
-    entry) but the scan cannot split it (_scan_splits). Tiny dimensions
-    stay single-partition (they broadcast anyway).
+    spread=True round-robins the rows across the session's parallelism
+    before CPU-heavy stages, when the scan cannot split the input by
+    itself (_scan_splits). The caller decides: no rule read from the
+    footer alone picks the right queries (ROADMAP D8).
 
     The resolved relation is cached per session, keyed by (absolute
-    path, resolved spread); each entry carries the input's on-disk
+    path, spread); each entry carries the input's on-disk
     signature (_input_signature) and is rebuilt when that changed. A
     hit skips the schema-inference job of spark.read.parquet, the
     footer probe and the timestamp rewrites. Only the lazy relation is
@@ -370,8 +353,6 @@ def load_table(
     # taken BEFORE the read: a file replaced mid-read leaves a stale
     # signature, so the next load misses instead of trusting the entry
     sig = _input_signature(path)
-    if spread is None:
-        spread = sig is not None and _sig_bytes(sig) > _AUTO_SPREAD_BYTES
     key = (os.path.abspath(path), spread)
     if sig is not None:
         with _LOCK:

@@ -1,7 +1,7 @@
 """transformWithStateInPandas: the Spark 4 arbitrary-state streaming API.
 
-Successor to ``applyInPandasWithState`` (streaming/jobs.py uses that API
-for the same shape of per-key running stats): an object-oriented
+Successor to ``applyInPandasWithState`` (queries/streaming.py uses that
+API for the same shape of per-key running stats): an object-oriented
 ``StatefulProcessor`` with named, independently-typed state variables,
 timers, and TTL, running against the RocksDB state store.
 
@@ -10,8 +10,8 @@ over protobuf, and this container ships no ``google.protobuf`` (and no
 installs are allowed), so the operator CANNOT EXECUTE here — the
 processor below is real, import-gated code, exercised by a test that
 skips unless protobuf is importable (tests/test_streaming.py). The
-legacy-API twin `run_stateful_user_stats` provides the executable
-coverage for the same semantics.
+legacy-API twin, the registered query `streaming_stateful_user_stats`,
+provides the executable coverage for the same semantics.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ class TypeStatsProcessor(StatefulProcessor):
     """Per-event_type running stats across micro-batches. Only
     order-independent aggregates (count/max/min), so any batch split
     yields the same final state — same determinism rule as
-    jobs._update_user_stats."""
+    queries/streaming._update_user_stats."""
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         self._agg = handle.getValueState("agg", _STATE_SCHEMA)
@@ -69,16 +69,16 @@ class TypeStatsProcessor(StatefulProcessor):
 
 
 def transform_with_state_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wire the processor into a drained AvailableNow stream (same
-    harness as streaming/jobs.py). Raises RuntimeError with the gate
-    reason when protobuf is unavailable."""
+    """Wire the processor into a drained AvailableNow stream (the same
+    `drain` as the registered streaming queries). Raises RuntimeError
+    with the gate reason when protobuf is unavailable."""
     if not protobuf_available():
         raise RuntimeError(
             "transformWithStateInPandas needs the protobuf package, "
             "not present in this environment"
         )
     from ..session import conf_override
-    from .jobs import _drain
+    from .jobs import drain
     from .sources import stream_table
 
     ev = stream_table(spark, sf_dir, "events")
@@ -90,4 +90,4 @@ def transform_with_state_type_stats(spark: SparkSession, sf_dir: str) -> DataFra
     )
     rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     with conf_override(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
-        return _drain(out, "update")
+        return drain(out, "update")

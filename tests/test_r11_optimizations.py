@@ -128,11 +128,11 @@ def test_state_partitions_derivation(spark, tmp_path):
 
 
 def test_drain_restores_session_confs(spark, tmp_path):
-    """_drain pins state partitions and disables the no-data batch only
+    """drain pins state partitions and disables the no-data batch only
     for the drain's duration — the session confs come back."""
     import pandas as pd
 
-    from makerdao_dw_spark.streaming.jobs import _drain
+    from makerdao_dw_spark.streaming.jobs import drain
 
     src = tmp_path / "src"
     src.mkdir()
@@ -147,7 +147,7 @@ def test_drain_restores_session_confs(spark, tmp_path):
         .count()
     )
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    out = _drain(sdf, "complete", state_key="test", state_parts=3)
+    out = drain(sdf, "complete", state_parts=3)
     assert out.count() == 2
     assert spark.conf.get("spark.sql.shuffle.partitions") == old_parts
     assert (

@@ -215,6 +215,34 @@ def test_resume_block_skips_only_missing_tables(spark, vat_only_warehouse, tmp_p
         resume_block(spark, out, "makermcd", jug_specs, 7)
 
 
+def test_resume_block_reads_footers_and_starts_no_job(spark, vat_only_warehouse, tmp_path):
+    """resume_block takes max(block_number) from the parquet footer
+    statistics: the answer equals a scan's max + 1, the call starts no
+    Spark job, and a data file written without statistics raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    vat_specs, jug_specs = maker_specs()
+    root = os.path.join(vat_only_warehouse, "makermcd")
+    scan = max(
+        spark.read.parquet(os.path.join(root, s.table)).agg(F.max("block_number")).first()[0]
+        for s in vat_specs
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    got = resume_block(spark, vat_only_warehouse, "makermcd", vat_specs + jug_specs, 0)
+    assert dag.nextJobId() == first
+    assert got == scan + 1
+
+    part = tmp_path / "makermcd" / jug_specs[0].table / "block_range=0"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"block_number": [5]}), part / "part-0.parquet", write_statistics=False)
+    with pytest.raises(KeyError):
+        resume_block(spark, str(tmp_path), "makermcd", jug_specs, 0)
+
+
 def test_stateful_accumulates_across_batches(spark, tmp_path):
     """applyInPandasWithState must carry state across micro-batches:
     feed the same keys in two files with maxFilesPerTrigger=1 and check
@@ -223,7 +251,7 @@ def test_stateful_accumulates_across_batches(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from makerdao_dw_spark.streaming.jobs import _STATE, _STATE_OUT, _update_user_stats
+    from makerdao_dw_spark.queries.streaming import _STATE, _STATE_OUT, _update_user_stats
 
     d = tmp_path / "ev"
     d.mkdir()
@@ -361,59 +389,78 @@ def test_streaming_datasource_offsets_and_resume(spark, tmp_path):
     assert spark.read.parquet(out).count() == head + 1
 
 
-def test_serving_table_upsert_exactly_once(spark, tmp_path):
-    """stream_serving_aggregates: totals match a batch recompute after
-    incremental drains, a checkpointed re-run with no new data changes
-    nothing, and replaying an already-applied update is a no-op (the
-    update-mode + MERGE design is idempotent by construction)."""
-    import os
-
+def _serving_totals(df) -> dict:
+    """Batch recompute of the serving table: user_id -> (n, exact sum)."""
     from pyspark.sql import functions as F
 
-    from makerdao_dw_spark.io.merge import merge_dataframes
+    return {
+        r.user_id: (r.n, str(r.s))
+        for r in df.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(38,6)")).alias("s"),
+        )
+        .collect()
+    }
+
+
+def _serving_state(spark, serving) -> dict:
+    return {
+        r.user_id: (r.n_events, str(r.sum_value))
+        for r in spark.read.parquet(serving).collect()
+    }
+
+
+def _serving_landing(spark, tmp_path):
+    """The events table split in two landing batches (even and odd
+    user ids); returns (events, landing dir, schema, serving path, ckpt)."""
+    from pyspark.sql import functions as F
+
     from makerdao_dw_spark.session import load_table
-    from makerdao_dw_spark.streaming.jobs import stream_serving_aggregates
 
     from .conftest import SF_DIR
 
     events = load_table(spark, SF_DIR, "events").select("user_id", "value")
     landing = str(tmp_path / "landing")
-    serving = str(tmp_path / "serving")
-    ckpt = str(tmp_path / "ckpt")
-    first = events.filter(F.col("user_id") % 2 == 0)
-    first.write.mode("overwrite").parquet(os.path.join(landing, "f1"))
+    events.filter(F.col("user_id") % 2 == 0).write.mode("overwrite").parquet(
+        os.path.join(landing, "f1")
+    )
     schema = spark.read.parquet(os.path.join(landing, "f1")).schema
+    return events, landing, schema, str(tmp_path / "serving"), str(tmp_path / "ckpt")
 
-    def expected(df):
-        return {
-            r.user_id: (r.n, str(r.s))
-            for r in df.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(38,6)")).alias("s"),
-            )
-            .collect()
-        }
 
-    def serving_state():
-        return {
-            r.user_id: (r.n_events, str(r.sum_value))
-            for r in spark.read.parquet(serving).collect()
-        }
+def _land_second_batch(events, landing):
+    from pyspark.sql import functions as F
 
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert serving_state() == expected(first)
-
-    # drain a second incremental file: totals must cover BOTH files
     events.filter(F.col("user_id") % 2 == 1).write.mode("overwrite").parquet(
         os.path.join(landing, "f2")
     )
+
+
+def test_serving_table_upsert_exactly_once(spark, tmp_path):
+    """stream_serving_aggregates: totals match a batch recompute after
+    incremental drains, a checkpointed re-run with no new data changes
+    nothing, and replaying an already-applied update is a no-op (the
+    update-mode + MERGE design is idempotent by construction)."""
+    from pyspark.sql import functions as F
+
+    from makerdao_dw_spark.io.merge import merge_dataframes
+    from makerdao_dw_spark.streaming.jobs import stream_serving_aggregates
+
+    events, landing, schema, serving, ckpt = _serving_landing(spark, tmp_path)
+    first = events.filter(F.col("user_id") % 2 == 0)
+
     stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert serving_state() == expected(events)
+    assert _serving_state(spark, serving) == _serving_totals(first)
+
+    # drain a second incremental file: totals must cover BOTH files
+    _land_second_batch(events, landing)
+    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
+    assert _serving_state(spark, serving) == _serving_totals(events)
 
     # checkpointed re-run with nothing new: no change
     stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert serving_state() == expected(events)
+    assert _serving_state(spark, serving) == _serving_totals(events)
 
     # simulate an at-least-once replay: re-applying the full totals
     # upsert over the current serving table must be a no-op
@@ -427,7 +474,45 @@ def test_serving_table_upsert_exactly_once(spark, tmp_path):
     merged = merge_dataframes(spark.read.parquet(serving), replay, ["user_id"])
     assert {
         r.user_id: (r.n_events, str(r.sum_value)) for r in merged.collect()
-    } == expected(events)
+    } == _serving_totals(events)
+
+
+def test_serving_upsert_recovers_from_crash_between_swap_renames(spark, tmp_path, monkeypatch):
+    """A serving batch that dies between the swap's two renames leaves
+    the table only at its `<serving>_old-*` backup. The batch has no
+    commit entry, so the next drain reruns it: recover_swap restores the
+    backup before the upsert reads the table, and the totals end equal
+    to a batch recompute over both landing batches (concluding "no table
+    yet" would keep only the second batch's keys). Nothing staged or
+    backed up is left behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from makerdao_dw_spark.streaming.jobs import stream_serving_aggregates
+
+    events, landing, schema, serving, ckpt = _serving_landing(spark, tmp_path)
+    stream_serving_aggregates(spark, landing, schema, serving, ckpt)  # first write
+    _land_second_batch(events, landing)
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_at_second_rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError(f"injected crash before renaming {src} to {dst}")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_at_second_rename)
+    with pytest.raises(StreamingQueryException):
+        stream_serving_aggregates(spark, landing, schema, serving, ckpt)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert calls[1] == serving  # the staged table's rename into place
+    assert not os.path.isdir(serving)
+    assert [n for n in os.listdir(tmp_path) if n.startswith("serving_old-")]
+
+    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
+    assert _serving_state(spark, serving) == _serving_totals(events)
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "landing", "serving"]
 
 
 def test_rocksdb_state_store_matches_default(spark):
@@ -436,19 +521,19 @@ def test_rocksdb_state_store_matches_default(spark):
     byte-identical windowed-aggregation results to the default provider.
     Provider is picked per-query at checkpoint creation, so flipping the
     conf between runs is safe with fresh checkpoints."""
-    from makerdao_dw_spark.streaming.jobs import run_windowed_counts
+    from makerdao_dw_spark.queries.streaming import streaming_windowed_counts
 
     from .conftest import SF_DIR
 
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    base = [tuple(r) for r in run_windowed_counts(spark, SF_DIR).collect()]
+    base = [tuple(r) for r in streaming_windowed_counts(spark, SF_DIR).collect()]
     try:
         spark.conf.set(
             key,
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        rocks = [tuple(r) for r in run_windowed_counts(spark, SF_DIR).collect()]
+        rocks = [tuple(r) for r in streaming_windowed_counts(spark, SF_DIR).collect()]
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -463,14 +548,14 @@ def test_stream_table_reads_directory_shaped_tables(spark, tmp_path):
     recurse, so before the round-4 fix stream_table silently drained 0
     rows from them. Both layouts must yield the full table."""
     from makerdao_dw_spark.streaming.sources import stream_table
-    from makerdao_dw_spark.streaming.jobs import _drain
+    from makerdao_dw_spark.streaming.jobs import drain
 
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     n = src.count()
     d = str(tmp_path / "scaled")
     src.repartition(4).write.parquet(os.path.join(d, "events.parquet"))
 
-    got = _drain(stream_table(spark, d, "events").groupBy().count(), "complete")
+    got = drain(stream_table(spark, d, "events").groupBy().count(), "complete")
     assert got.collect()[0][0] == n
 
 
@@ -483,7 +568,7 @@ def test_stream_table_reads_hive_partitioned_tables(spark, tmp_path):
     silent-0-rows path (it is not; this test keeps it that way)."""
     from pyspark.sql import functions as F
 
-    from makerdao_dw_spark.streaming.jobs import _drain
+    from makerdao_dw_spark.streaming.jobs import drain
     from makerdao_dw_spark.streaming.sources import stream_table
 
     src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -497,7 +582,7 @@ def test_stream_table_reads_hive_partitioned_tables(spark, tmp_path):
     assert "block_range" in df.columns  # partition column discovered
     by_part = {
         r["block_range"]: r["n"]
-        for r in _drain(
+        for r in drain(
             df.groupBy("block_range").agg(F.count("*").alias("n")), "complete"
         ).collect()
     }
@@ -530,7 +615,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from makerdao_dw_spark.streaming.jobs import _drain
+    from makerdao_dw_spark.streaming.jobs import drain
     from makerdao_dw_spark.streaming.sources import stream_table
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -549,7 +634,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = _drain(deduped.select("event_id"), "append")
+    out = drain(deduped.select("event_id"), "append")
     got = sorted(r.event_id for r in out.collect())
     assert got == [1, 2, 3], got
 
@@ -561,12 +646,12 @@ def test_drain_leaves_no_temp_entries(spark, sf_dir):
     returned frame still counts."""
     import tempfile
 
-    from makerdao_dw_spark.streaming.jobs import run_windowed_counts
+    from makerdao_dw_spark.queries.streaming import streaming_windowed_counts
 
     tmp = tempfile.gettempdir()
-    run_windowed_counts(spark, sf_dir).collect()  # lazily created dirs settle
+    streaming_windowed_counts(spark, sf_dir).collect()  # lazily created dirs settle
     before = set(os.listdir(tmp))
-    assert run_windowed_counts(spark, sf_dir).count() > 0
+    assert streaming_windowed_counts(spark, sf_dir).count() > 0
     assert set(os.listdir(tmp)) ^ before == set()
     views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
     assert views == [], views

@@ -75,18 +75,18 @@ def test_added_file_in_table_dir_is_seen(spark, tmp_path):
 
 
 def test_spread_modes_do_not_share_an_entry(spark, tmp_path):
-    # one small single-row-group file: auto (None) resolves to no spread
+    # one small single-row-group file: only spread=True repartitions it
     _write(str(tmp_path / "t.parquet"), range(50))
 
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
     spread = load_table(spark, str(tmp_path), "t", spread=True)
-    auto = load_table(spark, str(tmp_path), "t", spread=None)
+    plain = load_table(spark, str(tmp_path), "t")
     assert "Repartition" in plan(spread)
-    assert "Repartition" not in plan(auto)
+    assert "Repartition" not in plan(plain)
     assert load_table(spark, str(tmp_path), "t", spread=True) is spread
-    assert load_table(spark, str(tmp_path), "t", spread=False) is auto
+    assert load_table(spark, str(tmp_path), "t", spread=False) is plain
 
 
 def test_cache_is_per_session_and_capped(spark, tmp_path, monkeypatch):

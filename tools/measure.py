@@ -86,7 +86,7 @@ def measure(spark, dirs: list[tuple[str, str]], queries: dict[str, bool], reps: 
     }
     for label, path in dirs:
         for name, engine in queries.items():
-            jobs.LAST_STATE_ROWS.clear()
+            jobs.LAST_STATE_ROWS = None
             try:
                 first, runs = bench.time_query(spark, qd[name], path, reps, engine)
                 row = {
@@ -94,8 +94,8 @@ def measure(spark, dirs: list[tuple[str, str]], queries: dict[str, bool], reps: 
                     "median_s": round(statistics.median(runs), 3),
                     "runs": [round(r, 3) for r in runs],
                 }
-                if jobs.LAST_STATE_ROWS:
-                    row["state_rows"] = sum(jobs.LAST_STATE_ROWS.values())
+                if jobs.LAST_STATE_ROWS is not None:
+                    row["state_rows"] = jobs.LAST_STATE_ROWS
             except Exception as e:  # noqa: BLE001 — one failure must not end the sweep
                 traceback.print_exc()
                 row = {"error": (str(e).strip().splitlines() or [type(e).__name__])[0][:200]}
