@@ -179,10 +179,5 @@ class SchemaCompiler:
         return specs
 
 
-def dispatch_index(specs: list[TableSpec]) -> dict[str, TableSpec]:
-    """signature -> spec routing table (the reference's dict_sign)."""
-    return {s.signature: s for s in specs}
-
-
 def compile_contract(contract_name: str, abi: list[dict]) -> list[TableSpec]:
     return SchemaCompiler().compile_contract(contract_name, abi)

@@ -1,13 +1,8 @@
-"""IO plane: file-format sources/sinks, catalog management, JDBC parity.
+"""IO plane: catalog DDL, the batched JDBC sink, table maintenance.
 
 The reference's only sinks are row-at-a-time INSERTs into PostgreSQL or
 Snowflake (/root/reference/classes.py:119-127,166-171 — flagged as the
 known perf problem in its own README:104). Here the primary sink is
-columnar parquet partitioned for pruning; JDBC exists as a batched
-parity adapter for warehouse interop.
+columnar parquet partitioned for pruning (ingest/pipeline.py); JDBC
+exists as a batched parity adapter for warehouse interop.
 """
-
-from .catalog import ensure_database, register_warehouse, save_table
-from .formats import read_any, write_any
-
-__all__ = ["read_any", "write_any", "ensure_database", "save_table", "register_warehouse"]

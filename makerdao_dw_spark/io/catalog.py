@@ -15,27 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def register_warehouse(spark: SparkSession, warehouse_dir: str | None = None) -> str:
-    """Validate the session's warehouse dir against the requested one.
-
-    `spark.sql.warehouse.dir` is STATIC: it can only be set at session
-    build time, and a running session always reports a resolved value —
-    so this cannot (and must not pretend to) redirect an existing
-    session. It returns the effective dir, and raises if a caller asked
-    for a different location than the session actually uses (the silent
-    alternative is managed tables landing somewhere unexpected)."""
-    effective = spark.conf.get("spark.sql.warehouse.dir")
-    if warehouse_dir is not None and warehouse_dir.rstrip("/") not in (
-        effective.rstrip("/"),
-        effective.removeprefix("file:").rstrip("/"),
-    ):
-        raise ValueError(
-            f"session warehouse is {effective!r}, not {warehouse_dir!r}; "
-            "spark.sql.warehouse.dir is static — set it on the session builder"
-        )
-    return effective
-
-
 def ensure_database(spark: SparkSession, name: str) -> None:
     """Idempotent CREATE DATABASE (namespace = protocol schema)."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{name}`")
@@ -69,37 +48,3 @@ def table_exists(spark: SparkSession, database: str, table: str) -> bool:
     """The check classes.py:64 got wrong (operator-precedence bug made it
     match any table in the lowercased schema): exact (db, table) match."""
     return spark.catalog.tableExists(f"`{database}`.`{table}`")
-
-
-def analyze_table(
-    spark: SparkSession, database: str, table: str, columns: list[str] | None = None
-) -> dict[str, str]:
-    """Compute table (and optionally column) statistics for the CBO.
-
-    Parquet scans already give Catalyst a sizeInBytes estimate from file
-    footers, but row counts and column NDV/min/max — what join
-    reordering and broadcast decisions actually want — only exist after
-    ANALYZE. At 100 TB this runs per partition-load as part of the
-    ingest job (cheap: it is a count + approx-NDV scan), and keeps CBO
-    choices stable as tables grow past rule-of-thumb thresholds.
-
-    Returns the table statistics as reported by DESCRIBE EXTENDED
-    (e.g. {'sizeInBytes': '...', 'rowCount': '...'}).
-    """
-    qualified = f"`{database}`.`{table}`"
-    if columns:
-        cols = ", ".join(f"`{c}`" for c in columns)
-        spark.sql(f"ANALYZE TABLE {qualified} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    else:
-        spark.sql(f"ANALYZE TABLE {qualified} COMPUTE STATISTICS")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}").collect()
-    stats_line = next((r.data_type for r in rows if r.col_name == "Statistics"), "")
-    out: dict[str, str] = {}
-    # "X bytes, Y rows" -> {'sizeInBytes': X, 'rowCount': Y}
-    for part in stats_line.split(","):
-        part = part.strip()
-        if part.endswith("bytes"):
-            out["sizeInBytes"] = part.split()[0]
-        elif part.endswith("rows"):
-            out["rowCount"] = part.split()[0]
-    return out

@@ -1,68 +1,13 @@
-"""File-format sources/sinks: parquet (primary), ORC, CSV, JSON.
+"""Parquet reads across schema generations.
 
-Parquet/ORC are the columnar formats that make 100 TB workable (column
-pruning + predicate pushdown + dictionary/RLE encoding — the reference's
-address→bytea space hack, classes.py:142-143, is subsumed by parquet
-dictionary encoding). CSV/JSON are interchange formats: schema must be
-supplied on read (never inferSchema at scale — it is a full extra pass)
-and timestamps are normalized to ISO-8601/UTC on write.
+Parquet is the warehouse format (column pruning + predicate pushdown +
+dictionary/RLE encoding — the reference's address→bytea space hack,
+classes.py:142-143, is subsumed by parquet dictionary encoding).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-FORMATS = ("parquet", "orc", "csv", "json")
-
-
-def write_any(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str | None = None,
-) -> None:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if compression is not None:
-        w = w.option("compression", compression)
-    if fmt == "csv":
-        w = w.option("header", "true").option("timestampFormat", _TS_FMT)
-    if fmt == "json":
-        w = w.option("timestampFormat", _TS_FMT)
-    w.format(fmt).save(path)
-
-
-def read_any(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: StructType | None = None,
-) -> DataFrame:
-    """Read a table. For CSV/JSON a schema is REQUIRED (schema inference
-    is a second full scan of the data — never acceptable at scale, and
-    type-lossy for decimals/timestamps)."""
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")
-    r = spark.read
-    if fmt in ("csv", "json"):
-        if schema is None:
-            raise ValueError(f"{fmt} read requires an explicit schema (no inference at scale)")
-        r = r.schema(schema)
-        if fmt == "csv":
-            r = r.option("header", "true").option("timestampFormat", _TS_FMT)
-        else:
-            r = r.option("timestampFormat", _TS_FMT)
-    elif schema is not None:
-        r = r.schema(schema)
-    return r.format(fmt).load(path)
 
 
 def read_evolved(spark: SparkSession, path: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""JDBC source/sink: warehouse interop parity (PostgreSQL / Snowflake).
+"""JDBC sink: warehouse interop parity (PostgreSQL / Snowflake).
 
 The reference writes to PostgreSQL or Snowflake one INSERT at a time
 inside a per-range transaction (classes.py:119-127,166-171) — its own
@@ -6,8 +6,8 @@ README calls the single-row path out as the bottleneck (README.md:104).
 The Spark-native equivalent is the JDBC batch writer: `batchsize` rows
 per round-trip per partition, `numPartitions` parallel connections.
 
-No JDBC driver jars ship in this environment, so these wrappers are
-config builders + thin `spark.read/write.jdbc` calls; the round-trip is
+No JDBC driver jars ship in this environment, so this is a config
+builder + a thin `df.write.format("jdbc")` call; the round-trip is
 exercised against a real warehouse by supplying the driver jar via
 `spark.jars` at session build. Everything here is plain public Spark API.
 """
@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -32,31 +32,6 @@ class JdbcConfig:
 
     def properties(self) -> dict[str, str]:
         return {"user": self.user, "password": self.password, "driver": self.driver}
-
-
-def read_jdbc(
-    spark: SparkSession,
-    cfg: JdbcConfig,
-    table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 8,
-) -> DataFrame:
-    """Partitioned JDBC scan: slice `table` on a numeric column (for the
-    reference's tables: always block_number) so N executors read in
-    parallel instead of one serial cursor."""
-    r = spark.read.format("jdbc").option("url", cfg.url).option("dbtable", table)
-    for k, v in cfg.properties().items():
-        r = r.option(k, v)
-    if partition_column is not None:
-        r = (
-            r.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    return r.load()
 
 
 def write_jdbc(

@@ -236,7 +236,7 @@ def zorder_morton_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max envelopes on BOTH dimensions plus whether a 2-D query box
     could prune the file — Z-ordering's payoff is that both columns
     stay range-prunable in one layout (a 1-D sort leaves the second
-    column unprunable; compare io/layout.py's sorted_write). Since the
+    column unprunable). Since the
     Morton code is built FROM the buckets, each file's envelope is
     provably tight — the audit surface a layout job emits next to the
     rewrite. The 2-column (key, day) projection is materialized ONCE

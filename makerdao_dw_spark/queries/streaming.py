@@ -162,7 +162,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
-# output and state schemas of _update_user_stats (DDL, as in transform_state.py)
+# output and state schemas of _update_user_stats, as DDL strings
 _STATE_OUT = "user_id BIGINT, n_events BIGINT, max_value DOUBLE, min_value DOUBLE, last_ts TIMESTAMP"
 _STATE = "n BIGINT, mx DOUBLE, mn DOUBLE, last_us BIGINT"
 

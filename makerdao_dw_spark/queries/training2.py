@@ -369,8 +369,8 @@ def table_diff_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     The audit twin of `io/merge.py`'s upsert: MERGE applies a delta,
     this measures one. Scale shape: a full outer join cannot broadcast,
     so the plan is a single co-partitioned shuffle join on the key
-    (bucketed-by-key snapshots via io/bucketing.py would eliminate even
-    that); classification and rollup are narrow."""
+    (bucketed-by-key snapshots, as `session.stage_bucketed` writes,
+    would eliminate even that); classification and rollup are narrow."""
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(38,6)")
     v1 = o.select(

@@ -1,50 +1,11 @@
-"""Bucketed co-located joins (zero-exchange plan asserted) and parquet
-MERGE/upsert (partition-scoped rewrite)."""
+"""MERGE/upsert semantics of `io/merge.merge_dataframes`, the merge the
+serving-table upsert (streaming/jobs.py::stream_serving_aggregates)
+applies per micro-batch. Bucketed tables are `session.stage_bucketed`'s,
+tested in test_session_stage.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from makerdao_dw_spark.io.bucketing import bucketed_join, write_bucketed
-from makerdao_dw_spark.io.merge import merge_dataframes, merge_into_partitioned
-from makerdao_dw_spark.session import load_table
-
-from .conftest import SF_DIR
-
-
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Both sides bucketed on the join key -> sort-merge join with ZERO
-    exchanges (the write-once-join-many layout for fact-fact joins)."""
-    orders = load_table(spark, SF_DIR, "orders")
-    lineitem = load_table(spark, SF_DIR, "lineitem")
-    write_bucketed(
-        orders, "bkt_db", "orders_b", ["o_orderkey"], 8, path=str(tmp_path / "o")
-    )
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "bkt_db",
-        "lineitem_b",
-        ["o_orderkey"],
-        8,
-        path=str(tmp_path / "l"),
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a non-broadcast join so the bucketing is what's tested
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        j = bucketed_join(spark, "bkt_db", "orders_b", "lineitem_b", ["o_orderkey"]).select(
-            "o_orderkey", "o_totalprice", "l_quantity"
-        )
-        n = j.count()
-        assert n == lineitem.count()  # every lineitem has its order
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP DATABASE bkt_db CASCADE")
+from makerdao_dw_spark.io.merge import merge_dataframes
 
 
 def test_merge_dataframes_semantics(spark):
@@ -54,29 +15,3 @@ def test_merge_dataframes_semantics(spark):
     updates = spark.createDataFrame([(2, "B", 99), (4, "d", 40)], "k long, s string, v long")
     out = {r["k"]: (r["s"], r["v"]) for r in merge_dataframes(target, updates, ["k"]).collect()}
     assert out == {1: ("a", 10), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
-
-
-def test_merge_into_partitioned_rewrites_only_touched(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    base = spark.range(0, 100).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 5).alias("part"),
-        F.lit("orig").alias("tag"),
-    )
-    merge_into_partitioned(path, base, ["k"], "part")
-
-    # update 3 keys in partition 0 and insert a new key into partition 1
-    updates = spark.createDataFrame(
-        [(0, 0, "new"), (5, 0, "new"), (10, 0, "new"), (101, 1, "ins")],
-        "k long, part long, tag string",
-    )
-    merge_into_partitioned(path, updates, ["k"], "part")
-
-    df = spark.read.parquet(path)
-    assert df.count() == 101
-    assert df.filter("tag = 'new'").count() == 3
-    assert df.filter("k = 101 AND tag = 'ins'").count() == 1
-    # untouched partitions keep their original rows
-    assert df.filter("part >= 2 AND tag <> 'orig'").count() == 0
-    # no duplicate keys after merge
-    assert df.select("k").distinct().count() == 101

@@ -8,6 +8,7 @@ inventory of the upstream makerdao-dw `config.conf` (5 schemas, 13
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -117,6 +118,36 @@ def test_cli_ingest_end_to_end(spark, tmp_path):
     assert glob.glob(str(out / "makermcd" / "vat_call_frob" / "block_range=*"))
     frob = spark.read.parquet(str(out / "makermcd" / "vat_call_frob"))
     assert frob.count() > 0
+
+
+def test_cli_blocks_fetches_each_header_once(spark, tmp_path, monkeypatch, capsys):
+    """`python -m makerdao_dw_spark blocks` parity (eth-blocks.py): every
+    block in the range lands once, and each header is fetched over RPC
+    exactly once (the row count must not rerun the fetch)."""
+    from makerdao_dw_spark.__main__ import main
+    from makerdao_dw_spark.ingest import rpc
+
+    log = str(tmp_path / "fetched")
+
+    class CountingChain(rpc.MockChain):
+        # executors run in other processes: count through a shared file
+        def get_block(self, n):
+            fd = os.open(log, os.O_WRONLY | os.O_CREAT | os.O_APPEND)
+            try:
+                os.write(fd, f"{n}\n".encode())
+            finally:
+                os.close(fd)
+            return super().get_block(n)
+
+    monkeypatch.setattr(rpc, "MockChain", CountingChain)
+    out = tmp_path / "wh"
+    assert main(["blocks", "--out", str(out), "--from-block", "0",
+                 "--to-block", "199", "--step", "50"]) == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["rows"] == 200
+    with open(log) as fh:
+        fetched = sorted(int(line) for line in fh)
+    assert fetched == list(range(200))
 
 
 def test_cli_query_list_and_run(capsys):

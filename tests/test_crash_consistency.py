@@ -1,64 +1,35 @@
 """Fault-injection crash-consistency tests for the staged-swap
-writers and the backfill publish (VERDICT r5 item 1 for 1-3):
+writers and the backfill publish:
 
-1. `JsonlSinkDataSource`'s two-phase-commit writer
-   (ingest/datasource.py): crash injected at EVERY os.replace in
-   commit() — before/inside file publish, at the manifest commit point,
-   and during post-commit GC — plus a torn-manifest-write injection.
-   The reader contract (`read_committed_jsonl`: only manifest-referenced
-   files are visible) must observe exactly pre-state or post-state, and
-   a re-run after any crash must converge to post-state (idempotent
-   recovery, orphans invisible).
-
-2. `compact_table` / `swap` (io/maintenance.py): crash injected at
+1. `compact_table` / `swap` (io/maintenance.py): crash injected at
    each of the two renames and at the backup removal. The documented
    recovery contract is `recover_swap(path)` (called automatically at
    the start of every `compact_table`): after ANY crash, recovery + a
    re-run restores a complete table with the exact pre-compaction rows.
 
-3. `merge_into_partitioned` (io/merge.py): failure injected (a) during
-   update evaluation (a poisoned row, fires at the checkpoint barrier)
-   and (b) during the overwrite job itself (a poisoned column grafted
-   onto the checkpointed rows, so one write task fails after others
-   staged files) — the target must remain byte-for-byte pre-state in
-   both; plus the mixed-generation recovery contract: a mid-job-commit
-   crash can leave touched partitions in mixed old/new generations
-   (cross-partition atomicity is explicitly NOT claimed — dynamic
-   partition overwrite's commit unit is one partition) and re-running
-   the same merge converges every partition to post-state.
-
-4. `backfill_contract` (ingest/pipeline.py): crash injected at the
+2. `backfill_contract` (ingest/pipeline.py): crash injected at the
    first file published into one table partition, at four points; a
    rerun of the same backfill must end with the clean run's rows in
    every table.
 
 All injections are driver-side monkeypatches of the exact syscall the
-writer performs (os.replace / os.rename / shutil.rmtree / os.remove /
-json.dump), so each test pins one real crash point, not a simulated
-approximation.
+writer performs (os.replace / os.rename / shutil.rmtree), so each test
+pins one real crash point, not a simulated approximation.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from makerdao_dw_spark.ingest.datasource import (
-    _jsonl_writer_classes,
-    read_committed_jsonl,
-)
 from makerdao_dw_spark.io.maintenance import (
     compact_table,
     recover_swap,
     table_layout_stats,
 )
-from makerdao_dw_spark.io.merge import merge_into_partitioned
 
 
 class InjectedCrash(Exception):
@@ -79,105 +50,7 @@ def _fail_on_call(real_fn, fail_call_no: int):
 
 
 # ---------------------------------------------------------------------------
-# 1. JsonlSinkDataSource two-phase commit
-# ---------------------------------------------------------------------------
-
-
-def _jsonl_commit(path: str, chunks: list[list[dict]], overwrite: bool = False):
-    """Drive the writer protocol exactly as Spark does: one write() per
-    task (chunk), then one driver-side commit() over all messages."""
-    writer = _jsonl_writer_classes()({"path": path}, overwrite)
-    msgs = [writer.write(iter([Row(**r) for r in chunk])) for chunk in chunks]
-    writer.commit(msgs)
-
-
-_A = [[{"k": 1, "v": "a1"}], [{"k": 2, "v": "a2"}]]
-_B = [[{"k": 3, "v": "b1"}], [{"k": 4, "v": "b2"}]]
-
-
-def _keys(rows: list[dict]) -> set[int]:
-    return {r["k"] for r in rows}
-
-
-@pytest.mark.parametrize("fail_call_no", [1, 2, 3])
-def test_jsonl_commit_crash_at_each_replace(tmp_path, monkeypatch, fail_call_no):
-    """Append commit with 2 staged files performs exactly 3 os.replace
-    calls: publish file1, publish file2, atomic manifest replace (THE
-    commit point). A crash at ANY of them must leave the reader on
-    pre-state; re-running the write converges to post-state with no
-    duplicate or phantom rows."""
-    out = str(tmp_path / "sink")
-    _jsonl_commit(out, _A)  # committed pre-state
-    assert _keys(read_committed_jsonl(out)) == {1, 2}
-
-    real_replace = os.replace
-    monkeypatch.setattr(os, "replace", _fail_on_call(real_replace, fail_call_no))
-    with pytest.raises(InjectedCrash):
-        _jsonl_commit(out, _B)
-    monkeypatch.setattr(os, "replace", real_replace)
-
-    # reader sees EXACTLY pre-state — published-but-unreferenced files
-    # (fail_call_no in {2,3} leaves some) are invisible
-    assert _keys(read_committed_jsonl(out)) == {1, 2}
-
-    # idempotent recovery: simply re-run the failed write
-    _jsonl_commit(out, _B)
-    assert _keys(read_committed_jsonl(out)) == {1, 2, 3, 4}
-    # every committed row appears exactly once
-    assert len(read_committed_jsonl(out)) == 4
-
-
-def test_jsonl_commit_crash_during_gc_leaves_post_state(tmp_path, monkeypatch):
-    """Overwrite commit: once the manifest is atomically replaced the
-    commit IS durable — a crash during phase-3 garbage collection (old
-    file removal) must leave the reader on post-state; the next
-    overwrite sweeps the orphans."""
-    out = str(tmp_path / "sink")
-    _jsonl_commit(out, _A)
-
-    real_remove = os.remove
-    monkeypatch.setattr(os, "remove", _fail_on_call(real_remove, 1))
-    with pytest.raises(InjectedCrash):
-        _jsonl_commit(out, _B, overwrite=True)
-    monkeypatch.setattr(os, "remove", real_remove)
-
-    # post-state: the manifest flip already happened
-    assert _keys(read_committed_jsonl(out)) == {3, 4}
-    # orphaned pre-state files still on disk but invisible
-    on_disk = {f for f in os.listdir(out) if f.endswith(".jsonl")}
-    committed = {e["file"] for e in json.load(open(os.path.join(out, "_MANIFEST.json")))}
-    assert committed < on_disk  # strict subset: orphans exist
-
-    # next overwrite commit garbage-collects every orphan
-    _jsonl_commit(out, [[{"k": 9, "v": "c"}]], overwrite=True)
-    assert _keys(read_committed_jsonl(out)) == {9}
-    on_disk = {f for f in os.listdir(out) if f.endswith(".jsonl")}
-    committed = {e["file"] for e in json.load(open(os.path.join(out, "_MANIFEST.json")))}
-    assert on_disk == committed
-
-
-def test_jsonl_torn_manifest_write_invisible(tmp_path, monkeypatch):
-    """A crash WHILE WRITING the new manifest (json.dump into the .tmp)
-    can never tear the live manifest — the live file is only ever
-    touched by os.replace."""
-    out = str(tmp_path / "sink")
-    _jsonl_commit(out, _A)
-    manifest_bytes = open(os.path.join(out, "_MANIFEST.json"), "rb").read()
-
-    real_dump = json.dump
-    monkeypatch.setattr(json, "dump", _fail_on_call(real_dump, 1))
-    with pytest.raises(InjectedCrash):
-        _jsonl_commit(out, _B)
-    monkeypatch.setattr(json, "dump", real_dump)
-
-    assert open(os.path.join(out, "_MANIFEST.json"), "rb").read() == manifest_bytes
-    assert _keys(read_committed_jsonl(out)) == {1, 2}
-    _jsonl_commit(out, _B)
-    assert _keys(read_committed_jsonl(out)) == {1, 2, 3, 4}
-
-
-# ---------------------------------------------------------------------------
-# 2. compact_table / swap
+# 1. compact_table / swap
 # ---------------------------------------------------------------------------
 
 
@@ -331,146 +204,7 @@ def test_recover_swap_sweeps_stale_staging_with_live_table(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 3. merge_into_partitioned
-# ---------------------------------------------------------------------------
-
-
-def _write_partitioned(spark, path: str, parts=(1, 2, 3)):
-    rows = [(p, i, "old") for p in parts for i in range(10)]
-    spark.createDataFrame(rows, "p int, k int, flag string").write.partitionBy(
-        "p"
-    ).mode("overwrite").parquet(path)
-
-
-def test_merge_poisoned_update_leaves_pre_state(spark, tmp_path):
-    """A row-level failure while evaluating the updates (fires at the
-    localCheckpoint barrier, BEFORE any file is touched) must leave the
-    target byte-for-byte identical — same rows AND same file listing."""
-    path = str(tmp_path / "t")
-    _write_partitioned(spark, path)
-    pre_rows = _rows(spark, path)
-    pre_files = sorted(
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-
-    @F.udf("string")
-    def poison(k):
-        if k == 5:
-            raise ValueError("poisoned row")
-        return "new"
-
-    updates = spark.createDataFrame(
-        [(2, i) for i in range(10)], "p int, k int"
-    ).withColumn("flag", poison("k"))
-    with pytest.raises(Exception):
-        merge_into_partitioned(path, updates, keys=["p", "k"], partition_col="p")
-
-    post_files = sorted(
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    assert post_files == pre_files
-    assert _rows(spark, path) == pre_rows
-
-
-def test_merge_write_phase_failure_leaves_pre_state(spark, tmp_path, monkeypatch):
-    """Failure DURING the overwrite job itself (after the checkpoint
-    barrier): a poisoned column is grafted onto the checkpointed rows so
-    that one write TASK fails mid-job while others have already staged
-    their files — the job aborts before job-commit, so the committed
-    table must read back exactly pre-state and staged files stay
-    invisible. (chmod-based injection is unusable here: the suite runs
-    as root, which bypasses permission bits.)"""
-    # patch the CONCRETE class: pyspark.sql.DataFrame is the Spark-4
-    # abstract base; the classic subclass overrides localCheckpoint
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    path = str(tmp_path / "t")
-    _write_partitioned(spark, path)
-    pre_rows = _rows(spark, path)
-
-    real_ckpt = DataFrame.localCheckpoint
-
-    @F.udf("string")
-    def poison(k, flag):
-        if k == 5:
-            raise ValueError("poisoned during write")
-        return flag
-
-    def ckpt_then_poison(self, eager=True):
-        out = real_ckpt(self, eager=eager)
-        # same schema, but evaluating row k==5 now throws INSIDE the
-        # write job's tasks (the checkpoint itself already succeeded)
-        return out.withColumn("flag", poison(F.col("k"), F.col("flag")))
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", ckpt_then_poison)
-    updates = spark.createDataFrame(
-        [(2, i, "new") for i in range(10)], "p int, k int, flag string"
-    )
-    try:
-        with pytest.raises(Exception):
-            merge_into_partitioned(path, updates, keys=["p", "k"], partition_col="p")
-    finally:
-        monkeypatch.setattr(DataFrame, "localCheckpoint", real_ckpt)
-
-    assert _rows(spark, path) == pre_rows
-    # and the merge is still runnable after the fault clears
-    merge_into_partitioned(path, updates, keys=["p", "k"], partition_col="p")
-    got = {
-        (r["p"], r["k"], r["flag"]) for r in spark.read.parquet(path).collect()
-    }
-    assert {(2, i, "new") for i in range(10)} <= got
-    assert len(got) == 30
-
-
-def test_merge_mixed_partition_state_recovers_by_rerun(spark, tmp_path):
-    """Dynamic partition overwrite's commit unit is ONE partition, so a
-    crash mid-job-commit can leave touched partitions in MIXED
-    generations (some new, some old) — never a torn single partition.
-    That JVM-internal crash point cannot be reached from Python (and
-    root bypasses permission-based injection), so this test constructs
-    the worst documented post-crash state explicitly — p=2 new, p=3
-    still old — and pins the SCALE.md recovery contract: re-running the
-    SAME merge converges every partition to post-state (idempotent by
-    key)."""
-    path = str(tmp_path / "t")
-    _write_partitioned(spark, path)
-    updates = spark.createDataFrame(
-        [(p, i, "new") for p in (2, 3) for i in range(10)],
-        "p int, k int, flag string",
-    )
-
-    # construct the mid-commit crash state: p=2's new generation
-    # committed, p=3's not — exactly what a kill between two partition
-    # commits leaves on disk
-    done = str(tmp_path / "done")
-    shutil.copytree(path, done)
-    merge_into_partitioned(done, updates, keys=["p", "k"], partition_col="p")
-    shutil.rmtree(os.path.join(path, "p=2"))
-    shutil.copytree(os.path.join(done, "p=2"), os.path.join(path, "p=2"))
-
-    # each partition is internally consistent (the per-partition claim)
-    for p, want in ((1, "old"), (2, "new"), (3, "old")):
-        rows = spark.read.parquet(os.path.join(path, f"p={p}")).collect()
-        assert len(rows) == 10
-        assert {r["flag"] for r in rows} == {want}
-
-    # recovery contract: re-run the SAME merge — converges everywhere,
-    # no duplicates (update wins over the already-new p=2 generation)
-    merge_into_partitioned(path, updates, keys=["p", "k"], partition_col="p")
-    for p, want in ((1, "old"), (2, "new"), (3, "new")):
-        rows = spark.read.parquet(os.path.join(path, f"p={p}")).collect()
-        assert len(rows) == 10, (p, len(rows))
-        assert {r["flag"] for r in rows} == {want}
-
-
-# ---------------------------------------------------------------------------
-# 4. backfill_contract: demux_and_write's publish + resume
+# 2. backfill_contract: demux_and_write's publish + resume
 # ---------------------------------------------------------------------------
 
 _BACKFILL_HEAD = 1999

@@ -215,50 +215,6 @@ def test_cusum_counts_empty_prefix(spark, tmp_path):
     assert got == {"2024-01-01": 100.0, "2024-01-02": 200.0, "2024-01-03": 300.0}, got
 
 
-def test_zorder_expr_matches_python_morton(spark):
-    """zorder_expr's Catalyst bit interleave == a pure-Python Morton
-    reference, over a grid including clamp boundaries."""
-    from makerdao_dw_spark.io.layout import zorder_expr
-
-    import pyspark.sql.functions as F
-
-    bits = 6
-
-    def morton(x: int, y: int) -> int:
-        x = min(max(x, 0), (1 << bits) - 1)
-        y = min(max(y, 0), (1 << bits) - 1)
-        z = 0
-        for b in range(bits):
-            z |= ((x >> b) & 1) << (2 * b) | ((y >> b) & 1) << (2 * b + 1)
-        return z
-
-    vals = [-5, 0, 1, 2, 7, 31, 63, 64, 1000]
-    rows = [(x, y) for x in vals for y in vals]
-    df = spark.createDataFrame(rows, "x long, y long").withColumn(
-        "z", F.expr(zorder_expr(["x", "y"], bits=bits))
-    )
-    for r in df.collect():
-        assert r.z == morton(r.x, r.y), (r.x, r.y, r.z, morton(r.x, r.y))
-
-
-def test_zorder_expr_rejects_sign_bit_overflow():
-    """bits*len(cols) > 63 would put interleaved bits at/past the bigint
-    sign bit (negative z breaks the sort order; >63 silently wraps) —
-    must raise, not corrupt the Morton ordering."""
-    import pytest
-
-    from makerdao_dw_spark.io.layout import zorder_expr
-
-    with pytest.raises(ValueError, match="exceeds 63"):
-        zorder_expr(["a", "b", "c", "d"], bits=16)  # top bit at 63 = sign
-    with pytest.raises(ValueError, match="exceeds 63"):
-        zorder_expr(["a", "b", "c", "d", "e"], bits=16)  # silent wrap
-    with pytest.raises(ValueError, match="at least 2"):
-        zorder_expr(["a"], bits=8)
-    # boundary: 63 interleaved bits exactly is fine (top position 62)
-    assert zorder_expr(["a", "b", "c"], bits=21)
-
-
 def test_srp_bucket_matches_numpy_reference(spark):
     """ann_srp_lsh's bucket expression == numpy sign-of-projection onto
     the same md5-seeded hyperplanes."""

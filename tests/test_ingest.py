@@ -120,20 +120,6 @@ def test_assets_per_type_golden_vs_duckdb(warehouse, spark):
     assert {"Stablecoins", "ETH", "WBTC", "Liquidity Pools", "RWA", "Others"} <= cats
 
 
-def test_python_datasource_blocks(spark):
-    """Spark 4 Python DataSource: `format("ethblocks")` must produce
-    exactly the rows backfill_blocks produces, with source-owned
-    partition planning (one task per block window)."""
-    from makerdao_dw_spark.ingest.datasource import read_blocks_source
-
-    via_ds = read_blocks_source(spark, 0, 299, step=100)
-    assert via_ds.rdd.getNumPartitions() == 3  # 3 windows -> 3 tasks
-    via_pipeline = backfill_blocks(spark, maker_chain(head=299), 0, 299, step=100)
-    a = sorted(tuple(r) for r in via_ds.collect())
-    b = sorted(tuple(r) for r in via_pipeline.collect())
-    assert len(a) == 300 and a == b
-
-
 def test_dashboard_leaves_no_temp_view(warehouse, spark):
     """The dashboard passes its tables as query arguments: the session
     lists no new temp view afterwards, none under a table name."""

@@ -1,18 +1,15 @@
-"""IO plane tests: format round-trips preserve values and types,
-partitioned writes prune on read, catalog tables work end-to-end, and
-the JDBC adapter builds correct plans (no driver jar in this env, so the
-JDBC write path is asserted up to the driver-load boundary)."""
+"""IO plane tests: partitioned writes prune on read, catalog tables work
+end-to-end, and the JDBC adapter builds correct plans (no driver jar in
+this env, so the JDBC write path is asserted up to the driver-load
+boundary)."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from makerdao_dw_spark.io import ensure_database, read_any, save_table, write_any
-from makerdao_dw_spark.io.catalog import table_exists
+from makerdao_dw_spark.io.catalog import ensure_database, save_table, table_exists
 from makerdao_dw_spark.io.jdbc import JdbcConfig, write_jdbc
 from makerdao_dw_spark.session import load_table
 
@@ -24,29 +21,12 @@ def sample(spark):
     return load_table(spark, SF_DIR, "events").limit(200).cache()
 
 
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
-def test_roundtrip_preserves_values(spark, sample, tmp_path, fmt):
-    path = str(tmp_path / fmt)
-    write_any(sample, path, fmt=fmt)
-    back = read_any(spark, path, fmt=fmt, schema=sample.schema)
-    a = sorted(map(tuple, sample.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b, f"{fmt}: first diff {next((x, y) for x, y in zip(a, b) if x != y)}"
-
-
-def test_csv_json_require_schema(spark, tmp_path):
-    with pytest.raises(ValueError, match="schema"):
-        read_any(spark, str(tmp_path), fmt="csv")
-    with pytest.raises(ValueError, match="schema"):
-        read_any(spark, str(tmp_path), fmt="json")
-
-
 def test_partitioned_write_prunes_on_read(spark, sample, tmp_path):
     """A filter on the partition column must turn into PartitionFilters
     (directory pruning), not a data filter over all files."""
     path = str(tmp_path / "part")
     df = sample.withColumn("day", F.to_date("ts"))
-    write_any(df, path, fmt="parquet", partition_by=["day"])
+    df.write.partitionBy("day").parquet(path)
     back = spark.read.parquet(path)
     one_day = back.select("day").distinct().first()["day"]
     q = back.filter(F.col("day") == F.lit(one_day))
@@ -109,99 +89,6 @@ def test_compaction_reduces_files(spark, sample, tmp_path):
     df = spark.read.parquet(path)
     assert df.count() == rows_before
     assert {r["p"] for r in df.select("p").distinct().collect()} == {0, 1}
-
-
-def test_sorted_write_enables_row_group_pruning(spark, tmp_path):
-    """Clustered layout: after sorted_write on l_orderkey, row-group
-    min/max ranges are pairwise disjoint (every range predicate can
-    prune) and a narrow predicate can skip >=75% of row groups; the
-    same data written unsorted prunes (near) nothing."""
-    from makerdao_dw_spark.io.layout import pruning_ratio, row_group_ranges, sorted_write
-    from makerdao_dw_spark.session import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.01", "lineitem")
-    lo_key, hi_key = 100, 200
-
-    clustered = str(tmp_path / "clustered")
-    sorted_write(li, clustered, ["l_orderkey"], num_files=8)
-    ranges = sorted(row_group_ranges(clustered, "l_orderkey"))
-    assert len(ranges) >= 8
-    for (_, prev_max), (next_min, _) in zip(ranges, ranges[1:]):
-        assert next_min >= prev_max  # disjoint-or-touching: stats are usable
-    assert pruning_ratio(clustered, "l_orderkey", lo_key, hi_key) >= 0.75
-
-    shuffled = str(tmp_path / "shuffled")
-    li.repartition(8).write.parquet(shuffled)  # random round-robin layout
-    assert pruning_ratio(shuffled, "l_orderkey", lo_key, hi_key) <= 0.25
-
-    # the clustered table still reads back identically
-    back = spark.read.parquet(clustered)
-    assert back.count() == li.count()
-
-
-def test_zorder_write_prunes_on_both_dimensions(spark, tmp_path):
-    """Multi-dim clustering: after zorder_write on (x, y), a narrow range
-    predicate on EITHER dimension skips a large share of row groups —
-    the property single-key sorted_write cannot give the trailing key
-    (its y-pruning is ~0 on the same data)."""
-    from pyspark.sql import functions as F
-
-    from makerdao_dw_spark.io.layout import pruning_ratio, sorted_write, zorder_write
-
-    # full 64x64 grid, 4 rows per cell — both dims uniform
-    grid = (
-        spark.range(64 * 64 * 4)
-        .select(
-            ((F.col("id") / 4).cast("long") % 64).alias("x"),
-            ((F.col("id") / 256).cast("long") % 64).alias("y"),
-            F.col("id").alias("payload"),
-        )
-    )
-    zpath = str(tmp_path / "zordered")
-    zorder_write(grid, zpath, ["x", "y"], bits=6, num_files=16)
-    x_prune = pruning_ratio(zpath, "x", 10, 13)
-    y_prune = pruning_ratio(zpath, "y", 10, 13)
-    assert x_prune >= 0.5, x_prune
-    assert y_prune >= 0.5, y_prune
-
-    spath = str(tmp_path / "xsorted")
-    sorted_write(grid, spath, ["x"], num_files=16)
-    # leading key prunes great, trailing key prunes nothing
-    assert pruning_ratio(spath, "x", 10, 13) >= 0.75
-    assert pruning_ratio(spath, "y", 10, 13) <= 0.25
-
-    back = spark.read.parquet(zpath)
-    assert back.count() == grid.count()
-    assert set(back.columns) == {"x", "y", "payload"}
-
-
-def test_analyze_table_feeds_cbo_broadcast(spark, tmp_path):
-    """ANALYZE TABLE must surface rowCount stats, and an analyzed
-    dimension-sized table must auto-broadcast in a join WITHOUT an
-    explicit hint (the CBO path the ingest jobs rely on at scale)."""
-    from makerdao_dw_spark.io.catalog import analyze_table, ensure_database, save_table
-    from makerdao_dw_spark.session import load_table
-
-    from .conftest import SF_DIR
-
-    ensure_database(spark, "statsdb")
-    spark.sql("DROP TABLE IF EXISTS statsdb.nation_dim")
-    nation = load_table(spark, SF_DIR, "nation")
-    # external table at tmp_path: hermetic across sessions (a managed
-    # table's warehouse dir outlives the per-session derby metastore,
-    # and a fresh session then collides with the leftover location)
-    save_table(
-        nation, "statsdb", "nation_dim", mode="overwrite", path=str(tmp_path / "nation_dim")
-    )
-    stats = analyze_table(spark, "statsdb", "nation_dim", columns=["n_nationkey"])
-    assert int(stats["rowCount"]) == nation.count()
-    cust = load_table(spark, SF_DIR, "customer")
-    j = cust.join(
-        spark.table("statsdb.nation_dim"),
-        cust["c_nationkey"] == F.col("n_nationkey"),
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan[:500]
 
 
 def test_schema_evolution_abi_upgrade(spark, tmp_path):

@@ -1,0 +1,130 @@
+"""Every package def has a product caller, or a stated reason to stay.
+
+A top-level function or class of `makerdao_dw_spark/` is *reached* when
+product code refers to it: the package itself, `tools/`, `perfbench/`,
+`bench*.py` or `__spark_entry__.py`, never `tests/`. A reference is an
+`ast.Name`, an `ast.Attribute` or an import alias, matched by name,
+outside the def's own body. `@query`-registered functions are reached
+by the registry. References made inside an unreached def do not count,
+so the scan iterates to a fixpoint: a cluster of defs that only call
+each other is caught as a whole.
+
+Code that only tests reach is a second copy of some product path or
+dead weight; delete it with its tests. The defs kept on purpose are
+listed below, each with its reason. What a kept def uses counts as
+reached, and a kept def that gains a product caller leaves the list.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "makerdao_dw_spark"
+
+KEEP = {
+    ("io/jdbc.py", "JdbcConfig"): "config of the batched JDBC sink, the "
+    "counterpart of the reference's PostgreSQL/Snowflake INSERT sink",
+    ("io/jdbc.py", "write_jdbc"): "the batched JDBC sink, the counterpart "
+    "of the reference's PostgreSQL/Snowflake INSERT sink",
+    ("io/catalog.py", "ensure_database"): "A13 DDL sink: CREATE DATABASE per schema",
+    ("io/catalog.py", "save_table"): "A13 DDL sink: a catalog table per TableSpec",
+    ("io/catalog.py", "table_exists"): "A13 DDL sink: the exact (db, table) existence check",
+    ("decode/decoders.py", "redispatch_proxy_calls"): "reference stage A8 "
+    "(proxy re-dispatch); wiring it into demux_and_write needs a proxy "
+    "fixture chain",
+    ("io/maintenance.py", "compact_table"): "small-file compaction (ROADMAP "
+    "D7); the swap crash tests drive it",
+    ("io/maintenance.py", "table_layout_stats"): "file-count/size probe that "
+    "compaction is judged by (ROADMAP D7)",
+    ("io/formats.py", "read_evolved"): "merged-schema read for ABI upgrades (ROADMAP D11)",
+    ("functions/__init__.py", "register_domain_functions"): "the SQL twins "
+    "the Column helpers are compared against",
+    ("operators/kmeans.py", "_dist2"): "the scalar reference for dists_arr",
+    ("streaming/jobs.py", "stream_serving_aggregates"): "the serving-table "
+    "upsert: MERGE (io/merge.merge_dataframes) per micro-batch, published "
+    "by io/maintenance.swap",
+    ("operators/ann_eval.py", "recall_table"): "recall@k of the registered "
+    "ANN indexes against exact top-k; the recall floors rest on it",
+    ("queries/olap.py", "approx_aggregates"): "raw HLL/quantile-sketch "
+    "values behind the registered approx_aggregates, which only emits "
+    "in-tolerance flags",
+    ("queries/olap.py", "sample_stratified"): "the engine-native sampleBy "
+    "twin of the registered sample_stratified_exact",
+    **{
+        ("functions/__init__.py", name): "Column-API twin of the SQL domain function"
+        for name in ("wad", "ray", "rad", "ray_apy", "ilk_name")
+    },
+}
+
+
+def _product_files() -> list[str]:
+    files = glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
+    files += glob.glob(os.path.join(ROOT, "tools", "**", "*.py"), recursive=True)
+    files += glob.glob(os.path.join(ROOT, "perfbench", "**", "*.py"), recursive=True)
+    files += glob.glob(os.path.join(ROOT, "bench*.py"))
+    files.append(os.path.join(ROOT, "__spark_entry__.py"))
+    return sorted(f for f in files if os.path.exists(f))
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _registered(node: ast.AST) -> bool:
+    for d in getattr(node, "decorator_list", ()):
+        target = d.func if isinstance(d, ast.Call) else d
+        if isinstance(target, ast.Name) and target.id == "query":
+            return True
+    return False
+
+
+def unreached(keep=()) -> list[tuple[str, str]]:
+    """(module path under the package, name) of every top-level def that
+    no product code reaches; the bodies of the `keep` defs count as
+    product code."""
+    pkg = os.path.join(ROOT, PACKAGE) + os.sep
+    defs: dict[tuple[str, str], set[str]] = {}  # def -> names its body refers to
+    live: set[str] = set()  # names referred to from outside any candidate def
+    for path in _product_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        rel = path[len(pkg):] if path.startswith(pkg) else None
+        for stmt in tree.body:
+            is_def = isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            if rel is not None and is_def and not _registered(stmt):
+                defs[(rel, stmt.name)] = _names(stmt) - {stmt.name}
+            else:
+                live |= _names(stmt)
+    for key in keep:
+        live |= defs[key]
+    reached: set[tuple[str, str]] = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, refs in defs.items():
+            if key not in reached and key[1] in live:
+                reached.add(key)
+                live |= refs
+                grew = True
+    return sorted(set(defs) - reached)
+
+
+def test_every_package_def_has_a_product_caller():
+    extra = [d for d in unreached(KEEP) if d not in KEEP]
+    assert not extra, f"reached only from tests; delete them or keep them with a reason: {extra}"
+
+
+def test_kept_defs_have_no_product_caller():
+    called = [k for k in sorted(KEEP) if k not in unreached()]
+    assert not called, f"kept defs that product code now reaches; drop them from KEEP: {called}"

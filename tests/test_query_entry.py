@@ -162,28 +162,13 @@ def test_conf_override_restores_or_unsets(spark):
     assert spark.conf.get(unset_key, None) is None
 
 
-def test_transform_with_state_restores_provider_class(spark):
-    pytest.importorskip(
-        "google.protobuf", reason="protobuf absent: transformWithState cannot execute"
-    )
-    from makerdao_dw_spark.streaming.transform_state import transform_with_state_type_stats
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, None)
-    transform_with_state_type_stats(spark, SF_DIR).collect()
-    assert spark.conf.get(key, None) == before
-
-
 def test_partitioned_overwrites_leave_session_mode_alone(spark, tmp_path):
-    """demux_and_write and merge_into_partitioned overwrite partitions
-    dynamically through a writer option; the session's mode is untouched
-    and untouched partitions survive."""
-    from pyspark.sql import functions as F
-
+    """demux_and_write overwrites partitions without touching the
+    session's partition-overwrite mode, and untouched partitions
+    survive."""
     from makerdao_dw_spark.abi.schema import compile_contract
     from makerdao_dw_spark.decode.abi_codec import encode_abi
     from makerdao_dw_spark.ingest.pipeline import RAW_LOG_SCHEMA, demux_and_write
-    from makerdao_dw_spark.io.merge import merge_into_partitioned
 
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
@@ -207,13 +192,6 @@ def test_partitioned_overwrites_leave_session_mode_alone(spark, tmp_path):
     blocks = {r[0] for r in spark.read.parquet(os.path.join(out, "s", spec.table))
               .select("block_number").collect()}
     assert blocks == {12, 25}
-
-    path = str(tmp_path / "tbl")
-    base = spark.range(0, 10).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
-    merge_into_partitioned(path, base, ["k"], "p")
-    merge_into_partitioned(path, spark.createDataFrame([(0, 0)], "k long, p long"), ["k"], "p")
-    assert spark.conf.get(key) == before
-    assert spark.read.parquet(path).count() == 10
 
 
 # ---------------------------------------------------------------------------

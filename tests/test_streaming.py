@@ -298,97 +298,6 @@ def test_stateful_accumulates_across_batches(spark, tmp_path):
     assert final[2]["n_events"] == 2 and final[2]["min_value"] == 0.5
 
 
-def test_transform_with_state_gated(spark):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor API): runs
-    for real where protobuf exists; in this container the gate must
-    refuse cleanly (the legacy-API twin above covers the semantics)."""
-    import pytest
-
-    from makerdao_dw_spark.streaming.transform_state import (
-        TypeStatsProcessor,
-        protobuf_available,
-        transform_with_state_type_stats,
-    )
-
-    # the processor itself is plain Python — state transition is testable
-    # without the streaming runtime
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeState()
-
-    import pandas as pd
-
-    p = TypeStatsProcessor()
-    p.init(FakeHandle())
-    out1 = list(p.handleInputRows(("buy",), iter([pd.DataFrame({"value": [2.0, 5.0]})]), None))
-    out2 = list(p.handleInputRows(("buy",), iter([pd.DataFrame({"value": [1.0]})]), None))
-    assert out1[0].iloc[0]["n"] == 2 and out1[0].iloc[0]["max_value"] == 5.0
-    # state carried across calls: count accumulates, min tightens
-    assert out2[0].iloc[0]["n"] == 3 and out2[0].iloc[0]["min_value"] == 1.0
-
-    if not protobuf_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            transform_with_state_type_stats(spark, "/root/testdata/sf0.001")
-        pytest.skip("protobuf absent: TWS cannot execute in this container")
-    df = transform_with_state_type_stats(spark, "/root/testdata/sf0.001")
-    assert df.count() > 0
-
-
-def test_streaming_datasource_offsets_and_resume(spark, tmp_path):
-    """The ethblocks_stream Python DataSource must (a) deliver every
-    block exactly once across rate-limited micro-batches, (b) match the
-    batch DataSource row-for-row, and (c) resume from checkpointed
-    offsets — a restart with the same checkpoint re-reads nothing
-    (A14's max-probe resume, engine-native)."""
-    import os
-
-    from makerdao_dw_spark.ingest.datasource import read_blocks_source, read_blocks_stream
-
-    head = 1499
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sink")
-
-    stream = read_blocks_stream(spark, from_block=0, to_block=head, blocks_per_trigger=600)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.read.parquet(out)
-    assert got.count() == head + 1
-    # rate limiting actually split the work: >1 micro-batch committed
-    commits = [f for f in os.listdir(os.path.join(ckpt, "commits")) if not f.startswith(".")]
-    assert len(commits) >= 2, commits
-    # parity with the batch DataSource
-    batch = read_blocks_source(spark, 0, head, step=100)
-    assert got.exceptAll(batch).count() == 0 and batch.exceptAll(got).count() == 0
-
-    # restart on the same checkpoint: offsets say head is reached -> no new rows
-    q2 = (
-        read_blocks_stream(spark, from_block=0, to_block=head, blocks_per_trigger=600)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(out).count() == head + 1
-
-
 def _serving_totals(df) -> dict:
     """Batch recompute of the serving table: user_id -> (n, exact sum)."""
     from pyspark.sql import functions as F
