@@ -165,13 +165,23 @@ def _engine_consume(df) -> None:
     ).agg(F.sum(F.col("h").cast("decimal(38,0)"))).collect()
 
 
+def compiled_classes(spark) -> int:
+    """Classes Janino has compiled in this JVM so far. Spark records one
+    compile-time sample per codegen-cache miss, so the difference of two
+    reads counts the classes compiled in between."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def time_query(
     spark, fn, sf_dir: str, reps: int = 3, engine: bool = False
-) -> tuple[float, list[float]]:
+) -> tuple[float, list[float], int, int]:
     """Time `fn(spark, sf_dir)` to completion: one first run (pays
     codegen/JIT/page-cache population — the state a cross-session
     comparison cannot control), then `reps` timed runs. Returns
-    (first_s, runs). Each run builds the plan and collects it, or with
+    (first_s, runs, compiles_first, compiles): the last two count the
+    classes compiled during the first run and during the timed runs
+    (compiled_classes). Each run builds the plan and collects it, or with
     `engine` consumes it JVM-side (_engine_consume).
 
     The suite's per-query estimator (round 11, VERDICT r10 item 1) is
@@ -179,7 +189,13 @@ def time_query(
     cold-inclusive and min-estimated: a single lucky sample set the
     number, so two clean sessions of identical code spread ~25%.
     Median-after-warmup is robust to one spike in either direction and
-    measures the same steady state in every session."""
+    measures the same steady state in every session.
+
+    Back-to-back reps of one query hide codegen-cache misses between
+    queries: one query needs a median of 11 classes, so its reps hit
+    Spark's cache even where an interleaved mix evicts and recompiles
+    them on every pass. The compile counts are the check for that, not
+    median_s (session.get_spark sizes the cache)."""
 
     def once() -> float:
         t0 = time.perf_counter()
@@ -190,12 +206,15 @@ def time_query(
             df.collect()
         return time.perf_counter() - t0
 
+    c0 = compiled_classes(spark)
     first = once()
-    return first, [once() for _ in range(reps)]
+    c1 = compiled_classes(spark)
+    runs = [once() for _ in range(reps)]
+    return first, runs, c1 - c0, compiled_classes(spark) - c1
 
 
 def _median_s(spark, name: str) -> float:
-    _first, runs = time_query(spark, REGISTRY[name].fn, SF_DIR)
+    _first, runs, *_compiles = time_query(spark, REGISTRY[name].fn, SF_DIR)
     return round(statistics.median(runs), 3)
 
 

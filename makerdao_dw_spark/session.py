@@ -56,7 +56,7 @@ def get_spark(app_name: str = "makerdao-dw-spark", cpus: int | None = None) -> S
     everything set here is cluster-neutral.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -73,6 +73,14 @@ def get_spark(app_name: str = "makerdao-dw-spark", cpus: int | None = None) -> S
         # 100 TB job accumulates unbounded checkpoint data in the dir.
         # Must be set at context build (ContextCleaner reads it once).
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Janino-compiled classes are cached JVM-wide in an LRU of 100 by
+        # default. The engine's interleaved mixes need more: one pass of
+        # the 15 headline queries ~330 classes, one refresh step ~100,
+        # and every registered query at sf0.001 3,385, so 4096 holds the
+        # whole registry. Below the working set an LRU misses on every
+        # access of a cyclic mix: each pass recompiled nearly all of it.
+        # Static: read once, when the JVM first generates code.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     return builder.getOrCreate()
 
@@ -120,6 +128,13 @@ def configure(spark: SparkSession) -> None:
     per top-level registered query (the registry wrapper enters it);
     the other entry points (ingest and streaming sources, the warehouse
     dashboard) run it themselves.
+
+    Not here: the codegen cache size. It is a static conf, and Spark reads
+    it JVM-wide once, so only get_spark sets it (4096 entries). A session
+    get_spark does not build keeps Spark's 100: the driver's session
+    handed to `__spark_entry__`, and tools/drive_entry.py's local[8]
+    session. There a mix larger than 100 classes (one headline pass
+    needs ~330) recompiles on every pass.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

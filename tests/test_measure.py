@@ -37,6 +37,7 @@ def test_two_dirs_collect_engine_and_streaming(spark, tmp_path):
         for row in rows.values():
             assert "error" not in row
             assert row["first_s"] > 0 and row["median_s"] > 0 and row["scratch_gb"] >= 0
+            assert row["compiles_first"] >= 0 and row["compiles"] >= 0
             assert len(row["runs"]) == 1
         assert rows["streaming_dedup"]["state_rows"] > 0
         assert "state_rows" not in rows["q1_pricing_summary"]

@@ -121,7 +121,9 @@ def main() -> None:
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default="/tmp/spark_graft_sf1")
     ap.add_argument("--factor", type=int, default=10)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    )
     args = ap.parse_args()
 
     spark = (

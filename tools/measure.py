@@ -12,8 +12,16 @@ query whose output grows with the corpus times its plan, not the driver.
 One protocol, bench.time_query's: per dir and query, one first run
 (`first_s`: codegen, JIT, cold reads), then `reps` timed runs (`runs`,
 `median_s`); then session.gc_hint and `scratch_gb` (Spark scratch after
-the query). A streaming query also reports `state_rows`, the state-store
-rows its drains held at their last data batch. A query that raises is
+the query). `compiles_first` and `compiles` count the classes Janino
+compiled in the first run and in the timed reps (bench.compiled_classes).
+The reps run back to back, so `median_s` hides codegen-cache misses
+between queries: one query needs a median of 11 classes and hits the
+cache on every rep. The counts are the check, not `median_s`: `compiles`
+above 0 means the query alone overflows the cache, and `compiles_first`
+summed over a sweep is the cache an interleaved mix of those queries
+needs (session.get_spark sizes it). A streaming query also reports
+`state_rows`, the state-store rows its drains held at their last data
+batch. A query that raises is
 recorded as `error` and the sweep goes on. The artifact is rewritten after
 every query, so a killed JVM keeps the rows already measured. With two or
 more dirs it holds `ratio`: the last dir's median_s over the first's.
@@ -88,11 +96,15 @@ def measure(spark, dirs: list[tuple[str, str]], queries: dict[str, bool], reps: 
         for name, engine in queries.items():
             jobs.LAST_STATE_ROWS = None
             try:
-                first, runs = bench.time_query(spark, qd[name], path, reps, engine)
+                first, runs, compiles_first, compiles = bench.time_query(
+                    spark, qd[name], path, reps, engine
+                )
                 row = {
                     "first_s": round(first, 3),
                     "median_s": round(statistics.median(runs), 3),
                     "runs": [round(r, 3) for r in runs],
+                    "compiles_first": compiles_first,
+                    "compiles": compiles,
                 }
                 if jobs.LAST_STATE_ROWS is not None:
                     row["state_rows"] = jobs.LAST_STATE_ROWS
