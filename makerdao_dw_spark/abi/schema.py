@@ -18,17 +18,15 @@ column naming + type mapping) with a Spark-native type system
   exceeds decimal(38) — see SURVEY §1.3 precision policy),
   uint8/16->int, bool->boolean, string->string, arrays->arrays
 
-Divergences from the reference (deliberate, documented):
-- the overload-suffix registry is scoped per contract; the reference
-  shares one process-global dict across contracts
-  (/root/reference/functions.py:82-84), which would leak suffixes if one
-  process compiled two contracts. `SchemaCompiler(shared_registry=True)`
-  reproduces the legacy behavior for parity testing.
+Divergence from the reference (deliberate): the overload-suffix
+registry is scoped per contract; the reference shares one process-global
+dict across contracts (its functions.py:82-84), which leaks
+suffixes when one process compiles two contracts.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql.types import (
     ArrayType,
@@ -127,57 +125,42 @@ def _is_evt(entry: dict) -> bool:
     return entry.get("type") == "event" and entry.get("anonymous") is not True
 
 
-class SchemaCompiler:
-    """Compile contract ABIs into TableSpecs with a dispatch index."""
-
-    def __init__(self, shared_registry: bool = False):
-        self._shared = shared_registry
-        self._fn_seen: dict[str, int] = {}
-        self._evt_seen: dict[str, int] = {}
-
-    def compile_contract(self, contract_name: str, abi: list[dict]) -> list[TableSpec]:
-        if not self._shared:
-            fn_seen: dict[str, int] = {}
-            evt_seen: dict[str, int] = {}
-        else:
-            fn_seen, evt_seen = self._fn_seen, self._evt_seen
-
-        specs: list[TableSpec] = []
-        for entry in abi:
-            if _is_call(entry):
-                seen, kind = fn_seen, "call"
-                sig = "0x" + selector(abi_signature(entry)) + _SELECTOR_PAD
-            elif _is_evt(entry):
-                seen, kind = evt_seen, "evt"
-                sig = "0x" + event_topic(abi_signature(entry))
-            else:
-                continue
-
-            base = entry["name"].lower()
-            if base in seen:
-                table = f"{contract_name}_{kind}_{base}{seen[base]}"
-                seen[base] += 1
-            else:
-                table = f"{contract_name}_{kind}_{base}"
-                seen[base] = 0
-
-            types = [i["type"] for i in entry["inputs"]]
-            for t in types:
-                if t not in SPARK_TYPE_MAPPING:
-                    raise UnsupportedAbiType(f"{table}: unsupported ABI input type {t!r}")
-            specs.append(
-                TableSpec(
-                    table=table,
-                    kind=kind,
-                    signature=sig,
-                    abi_entry=entry,
-                    param_names=_column_names(entry),
-                    param_types=types,
-                    indexed=[bool(i.get("indexed")) for i in entry["inputs"]],
-                )
-            )
-        return specs
-
-
 def compile_contract(contract_name: str, abi: list[dict]) -> list[TableSpec]:
-    return SchemaCompiler().compile_contract(contract_name, abi)
+    """Compile one contract's ABI into TableSpecs, in ABI order."""
+    fn_seen: dict[str, int] = {}
+    evt_seen: dict[str, int] = {}
+    specs: list[TableSpec] = []
+    for entry in abi:
+        if _is_call(entry):
+            seen, kind = fn_seen, "call"
+            sig = "0x" + selector(abi_signature(entry)) + _SELECTOR_PAD
+        elif _is_evt(entry):
+            seen, kind = evt_seen, "evt"
+            sig = "0x" + event_topic(abi_signature(entry))
+        else:
+            continue
+
+        base = entry["name"].lower()
+        if base in seen:
+            table = f"{contract_name}_{kind}_{base}{seen[base]}"
+            seen[base] += 1
+        else:
+            table = f"{contract_name}_{kind}_{base}"
+            seen[base] = 0
+
+        types = [i["type"] for i in entry["inputs"]]
+        for t in types:
+            if t not in SPARK_TYPE_MAPPING:
+                raise UnsupportedAbiType(f"{table}: unsupported ABI input type {t!r}")
+        specs.append(
+            TableSpec(
+                table=table,
+                kind=kind,
+                signature=sig,
+                abi_entry=entry,
+                param_names=_column_names(entry),
+                param_types=types,
+                indexed=[bool(i.get("indexed")) for i in entry["inputs"]],
+            )
+        )
+    return specs

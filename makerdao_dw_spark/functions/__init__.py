@@ -1,95 +1,22 @@
-"""Domain function library, SQL-registered.
+"""The cross-engine md5 hash anchor.
 
-The reference's analytics hand-writes the Maker unit rescalings and
-decodes inline every time (/root/reference/queries/makerdao/
-assets_per_type.sql:31,43,44,51): `/10^18` (wad), `/10^27` (ray),
-`/10^45` (rad), the per-second-ray → APY compounding, and the bytes32
-ilk → text cleanup. Here they are engine functions, registered once per
-session as Spark 4 SQL scalar UDFs (pure expressions — inlined by
-Catalyst, codegen'd, NOT Python) plus Column-API twins for DataFrame
-code.
+A query that needs a deterministic per-row draw (a split, an A/B arm, a
+sample, a hash bucket) reads it from the first 8 hex digits of an md5
+digest as an integer in [0, 2^32). md5 is bit-identical in Spark and
+DuckDB, so a query and its DuckDB oracle draw the same rows, and the
+draw is a pure function of the data: stable under repartitioning and
+task retries. The engines spell the hex-to-integer step differently;
+these two functions are the only place either spelling is written.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
 
-SECONDS_PER_YEAR = 3600 * 24 * 365
-
-_SQL_FUNCTIONS = {
-    # div/mod decomposition, NOT plain decimal division: Spark's
-    # precision-loss rule shrinks a 38-digit quotient's scale to 6 (wad)
-    # or 9 (ray), silently zeroing small values (wad(1) came out 0E-18,
-    # a 5%/yr duty ray collapsed to 1.000000002). Splitting into integer
-    # part + exact sub-divisions keeps every digit; the final CAST's
-    # HALF_UP rounds ray's 27-digit fraction to the declared 18.
-    # Domain: |x| < 10^30 for wad (10^12 whole tokens), full 38 digits
-    # for ray.
-    "wad": (
-        "CREATE OR REPLACE TEMPORARY FUNCTION wad(x DECIMAL(38,0)) "
-        "RETURNS DECIMAL(38,18) RETURN CAST(CAST(x DIV 1000000000000000000 AS DECIMAL(12,0)) + CAST(x % 1000000000000000000 AS DECIMAL(18,0)) / CAST(1000000000000000000 AS DECIMAL(19,0)) AS DECIMAL(38,18))"
-    ),
-    "ray": (
-        "CREATE OR REPLACE TEMPORARY FUNCTION ray(x DECIMAL(38,0)) "
-        "RETURNS DECIMAL(38,18) RETURN CAST(CAST(x DIV 1000000000000000000000000000 AS DECIMAL(11,0)) + CAST((x % 1000000000000000000000000000) DIV 1000000000 AS DECIMAL(18,0)) / CAST(1000000000000000000 AS DECIMAL(19,0)) + CAST(x % 1000000000 AS DECIMAL(9,0)) / CAST(1000000000000000000000000000 AS DECIMAL(28,0)) AS DECIMAL(38,18))"
-    ),
-    "rad": (
-        "CREATE OR REPLACE TEMPORARY FUNCTION rad(x DECIMAL(38,0)) "
-        "RETURNS DOUBLE RETURN CAST(x AS DOUBLE) / 1e45"
-    ),
-    "ray_apy": (
-        # per-second compounding rate (ray) -> annual percentage yield;
-        # double domain, exactly the reference's pow(.,3600*24*365)-1
-        "CREATE OR REPLACE TEMPORARY FUNCTION ray_apy(duty DECIMAL(38,0)) "
-        f"RETURNS DOUBLE RETURN pow(CAST(duty AS DOUBLE) / 1e27, {SECONDS_PER_YEAR}) - 1"
-    ),
-    "ilk_name": (
-        # bytes32 collateral tag -> readable name (strip NUL padding)
-        "CREATE OR REPLACE TEMPORARY FUNCTION ilk_name(b BINARY) "
-        "RETURNS STRING RETURN replace(decode(b, 'UTF-8'), chr(0), '')"
-    ),
-}
+def md5_int_spark(x: str) -> str:
+    """Spark SQL text: the first 8 hex digits of md5(`x`) as a bigint."""
+    return f"cast(conv(substring(md5({x}), 1, 8), 16, 10) as bigint)"
 
 
-def register_domain_functions(spark: SparkSession) -> None:
-    """Idempotently register the domain functions in the session."""
-    for ddl in _SQL_FUNCTIONS.values():
-        spark.sql(ddl)
-
-
-# Column-API twins (same div/mod arithmetic, for DataFrame pipelines;
-# pinned equal to the SQL functions by test_functions.py)
-_D18 = "CAST(1000000000000000000 AS DECIMAL(19,0))"
-_D27 = "CAST(1000000000000000000000000000 AS DECIMAL(28,0))"
-_D9 = "CAST(1000000000 AS DECIMAL(10,0))"
-
-
-def wad(c: Column) -> Column:
-    x = c.cast("decimal(38,0)")
-    d18 = F.expr(_D18)
-    intp = ((x - x % d18) / d18).cast("decimal(12,0)")
-    frac = (x % d18).cast("decimal(18,0)") / d18
-    return (intp + frac).cast("decimal(38,18)")
-
-
-def ray(c: Column) -> Column:
-    x = c.cast("decimal(38,0)")
-    d27, d18, d9 = F.expr(_D27), F.expr(_D18), F.expr(_D9)
-    intp = ((x - x % d27) / d27).cast("decimal(11,0)")
-    frac27 = x % d27
-    hi = ((frac27 - frac27 % d9) / d9).cast("decimal(18,0)") / d18
-    lo = (frac27 % d9).cast("decimal(9,0)") / d27
-    return (intp + hi + lo).cast("decimal(38,18)")
-
-
-def rad(c: Column) -> Column:
-    return c.cast("double") / F.lit(1e45)
-
-
-def ray_apy(c: Column) -> Column:
-    return F.pow(c.cast("double") / F.lit(1e27), F.lit(SECONDS_PER_YEAR)) - 1
-
-
-def ilk_name(c: Column) -> Column:
-    return F.replace(F.decode(c, "UTF-8"), F.lit("\x00"), F.lit(""))
+def md5_int_duck(x: str) -> str:
+    """DuckDB SQL text of `md5_int_spark`."""
+    return f"CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"

@@ -1,7 +1,7 @@
 """Table maintenance: small-file compaction + layout stats.
 
-Streaming ingest (one file per micro-batch per partition) and frequent
-MERGEs accrete small files; at 100 TB the file-count tax is real (driver
+Streaming ingest (one file per micro-batch per partition) accretes
+small files; at 100 TB the file-count tax is real (driver
 memory for file listings, per-file open cost, tiny row groups defeating
 column pruning). Compaction rewrites each partition to target-sized
 files — an offline, per-partition-atomic operation (dynamic partition
@@ -40,16 +40,15 @@ def table_layout_stats(spark: SparkSession, path: str) -> dict:
 def recover_swap(path: str) -> str | None:
     """Complete crash recovery for an interrupted `swap` (the recovery
     contract documented in SCALE.md and pinned by
-    tests/test_crash_consistency.py). `compact_table` and the streaming
-    serving upsert (streaming/jobs.stream_serving_aggregates) call it
-    before they read the table.
+    tests/test_crash_consistency.py). `compact_table` calls it before
+    it reads the table.
 
     The swap's only unsafe window is between its two renames: `path` has
     been moved aside to the uniquely-named `<path>_old-<uuid>` backup but
     the staged dir has not yet been renamed in. Recovery restores the
     backup — the known-good committed snapshot — and discards staged
-    work (both writers are idempotent; re-running one reproduces the
-    staged result). If `path` exists the swap either completed or never
+    work (compaction is idempotent; re-running it reproduces the staged
+    result). If `path` exists the swap either completed or never
     started, and any backups/staged dirs are crash leftovers to sweep.
 
     Returns "restored" if a backup was renamed back into place, None if

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
+
 # Deliberately tiny english stopword list — deterministic, oracle-friendly.
 STOPWORDS = ("the", "a", "an", "of", "and", "or", "to", "in", "is", "it")
 
@@ -96,9 +98,7 @@ def minhash_fold_expr(shingles_sql: str, num_hashes: int = 16) -> str:
     shingle accumulator is the modulus itself (sorts after any hash).
     """
     a, b = _affine_constants(num_hashes)
-    x_expr = (
-        f"cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint) % {_MERSENNE31}"
-    )
+    x_expr = f"{md5_int_spark('s')} % {_MERSENNE31}"
     # one array_min pass per hash over the materialized base-hash array:
     # unlike an aggregate+zip_with fold (which allocates a 16-wide array
     # per SHINGLE), this allocates num_hashes+1 arrays per DOC
@@ -119,7 +119,7 @@ def minhash_signature(shingle_col: str, num_hashes: int = 16) -> Column:
 
 def minhash_signature_sql_duckdb(shingle_expr: str, num_hashes: int = 16) -> str:
     a, b = _affine_constants(num_hashes)
-    x = f"(CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT) % {_MERSENNE31})"
+    x = f"({md5_int_duck('s')} % {_MERSENNE31})"
     sigs = ", ".join(
         f"COALESCE(list_min(list_transform({shingle_expr}, "
         f"s -> ({a[i]} * {x} + {b[i]}) % {_MERSENNE31})), {_MERSENNE31})"

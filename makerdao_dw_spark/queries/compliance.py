@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..session import load_table, materialize
 from .registry import query
 
@@ -111,15 +112,15 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DP_EPS = 1.0
 _DP_DENOM = 1 << 20
 # uniform in [2^-20, 1 - 2^-20] — STRICTLY inside (0, 1) so the inverse
-# CDF below can never hit ln(0). The md5 arithmetic anchor is the repo
-# standard (training3.py); the 'dp:' prefix namespaces the draw.
+# CDF below can never hit ln(0). The draw is the md5 anchor (functions/);
+# the 'dp:' prefix namespaces it.
 _U_SPARK = (
-    f"(cast(conv(substr(md5(concat('dp:', source)), 1, 8), 16, 10) as bigint)"
-    f" % {_DP_DENOM - 1} + 1) / cast({_DP_DENOM} as double)"
+    "(" + md5_int_spark("concat('dp:', source)")
+    + f" % {_DP_DENOM - 1} + 1) / cast({_DP_DENOM} as double)"
 )
 _U_DUCK = (
-    f"(CAST('0x' || substr(md5('dp:' || source), 1, 8) AS BIGINT)"
-    f" % {_DP_DENOM - 1} + 1) / CAST({_DP_DENOM} AS DOUBLE)"
+    "(" + md5_int_duck("'dp:' || source")
+    + f" % {_DP_DENOM - 1} + 1) / CAST({_DP_DENOM} AS DOUBLE)"
 )
 
 

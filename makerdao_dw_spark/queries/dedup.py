@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_spark
 from ..operators.text_features import (
     band_hashes,
     band_hashes_sql_duckdb,
@@ -621,9 +622,7 @@ WITH hs AS (
     FROM hs
 )"""
 
-_SIMHASH_HS_SPARK = (
-    "transform(split(text, ' '), t -> cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint))"
-)
+_SIMHASH_HS_SPARK = f"transform(split(text, ' '), t -> {md5_int_spark('t')})"
 # let-bind hs: the token md5s are computed once, then folded over the 32
 # bit positions (bit 0 = most significant, matching the python reference)
 _SIMHASH_SPARK = let_bound(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..session import load_table, materialize
 from .basket_common import basket_ctes_duck, basket_pair_join, frequent_baskets
 from .registry import query
@@ -176,11 +177,8 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Two-proportion z-test over a deterministic 50/50 split
 # ---------------------------------------------------------------------------
 _Z_CRIT = 1.959964  # two-sided 95%
-_ARM_SPARK = (
-    "cast(conv(substr(md5(concat('ab:', cast(user_id as string))), 1, 8),"
-    " 16, 10) as bigint) % 2"
-)
-_ARM_DUCK = "CAST('0x' || substr(md5('ab:' || user_id), 1, 8) AS BIGINT) % 2"
+_ARM_SPARK = md5_int_spark("concat('ab:', cast(user_id as string))") + " % 2"
+_ARM_DUCK = md5_int_duck("'ab:' || user_id") + " % 2"
 
 
 @query(

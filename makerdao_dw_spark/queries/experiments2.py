@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..operators.order_stats import global_ntile, use_parallel
 from ..session import load_table
 from .experiments import _ARM_DUCK, _ARM_SPARK
@@ -76,22 +77,15 @@ def _pois_case(u: str) -> str:
 
 # md5-anchored uniform in [2^-20, 1), namespaced per (replicate, order)
 _BLB_U_SPARK = (
-    "((cast(conv(substr(md5(concat('blb:', cast(b as string), ':',"
-    f" cast(o_orderkey as string))), 1, 8), 16, 10) as bigint)"
-    f" % {_U_DENOM - 1} + 1) / cast({_U_DENOM} as double))"
+    "((" + md5_int_spark("concat('blb:', cast(b as string), ':', cast(o_orderkey as string))")
+    + f" % {_U_DENOM - 1} + 1) / cast({_U_DENOM} as double))"
 )
 _BLB_U_DUCK = (
-    "((CAST('0x' || substr(md5('blb:' || b || ':' || o_orderkey), 1, 8)"
-    f" AS BIGINT) % {_U_DENOM - 1} + 1) / CAST({_U_DENOM} AS DOUBLE))"
+    "((" + md5_int_duck("'blb:' || b || ':' || o_orderkey")
+    + f" % {_U_DENOM - 1} + 1) / CAST({_U_DENOM} AS DOUBLE))"
 )
-_SUB_SPARK = (
-    "cast(conv(substr(md5(concat('blb_s:', cast(o_orderkey as string))),"
-    f" 1, 8), 16, 10) as bigint) % {_BLB_S}"
-)
-_SUB_DUCK = (
-    f"CAST('0x' || substr(md5('blb_s:' || o_orderkey), 1, 8) AS BIGINT)"
-    f" % {_BLB_S}"
-)
+_SUB_SPARK = md5_int_spark("concat('blb_s:', cast(o_orderkey as string))") + f" % {_BLB_S}"
+_SUB_DUCK = md5_int_duck("'blb_s:' || o_orderkey") + f" % {_BLB_S}"
 
 
 @query(

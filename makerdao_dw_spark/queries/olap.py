@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..operators.order_stats import use_parallel
 from ..operators.skew import salted_join
 from ..session import load_table
@@ -239,7 +240,7 @@ def array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the exact companions plus error-bound booleans (abs(approx-exact) within
 # tolerance) — fully oracle-checkable: DuckDB computes the exact values
 # and literal TRUEs, so a sketch regression beyond tolerance flips a cell
-# and fails the hash. The raw sketch outputs stay unit-tested below.
+# and fails the hash.
 # --------------------------------------------------------------------------
 @query(
     "approx_aggregates",
@@ -289,25 +290,6 @@ def approx_aggregates_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("p50_within_10pct"),
     ).orderBy("event_type")
-
-
-def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++) and approx_percentile
-    (quantile sketch) vs their exact values, per event_type. At 100 TB
-    these are THE mergeable one-pass answers; exact companions exist
-    here to bound error (asserted <5% rsd / exact-rank neighborhood in
-    tests/test_extensions.py)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-            F.countDistinct("user_id").alias("exact_users"),
-            F.expr("approx_percentile(value, 0.5, 1000)").alias("approx_p50"),
-            F.expr("percentile(value, 0.5)").alias("exact_p50"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -636,23 +618,6 @@ def null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded stratified sample: 20% of clicks/views, 100% of purchases
-    (the usual class-rebalancing step for training data). Deterministic
-    for a fixed seed+partitioning, but engine-specific — so NOT in the
-    driver registry (the fully-oracled hash-based twin
-    `sample_stratified_exact` is); per-stratum fraction bounds asserted
-    in test_extensions."""
-    e = load_table(spark, sf_dir, "events")
-    fr = {"click": 0.2, "view": 0.2, "purchase": 1.0, "signup": 1.0, "error": 1.0}
-    return (
-        e.sampleBy("event_type", fractions=fr, seed=42)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("event_type")
-    )
-
-
 # --------------------------------------------------------------------------
 # Bitwise aggregates and scalar bit manipulation
 # --------------------------------------------------------------------------
@@ -791,11 +756,10 @@ def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_stratified_exact",
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT event_type, event_id,
-         (CAST(('0x' || substr(md5('strat:' || CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
-          % 1000000) / 1000000.0 AS unif
+         ({md5_int_duck("'strat:' || CAST(event_id AS VARCHAR)")} % 1000000) / 1000000.0 AS unif
   FROM events
 )
 SELECT event_type,
@@ -810,9 +774,10 @@ ORDER BY event_type
     tags=("sampling", "stratified", "deterministic"),
 )
 def sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The portable twin of `sample_stratified`: the same 20%-of-
-    clicks/views class rebalancing, but the per-row uniform is an
-    arithmetic md5 hash of the row key instead of Spark's sampler RNG —
+    """Stratified sample: 20% of clicks/views, 100% of the rest (the
+    usual class-rebalancing step for training data). The per-row
+    uniform is an arithmetic md5 hash of the row key, not a sampler RNG
+    such as `DataFrame.sampleBy` —
     so the EXACT sample membership is reproducible in any engine (full
     DuckDB oracle) and stable under repartitioning, task retries, and
     Spark version changes. That reproducibility is what a training-data
@@ -822,12 +787,8 @@ def sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip a membership decision. Scale: one scan, no shuffle before the
     tiny rollup; the filter is codegen'd string+hash math."""
     e = load_table(spark, sf_dir, "events")
-    unif = (
-        F.expr(
-            "cast(conv(substring(md5(concat('strat:', cast(event_id as string))), 1, 8), 16, 10) as bigint)"
-        )
-        % 1000000
-    ) / 1000000.0
+    draw = F.expr(md5_int_spark("concat('strat:', cast(event_id as string))"))
+    unif = (draw % 1000000) / 1000000.0
     frac = (
         F.when(F.col("event_type").isin("click", "view"), 0.2).otherwise(1.0)
     )

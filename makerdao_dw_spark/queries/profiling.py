@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..operators.order_stats import global_row_number, use_parallel
 from ..session import load_table, materialize
 from .registry import query
@@ -250,13 +251,8 @@ def mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Split-conformal prediction interval with measured coverage
 # ---------------------------------------------------------------------------
 _CONF_ALPHA = 0.1  # target 90% coverage
-_SPLIT_SPARK = (
-    "(cast(conv(substr(md5(concat('conf:', cast(o_orderkey as string))),"
-    f" 1, 8), 16, 10) as bigint) % 4)"
-)
-_SPLIT_DUCK = (
-    f"(CAST('0x' || substr(md5('conf:' || o_orderkey), 1, 8) AS BIGINT) % 4)"
-)
+_SPLIT_SPARK = "(" + md5_int_spark("concat('conf:', cast(o_orderkey as string))") + " % 4)"
+_SPLIT_DUCK = "(" + md5_int_duck("'conf:' || o_orderkey") + " % 4)"
 # split: 0,1 = train (50%), 2 = calibration, 3 = test
 
 

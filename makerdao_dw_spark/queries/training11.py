@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..operators.order_stats import global_ntile, use_parallel
 from ..session import load_table, materialize
 from .registry import query
@@ -124,15 +125,11 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hashing-trick vectorizer: per-bucket collision profile
 # --------------------------------------------------------------------------
 _FH_WIDTH = 32
-# repo-standard md5 arithmetic anchor (training3.py) for the bucket,
+# the md5 anchor (functions/) for the bucket,
 # the 9th hex nibble (outside the 8 chars the bucket consumed) for the
 # sign — '0'..'7' -> +1, '8'..'f' -> -1 (ASCII compare on both engines)
-_FH_BUCKET_SPARK = (
-    f"cast(conv(substr(md5(word), 1, 8), 16, 10) as bigint) % {_FH_WIDTH}"
-)
-_FH_BUCKET_DUCK = (
-    f"CAST('0x' || substr(md5(word), 1, 8) AS BIGINT) % {_FH_WIDTH}"
-)
+_FH_BUCKET_SPARK = f"{md5_int_spark('word')} % {_FH_WIDTH}"
+_FH_BUCKET_DUCK = f"{md5_int_duck('word')} % {_FH_WIDTH}"
 _FH_SIGN = "CASE WHEN substr(md5(word), 9, 1) < '8' THEN 1 ELSE -1 END"
 
 

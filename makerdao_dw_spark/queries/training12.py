@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..session import load_table, materialize
 from .registry import query
 from .text_common import bigram_zip_expr, tokens_arr, tokens_arr_duck, ws_words_arr, ws_words_duck
@@ -124,14 +125,8 @@ _SG_NEG_K = 2
 # modulus = the ACTUAL vocabulary size (column `nv`), not the _SG_VOCAB
 # cap: a corpus whose vocabulary is smaller than the cap would otherwise
 # draw ranks that match nothing and silently shrink the negative set
-_NEG_DRAW_DUCK = (
-    "1 + CAST('0x' || substr(md5('neg:' || center || ':' || k), 1, 8) AS BIGINT)"
-    " % nv"
-)
-_NEG_DRAW_SPARK = (
-    "1 + cast(conv(substr(md5(concat('neg:', center, ':', cast(k as string))),"
-    " 1, 8), 16, 10) as bigint) % nv"
-)
+_NEG_DRAW_DUCK = "1 + " + md5_int_duck("'neg:' || center || ':' || k") + " % nv"
+_NEG_DRAW_SPARK = "1 + " + md5_int_spark("concat('neg:', center, ':', cast(k as string))") + " % nv"
 
 
 @query(

@@ -16,7 +16,7 @@ pipeline runs before data ships:
   side is always tiny (eval sets are KBs against a 100 TB corpus), so
   the join MUST broadcast; the only shuffle is the per-doc rollup.
 - **Snapshot diff** — full-outer key compare between two table
-  versions (the warehouse-maintenance twin of `io/merge.py`): at scale
+  versions (the warehouse-maintenance twin of a MERGE): at scale
   this is one co-partitioned sort-merge join, narrow classification.
 
 The synthetic `documents.text` is PII-free word salad, so the PII query
@@ -366,7 +366,7 @@ def table_diff_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify added/removed/changed/unchanged, roll up counts and exact
     decimal sums per class.
 
-    The audit twin of `io/merge.py`'s upsert: MERGE applies a delta,
+    The audit twin of an upsert: MERGE applies a delta,
     this measures one. Scale shape: a full outer join cannot broadcast,
     so the plan is a single co-partitioned shuffle join on the key
     (bucketed-by-key snapshots, as `session.stage_bucketed` writes,

@@ -10,9 +10,8 @@ filtering — split hygiene, mixture weights, rarity-aware scoring.
 
 Determinism contract: every stochastic-looking choice (split bucket,
 per-source keep set) is a pure function of the data via the md5
-arithmetic-hash anchor (`conv(substr(md5(x),1,8),16,10)` == DuckDB
-`CAST('0x'||substr(md5(x),1,8) AS BIGINT)`), so both engines pick the
-same rows; ratios are one double division + ROUND(…, 6) at the end.
+anchor (`functions.md5_int_spark`/`md5_int_duck`), so both engines pick
+the same rows; ratios are one double division + ROUND(…, 6) at the end.
 """
 
 from __future__ import annotations
@@ -20,15 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..session import load_table
 from .registry import query
 from .text_common import NORM_HASH_DUCK, norm_hash
 
-# Cross-engine uniform in [0, 100): the repo-standard md5 arithmetic hash
-# (explicit bigint cast — conv() returns STRING, and the other users of
-# this anchor, e.g. operators/text_features.py, all cast before the mod).
-_BUCKET_SPARK = "cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 100"
-_BUCKET_DUCK = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100"
+# Cross-engine uniform in [0, 100): the md5 anchor (functions/).
+_BUCKET_SPARK = md5_int_spark("cast(doc_id as string)") + " % 100"
+_BUCKET_DUCK = md5_int_duck("CAST(doc_id AS VARCHAR)") + " % 100"
 
 
 # --------------------------------------------------------------------------
@@ -288,7 +286,7 @@ def curation_gate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "contrastive_negative_pairs",
-    oracle="""
+    oracle=f"""
 WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
 anchors AS (
     SELECT doc_id, source FROM documents WHERE doc_id % 20 = 0
@@ -296,7 +294,7 @@ anchors AS (
     SELECT a.doc_id,
            a.source,
            j AS neg_rank,
-           CAST(('0x' || substr(md5('neg:' || CAST(a.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT)
+           {md5_int_duck("'neg:' || CAST(a.doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)")}
              % n.n_docs AS neg_doc_id
     FROM anchors a CROSS JOIN n, UNNEST(generate_series(1, 3)) AS t(j)
 )
@@ -337,8 +335,7 @@ def contrastive_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "neg_doc_id",
             F.expr(
-                "cast(conv(substring(md5(concat('neg:', cast(doc_id as string), ':', "
-                "cast(neg_rank as string))), 1, 8), 16, 10) as bigint)"
+                md5_int_spark("concat('neg:', cast(doc_id as string), ':', cast(neg_rank as string))")
             )
             % F.col("n_docs"),
         )
@@ -435,7 +432,7 @@ WITH normed AS (
            CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split
     FROM (
         SELECT *,
-               CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS h
+               {md5_int_duck("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS h
         FROM gated
     )
 )
@@ -471,12 +468,7 @@ def corpus_end_to_end_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = kept.filter(
         (F.size(F.split("text", " ")) >= 20) & (F.col("n_chars") >= 100)
     )
-    h = (
-        F.expr(
-            "cast(conv(substring(md5(concat('split:', cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
-        )
-        % 100
-    )
+    h = F.expr(md5_int_spark("concat('split:', cast(doc_id as string))")) % 100
     split = gated.withColumn(
         "split",
         F.when(h < 80, "train").when(h < 90, "val").otherwise("test"),
@@ -497,10 +489,10 @@ def corpus_end_to_end_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "split_group_aware",
-    oracle="""
+    oracle=f"""
 WITH g AS (
     SELECT doc_id, source, n_chars,
-           CAST(('0x' || substr(md5('gsplit:' || source), 1, 8)) AS BIGINT) % 100 AS h
+           {md5_int_duck("'gsplit:' || source")} % 100 AS h
     FROM documents
 )
 SELECT CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split,
@@ -523,12 +515,7 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant: same mechanism, different key, complementary guarantees
     (per-doc = exact proportions, per-group = no cross-split leakage)."""
     d = load_table(spark, sf_dir, "documents", spread=True)
-    h = (
-        F.expr(
-            "cast(conv(substring(md5(concat('gsplit:', source)), 1, 8), 16, 10) as bigint)"
-        )
-        % 100
-    )
+    h = F.expr(md5_int_spark("concat('gsplit:', source)")) % 100
     return (
         d.withColumn(
             "split",

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_duck, md5_int_spark
 from ..session import load_table, materialize
 from .registry import query
 from .similarity import (
@@ -160,8 +161,7 @@ WITH toks AS (
     SELECT token, n, UNNEST(generate_series(0, {_CMS_D - 1})) AS j FROM vocab
 ), cells_in AS (
     SELECT token, n, j,
-           CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || token), 1, 8) AS BIGINT)
-               % {_CMS_W} AS bucket
+           {md5_int_duck("CAST(j AS VARCHAR) || ':' || token")} % {_CMS_W} AS bucket
     FROM hashed
 ), cells AS (
     SELECT j, bucket, CAST(SUM(n) AS BIGINT) AS cell_n FROM cells_in GROUP BY j, bucket
@@ -218,18 +218,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token", "n", F.explode(F.sequence(F.lit(0), F.lit(_CMS_D - 1))).alias("j")
     ).withColumn(
         "bucket",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("j").cast("string"), F.lit(":"), F.col("token"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(_CMS_W),
-        ),
+        F.pmod(F.expr(md5_int_spark("concat(cast(j as string), ':', token)")), F.lit(_CMS_W)),
     )
     cells = hashed.groupBy("j", "bucket").agg(F.sum("n").alias("cell_n"))
     # r12: top-K via TakeOrdered (orderBy+limit) instead of ranking the

@@ -709,15 +709,13 @@ def cdc_net_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     I/U/D) collapses to the CURRENT state per key — last operation
     wins, keys whose final op is a delete vanish. This is the apply
     step a Debezium/Kafka CDC stream needs before a warehouse MERGE
-    (io/merge.py does the file-level half; this is the record-level
-    half).
+    (the record-level half; a table format's MERGE INTO is the
+    file-level half).
 
     Deterministic last-wins: ties on ts break by event_id (the feed's
     monotone sequence number). One window over the user key — at 100 TB
     the feed shuffles once on the uniform key; in production the
-    row_number trick runs per micro-batch and the result MERGEs into
-    the serving table (streaming/jobs.py::stream_serving_aggregates
-    shows the streaming wiring)."""
+    row_number trick runs per micro-batch before the MERGE."""
     e = load_table(spark, sf_dir, "events")
     changes = e.filter(
         F.col("event_type").isin("signup", "purchase", "error")

@@ -13,7 +13,7 @@ import atexit
 import os
 import stat
 import threading
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +39,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # TIMESTAMP(NANOS) (Spark's vectorized reader rejects it -> read as
 # epoch-nanos longs via legacy conf and convert) and
 # TIMESTAMP(MICROS, isAdjustedToUTC=false) (Spark reads TIMESTAMP_NTZ).
-# load_table normalizes BOTH to plain TIMESTAMP (session TZ pinned UTC,
+# read_timestamps_normalized turns BOTH into plain TIMESTAMP (session TZ pinned UTC,
 # so NTZ wall-clock values are preserved bit-for-bit) so downstream
 # casts/watermarks/unix_micros never see an NTZ or long-typed column.
 _NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {
@@ -139,6 +139,12 @@ def configure(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # Generated classes are named after their whole-stage codegen stage by
+    # default, and AQE numbers stages in the order it creates them, which
+    # varies when a plan has independent stages: the same code under a new
+    # name misses the codegen cache and compiles again. One name for all
+    # makes the cache key the code alone.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     # Streaming plans can't use AQE partition coalescing, so the static
     # shuffle-partition count must be sane: match the session's
     # parallelism instead of the 200 default (which costs ~170 empty
@@ -338,6 +344,31 @@ def input_bytes(sf_dir: str, table: str) -> int | None:
     return None if sig is None else _sig_bytes(sig)
 
 
+def read_timestamps_normalized(
+    spark: SparkSession, name: str, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """Run `read`, a batch or streaming parquet read of testdata table
+    `name`, with every timestamp column surfacing as plain TIMESTAMP
+    (see _NANO_TS_COLUMNS). The confs are set on the session before the
+    read, so a relation read here keeps reading under them."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Micros-NTZ parquet must surface as plain TIMESTAMP at the SCAN (not
+    # via a post-read cast, which would block predicate pushdown on the
+    # column). With inference off, isAdjustedToUTC=false micros reads as
+    # TimestampType directly; session TZ is UTC so wall-clock values match
+    # what the DuckDB oracle reads.
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    df = read()
+    for c in _NANO_TS_COLUMNS.get(name, ()):
+        if c in df.columns and dict(df.dtypes)[c] == "bigint":
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
+    # Belt-and-braces for any other reader path that still yields NTZ.
+    for c, t in df.dtypes:
+        if t == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -352,18 +383,12 @@ def load_table(
     path, spread); each entry carries the input's on-disk
     signature (_input_signature) and is rebuilt when that changed. A
     hit skips the schema-inference job of spark.read.parquet, the
-    footer probe and the timestamp rewrites. Only the lazy relation is
+    footer probe and read_timestamps_normalized (whose confs the miss
+    that built the entry set on this session). Only the lazy relation is
     cached, never results: nothing here persists or collects it, so
     every query still scans the current files. Paths that cannot be
     stat'ed (URIs) always take the uncached path.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Micros-NTZ parquet must surface as plain TIMESTAMP at the SCAN (not
-    # via a post-read cast, which would block predicate pushdown on the
-    # column). With inference off, isAdjustedToUTC=false micros reads as
-    # TimestampType directly; session TZ is UTC so wall-clock values match
-    # what the DuckDB oracle reads.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
     # taken BEFORE the read: a file replaced mid-read leaves a stale
     # signature, so the next load misses instead of trusting the entry
@@ -374,14 +399,7 @@ def load_table(
             hit = spark.__dict__.get(_TABLE_CACHE_ATTR, {}).get(key)
         if hit is not None and hit[0] == sig:
             return hit[1]
-    df = spark.read.parquet(path)
-    for c in _NANO_TS_COLUMNS.get(name, ()):
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    # Belt-and-braces for any other reader path that still yields NTZ.
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    df = read_timestamps_normalized(spark, name, lambda: spark.read.parquet(path))
     # spread exists to parallelize inputs the SCAN cannot split (the
     # testdata ships single-file single-row-group tables). When the
     # input is already a multi-file directory with at least as many
@@ -616,10 +634,8 @@ def materialize(df: DataFrame) -> DataFrame:
     (query_scope), so steady-state storage is one query's working set.
 
     NOT a replacement where the checkpoint is load-bearing:
-    io/merge.py materializes before overwriting the files the plan
-    reads (an evicted cache block would re-read overwritten data), and
     operators/graph.py's reliable-checkpoint path survives executor
-    loss on a real cluster. Those keep true checkpoints."""
+    loss on a real cluster, so it keeps true checkpoints."""
     df = df.persist()
     df.count()
     current_scope(df.sparkSession)._pin("frames", df)

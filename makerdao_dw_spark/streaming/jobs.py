@@ -1,7 +1,7 @@
 """Shared streaming mechanisms: one AvailableNow runner, the memory-sink
 drain that every registered streaming query (queries/streaming.py)
-returns through, the state-store partition sizing, and the two
-foreachBatch sinks (checkpointed log ingest, serving-table upsert).
+returns through, the state-store partition sizing, and the
+checkpointed log-ingest foreachBatch sink.
 
 Every stream here runs with ``Trigger.AvailableNow`` (drain everything
 currently available, then stop), which is how `__spark_entry__`, the
@@ -12,12 +12,10 @@ the same plans run unbounded with a processing-time trigger.
 from __future__ import annotations
 
 import itertools
-import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..session import conf_override, input_bytes
@@ -42,11 +40,8 @@ LAST_STATE_ROWS: int | None = None
 # few state rows exist (measured: 40k state rows, commitTimeMs summed
 # to 62-124 s per batch, ~80% of streaming_stream_stream_join's wall).
 # Deriving the partition count from the input volume is the stateful
-# analogue of AQE partition coalescing; the conf below overrides for
-# deployments whose steady-state per-trigger volume differs from the
-# backlog being drained.
+# analogue of AQE partition coalescing.
 _STATE_PART_TARGET_BYTES = 32 << 20
-_STATE_PARTS_CONF = "spark.makerdao.streaming.state.partitions"
 # Set to "true" to run the trailing no-data micro-batch in drain after
 # all — the watermark then advances once more and EVICTS expired state
 # before the query stops. Sink output is identical either way (see
@@ -61,15 +56,7 @@ def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
     one partition per _STATE_PART_TARGET_BYTES of source input, at least
     4 (parallelism floor), capped at the session's shuffle-partition
     count (which the SPARK_GRAFT_SHUFFLE_PARTITIONS contract already
-    scales with the cluster). Conf `spark.makerdao.streaming.state.partitions`
-    pins an explicit count for production streams whose per-trigger
-    volume is not the drained backlog size."""
-    override = spark.conf.get(_STATE_PARTS_CONF, None)
-    if override:
-        n = int(override)
-        if n <= 0:
-            raise ValueError(f"{_STATE_PARTS_CONF} must be positive, got {n}")
-        return n
+    scales with the cluster)."""
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     total = sum(input_bytes(sf_dir, t) or 0 for t in tables)
     return min(shuffle_parts, max(4, -(-total // _STATE_PART_TARGET_BYTES)))
@@ -182,74 +169,4 @@ def stream_ingest_logs(
     _await_available_now(
         raw.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint_dir),
         "stream_ingest_logs drain",
-    )
-
-
-def stream_serving_aggregates(
-    spark: SparkSession,
-    landing_dir: str,
-    schema,
-    out_path: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-) -> None:
-    """Maintain a key->running-aggregate SERVING TABLE from a stream,
-    exactly-once under replays.
-
-    The streaming aggregation runs in UPDATE output mode, so each
-    micro-batch emits the NEW TOTAL for every key the batch touched —
-    which makes the foreachBatch upsert **naturally idempotent**: a
-    replayed batch rewrites the same totals it wrote the first time.
-    That is the load-bearing design choice; an append-mode sink of
-    per-batch increments would double-count on the replay every
-    at-least-once foreachBatch contract allows.
-
-    Parquet has no transaction log, so the upsert is MERGE-by-rewrite
-    (io/merge.merge_dataframes) into a staging dir, published by
-    io/maintenance's rename-aside `swap`; `recover_swap` runs first, so
-    a batch rerun after a crash between the swap's two renames finds
-    the table again. At 100 TB the serving table is |keys|-sized (not
-    |events|-sized) and the rewrite is scoped by partitioning on the
-    key range; with a table format (Delta/Iceberg) the same
-    foreachBatch body becomes a real MERGE INTO statement.
-    """
-    from ..io.maintenance import recover_swap, swap
-    from ..io.merge import merge_dataframes
-
-    # landing batches arrive as subdirectories of parquet part-files
-    # (the layout df.write.parquet produces), so glob one level down
-    events = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(os.path.join(landing_dir, "*"))
-    )
-    totals = events.groupBy(key).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_value"),
-    )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # crash recovery BEFORE the existence check: a death between the
-        # swap's two renames leaves the table only at its backup name;
-        # concluding "no table yet" there would replace the whole
-        # serving state with this one batch's keys
-        recover_swap(out_path)
-        # existence check, NOT try/except: a transient read failure must
-        # fail the batch (foreachBatch retries it), never silently
-        # replace the whole serving table with this batch's keys
-        if os.path.isdir(out_path):
-            target = batch_df.sparkSession.read.parquet(out_path)
-            merged = merge_dataframes(target, batch_df, [key])
-        else:
-            merged = batch_df
-        # overwrite also clears what a crashed batch left staged
-        staging = f"{out_path}.staging"
-        merged.write.mode("overwrite").parquet(staging)
-        swap(out_path, staging)
-
-    _await_available_now(
-        totals.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir),
-        "stream_serving_aggregates drain",
     )

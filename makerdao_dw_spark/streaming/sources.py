@@ -2,9 +2,9 @@
 
 A file-stream source needs a directory; we scope it to one table with
 ``pathGlobFilter``. Schema comes from a one-off batch read (a streaming
-reader cannot infer), and the driver testdata's TIMESTAMP(NANOS) columns
-get the same nanos->micros normalization as the batch path
-(session.load_table).
+reader cannot infer), and the driver testdata's timestamp columns go
+through the batch path's normalization
+(session.read_timestamps_normalized, which load_table reads through).
 
 At scale this is exactly the bronze-landing pattern: ingest jobs append
 parquet files to a watched directory; the stream picks up new files per
@@ -17,9 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..session import _NANO_TS_COLUMNS, configure
+from ..session import configure, read_timestamps_normalized
 
 
 def stream_table(
@@ -27,7 +26,14 @@ def stream_table(
 ) -> DataFrame:
     """Open a testdata table as a file-stream (micro-batch) DataFrame."""
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return read_timestamps_normalized(
+        spark, name, lambda: _open_stream(spark, sf_dir, name, max_files_per_trigger)
+    )
+
+
+def _open_stream(
+    spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None
+) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = spark.read.parquet(path).schema
     # The file-stream source does NOT recurse into plain subdirectories:
@@ -49,11 +55,7 @@ def stream_table(
         path = sf_dir
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.parquet(path)
-    for c in _NANO_TS_COLUMNS.get(name, ()):
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    return df
+    return reader.parquet(path)
 
 
 def stream_dir(spark: SparkSession, path: str, schema, max_files_per_trigger: int | None = None) -> DataFrame:

@@ -18,7 +18,7 @@ import os
 import pytest
 
 from makerdao_dw_spark.abi.loader import load_abi
-from makerdao_dw_spark.abi.schema import SchemaCompiler, compile_contract
+from makerdao_dw_spark.abi.schema import compile_contract
 
 REF_CONF = "/root/reference/conf"
 FIXTURE_CONF = os.path.join(os.path.dirname(__file__), "fixtures", "makerdao", "conf")
@@ -115,21 +115,16 @@ def test_view_functions_and_anonymous_events_excluded():
     assert [s.table for s in specs] == ["c_call_kick"]
 
 
-def test_shared_registry_reproduces_reference_global_leak():
+def test_overload_suffixes_are_scoped_per_contract():
     """The reference's module-global suffix dicts leak across contracts
-    (/root/reference/functions.py:82-84); shared_registry=True reproduces
-    that for parity, default scoping does not."""
+    (its functions.py:82-84: a second contract's `file` became
+    `two_call_file0`); each compile here starts its own registry."""
     abi = [
         {"type": "function", "stateMutability": "nonpayable", "name": "file", "inputs": []},
     ]
-    c = SchemaCompiler(shared_registry=True)
-    (a,) = c.compile_contract("one", abi)
-    (b,) = c.compile_contract("two", abi)
-    assert a.table == "one_call_file" and b.table == "two_call_file0"
-
-    (a2,) = compile_contract("one", abi)
-    (b2,) = compile_contract("two", abi)
-    assert a2.table == "one_call_file" and b2.table == "two_call_file"
+    (a,) = compile_contract("one", abi)
+    (b,) = compile_contract("two", abi)
+    assert a.table == "one_call_file" and b.table == "two_call_file"
 
 
 def test_unsupported_type_is_hard_error():

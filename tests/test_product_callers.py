@@ -40,23 +40,9 @@ KEEP = {
     ("io/maintenance.py", "table_layout_stats"): "file-count/size probe that "
     "compaction is judged by (ROADMAP D7)",
     ("io/formats.py", "read_evolved"): "merged-schema read for ABI upgrades (ROADMAP D11)",
-    ("functions/__init__.py", "register_domain_functions"): "the SQL twins "
-    "the Column helpers are compared against",
     ("operators/kmeans.py", "_dist2"): "the scalar reference for dists_arr",
-    ("streaming/jobs.py", "stream_serving_aggregates"): "the serving-table "
-    "upsert: MERGE (io/merge.merge_dataframes) per micro-batch, published "
-    "by io/maintenance.swap",
     ("operators/ann_eval.py", "recall_table"): "recall@k of the registered "
     "ANN indexes against exact top-k; the recall floors rest on it",
-    ("queries/olap.py", "approx_aggregates"): "raw HLL/quantile-sketch "
-    "values behind the registered approx_aggregates, which only emits "
-    "in-tolerance flags",
-    ("queries/olap.py", "sample_stratified"): "the engine-native sampleBy "
-    "twin of the registered sample_stratified_exact",
-    **{
-        ("functions/__init__.py", name): "Column-API twin of the SQL domain function"
-        for name in ("wad", "ray", "rad", "ray_apy", "ilk_name")
-    },
 }
 
 
@@ -107,6 +93,7 @@ def unreached(keep=()) -> list[tuple[str, str]]:
             else:
                 live |= _names(stmt)
     for key in keep:
+        assert key in defs, f"KEEP names {key}, which is no top-level def of the package"
         live |= defs[key]
     reached: set[tuple[str, str]] = set()
     grew = True

@@ -99,12 +99,8 @@ def test_materialize_lazy_registers_without_computing(spark):
 
 def test_state_partitions_derivation(spark, tmp_path):
     """state_partitions: ceil(bytes/32MB) with a floor of 4 and a cap at
-    the session's shuffle-partition count; conf override wins outright."""
-    from makerdao_dw_spark.streaming.jobs import (
-        _STATE_PART_TARGET_BYTES,
-        _STATE_PARTS_CONF,
-        state_partitions,
-    )
+    the session's shuffle-partition count."""
+    from makerdao_dw_spark.streaming.jobs import _STATE_PART_TARGET_BYTES, state_partitions
 
     # tiny file -> floor
     f = tmp_path / "events.parquet"
@@ -119,11 +115,7 @@ def test_state_partitions_derivation(spark, tmp_path):
         # huge input -> capped at the session shuffle-partition count
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         assert state_partitions(spark, str(tmp_path), "events") == 4
-        # conf override wins
-        spark.conf.set(_STATE_PARTS_CONF, "11")
-        assert state_partitions(spark, str(tmp_path), "events") == 11
     finally:
-        spark.conf.unset(_STATE_PARTS_CONF)
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 

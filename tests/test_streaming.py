@@ -298,132 +298,6 @@ def test_stateful_accumulates_across_batches(spark, tmp_path):
     assert final[2]["n_events"] == 2 and final[2]["min_value"] == 0.5
 
 
-def _serving_totals(df) -> dict:
-    """Batch recompute of the serving table: user_id -> (n, exact sum)."""
-    from pyspark.sql import functions as F
-
-    return {
-        r.user_id: (r.n, str(r.s))
-        for r in df.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,6)")).alias("s"),
-        )
-        .collect()
-    }
-
-
-def _serving_state(spark, serving) -> dict:
-    return {
-        r.user_id: (r.n_events, str(r.sum_value))
-        for r in spark.read.parquet(serving).collect()
-    }
-
-
-def _serving_landing(spark, tmp_path):
-    """The events table split in two landing batches (even and odd
-    user ids); returns (events, landing dir, schema, serving path, ckpt)."""
-    from pyspark.sql import functions as F
-
-    from makerdao_dw_spark.session import load_table
-
-    from .conftest import SF_DIR
-
-    events = load_table(spark, SF_DIR, "events").select("user_id", "value")
-    landing = str(tmp_path / "landing")
-    events.filter(F.col("user_id") % 2 == 0).write.mode("overwrite").parquet(
-        os.path.join(landing, "f1")
-    )
-    schema = spark.read.parquet(os.path.join(landing, "f1")).schema
-    return events, landing, schema, str(tmp_path / "serving"), str(tmp_path / "ckpt")
-
-
-def _land_second_batch(events, landing):
-    from pyspark.sql import functions as F
-
-    events.filter(F.col("user_id") % 2 == 1).write.mode("overwrite").parquet(
-        os.path.join(landing, "f2")
-    )
-
-
-def test_serving_table_upsert_exactly_once(spark, tmp_path):
-    """stream_serving_aggregates: totals match a batch recompute after
-    incremental drains, a checkpointed re-run with no new data changes
-    nothing, and replaying an already-applied update is a no-op (the
-    update-mode + MERGE design is idempotent by construction)."""
-    from pyspark.sql import functions as F
-
-    from makerdao_dw_spark.io.merge import merge_dataframes
-    from makerdao_dw_spark.streaming.jobs import stream_serving_aggregates
-
-    events, landing, schema, serving, ckpt = _serving_landing(spark, tmp_path)
-    first = events.filter(F.col("user_id") % 2 == 0)
-
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert _serving_state(spark, serving) == _serving_totals(first)
-
-    # drain a second incremental file: totals must cover BOTH files
-    _land_second_batch(events, landing)
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert _serving_state(spark, serving) == _serving_totals(events)
-
-    # checkpointed re-run with nothing new: no change
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert _serving_state(spark, serving) == _serving_totals(events)
-
-    # simulate an at-least-once replay: re-applying the full totals
-    # upsert over the current serving table must be a no-op
-    replay = (
-        events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_value"),
-        )
-    )
-    merged = merge_dataframes(spark.read.parquet(serving), replay, ["user_id"])
-    assert {
-        r.user_id: (r.n_events, str(r.sum_value)) for r in merged.collect()
-    } == _serving_totals(events)
-
-
-def test_serving_upsert_recovers_from_crash_between_swap_renames(spark, tmp_path, monkeypatch):
-    """A serving batch that dies between the swap's two renames leaves
-    the table only at its `<serving>_old-*` backup. The batch has no
-    commit entry, so the next drain reruns it: recover_swap restores the
-    backup before the upsert reads the table, and the totals end equal
-    to a batch recompute over both landing batches (concluding "no table
-    yet" would keep only the second batch's keys). Nothing staged or
-    backed up is left behind."""
-    from pyspark.errors import StreamingQueryException
-
-    from makerdao_dw_spark.streaming.jobs import stream_serving_aggregates
-
-    events, landing, schema, serving, ckpt = _serving_landing(spark, tmp_path)
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)  # first write
-    _land_second_batch(events, landing)
-
-    real_rename = os.rename
-    calls = []
-
-    def crash_at_second_rename(src, dst):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise OSError(f"injected crash before renaming {src} to {dst}")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_at_second_rename)
-    with pytest.raises(StreamingQueryException):
-        stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert calls[1] == serving  # the staged table's rename into place
-    assert not os.path.isdir(serving)
-    assert [n for n in os.listdir(tmp_path) if n.startswith("serving_old-")]
-
-    stream_serving_aggregates(spark, landing, schema, serving, ckpt)
-    assert _serving_state(spark, serving) == _serving_totals(events)
-    assert sorted(os.listdir(tmp_path)) == ["ckpt", "landing", "serving"]
-
-
 def test_rocksdb_state_store_matches_default(spark):
     """The RocksDB state store provider (the 100 TB choice: state spills
     to local disk instead of living on the executor heap) produces
