@@ -16,9 +16,6 @@ _WORD = 32
 
 DYNAMIC_TYPES = {"bytes", "string", "address[]", "uint256[]"}
 
-UINT256_MAX = (1 << 256) - 1
-INT256_MIN = -(1 << 255)
-
 
 def is_dynamic(typ: str) -> bool:
     return typ in DYNAMIC_TYPES

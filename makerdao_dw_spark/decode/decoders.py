@@ -156,12 +156,9 @@ def decode_logs_for_table(raw_logs: DataFrame, spec: TableSpec) -> DataFrame:
     data string, block_number bigint, block_hash string, log_index int,
     transaction_index int, transaction_hash string.
     """
-    sig = spec.signature
-    if spec.kind == "evt":
-        matched = raw_logs.filter(F.element_at("topics", 1) == F.lit(sig))
-    else:
-        # calls arrive as logs whose topic0 is the padded selector
-        matched = raw_logs.filter(F.element_at("topics", 1) == F.lit(sig))
+    # events match on topic0; calls arrive as logs whose topic0 is the
+    # padded selector
+    matched = raw_logs.filter(F.element_at("topics", 1) == F.lit(spec.signature))
 
     common = ["block_number", "block_hash", "address", "log_index", "transaction_index", "transaction_hash"]
 

@@ -52,7 +52,6 @@ def _cos_duck(a: str, b: str) -> str:
     return f"ROUND({_dot_sql_duckdb(a, b)} / (SQRT({_dot_sql_duckdb(a, a)}) * SQRT({_dot_sql_duckdb(b, b)})), 6)"
 
 
-_SIM_SPARK = _cos_spark("a.embedding", "b.embedding")
 _SIM_DUCK = _cos_duck("a.embedding", "b.embedding")
 
 # Zero-norm guard: cosine of an all-zero vector is undefined — dividing

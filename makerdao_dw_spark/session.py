@@ -19,22 +19,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Tables the driver generates (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Timestamp-type robustness: driver testdata has shipped both
 # TIMESTAMP(NANOS) (Spark's vectorized reader rejects it -> read as
 # epoch-nanos longs via legacy conf and convert) and
@@ -663,42 +647,29 @@ def _staging_root(spark: SparkSession) -> str | None:
     OWN filesystems, so a driver-local path reads back missing data,
     exactly like sparkContext.setCheckpointDir's DFS requirement).
 
-    Resolution order:
-      1. spark.makerdao.staging.dir session conf (per-session override)
-      2. $SPARK_GRAFT_STAGING_DIR
-      3. $SPARK_GRAFT_CHECKPOINT_DIR/_staging (reuse the existing
-         shared-checkpoint contract — same dir the reliable-checkpoint
-         path uses, so one env var provisions both)
-      4. the context's checkpoint dir, if one was set (already DFS-valid)
+    The root is the checkpoint-dir contract's, under `_staging`:
+      1. $SPARK_GRAFT_CHECKPOINT_DIR (the same dir the reliable-
+         checkpoint path uses, so one env var provisions both)
+      2. the context's checkpoint dir, if one was set (already DFS-valid)
     """
-    root = None
-    try:
-        root = spark.conf.get("spark.makerdao.staging.dir", None)
-    except Exception:  # pragma: no cover — conf access on a stopped session
-        pass
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_STAGING_DIR")
-    if not root:
-        ckpt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if ckpt:
-            root = ckpt.rstrip("/") + "/_staging"
-    if not root:
-        ckpt = spark.sparkContext.getCheckpointDir()
-        if ckpt:
-            root = ckpt.rstrip("/") + "/_staging"
-            # getCheckpointDir renders LOCAL dirs as file:/... URIs —
-            # normalize those to plain paths so os.makedirs/shutil see a
-            # filesystem path. Only this derived source is normalized:
-            # an EXPLICITLY configured URI root (conf/env, any scheme
-            # incl. file://) is honored verbatim and handled by the
-            # Hadoop-FileSystem branch of stage()/QueryScope._remove — which is
-            # exactly the code path an object-store root (s3a://,
-            # hdfs://) takes on a real cluster (round-11: lets the
-            # branch be pinned by a file://-rooted test).
-            if root.startswith("file:") and "://" not in root:
-                from urllib.parse import urlparse
+    ckpt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt:
+        return ckpt.rstrip("/") + "/_staging"
+    ckpt = spark.sparkContext.getCheckpointDir()
+    if not ckpt:
+        return None
+    root = ckpt.rstrip("/") + "/_staging"
+    # getCheckpointDir renders LOCAL dirs as file:/... URIs — normalize
+    # those to plain paths so os.makedirs/shutil see a filesystem path.
+    # Only this derived source is normalized: a URI in the env var (any
+    # scheme incl. file://) is honored verbatim and handled by the
+    # Hadoop-FileSystem branch of stage()/QueryScope._remove — exactly
+    # the code path an object-store root (s3a://, hdfs://) takes on a
+    # real cluster.
+    if root.startswith("file:") and "://" not in root:
+        from urllib.parse import urlparse
 
-                root = urlparse(root).path or root[len("file:"):]
+        root = urlparse(root).path or root[len("file:"):]
     return root
 
 
@@ -718,10 +689,9 @@ def _new_staged_dir(
         if not master.startswith("local"):
             raise RuntimeError(
                 f"session.{caller}() needs a SHARED staging root on a cluster "
-                f"(master={master!r}): set spark.makerdao.staging.dir, "
-                "$SPARK_GRAFT_STAGING_DIR, or a checkpoint dir — a "
-                "driver-local temp path would silently drop executor-"
-                "written partitions on read-back"
+                f"(master={master!r}): set $SPARK_GRAFT_CHECKPOINT_DIR or a "
+                "checkpoint dir — a driver-local temp path would silently "
+                "drop executor-written partitions on read-back"
             )
         d = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
     else:
@@ -758,9 +728,9 @@ def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     recompute, so the lifecycle is deliberately one generation more
     conservative than unpersist.
 
-    Placement (round 10): dirs root at _staging_root() — a shared,
-    configurable location (session conf spark.makerdao.staging.dir,
-    $SPARK_GRAFT_STAGING_DIR, or the checkpoint-dir contract). On a
+    Placement (round 10): dirs root at _staging_root() — a shared
+    location from the checkpoint-dir contract
+    ($SPARK_GRAFT_CHECKPOINT_DIR or the context's checkpoint dir). On a
     MULTI-NODE cluster a shared root is REQUIRED (executors write
     partitions to their own filesystems; a driver-local path reads back
     partial data) — exactly setCheckpointDir's rule, enforced here: the

@@ -42,13 +42,12 @@ LAST_STATE_ROWS: int | None = None
 # Deriving the partition count from the input volume is the stateful
 # analogue of AQE partition coalescing.
 _STATE_PART_TARGET_BYTES = 32 << 20
-# Set to "true" to run the trailing no-data micro-batch in drain after
-# all — the watermark then advances once more and EVICTS expired state
-# before the query stops. Sink output is identical either way (see
-# drain); the knob exists for state-observability runs that want
-# post-eviction state rows (tools/measure.py's `state_rows` are read at
-# the drain's last data batch unless it is set).
-_FINAL_WM_BATCH_CONF = "spark.makerdao.streaming.drain.finalWatermarkBatch"
+# True runs the trailing no-data micro-batch in drain after all — the
+# watermark then advances once more and EVICTS expired state before the
+# query stops. Sink output is identical either way (see drain); with it
+# off, tools/measure.py's `state_rows` are read at the drain's last data
+# batch.
+FINAL_WATERMARK_BATCH = False
 
 
 def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
@@ -107,8 +106,7 @@ def drain(
     name = f"stream_sink_{next(_SEQ)}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
     spark = sdf.sparkSession
-    final_wm = spark.conf.get(_FINAL_WM_BATCH_CONF, "false") == "true"
-    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": str(final_wm).lower()}
+    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": str(FINAL_WATERMARK_BATCH).lower()}
     if state_parts is not None:
         confs["spark.sql.shuffle.partitions"] = str(state_parts)
     try:

@@ -21,19 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import configure, read_timestamps_normalized
 
 
-def stream_table(
-    spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Open a testdata table as a file-stream (micro-batch) DataFrame."""
     configure(spark)
-    return read_timestamps_normalized(
-        spark, name, lambda: _open_stream(spark, sf_dir, name, max_files_per_trigger)
-    )
+    return read_timestamps_normalized(spark, name, lambda: _open_stream(spark, sf_dir, name))
 
 
-def _open_stream(
-    spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int | None
-) -> DataFrame:
+def _open_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     schema = spark.read.parquet(path).schema
     # The file-stream source does NOT recurse into plain subdirectories:
@@ -53,15 +47,10 @@ def _open_stream(
             "pathGlobFilter", f"{name}.parquet"
         )
         path = sf_dir
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(path)
 
 
-def stream_dir(spark: SparkSession, path: str, schema, max_files_per_trigger: int | None = None) -> DataFrame:
+def stream_dir(spark: SparkSession, path: str, schema) -> DataFrame:
     """Watch a landing directory of parquet files (bronze ingest pattern)."""
     configure(spark)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return spark.readStream.schema(schema).parquet(path)

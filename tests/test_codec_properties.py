@@ -7,12 +7,10 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from makerdao_dw_spark.decode.abi_codec import (
-    INT256_MIN,
-    UINT256_MAX,
-    decode_abi,
-    encode_abi,
-)
+from makerdao_dw_spark.decode.abi_codec import decode_abi, encode_abi
+
+UINT256_MAX = (1 << 256) - 1
+INT256_MIN = -(1 << 255)
 
 # value strategy per ABI type + the normalizer decode applies
 addr = st.binary(min_size=20, max_size=20).map(lambda b: b.hex())

@@ -8,10 +8,17 @@ a new order still finds its classes."""
 
 from __future__ import annotations
 
-import bench
+import importlib.util
+import os
+
 from makerdao_dw_spark.queries import queries_dict
 
 from .conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_spec = importlib.util.spec_from_file_location("measure", os.path.join(REPO, "tools", "measure.py"))
+measure = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(measure)
 
 
 def test_headline_mix_compiles_once(spark):
@@ -19,10 +26,10 @@ def test_headline_mix_compiles_once(spark):
     passes = []
     for _ in range(2):
         compiled = {}
-        for name in bench.HEADLINE:
-            before = bench.compiled_classes(spark)
+        for name in measure.HEADLINE:
+            before = measure.compiled_classes(spark)
             qd[name](spark, SF_DIR).collect()
-            compiled[name] = bench.compiled_classes(spark) - before
+            compiled[name] = measure.compiled_classes(spark) - before
         passes.append(compiled)
     # pass 1 must overflow Spark's default size, or pass 2 proves nothing
     assert sum(passes[0].values()) > 100, passes[0]

@@ -1,7 +1,7 @@
-"""The driver-contract regression gate: run the STRICT driver-sim
+"""The driver-contract regression gate: run the driver-sim
 (tools/drive_entry.py — vanilla SparkSession, DuckDB oracles, the
-external harness's exact canonicalization) on a pinned query subset as
-part of the default test run.
+external harness's strict canonicalization and the pandas one) on a
+pinned query subset as part of the default test run.
 
 Why a subprocess: the sim must build its own VANILLA session; inside
 this pytest process getOrCreate() would return the conftest fixture's
@@ -18,6 +18,7 @@ queries (the pre-push gate, ~150 s).
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 
@@ -52,7 +53,24 @@ def test_strict_driver_sim_gate():
     )
     tail = "\n".join(proc.stdout.splitlines()[-25:])
     assert proc.returncode == 0, (
-        f"strict driver-sim failed (rc={proc.returncode}):\n{tail}\n"
+        f"driver-sim failed (rc={proc.returncode}):\n{tail}\n"
         f"stderr tail:\n{chr(10).join(proc.stderr.splitlines()[-10:])}"
     )
     assert "QUERIES MATCH" in proc.stdout, tail
+
+
+def test_sim_imports_the_entry_of_its_own_checkout(tmp_path):
+    """The sim gates the checkout it sits in: a copy next to a stub
+    __spark_entry__ imports the stub, not some other checkout's entry."""
+    (tmp_path / "tools").mkdir()
+    shutil.copy(os.path.join(REPO, "tools", "drive_entry.py"), tmp_path / "tools")
+    (tmp_path / "__spark_entry__.py").write_text('raise SystemExit("stub entry imported")\n')
+    proc = subprocess.run(
+        [sys.executable, str(tmp_path / "tools" / "drive_entry.py"), "--no-entry", "no_such_query"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=False,
+    )
+    assert "stub entry imported" in proc.stderr, proc.stdout + proc.stderr

@@ -73,4 +73,4 @@ def test_unknown_query_rejected_by_argparse(tmp_path):
     with pytest.raises(SystemExit):
         measure.parse_args(base + ["--dirs", f"a={SF_DIR}", f"a={SF_DIR_T2}"])
     assert not os.path.exists(out)
-    assert measure.parse_args(base).queries == {n: False for n in measure.bench.HEADLINE}
+    assert measure.parse_args(base).queries == {n: False for n in measure.HEADLINE}

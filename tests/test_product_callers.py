@@ -1,8 +1,8 @@
-"""Every package def has a product caller, or a stated reason to stay.
+"""Every package def and constant has a product caller, or a stated reason to stay.
 
 A top-level function or class of `makerdao_dw_spark/` is *reached* when
 product code refers to it: the package itself, `tools/`, `perfbench/`,
-`bench*.py` or `__spark_entry__.py`, never `tests/`. A reference is an
+`bench.py` or `__spark_entry__.py`, never `tests/`. A reference is an
 `ast.Name`, an `ast.Attribute` or an import alias, matched by name,
 outside the def's own body. `@query`-registered functions are reached
 by the registry. References made inside an unreached def do not count,
@@ -13,6 +13,11 @@ Code that only tests reach is a second copy of some product path or
 dead weight; delete it with its tests. The defs kept on purpose are
 listed below, each with its reason. What a kept def uses counts as
 reached, and a kept def that gains a product caller leaves the list.
+
+A top-level constant (an assignment target) of the package is *loaded*
+when product code reads its name: an `ast.Name` in load context, an
+`ast.Attribute` or an import alias. A constant nothing loads is dead;
+test-only values belong in the tests.
 """
 
 from __future__ import annotations
@@ -50,8 +55,7 @@ def _product_files() -> list[str]:
     files = glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
     files += glob.glob(os.path.join(ROOT, "tools", "**", "*.py"), recursive=True)
     files += glob.glob(os.path.join(ROOT, "perfbench", "**", "*.py"), recursive=True)
-    files += glob.glob(os.path.join(ROOT, "bench*.py"))
-    files.append(os.path.join(ROOT, "__spark_entry__.py"))
+    files += [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "__spark_entry__.py")]
     return sorted(f for f in files if os.path.exists(f))
 
 
@@ -115,3 +119,33 @@ def test_every_package_def_has_a_product_caller():
 def test_kept_defs_have_no_product_caller():
     called = [k for k in sorted(KEEP) if k not in unreached()]
     assert not called, f"kept defs that product code now reaches; drop them from KEEP: {called}"
+
+
+def unloaded_constants() -> list[tuple[str, str]]:
+    """(module path under the package, name) of every top-level assigned
+    name of the package that no product file loads."""
+    pkg = os.path.join(ROOT, PACKAGE) + os.sep
+    consts: set[tuple[str, str]] = set()
+    loaded: set[str] = set()
+    for path in _product_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        if path.startswith(pkg):
+            for stmt in tree.body:
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [getattr(stmt, "target", None)]
+                for t in targets:
+                    if isinstance(t, ast.Name) and not t.id.startswith("__"):
+                        consts.add((path[len(pkg):], t.id))
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                loaded.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                loaded.add(n.attr)
+            elif isinstance(n, ast.alias):
+                loaded.add(n.name.rsplit(".", 1)[-1])
+    return sorted(c for c in consts if c[1] not in loaded)
+
+
+def test_every_package_constant_is_loaded():
+    dead = unloaded_constants()
+    assert not dead, f"constants no product code loads; delete them or move them into the tests: {dead}"

@@ -143,7 +143,7 @@ def test_nested_registered_query_keeps_outer_pins(spark, sf_dir):
 
 
 def test_iterative_queries_release_everything(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
+    monkeypatch.setattr(S, "_staging_root", lambda spark: str(tmp_path))
     qd = queries_dict()
     frames, dirs = [], []
     for name in (

@@ -5,7 +5,7 @@
   configure() — a non-registry consumer must never inherit them;
 - the streaming drains' trailing no-data micro-batch removal must be
   sink-invariant: every drain returns identical rows with
-  spark.makerdao.streaming.drain.finalWatermarkBatch on and off.
+  streaming.jobs.FINAL_WATERMARK_BATCH on and off.
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from makerdao_dw_spark.queries import queries_dict
+from makerdao_dw_spark.streaming import jobs
 
 
 def test_recursive_cte_restores_session_confs(spark, sf_dir):
@@ -42,19 +43,15 @@ STREAMING = [
 
 
 @pytest.mark.parametrize("name", STREAMING)
-def test_streaming_final_watermark_batch_sink_invariant(spark, sf_dir, name):
+def test_streaming_final_watermark_batch_sink_invariant(spark, sf_dir, name, monkeypatch):
     """The r11 drain change skips the eviction-only trailing micro-batch;
     the sink rows must be IDENTICAL either way for every registered
     drain (the one semantics-adjacent r11 change — VERDICT r11 item 5)."""
     qd = queries_dict()
-    conf = "spark.makerdao.streaming.drain.finalWatermarkBatch"
-    try:
-        spark.conf.set(conf, "false")
-        without = sorted(tuple(r) for r in qd[name](spark, sf_dir).collect())
-        spark.conf.set(conf, "true")
-        with_batch = sorted(tuple(r) for r in qd[name](spark, sf_dir).collect())
-    finally:
-        spark.conf.unset(conf)
+    monkeypatch.setattr(jobs, "FINAL_WATERMARK_BATCH", False)
+    without = sorted(tuple(r) for r in qd[name](spark, sf_dir).collect())
+    monkeypatch.setattr(jobs, "FINAL_WATERMARK_BATCH", True)
+    with_batch = sorted(tuple(r) for r in qd[name](spark, sf_dir).collect())
     assert without == with_batch
     assert len(without) > 0
 

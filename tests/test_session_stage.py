@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from makerdao_dw_spark import session as S
 
 
@@ -95,27 +97,43 @@ def test_gc_hint_is_safe_noop(spark):
 
 
 def test_stage_honors_custom_staging_root(spark, tmp_path, monkeypatch):
-    """Round 10: stage() roots under a shared, configurable location —
-    on a multi-node cluster executors write parquet partitions to their
-    own filesystems, so a driver-local mkdtemp path silently reads back
-    partial data. $SPARK_GRAFT_STAGING_DIR (or the session conf /
-    checkpoint-dir contract) must win over the local-only fallback."""
+    """Round 10: stage() roots under a shared location — on a multi-node
+    cluster executors write parquet partitions to their own filesystems,
+    so a driver-local mkdtemp path silently reads back partial data. The
+    root is the checkpoint-dir contract's: $SPARK_GRAFT_CHECKPOINT_DIR
+    (verbatim, URIs included), else the context's checkpoint dir (its
+    file:/ rendering normalized to a path), each under `_staging`; it
+    wins over the local-only fallback. The shared session's checkpoint
+    dir is never set here: it cannot be unset, and it would switch
+    _cut_lineage to reliable checkpoints for every later test."""
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
+    assert S._staging_root(spark) is None
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: f"file:{tmp_path}/ctx")
+    assert S._staging_root(spark) == f"{tmp_path}/ctx/_staging"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "s3a://bucket/ckpt/")
+    assert S._staging_root(spark) == "s3a://bucket/ckpt/_staging"
+
     root = str(tmp_path / "shared_staging")
-    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", root)
+    monkeypatch.setattr(S, "_staging_root", lambda spark: root)
     before = set(_staged_dirs())
     staged = S.stage(spark.range(20).selectExpr("id"), "rooted")
     new = [d for d in _staged_dirs() if d not in before]
     assert len(new) == 1 and new[0].startswith(root), new
     assert staged.count() == 20
-    # conf override beats the env var (per-session control)
-    spark.conf.set("spark.makerdao.staging.dir", str(tmp_path / "conf_root"))
-    try:
-        S.stage(spark.range(5), "conf_rooted")
-        newest = [d for d in _staged_dirs() if d not in before and d not in new]
-        assert len(newest) == 1 and newest[0].startswith(str(tmp_path / "conf_root"))
-    finally:
-        spark.conf.unset("spark.makerdao.staging.dir")
     S.current_scope(spark).release()
+
+
+def test_stage_refuses_driver_local_dir_off_a_local_master(spark, monkeypatch):
+    """Without a shared root, the driver-local tempdir is taken only under
+    a local[*] master; on a cluster master stage() fails loudly before
+    any write."""
+    monkeypatch.setattr(S, "_staging_root", lambda spark: None)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    before = set(_staged_dirs())
+    with pytest.raises(RuntimeError, match="SHARED staging root"):
+        S.stage(spark.range(3), "refused")
+    assert set(_staged_dirs()) == before
 
 
 def test_stage_bucketed_layout_and_lifecycle(spark):
@@ -217,8 +235,6 @@ def test_configure_rejects_invalid_shuffle_partition_override(spark, monkeypatch
     """ADVICE r10: an unvalidated $SPARK_GRAFT_SHUFFLE_PARTITIONS was
     accepted by conf.set and only failed later inside a query, far from
     the cause. configure() must raise a clear error naming the var."""
-    import pytest
-
     for bad in ("abc", "0", "-4", "3.5"):
         monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", bad)
         with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
@@ -227,15 +243,16 @@ def test_configure_rejects_invalid_shuffle_partition_override(spark, monkeypatch
     S.configure(spark)  # and the default path still works
 
 
-def test_stage_bucketed_uri_rooted_staging_dir(spark, tmp_path):
+def test_stage_bucketed_uri_rooted_staging_dir(spark, tmp_path, monkeypatch):
     """VERDICT r10 item 4: the object-store branch ("://" in the staged
     dir — no os.makedirs, saveAsTable path option carries the URI,
     cleanup via the JVM's Hadoop FileSystem) was untested. A file://
-    root through spark.makerdao.staging.dir is byte-for-byte the s3a://
-    code path with a locally verifiable filesystem."""
+    staging root (as $SPARK_GRAFT_CHECKPOINT_DIR gives it, verbatim) is
+    byte-for-byte the s3a:// code path with a locally verifiable
+    filesystem."""
     root = f"file://{tmp_path}/uri_staging"
     plain_root = f"{tmp_path}/uri_staging"
-    spark.conf.set("spark.makerdao.staging.dir", root)
+    monkeypatch.setattr(S, "_staging_root", lambda spark: root)
     before = set(_staged_dirs())
     try:
         df = spark.range(200).selectExpr("id % 13 AS k", "id AS payload")
@@ -264,7 +281,6 @@ def test_stage_bucketed_uri_rooted_staging_dir(spark, tmp_path):
         assert not spark.catalog.tableExists(tbl)
         assert d not in _staged_dirs()
     finally:
-        spark.conf.unset("spark.makerdao.staging.dir")
         S.current_scope(spark).release()
 
 

@@ -3,14 +3,16 @@ query (scan / exchange / broadcast / window / Python-stage counts), so
 plan quality is auditable at a glance without re-running explain() by
 hand. Streaming queries are skipped (their plans are per-micro-batch).
 
-Usage: python tools/plan_report.py  (writes /root/repo/PLANS.md)
+Usage: python tools/plan_report.py  (writes PLANS.md at the checkout root)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -93,7 +95,7 @@ def main() -> None:
         note = "arrow-batched python stage" if python else ""
         rows.append((name, scans, shuffles, bcast, windows, python, note))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan metrics per registered query\n\n"
             "Auto-generated by `tools/plan_report.py` at sf0.01 (pre-execution\n"
