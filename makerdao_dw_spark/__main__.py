@@ -5,12 +5,14 @@ Reference:              This engine:
                           python -m makerdao_dw_spark blocks --to-block N
   python eth-contract.py makermcd.vat
                           python -m makerdao_dw_spark ingest makermcd.vat
+                              --conf C --abi-dir D --out X
 
 Both take the `<schema>.<contract>` target (functions.py:7-14) and read
-the same HOCON registry (config.py). The RPC client is pluggable: this
-container has no network, so `--rpc mock` (deterministic fixture chain)
-is the default; a JSON-RPC client implements the same `RpcClient`
-protocol for production.
+the same HOCON registry (config.py); `ingest` has no default registry
+or ABI tree, since both are deployment paths. The RPC client is
+pluggable: this container has no network, so `--rpc mock`
+(deterministic fixture chain) is the default; a JSON-RPC client
+implements the same `RpcClient` protocol for production.
 """
 
 from __future__ import annotations
@@ -33,8 +35,8 @@ def main(argv: list[str] | None = None) -> int:
 
     ing = sub.add_parser("ingest", help="backfill a contract's call/evt tables")
     ing.add_argument("target", help="<schema>.<contract>")
-    ing.add_argument("--conf", default="/root/reference/config.conf")
-    ing.add_argument("--abi-dir", default="/root/reference/conf")
+    ing.add_argument("--conf", required=True, help="HOCON registry (config.conf)")
+    ing.add_argument("--abi-dir", required=True, help="directory of <schema>/<contract>.abi files")
     ing.add_argument("--out", required=True, help="warehouse output directory")
     ing.add_argument("--rpc", choices=["mock"], default="mock")
     ing.add_argument("--to-block", type=int, default=2000)

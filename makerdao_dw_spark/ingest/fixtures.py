@@ -75,11 +75,11 @@ def maker_specs() -> tuple[list[TableSpec], list[TableSpec]]:
     return vat_used, jug_used
 
 
-def maker_chain(head: int = 2000, seed: int = 42) -> MockChain:
+def maker_chain(head: int = 2000) -> MockChain:
     vat_used, jug_used = maker_specs()
     return MockChain(
         head=head,
-        seed=seed,
+        seed=42,
         contracts=[
             ContractSim(address=VAT_ADDRESS, specs=vat_used, value_gen=maker_value_gen, logs_per_block=1.6),
             ContractSim(address=JUG_ADDRESS, specs=jug_used, value_gen=maker_value_gen, logs_per_block=0.12),

@@ -67,16 +67,11 @@ def _cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def bfs_distances(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Breadth-first hop distances from `sources` over a directed edge
-    list, bounded at `max_hops`. Returns (node, dist) with dist = the
-    MINIMUM number of hops (<= max_hops); unreachable nodes absent.
+def bfs_distances(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
+    """Breadth-first hop distances from `sources` over a directed
+    (src, dst) edge list, bounded at `max_hops`. Returns (node, dist)
+    with dist = the MINIMUM number of hops (<= max_hops); unreachable
+    nodes absent.
 
     `sources` is a 1-column DataFrame of start nodes (column name free).
     Frontier expansion is one join + one anti-join per level — each level
@@ -87,7 +82,7 @@ def bfs_distances(
     O(max_hops x frontier-edge joins) — the same plan GraphFrames' BFS
     lowers to.
     """
-    edges = _cut_lineage(edges.selectExpr(f"{src} AS src", f"{dst} AS dst"))
+    edges = _cut_lineage(edges.select("src", "dst"))
     frontier = _cut_lineage(
         sources.toDF("node").distinct().withColumn("dist", F.lit(0))
     )
@@ -183,20 +178,18 @@ def connected_components(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list, formulated
-    for EXACT cross-engine determinism: every per-edge contribution is
-    rounded to 12 decimals and summed as DECIMAL(38,12) (arrival order
-    can never flip a bit), and each new rank is re-rounded to 12
-    decimals — so K iterations produce bit-identical doubles in any
-    engine that applies the same recurrence (the DuckDB oracle unrolls
-    it as chained CTEs).
+# PageRank damping factor d
+_PR_DAMPING = 0.85
+
+
+def pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank over a directed (src, dst) edge list,
+    damping d = _PR_DAMPING, formulated for EXACT cross-engine
+    determinism: every per-edge contribution is rounded to 12 decimals
+    and summed as DECIMAL(38,12) (arrival order can never flip a bit),
+    and each new rank is re-rounded to 12 decimals — so K iterations
+    produce bit-identical doubles in any engine that applies the same
+    recurrence (the DuckDB oracle unrolls it as chained CTEs).
 
         rank_0(n)   = round(1/N, 12)
         rank_k+1(n) = round((1-d)/N
@@ -214,8 +207,8 @@ def pagerank(
     node count. Lineage is cut per round (reliable-checkpoint-aware,
     like connected_components above)."""
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     nodes = _cut_lineage(nodes)
@@ -223,18 +216,18 @@ def pagerank(
     if n_nodes == 0:
         # empty graph: no ZeroDivisionError at build time, just no rows
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    out = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
-    linked = _cut_lineage(edges.join(out, src).select(src, dst, "outdeg"))
+    out = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    linked = _cut_lineage(edges.join(out, "src").select("src", "dst", "outdeg"))
 
     # Spark's ROUND (half-up), not Python's round() (half-even): the
     # oracle rounds with the engine function, so Spark must too
     ranks = nodes.select(
         "node", F.round(F.lit(1.0) / F.lit(float(n_nodes)), 12).alias("rank")
     )
-    base = (1 - damping) / n_nodes
+    base = (1 - _PR_DAMPING) / n_nodes
     for _ in range(iterations):
-        contrib = linked.join(ranks, linked[src] == ranks["node"]).select(
-            F.col(dst).alias("to_node"),
+        contrib = linked.join(ranks, linked["src"] == ranks["node"]).select(
+            F.col("dst").alias("to_node"),
             F.round(F.col("rank") / F.col("outdeg"), 12)
             .cast("decimal(38,12)")
             .alias("c"),
@@ -246,7 +239,7 @@ def pagerank(
                 "node",
                 F.round(
                     F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
+                    + F.lit(_PR_DAMPING) * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
                     12,
                 ).alias("rank"),
             )
@@ -262,8 +255,6 @@ _LPA_VOTE_ROW_BYTES = 24
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_rounds: int = 10,
     stats: dict | None = None,
     release: tuple[DataFrame, ...] = (),
@@ -334,7 +325,7 @@ def label_propagation(
     """
     spark = edges.sparkSession
     pairs = stage(
-        edges.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
+        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
         "lpa_pairs",

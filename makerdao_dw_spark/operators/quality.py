@@ -71,16 +71,14 @@ def foreign_key(
     col: str,
     parent: DataFrame,
     parent_col: str,
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """Non-null child keys with no parent row (left anti join; parent
-    side reduced to distinct keys). `broadcast_parent=True` is right for
-    dimension-sized parents; pass False for fact-sized parents (e.g. a
-    transactions table) — a forced broadcast of billions of keys is a
-    driver OOM, the shuffle anti-join is the plan that survives."""
-    keys = parent.select(F.col(parent_col).alias("__pk")).distinct()
-    if broadcast_parent:
-        keys = F.broadcast(keys)
+    side reduced to distinct keys and broadcast). The broadcast is right
+    for dimension-sized parents, which is every caller today; a
+    fact-sized parent (e.g. a transactions table) needs the shuffle
+    anti-join instead — a forced broadcast of billions of keys is a
+    driver OOM."""
+    keys = F.broadcast(parent.select(F.col(parent_col).alias("__pk")).distinct())
     orphans = (
         child.filter(F.col(col).isNotNull())
         .join(keys, F.col(col) == F.col("__pk"), "left_anti")

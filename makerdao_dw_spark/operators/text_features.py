@@ -21,35 +21,38 @@ from ..functions import md5_int_duck, md5_int_spark
 # Deliberately tiny english stopword list — deterministic, oracle-friendly.
 STOPWORDS = ("the", "a", "an", "of", "and", "or", "to", "in", "is", "it")
 
+# words per shingle, in both engines
+_SHINGLE_N = 3
+
 
 def words(text: Column) -> Column:
     """Whitespace tokens (corpus is single-space separated)."""
     return F.split(text, " ")
 
 
-def shingles_expr(text_col: str, n: int = 3) -> Column:
-    """Word n-gram shingles of `text_col` as array<string>.
+def shingles_expr(text_col: str) -> Column:
+    """Word _SHINGLE_N-gram shingles of `text_col` as array<string>.
 
     The words array is let-bound (split runs once per row, not per
     shingle). Out-of-range try_element_at -> NULL, and NULL || x
     propagates, so short documents degrade to fewer (never broken)
     shingles.
     """
-    parts = " || ' ' || ".join(f"try_element_at({{x}}, i + {k})" for k in range(n))
+    parts = " || ' ' || ".join(f"try_element_at({{x}}, i + {k})" for k in range(_SHINGLE_N))
     return F.expr(
         let_bound(
             f"split({text_col}, ' ')",
-            f"filter(transform(sequence(1, greatest(size({{x}}) - {n - 1}, 1)), "
+            f"filter(transform(sequence(1, greatest(size({{x}}) - {_SHINGLE_N - 1}, 1)), "
             f"i -> {parts}), s -> s is not null)",
         )
     )
 
 
-def shingles_sql_duckdb(text_col: str, n: int = 3) -> str:
+def shingles_sql_duckdb(text_col: str) -> str:
     """DuckDB twin of shingles_expr (|| propagates NULL, unlike concat)."""
-    parts = " || ' ' || ".join(f"string_split({text_col}, ' ')[i + {k}]" for k in range(n))
+    parts = " || ' ' || ".join(f"string_split({text_col}, ' ')[i + {k}]" for k in range(_SHINGLE_N))
     return (
-        f"list_filter(list_transform(generate_series(1, greatest(len(string_split({text_col}, ' ')) - {n - 1}, 1)), "
+        f"list_filter(list_transform(generate_series(1, greatest(len(string_split({text_col}, ' ')) - {_SHINGLE_N - 1}, 1)), "
         f"i -> {parts}), s -> s IS NOT NULL)"
     )
 

@@ -75,7 +75,7 @@ _WORDS_FROM_DOCS_DUCK = f"""SELECT t AS word, COUNT(*) AS freq
     GROUP BY t"""
 
 
-def _duck_train_ctes(steps: int = _BPE_STEPS, words_body: str = _WORDS_FROM_DOCS_DUCK) -> str:
+def _duck_train_ctes(words_body: str = _WORDS_FROM_DOCS_DUCK) -> str:
     """DuckDB CTE unroll of the BPE trainer: words -> s0, then per step
     i: p{i} (weighted pair counts) -> b{i} (argmax pair, ties to the
     lexicographically smaller) -> s{i} (vocabulary re-segmented).
@@ -98,7 +98,7 @@ def _duck_train_ctes(steps: int = _BPE_STEPS, words_body: str = _WORDS_FROM_DOCS
     FROM words
 )"""
     ]
-    for i in range(1, steps + 1):
+    for i in range(1, _BPE_STEPS + 1):
         prev = f"s{i - 1}"
         pairs = _PAIRS_DUCK.format(sym="sym")
         merge = _MERGE_DUCK.format(sym=f"{prev}.sym", p1=f"b{i}.p1", p2=f"b{i}.p2")

@@ -179,11 +179,11 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SRP_PLANES = 8
 
 
-def _srp_plane(j: int, dim: int = DIM) -> list[float]:
+def _srp_plane(j: int) -> list[float]:
     import hashlib
 
     out = []
-    for i in range(dim):
+    for i in range(DIM):
         h = int(hashlib.md5(f"srp:{j}:{i}".encode()).hexdigest()[:8], 16)
         out.append((h % 2001 - 1000) / 1000.0)
     return out

@@ -109,33 +109,33 @@ def bigram_zip_expr(arr: str = "ts", combine: str = "concat(a, ' ', b)") -> str:
 # ngram_novelty_curve, novelty_incremental_batch) — a drifted copy
 # would silently desynchronize their oracles.
 
-def gram_md5_arr_spark(k: int, arr: str = "w") -> str:
-    """Spark expr: md5 keys of word k-grams over array column `arr`.
+def gram_md5_arr_spark(k: int) -> str:
+    """Spark expr: md5 keys of word k-grams over the array column `w`.
     try_element_at past the end is NULL, NULL || x propagates, the
     filter drops them — so a <k-word doc yields an EMPTY array
     (sequence() is clamped to start at 1 so it can never run
     DESCENDING, the Spark start>stop landmine). Surviving entry i
     (0-based after posexplode) = the gram starting at word i+1."""
-    parts = " || ' ' || ".join(f"try_element_at({arr}, i + {j})" for j in range(k))
+    parts = " || ' ' || ".join(f"try_element_at(w, i + {j})" for j in range(k))
     return (
-        f"filter(transform(sequence(1, greatest(size({arr}) - {k - 1}, 1)), "
+        f"filter(transform(sequence(1, greatest(size(w) - {k - 1}, 1)), "
         f"i -> md5(cast({parts} as binary))), s -> s is not null)"
     )
 
 
-def gram_md5_arr_duck(k: int, arr: str = "w") -> str:
+def gram_md5_arr_duck(k: int) -> str:
     """DuckDB twin of gram_md5_arr_spark (generate_series with start >
     stop is empty in DuckDB, so no clamp/filter dance is needed)."""
-    parts = " || ' ' || ".join(f"{arr}[i + {j}]" for j in range(k))
-    return f"list_transform(generate_series(1, len({arr}) - {k - 1}), i -> md5({parts}))"
+    parts = " || ' ' || ".join(f"w[i + {j}]" for j in range(k))
+    return f"list_transform(generate_series(1, len(w) - {k - 1}), i -> md5({parts}))"
 
 
-def gram_md5_pos_duck(k: int, arr: str = "w") -> str:
+def gram_md5_pos_duck(k: int) -> str:
     """DuckDB k-gram keys WITH 0-based start positions, as a list of
     {'p0', 'ghash'} structs for `UNNEST(..., recursive := true)` —
     position parity with Spark's posexplode over gram_md5_arr_spark."""
-    parts = " || ' ' || ".join(f"{arr}[i + {j}]" for j in range(k))
+    parts = " || ' ' || ".join(f"w[i + {j}]" for j in range(k))
     return (
-        f"list_transform(generate_series(1, len({arr}) - {k - 1}), "
+        f"list_transform(generate_series(1, len(w) - {k - 1}), "
         f"i -> {{'p0': i - 1, 'ghash': md5({parts})}})"
     )

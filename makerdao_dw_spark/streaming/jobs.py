@@ -48,6 +48,8 @@ _STATE_PART_TARGET_BYTES = 32 << 20
 # off, tools/measure.py's `state_rows` are read at the drain's last data
 # batch.
 FINAL_WATERMARK_BATCH = False
+# Longest an AvailableNow drain may run before it is stopped and raises
+_DRAIN_TIMEOUT_S = 300
 
 
 def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
@@ -61,26 +63,21 @@ def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
     return min(shuffle_parts, max(4, -(-total // _STATE_PART_TARGET_BYTES)))
 
 
-def _await_available_now(writer: DataStreamWriter, what: str, timeout_s: int = 300) -> dict | None:
+def _await_available_now(writer: DataStreamWriter, what: str) -> dict | None:
     """Start `writer` with Trigger.AvailableNow, wait until it has
     drained what is available, stop it and return its last progress.
     A failed query raises from the wait; one still running after
-    `timeout_s` raises TimeoutError. It is stopped either way."""
+    _DRAIN_TIMEOUT_S raises TimeoutError. It is stopped either way."""
     q = writer.trigger(availableNow=True).start()
     try:
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(f"{what} did not finish in {_DRAIN_TIMEOUT_S}s")
         return q.lastProgress
     finally:
         q.stop()
 
 
-def drain(
-    sdf: DataFrame,
-    output_mode: str,
-    timeout_s: int = 300,
-    state_parts: int | None = None,
-) -> DataFrame:
+def drain(sdf: DataFrame, output_mode: str, state_parts: int | None = None) -> DataFrame:
     """Run a streaming DataFrame to a memory sink with AvailableNow and
     return the sink's rows as a frame (the sink's temp view is dropped).
     Unique query names allow repeated invocation
@@ -117,7 +114,7 @@ def drain(
             .option("checkpointLocation", ckpt)
         )
         with conf_override(spark, confs):
-            prog = _await_available_now(writer, f"streaming drain {name!r}", timeout_s)
+            prog = _await_available_now(writer, f"streaming drain {name!r}")
     finally:
         # the memory sink holds the result; a finished drain is never
         # resumed, so its checkpoint is dead weight in the temp dir

@@ -120,6 +120,16 @@ def test_cli_ingest_end_to_end(spark, tmp_path):
     assert frob.count() > 0
 
 
+def test_cli_ingest_requires_registry_and_abi_dir(tmp_path):
+    """`ingest` has no default `--conf`/`--abi-dir`: argparse rejects a
+    call without them (exit code 2) before any Spark session starts."""
+    from makerdao_dw_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["ingest", "makermcd.vat", "--out", str(tmp_path / "wh")])
+    assert exc.value.code == 2
+
+
 def test_cli_blocks_fetches_each_header_once(spark, tmp_path, monkeypatch, capsys):
     """`python -m makerdao_dw_spark blocks` parity (eth-blocks.py): every
     block in the range lands once, and each header is fetched over RPC

@@ -1,7 +1,6 @@
-"""IO plane tests: partitioned writes prune on read, catalog tables work
-end-to-end, and the JDBC adapter builds correct plans (no driver jar in
-this env, so the JDBC write path is asserted up to the driver-load
-boundary)."""
+"""IO plane tests: partitioned writes prune on read, and the JDBC
+adapter builds correct plans (no driver jar in this env, so the JDBC
+write path is asserted up to the driver-load boundary)."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from makerdao_dw_spark.io.catalog import ensure_database, save_table, table_exists
 from makerdao_dw_spark.io.jdbc import JdbcConfig, write_jdbc
 from makerdao_dw_spark.session import load_table
 
@@ -33,33 +31,6 @@ def test_partitioned_write_prunes_on_read(spark, sample, tmp_path):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "isnotnull(day" in plan, plan
     assert q.count() == df.filter(F.col("day") == F.lit(one_day)).count()
-
-
-def test_catalog_database_and_table(spark, sample, tmp_path):
-    """Schema namespace -> database; idempotent DDL (the two classes.py
-    bugs — wrong exists-check and early break — impossible here)."""
-    ensure_database(spark, "io_test_db")
-    ensure_database(spark, "io_test_db")  # idempotent
-    save_table(
-        sample.select("event_id", "user_id", "value"),
-        "io_test_db",
-        "ev",
-        mode="overwrite",
-        path=str(tmp_path / "ev"),
-    )
-    assert table_exists(spark, "io_test_db", "ev")
-    assert not table_exists(spark, "io_test_db", "EV_other")
-    assert spark.table("`io_test_db`.`ev`").count() == sample.count()
-    # append mode appends
-    save_table(
-        sample.select("event_id", "user_id", "value").limit(10),
-        "io_test_db",
-        "ev",
-        mode="append",
-        path=str(tmp_path / "ev"),
-    )
-    assert spark.table("`io_test_db`.`ev`").count() == sample.count() + 10
-    spark.sql("DROP DATABASE io_test_db CASCADE")
 
 
 def test_jdbc_write_reaches_driver_boundary(spark, sample):

@@ -18,6 +18,13 @@ A top-level constant (an assignment target) of the package is *loaded*
 when product code reads its name: an `ast.Name` in load context, an
 `ast.Attribute` or an import alias. A constant nothing loads is dead;
 test-only values belong in the tests.
+
+A defaulted parameter of a top-level function is *set* when some call
+in product code or in `tests/` passes it: by keyword, by position, or
+through `*args`/`**kwargs`. Calls are matched by name, like the
+references above. A default no caller sets is a constant dressed as
+an option; make it a constant. The defs in KEEP are exempt, and any
+other exemption goes in UNSET_DEFAULTS with its reason.
 """
 
 from __future__ import annotations
@@ -34,9 +41,6 @@ KEEP = {
     "counterpart of the reference's PostgreSQL/Snowflake INSERT sink",
     ("io/jdbc.py", "write_jdbc"): "the batched JDBC sink, the counterpart "
     "of the reference's PostgreSQL/Snowflake INSERT sink",
-    ("io/catalog.py", "ensure_database"): "A13 DDL sink: CREATE DATABASE per schema",
-    ("io/catalog.py", "save_table"): "A13 DDL sink: a catalog table per TableSpec",
-    ("io/catalog.py", "table_exists"): "A13 DDL sink: the exact (db, table) existence check",
     ("decode/decoders.py", "redispatch_proxy_calls"): "reference stage A8 "
     "(proxy re-dispatch); wiring it into demux_and_write needs a proxy "
     "fixture chain",
@@ -49,6 +53,10 @@ KEEP = {
     ("operators/ann_eval.py", "recall_table"): "recall@k of the registered "
     "ANN indexes against exact top-k; the recall floors rest on it",
 }
+
+# (module path under the package, def, parameter) -> why its default
+# stays a parameter although no caller sets it
+UNSET_DEFAULTS: dict[tuple[str, str, str], str] = {}
 
 
 def _product_files() -> list[str]:
@@ -149,3 +157,49 @@ def unloaded_constants() -> list[tuple[str, str]]:
 def test_every_package_constant_is_loaded():
     dead = unloaded_constants()
     assert not dead, f"constants no product code loads; delete them or move them into the tests: {dead}"
+
+
+def unset_defaults() -> list[tuple[str, str, str]]:
+    """(module path under the package, def, parameter) of every
+    defaulted parameter of a top-level package function that no call in
+    product code or in `tests/` sets."""
+    pkg = os.path.join(ROOT, PACKAGE) + os.sep
+    tests = sorted(glob.glob(os.path.join(ROOT, "tests", "**", "*.py"), recursive=True))
+    set_by: dict[str, set[str | int]] = {}  # called name -> the keywords and positions it is passed
+    defaulted: list[tuple[str, str, str, int | None]] = []
+    for path in _product_files() + tests:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            passed = set_by.setdefault(name, set())
+            passed |= {k.arg or "**" for k in n.keywords}
+            passed |= {"*" if isinstance(a, ast.Starred) else i for i, a in enumerate(n.args)}
+        if not path.startswith(pkg):
+            continue
+        for stmt in tree.body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = stmt.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, arg in enumerate(pos[first:], first):
+                defaulted.append((path[len(pkg):], stmt.name, arg.arg, i))
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    defaulted.append((path[len(pkg):], stmt.name, arg.arg, None))
+    out = []
+    for rel, fn, param, i in defaulted:
+        passed = set_by.get(fn, set())
+        if {param, i, "*", "**"} & passed or (rel, fn) in KEEP:
+            continue
+        out.append((rel, fn, param))
+    return sorted(out)
+
+
+def test_every_default_is_set_by_some_caller():
+    unset = [d for d in unset_defaults() if d not in UNSET_DEFAULTS]
+    assert not unset, f"defaults no caller sets; make them constants or give a reason in UNSET_DEFAULTS: {unset}"

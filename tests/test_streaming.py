@@ -388,11 +388,11 @@ def test_stream_table_nested_nonpartition_dir_fails_loudly(spark, tmp_path):
 
 
 def test_drop_duplicates_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: the bounded-state form of
-    streaming dedup — duplicate event_ids arriving within the watermark
-    horizon are dropped, and (unlike plain dropDuplicates) the key
-    state EXPIRES once the watermark passes, so a 100 TB stream's dedup
-    state is horizon-bounded instead of unbounded."""
+    """dropDuplicatesWithinWatermark drops duplicate event_ids that
+    arrive within the watermark horizon: one micro-batch with repeated
+    keys comes out once per key. The drain is one batch, so no state
+    expires here; test_dedup_state_stays_bounded_across_micro_batches
+    checks expiry across batches."""
     import datetime
 
     import pyarrow as pa
@@ -420,6 +420,56 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     out = drain(deduped.select("event_id"), "append")
     got = sorted(r.event_id for r in out.collect())
     assert got == [1, 2, 3], got
+
+
+def test_dedup_state_stays_bounded_across_micro_batches(spark, sf_dir, tmp_path):
+    """streaming_dedup's bounded form keeps state to about one slice of
+    the stream, where plain dropDuplicates keeps one row per key.
+
+    The events (non-NULL ts) are cut into K time-ordered files with
+    increasing mtimes, so the file source streams them in event-time
+    order, one file per micro-batch. Each file is read twice (a
+    self-union), so every key arrives twice in its batch. Both forms
+    must emit each key exactly once. drain skips the trailing no-data
+    batch, so the last batch's slice is still in state when the drain
+    stops: the bound is two slices, not rate x horizon."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from makerdao_dw_spark.queries.streaming import dedup_events
+    from makerdao_dw_spark.streaming import jobs
+
+    k = 10
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    tbl = tbl.filter(pc.is_valid(tbl["ts"])).sort_by("ts").replace_schema_metadata(None)
+    # an LTZ micros column, the type Spark's stream schema reads as timestamp
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("ts"), "ts", tbl["ts"].cast(pa.timestamp("us", tz="UTC"))
+    )
+    n_keys = len(pc.unique(tbl["event_id"]))
+    per_file = -(-tbl.num_rows // k)
+    src = str(tmp_path / "slices")
+    os.makedirs(src)
+    for i in range(k):
+        path = os.path.join(src, f"slice_{i:02d}.parquet")
+        pq.write_table(tbl.slice(i * per_file, per_file), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    schema = spark.read.parquet(src).schema
+
+    def leg():
+        return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+    state = {}
+    for form, dedup in (
+        ("bounded", dedup_events),
+        ("unbounded", lambda sdf: sdf.dropDuplicates(["event_id"])),
+    ):
+        out = jobs.drain(dedup(leg().unionByName(leg())).select("event_id"), "append", state_parts=2)
+        assert out.count() == out.distinct().count() == n_keys, form
+        state[form] = jobs.LAST_STATE_ROWS
+    assert state["unbounded"] == n_keys, state
+    assert 0 < state["bounded"] <= 2 * per_file, state
 
 
 def test_drain_leaves_no_temp_entries(spark, sf_dir):
