@@ -58,7 +58,7 @@ bit-identical to ``F.ntile`` by tests/test_order_stats.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import input_bytes, materialize_lazy
@@ -85,10 +85,6 @@ __all__ = [
 # threshold.
 _PARALLEL_INPUT_BYTES = 512 * (1 << 20)
 
-# Session-conf override (tests force both modes; a cluster operator can
-# pin the choice): "true"/"false", anything else/absent = auto.
-_PARALLEL_CONF = "spark.makerdao.rank.parallel"
-
 # monotonically_increasing_id() packs (partition id, position) as
 # pid * 2^33 + position, so the local ordinal mid - (pid << 33) is exact
 # only below 2^33 rows per range partition; past it the position spills
@@ -97,12 +93,7 @@ _ORDINAL_BITS = 33
 _MAX_PARTITION_ROWS = 1 << _ORDINAL_BITS
 
 
-def use_parallel(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    threshold_bytes: int = _PARALLEL_INPUT_BYTES,
-) -> bool:
+def use_parallel(sf_dir: str, table: str, threshold_bytes: int = _PARALLEL_INPUT_BYTES) -> bool:
     """The scale gate: True when `table`'s on-disk size says the
     rank/ntile input can be a material single-task sort. File-size
     only — no estimate job (the LPA gate's fast path); an unreadable
@@ -110,12 +101,6 @@ def use_parallel(
     just not always cheapest. ``threshold_bytes`` lets a caller whose
     rank input is a larger fraction of the source lower the crossover
     (see the calibration note above)."""
-    try:
-        v = str(spark.conf.get(_PARALLEL_CONF, "")).lower()
-    except Exception:  # pragma: no cover — conf access on stopped session
-        v = ""
-    if v in ("true", "false"):
-        return v == "true"
     size = input_bytes(sf_dir, table)
     return size is None or size > threshold_bytes
 

@@ -295,7 +295,7 @@ def ab_uplift_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("n_events"), F.col("user_id").asc_nulls_last()],
         _SEG_N,
         "segment",
-        parallel=use_parallel(spark, sf_dir, "events"),
+        parallel=use_parallel(sf_dir, "events"),
     )
     agg = seg.groupBy("segment").agg(
         F.coalesce(F.sum(F.when(F.col("arm") == 0, 1)), F.lit(0)).alias("n_a"),

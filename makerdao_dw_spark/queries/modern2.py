@@ -18,25 +18,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
 
-from ..session import conf_override, input_bytes, load_table, materialize_lazy, stage
+from ..session import (
+    clone_with,
+    input_partitions,
+    load_table,
+    materialize_lazy,
+    share_view,
+    stage,
+)
 from .registry import query
-
-# Loop-exchange sizing for the recursive CTE (r11, guide §2): one
-# shuffle partition per this many bytes of source input, floor 8, capped
-# at the session's shuffle-partition count. UnionLoop re-plans and
-# re-executes its step plan EVERY iteration, so per-iteration exchange
-# fan-out is a fixed cost the loop pays depth times; deriving the count
-# from the input size is the static analogue of AQE's
-# initialPartitionNum (same idiom as the LPA vote sizing).
-_LOOP_PART_TARGET_BYTES = 32 << 20
-
-
-def _loop_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    size = input_bytes(sf_dir, table)
-    if size is None:
-        return shuffle_parts
-    return min(shuffle_parts, max(8, -(-size // _LOOP_PART_TARGET_BYTES)))
 
 
 # --------------------------------------------------------------------------
@@ -136,37 +126,35 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = materialize_lazy(
         spark.sql(_REACH_EDGES_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
     )
-    # A named view, not a spark.sql argument: the argument's view is
-    # dropped right after analysis, and dropping a view uncaches the
-    # persisted frame behind it before the loop reads it. The uuid keeps
-    # concurrent invocations apart; the view is dropped once stage() has
-    # run the loop.
-    edges_view = f"_rec_edges_{uuid.uuid4().hex}"
-    edges.createOrReplaceTempView(edges_view)
-    # r11 loop-execution conf (guide §1.2/§2): with AQE on, EVERY
+    # r11 loop-execution confs (guide §1.2/§2): with AQE on, EVERY
     # UnionLoop iteration pays adaptive stage-materialization barriers
     # + re-optimization on a frontier-sized step — measured 2x the
     # whole query at sf0.1 (loop 9.3 s -> 3.9 s with AQE off and the
-    # loop exchanges statically sized from the input instead,
-    # _loop_partitions above). Results are plan-independent.
+    # loop exchanges statically sized from the input, floor 8). Results
+    # are plan-independent.
     #
-    # r12 (VERDICT r11 item 3): the confs are now RESTORED before
-    # returning instead of leaking session-wide until the next
-    # configure(). They must hold at execution time and the loop frame
-    # is lazy, so the loop is executed HERE through stage() — a hard
-    # lineage cut to a node-cardinality parquet (the house iterative-
-    # query idiom) whose read-back plan is conf-independent — inside
-    # conf_override, the same contract the streaming drains keep
-    # (streaming/jobs.py).
-    loop_confs = {
+    # The confs must hold at execution time and the loop frame is lazy,
+    # so the loop runs HERE, on a clone of the session that carries them
+    # (session.clone_with): another thread's entry re-asserting the
+    # engine's confs on `spark` cannot turn AQE back on under the loop,
+    # and the caller's confs are never written. stage() executes it — a
+    # hard lineage cut to a node-cardinality parquet (the house
+    # iterative-query idiom) — and reads the result back on `spark`.
+    loop = clone_with(spark, {
         "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(_loop_partitions(spark, sf_dir, "lineitem")),
-    }
+        "spark.sql.shuffle.partitions": str(input_partitions(spark, sf_dir, "lineitem", floor=8)),
+    })
+    # A named view, not a spark.sql argument: the argument's view is
+    # dropped right after analysis, and dropping a view uncaches the
+    # persisted frame behind it before the loop reads it. A global view,
+    # so the clone sees it; the uuid keeps concurrent invocations apart.
+    # It is dropped once stage() has run the loop.
+    edges_view = f"_rec_edges_{uuid.uuid4().hex}"
     try:
-        with conf_override(spark, loop_confs):
-            return stage(spark.sql(_REACH_LOOP_SQL.format(edges=edges_view)), "rec_reach")
+        loop_sql = _REACH_LOOP_SQL.format(edges=share_view(edges, edges_view))
+        return stage(loop.sql(loop_sql), "rec_reach", spark)
     finally:
-        spark.catalog.dropTempView(edges_view)
+        spark.catalog.dropGlobalTempView(edges_view)
 
 
 # --------------------------------------------------------------------------

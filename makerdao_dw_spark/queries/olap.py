@@ -859,7 +859,7 @@ def skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Below the gate the plain window is kept: the distinct-price frame
     # fits one task and the band machinery is pure fixed cost
     # (measured r12: sf1 1.03 -> 1.32 s unconditionally banded).
-    if use_parallel(spark, sf_dir, "orders"):
+    if use_parallel(sf_dir, "orders"):
         band = F.floor(F.col("price").cast("double") / F.lit(8192.0)).alias("band")
         banded = per_price.select("price", "mx_date", band)
         w_local = Window.partitionBy("band").orderBy(F.col("price").desc()).rowsBetween(

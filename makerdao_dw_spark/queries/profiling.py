@@ -364,9 +364,7 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
             # single-task sort hurts a decade earlier: measured r12 at
             # sf10 (orders 238 MiB, calib 3.7M rows) the parallel form
             # is already 1.58x ahead — lower crossover
-            parallel=use_parallel(
-                spark, sf_dir, "orders", threshold_bytes=128 * (1 << 20)
-            ),
+            parallel=use_parallel(sf_dir, "orders", threshold_bytes=128 * (1 << 20)),
         )
         .filter(
             F.col("rk")

@@ -23,10 +23,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import load_table
-from ..streaming.jobs import drain, state_partitions
+from ..session import input_partitions, load_table
+from ..streaming.jobs import drain, drain_session
 from ..streaming.sources import stream_table
 from .registry import query
+
+
+def _events_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """The drain session of a stateful events stream: its state store
+    gets one partition per 32 MiB of events, at least 4 (a parallelism
+    floor)."""
+    return drain_session(spark, input_partitions(spark, sf_dir, "events", floor=4))
 
 
 @query(
@@ -46,7 +53,7 @@ ORDER BY day, event_type
 def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day event-time windows with a 1-hour watermark:
     count + exact-decimal value sum per (day, event_type)."""
-    ev = stream_table(spark, sf_dir, "events")
+    ev = stream_table(_events_session(spark, sf_dir), sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -55,7 +62,7 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(38,6)")).alias("total_value"),
         )
     )
-    out = drain(agg, "complete", state_parts=state_partitions(spark, sf_dir, "events"))
+    out = drain(agg, "complete", spark)
     return out.select(
         F.col("w.start").alias("day"), "event_type", "n", "total_value"
     ).orderBy("day", "event_type")
@@ -91,7 +98,7 @@ def streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (state keyed by (window, type), bounded by the watermark) —
     completing the streaming window family: tumbling, session, hopping.
     Each event enters 2 windows (multi-assign generate)."""
-    ev = stream_table(spark, sf_dir, "events")
+    ev = stream_table(_events_session(spark, sf_dir), sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "60 minutes", "30 minutes").alias("w"), "event_type")
@@ -102,7 +109,7 @@ def streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    out = drain(agg, "complete", state_parts=state_partitions(spark, sf_dir, "events"))
+    out = drain(agg, "complete", spark)
     return out.select(
         F.col("w.start").alias("w_start"),
         F.col("w.end").alias("w_end"),
@@ -147,13 +154,13 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration (windows are [start, last+gap) and merge only on overlap),
     so the oracle's boundary condition is ``>=`` — unlike the strict
     ``>`` of the batch `sessionize_events` query."""
-    ev = stream_table(spark, sf_dir, "events")
+    ev = stream_table(_events_session(spark, sf_dir), sf_dir, "events")
     sess = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "4 hours").alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = drain(sess, "complete", state_parts=state_partitions(spark, sf_dir, "events"))
+    out = drain(sess, "complete", spark)
     return out.select(
         "user_id",
         F.col("sw.start").alias("session_start"),
@@ -221,7 +228,7 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     and pandas would otherwise fold a NaT into the state as the int64-min
     sentinel (year 1677) — the watermarked queries drop such rows
     implicitly, this one pins the same contract explicitly."""
-    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = stream_table(drain_session(spark), sf_dir, "events").filter(F.col("ts").isNotNull())
     st = ev.groupBy("user_id").applyInPandasWithState(
         _update_user_stats, _STATE_OUT, _STATE, "update", GroupStateTimeout.NoTimeout
     )
@@ -230,7 +237,7 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     # core-count parallelism — and it carries ONE state store per
     # partition, so commit fan-out is already cheap. Measured: 4
     # partitions 4.1 s vs session parallelism 2.2 s at sf0.1/32 cores.
-    out = drain(st, "update")
+    out = drain(st, "update", spark)
     # A key updated in several micro-batches emits once per batch in the
     # sink; the last emission per key is the final state.
     w = F.row_number().over(
@@ -287,11 +294,9 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       that is the operator's contract (the horizon IS the dedup
       window), acceptable because ingestion duplicates are
       retry-clustered in time."""
-    ev = stream_table(spark, sf_dir, "events")
-    doubled = ev.unionByName(stream_table(spark, sf_dir, "events"))
-    out = drain(
-        dedup_events(doubled), "append", state_parts=state_partitions(spark, sf_dir, "events")
-    )
+    s = _events_session(spark, sf_dir)
+    doubled = stream_table(s, sf_dir, "events").unionByName(stream_table(s, sf_dir, "events"))
+    out = drain(dedup_events(doubled), "append", spark)
     return out.orderBy("event_id")
 
 
@@ -312,16 +317,15 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch), aggregated per nation — the enrichment stage every
     streaming ingest DAG needs. No state store: the static side is
     re-planned each batch, so slowly-changing dims pick up updates."""
-    ev = stream_table(spark, sf_dir, "events")
-    cust = F.broadcast(
-        load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    )
+    s = _events_session(spark, sf_dir)
+    ev = stream_table(s, sf_dir, "events")
+    cust = F.broadcast(load_table(s, sf_dir, "customer").select("c_custkey", "c_nationkey"))
     joined = ev.join(cust, ev["user_id"] == cust["c_custkey"])
     agg = joined.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(38,6)")).alias("total_value"),
     )
-    out = drain(agg, "complete", state_parts=state_partitions(spark, sf_dir, "events"))
+    out = drain(agg, "complete", spark)
     return out.orderBy("c_nationkey")
 
 
@@ -343,8 +347,9 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     requirement that lets join state expire), checked against the batch
     join answer. Without both watermarks and the time bound on both
     sides, stream-stream join state grows forever."""
+    s = _events_session(spark, sf_dir)
     p = (
-        stream_table(spark, sf_dir, "events")
+        stream_table(s, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "1 hour")
         .select(
@@ -354,7 +359,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     c = (
-        stream_table(spark, sf_dir, "events")
+        stream_table(s, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "1 hour")
         .select(
@@ -369,9 +374,5 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts"
         ),
     )
-    out = drain(
-        j.select("purchase_id", "click_id", "p_user"),
-        "append",
-        state_parts=state_partitions(spark, sf_dir, "events"),
-    )
+    out = drain(j.select("purchase_id", "click_id", "p_user"), "append", spark)
     return out.orderBy("purchase_id", "click_id")

@@ -343,7 +343,7 @@ def session_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.5). Below the gate the plain windows are kept (measured r12:
     # unconditionally parallel regressed sf1 0.75 -> 2.8 s — the
     # machinery's fixed cost x3; both forms value-identical).
-    par = use_parallel(spark, sf_dir, "events")
+    par = use_parallel(sf_dir, "events")
     scored = global_ntile(
         base,
         [F.col("recency_days").asc_nulls_last(), F.col("user_id").asc_nulls_last()],

@@ -170,7 +170,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("score").desc(), F.col("doc_id")],
         rank_col="rk",
         total_col="n_all",
-        parallel=use_parallel(spark, sf_dir, "documents"),
+        parallel=use_parallel(sf_dir, "documents"),
     )
     return (
         ranked.filter(

@@ -169,7 +169,7 @@ def curriculum_quality_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("tok_density").desc(), F.col("doc_id")],
         4,
         "phase",
-        parallel=use_parallel(spark, sf_dir, "documents"),
+        parallel=use_parallel(sf_dir, "documents"),
     ).withColumn("phase", F.col("phase").cast("long"))
     return (
         phased.groupBy("source", "phase")

@@ -274,7 +274,7 @@ def quality_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("score").desc(), F.col("doc_id")],
         10,
         "decile",
-        parallel=use_parallel(spark, sf_dir, "documents"),
+        parallel=use_parallel(sf_dir, "documents"),
     ).select(
         F.col("decile").cast("long").alias("decile"),
         F.when(F.col("component").isNotNull(), 1).otherwise(0).alias("in_cluster"),

@@ -108,10 +108,20 @@ def configure(spark: SparkSession) -> None:
     The driver harness owns its SparkSession; these confs are all
     runtime-mutable and keep query semantics deterministic (UTC
     timestamps match how the parquet testdata is interpreted by the
-    DuckDB oracle, which is timezone-naive). query_scope() runs it once
-    per top-level registered query (the registry wrapper enters it);
-    the other entry points (ingest and streaming sources, the warehouse
-    dashboard) run it themselves.
+    DuckDB oracle, which is timezone-naive).
+
+    The rule: this is the only package code that writes a caller's
+    session. It runs at every top-level entry: query_scope() runs it
+    once per top-level registered query (the registry wrapper enters
+    it), and the other entry points (ingest, the log-ingest stream, the
+    warehouse dashboard) run it themselves. So each query starts from
+    the engine's confs, whatever ran before it; a harness that wants a
+    scaled partition count sets $SPARK_GRAFT_SHUFFLE_PARTITIONS, not the
+    conf. A section that needs other confs (the recursive-CTE loop, a
+    streaming drain) runs on clone_with()'s clone and never writes the
+    caller's session, which other threads may be planning on. Nothing
+    that runs inside an entry calls this again: on a clone it would
+    undo the clone's confs.
 
     Not here: the codegen cache size. It is a static conf, and Spark reads
     it JVM-wide once, so only get_spark sets it (4096 entries). A session
@@ -122,6 +132,13 @@ def configure(spark: SparkSession) -> None:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # Testdata timestamps (see _NANO_TS_COLUMNS): NANOS parquet reads as
+    # epoch-nanos longs, which read_timestamps_normalized converts; with
+    # inference off, micros NTZ parquet surfaces as plain TIMESTAMP at the
+    # SCAN (a post-read cast would block predicate pushdown on the
+    # column), and the session TZ is UTC, so wall-clock values match what
+    # the DuckDB oracle reads.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     # Generated classes are named after their whole-stage codegen stage by
     # default, and AQE numbers stages in the order it creates them, which
@@ -169,21 +186,47 @@ def configure(spark: SparkSession) -> None:
     ship_package(spark)
 
 
-@contextmanager
-def conf_override(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
-    """Set session confs for the duration of a with-block. On exit each
-    key gets its prior value back, or is unset if it had none."""
-    prior = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+# Clones clone_with() keeps, per caller session, in this attribute of
+# the session object (see _TABLE_CACHE_ATTR for why not a module dict),
+# oldest evicted first past _CLONES_MAX.
+_CLONES_ATTR = "_makerdao_clones"
+_CLONES_MAX = 16
+
+
+def clone_with(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A clone of `spark` with `confs` set on it: the session a
+    conf-sensitive section runs on (the recursive-CTE loop, a streaming
+    drain), so the section's confs never reach the caller's session.
+
+    cloneSession() copies the caller's confs (say, a RocksDB state-store
+    provider) and temp views; newSession() would start from the
+    defaults. One clone is kept per (caller conf state, confs): a clone
+    costs a few ms, and every session that starts a stream leaves a
+    listener on the context's bus for good. A caller conf changed since
+    is a new state, so a new clone. A clone's later temp views and
+    relation cache are its own."""
+    state = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    key = (state, tuple(sorted(confs.items())))
+    with _LOCK:
+        clones = spark.__dict__.setdefault(_CLONES_ATTR, {})
+        clone = clones.get(key)
+        if clone is None:
+            clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            for k, v in confs.items():
+                clone.conf.set(k, v)
+            clones[key] = clone
+            while len(clones) > _CLONES_MAX:
+                del clones[next(iter(clones))]
+    return clone
+
+
+def share_view(df: DataFrame, name: str) -> str:
+    """Register `df` as a global temp view, which every session of the
+    context sees (a temp view is its session's own), and return the
+    view's qualified name: how a frame crosses between a caller and its
+    clone_with() clone."""
+    df.createOrReplaceGlobalTempView(name)
+    return f"{df.sparkSession.conf.get('spark.sql.globalTempDatabase')}.{name}"
 
 
 _MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -328,20 +371,38 @@ def input_bytes(sf_dir: str, table: str) -> int | None:
     return None if sig is None else _sig_bytes(sig)
 
 
+# Input bytes per shuffle partition where AQE cannot size an exchange
+# (r11, guide §2): UnionLoop re-plans and re-executes its step EVERY
+# iteration, so a recursive CTE pays its exchange fan-out depth times;
+# a stateful stream pins its exchange at the FIRST micro-batch
+# (checkpointed forever) and then pays partitions x stores of fixed
+# cost per batch: provider load, delta-file write, commit fsync,
+# coordinator RPC. A stream-stream join carries FOUR stores per
+# partition (measured at 32 partitions: commitTimeMs summed to 62-124 s
+# per batch for 40k state rows, ~80% of streaming_stream_stream_join).
+_PART_TARGET_BYTES = 32 << 20
+
+
+def input_partitions(spark: SparkSession, sf_dir: str, table: str, floor: int) -> int:
+    """Shuffle partitions for an exchange AQE cannot coalesce, from the
+    input's size: one per _PART_TARGET_BYTES of `table`, at least
+    `floor`, at most the session's shuffle-partition count (which the
+    $SPARK_GRAFT_SHUFFLE_PARTITIONS contract scales with the cluster).
+    An input that cannot be sized gets the session's count."""
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    size = input_bytes(sf_dir, table)
+    if size is None:
+        return shuffle_parts
+    return min(shuffle_parts, max(floor, -(-size // _PART_TARGET_BYTES)))
+
+
 def read_timestamps_normalized(
     spark: SparkSession, name: str, read: Callable[[], DataFrame]
 ) -> DataFrame:
     """Run `read`, a batch or streaming parquet read of testdata table
     `name`, with every timestamp column surfacing as plain TIMESTAMP
-    (see _NANO_TS_COLUMNS). The confs are set on the session before the
-    read, so a relation read here keeps reading under them."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Micros-NTZ parquet must surface as plain TIMESTAMP at the SCAN (not
-    # via a post-read cast, which would block predicate pushdown on the
-    # column). With inference off, isAdjustedToUTC=false micros reads as
-    # TimestampType directly; session TZ is UTC so wall-clock values match
-    # what the DuckDB oracle reads.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    (see _NANO_TS_COLUMNS). Needs the timestamp confs configure() sets
+    on the session."""
     df = read()
     for c in _NANO_TS_COLUMNS.get(name, ()):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
@@ -367,8 +428,7 @@ def load_table(
     path, spread); each entry carries the input's on-disk
     signature (_input_signature) and is rebuilt when that changed. A
     hit skips the schema-inference job of spark.read.parquet, the
-    footer probe and read_timestamps_normalized (whose confs the miss
-    that built the entry set on this session). Only the lazy relation is
+    footer probe and read_timestamps_normalized. Only the lazy relation is
     cached, never results: nothing here persists or collects it, so
     every query still scans the current files. Paths that cannot be
     stat'ed (URIs) always take the uncached path.
@@ -702,7 +762,7 @@ def _new_staged_dir(
     return d
 
 
-def stage(df: DataFrame, name: str = "stage") -> DataFrame:
+def stage(df: DataFrame, name: str = "stage", spark: SparkSession | None = None) -> DataFrame:
     """HARD lineage cut for shuffle-heavy iterative queries: write `df`
     to a session-scoped temp parquet, read it back, drop what the JVM
     no longer needs.
@@ -736,8 +796,13 @@ def stage(df: DataFrame, name: str = "stage") -> DataFrame:
     partial data) — exactly setCheckpointDir's rule, enforced here: the
     driver-local tempdir fallback is only taken under a local[*]
     master. Dirs still pinned at interpreter exit are removed there
-    (release_all, atexit) so long driver sessions don't leak."""
-    spark = df.sparkSession
+    (release_all, atexit) so long driver sessions don't leak.
+
+    The copy is read back on `spark`, by default df's own session: a
+    section run on a clone_with() clone hands its result back on the
+    caller's session, so no later plan over it runs under the clone's
+    confs."""
+    spark = spark or df.sparkSession
     path = _new_staged_dir(spark, name, "stage") + "/data"
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

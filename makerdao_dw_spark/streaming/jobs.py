@@ -1,6 +1,6 @@
 """Shared streaming mechanisms: one AvailableNow runner, the memory-sink
 drain that every registered streaming query (queries/streaming.py)
-returns through, the state-store partition sizing, and the
+returns through and the session its stream opens on, and the
 checkpointed log-ingest foreachBatch sink.
 
 Every stream here runs with ``Trigger.AvailableNow`` (drain everything
@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..session import conf_override, input_bytes
+from ..session import clone_with, share_view
 
 _SEQ = itertools.count()
 
@@ -30,18 +30,6 @@ _SEQ = itertools.count()
 LAST_STATE_ROWS: int | None = None
 
 
-# Target parquet input bytes per state-store partition (r11, guide §2).
-# A stateful exchange is pinned to spark.sql.shuffle.partitions at the
-# FIRST micro-batch (checkpointed forever, and AQE cannot coalesce it),
-# and every micro-batch then pays n_partitions x n_stores fixed cost:
-# provider load, delta-file write, commit fsync, coordinator RPC — a
-# stream-stream join carries FOUR stores per partition, so at 32
-# partitions one micro-batch commits 128 state files regardless of how
-# few state rows exist (measured: 40k state rows, commitTimeMs summed
-# to 62-124 s per batch, ~80% of streaming_stream_stream_join's wall).
-# Deriving the partition count from the input volume is the stateful
-# analogue of AQE partition coalescing.
-_STATE_PART_TARGET_BYTES = 32 << 20
 # True runs the trailing no-data micro-batch in drain after all — the
 # watermark then advances once more and EVICTS expired state before the
 # query stops. Sink output is identical either way (see drain); with it
@@ -52,15 +40,19 @@ FINAL_WATERMARK_BATCH = False
 _DRAIN_TIMEOUT_S = 300
 
 
-def state_partitions(spark: SparkSession, sf_dir: str, *tables: str) -> int:
-    """Scale-adaptive state-store partition count for a streaming drain:
-    one partition per _STATE_PART_TARGET_BYTES of source input, at least
-    4 (parallelism floor), capped at the session's shuffle-partition
-    count (which the SPARK_GRAFT_SHUFFLE_PARTITIONS contract already
-    scales with the cluster)."""
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    total = sum(input_bytes(sf_dir, t) or 0 for t in tables)
-    return min(shuffle_parts, max(4, -(-total // _STATE_PART_TARGET_BYTES)))
+def drain_session(spark: SparkSession, partitions: int | None = None) -> SparkSession:
+    """The session a stream to be drained opens on: a kept clone of
+    `spark` (session.clone_with) with the trailing no-data micro-batch
+    off (see drain) and, given `partitions`, the shuffle-partition count
+    a stateful exchange is pinned to at its first micro-batch
+    (session.input_partitions sizes it from the input). A stream takes
+    these confs from its own DataFrame's session when it starts, so
+    drain needs no conf of its own and the caller's session is never
+    written."""
+    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": str(FINAL_WATERMARK_BATCH).lower()}
+    if partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(partitions)
+    return clone_with(spark, confs)
 
 
 def _await_available_now(writer: DataStreamWriter, what: str) -> dict | None:
@@ -77,35 +69,31 @@ def _await_available_now(writer: DataStreamWriter, what: str) -> dict | None:
         q.stop()
 
 
-def drain(sdf: DataFrame, output_mode: str, state_parts: int | None = None) -> DataFrame:
+def drain(sdf: DataFrame, output_mode: str, spark: SparkSession) -> DataFrame:
     """Run a streaming DataFrame to a memory sink with AvailableNow and
-    return the sink's rows as a frame (the sink's temp view is dropped).
-    Unique query names allow repeated invocation
-    in one session (the driver calls each query at least twice).
+    return the sink's rows as a frame on `spark`, the caller's session
+    (the sink's views are dropped). Unique query names allow repeated
+    invocation in one session (the driver calls each query at least
+    twice).
 
-    `state_parts` (from `state_partitions()`) sets the shuffle-partition
-    count the stateful exchange is pinned to, for the duration of the
-    drain only (the session value is restored before returning; drains
-    are synchronous and sequential in this engine).
-
-    The trailing no-data micro-batch is disabled for the drain: every
-    registered streaming query's sink output is emitted eagerly in DATA
-    batches (complete/update modes recompute per batch; the append-mode
-    operators used — inner stream-stream join, dropDuplicatesWithin-
-    Watermark — emit rows on arrival), so the extra batch advances the
-    watermark only to EVICT state, which a finite drain that is about to
-    stop never benefits from. It cost a full per-partition state-store
-    commit cycle (measured: half of streaming_stream_stream_join's
-    drain). A future append-mode AGGREGATION (emission gated on the
-    watermark) must re-enable it or its final windows never reach the
-    sink."""
+    The stream runs under the confs of the session it was opened on: a
+    registered streaming query opens it on drain_session(), whose clone
+    pins the state partitions and turns off the trailing no-data
+    micro-batch. The rows come back on the caller's session, so no
+    later plan over them runs under the clone's confs. Every registered streaming query's sink
+    output is emitted eagerly in DATA batches (complete/update modes
+    recompute per batch; the append-mode operators used — inner
+    stream-stream join, dropDuplicatesWithinWatermark — emit rows on
+    arrival), so the no-data batch would advance the watermark only to
+    EVICT state, which a finite drain that is about to stop never
+    benefits from. It cost a full per-partition state-store commit cycle
+    (measured: half of streaming_stream_stream_join's drain). A future
+    append-mode AGGREGATION (emission gated on the watermark) must
+    re-enable it or its final windows never reach the sink."""
     global LAST_STATE_ROWS
     name = f"stream_sink_{next(_SEQ)}"
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    spark = sdf.sparkSession
-    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": str(FINAL_WATERMARK_BATCH).lower()}
-    if state_parts is not None:
-        confs["spark.sql.shuffle.partitions"] = str(state_parts)
+    stream_spark = sdf.sparkSession
     try:
         writer = (
             sdf.writeStream.format("memory")
@@ -113,18 +101,18 @@ def drain(sdf: DataFrame, output_mode: str, state_parts: int | None = None) -> D
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
         )
-        with conf_override(spark, confs):
-            prog = _await_available_now(writer, f"streaming drain {name!r}")
+        prog = _await_available_now(writer, f"streaming drain {name!r}")
     finally:
         # the memory sink holds the result; a finished drain is never
         # resumed, so its checkpoint is dead weight in the temp dir
         shutil.rmtree(ckpt, ignore_errors=True)
     if prog and prog.get("stateOperators"):
         LAST_STATE_ROWS = sum(op.get("numRowsTotal", 0) for op in prog["stateOperators"])
-    out = spark.table(name)
-    # the frame keeps the sink's rows; the temp view would pin them in
+    out = spark.table(share_view(stream_spark.table(name), name))
+    # the frame keeps the sink's rows; the views would pin them in
     # memory for the rest of the session
-    spark.catalog.dropTempView(name)
+    spark.catalog.dropGlobalTempView(name)
+    stream_spark.catalog.dropTempView(name)
     return out
 
 

@@ -22,8 +22,10 @@ from ..session import configure, read_timestamps_normalized
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Open a testdata table as a file-stream (micro-batch) DataFrame."""
-    configure(spark)
+    """Open a testdata table as a file-stream (micro-batch) DataFrame on
+    `spark`, a configured session: a registered streaming query opens it
+    on its drain_session() clone, whose confs a configure() here would
+    undo."""
     return read_timestamps_normalized(spark, name, lambda: _open_stream(spark, sf_dir, name))
 
 

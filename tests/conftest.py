@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 from decimal import Decimal
 
 import duckdb
@@ -48,6 +49,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextmanager
+def conf_override(spark, confs: dict[str, str]):
+    """Set session confs for the duration of a with-block. On exit each
+    key gets its prior value back, or is unset if it had none. For tests
+    only: the package never writes a session's confs outside
+    session.configure and session.clone_with."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

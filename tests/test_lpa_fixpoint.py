@@ -20,7 +20,7 @@ from makerdao_dw_spark.queries import oracles_dict, queries_dict
 from makerdao_dw_spark.queries.basket_common import basket_ctes_duck
 from makerdao_dw_spark.queries.insights import _LPA_MIN_ITEM
 
-from .conftest import SF_DIR, compare_with_oracle, duck_con
+from .conftest import SF_DIR, compare_with_oracle, conf_override, duck_con
 
 # "-no-broadcast": broadcasts disabled, the plan a node set past Spark's
 # broadcast limit takes (arcs partitioned by neighbor, not voter)
@@ -73,7 +73,7 @@ def _run(spark, pairs, layout, monkeypatch, max_rounds=10):
     no_bcast = {}
     if layout.endswith("-no-broadcast"):
         no_bcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
-    with monkeypatch.context() as m, S.conf_override(spark, no_bcast):
+    with monkeypatch.context() as m, conf_override(spark, no_bcast):
         calls = []
         if layout.startswith("bucketed"):
             n_pairs = len({(min(p), max(p)) for p in pairs if p[0] != p[1]})

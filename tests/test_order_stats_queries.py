@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from makerdao_dw_spark.operators.order_stats import _PARALLEL_CONF
+from makerdao_dw_spark.operators import order_stats
 from makerdao_dw_spark.queries import queries_dict
 
 GATED = [
@@ -27,14 +27,13 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("name", GATED)
-def test_gate_parity(spark, sf_dir, name):
+def test_gate_parity(spark, sf_dir, name, monkeypatch):
+    """use_parallel decides from input size alone: a size of 0 forces
+    the serial path, an unsizable input (None) the parallel one."""
     qd = queries_dict()
-    try:
-        spark.conf.set(_PARALLEL_CONF, "false")
-        small = _rows(qd[name](spark, sf_dir))
-        spark.conf.set(_PARALLEL_CONF, "true")
-        big = _rows(qd[name](spark, sf_dir))
-    finally:
-        spark.conf.unset(_PARALLEL_CONF)
+    monkeypatch.setattr(order_stats, "input_bytes", lambda sf_dir, table: 0)
+    small = _rows(qd[name](spark, sf_dir))
+    monkeypatch.setattr(order_stats, "input_bytes", lambda sf_dir, table: None)
+    big = _rows(qd[name](spark, sf_dir))
     assert small == big
     assert len(small) > 0

@@ -12,7 +12,7 @@ import pytest
 
 from makerdao_dw_spark.queries import REGISTRY
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, conf_override
 
 
 def plan_str(df, mode: str = "formatted") -> str:
@@ -438,14 +438,10 @@ def test_q21_agg_and_windows_reuse_join_partitioning(spark):
     hash(orderkey) partitioning — the ONLY hash exchanges in the final
     plan are the two join inputs plus the tiny s_name rollup. A plan
     that re-shuffles for the agg or the windows shows 5."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_override(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = run(spark, "q21_waiting_suppliers")
         df.collect()
         ep = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     final = ep.split("== Initial Plan ==")[0]
     assert "SortMergeJoin" in final, final
     assert final.count("Exchange hashpartitioning") == 3, final

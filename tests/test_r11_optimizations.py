@@ -98,33 +98,35 @@ def test_materialize_lazy_registers_without_computing(spark):
 
 
 def test_state_partitions_derivation(spark, tmp_path):
-    """state_partitions: ceil(bytes/32MB) with a floor of 4 and a cap at
-    the session's shuffle-partition count."""
-    from makerdao_dw_spark.streaming.jobs import _STATE_PART_TARGET_BYTES, state_partitions
+    """The drains' state partitions (input_partitions, floor 4):
+    ceil(bytes/32MB) with a floor of 4 and a cap at the session's
+    shuffle-partition count."""
+    from makerdao_dw_spark.session import _PART_TARGET_BYTES, input_partitions
+
+    from .conftest import conf_override
 
     # tiny file -> floor
     f = tmp_path / "events.parquet"
     f.write_bytes(b"x" * 1024)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        assert state_partitions(spark, str(tmp_path), "events") == 4
+    key = "spark.sql.shuffle.partitions"
+    with conf_override(spark, {key: "16"}):
+        assert input_partitions(spark, str(tmp_path), "events", floor=4) == 4
         # 5 targets' worth of bytes -> 5 partitions (between floor and cap)
-        f.write_bytes(b"x" * (5 * _STATE_PART_TARGET_BYTES - 1))
-        assert state_partitions(spark, str(tmp_path), "events") == 5
-        # huge input -> capped at the session shuffle-partition count
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        assert state_partitions(spark, str(tmp_path), "events") == 4
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        f.write_bytes(b"x" * (5 * _PART_TARGET_BYTES - 1))
+        assert input_partitions(spark, str(tmp_path), "events", floor=4) == 5
+    # huge input -> capped at the session shuffle-partition count
+    with conf_override(spark, {key: "4"}):
+        assert input_partitions(spark, str(tmp_path), "events", floor=4) == 4
 
 
 def test_drain_restores_session_confs(spark, tmp_path):
-    """drain pins state partitions and disables the no-data batch only
-    for the drain's duration — the session confs come back."""
+    """A stream opened on drain_session() runs with the pinned state
+    partitions and without the no-data batch, and the caller's session
+    confs are never written: the rows come back on the caller's session,
+    whose confs are unchanged."""
     import pandas as pd
 
-    from makerdao_dw_spark.streaming.jobs import drain
+    from makerdao_dw_spark.streaming.jobs import drain, drain_session
 
     src = tmp_path / "src"
     src.mkdir()
@@ -132,17 +134,12 @@ def test_drain_restores_session_confs(spark, tmp_path):
         src / "part-0.parquet"
     )
     schema = spark.read.parquet(str(src)).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .parquet(str(src))
-        .groupBy("k")
-        .count()
-    )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    out = drain(sdf, "complete", state_parts=3)
+    stream_spark = drain_session(spark, 3)
+    assert stream_spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert stream_spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "false"
+    sdf = stream_spark.readStream.schema(schema).parquet(str(src)).groupBy("k").count()
+    before = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    out = drain(sdf, "complete", spark)
+    assert out.sparkSession is spark
     assert out.count() == 2
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old_parts
-    assert (
-        spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-        == "true"
-    )
+    assert spark._jsparkSession.sessionState().conf().getAllConfs().toString() == before

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from .conftest import conf_override
+
 
 def test_aqe_splits_skewed_join(spark):
     """90% of the left rows share one key. With AQE skew handling tuned
@@ -28,20 +30,11 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_override(spark, confs):
         j = left.join(right, "k")
         j.collect()  # execute THIS plan instance (count() would build another)
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):

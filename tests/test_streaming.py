@@ -298,30 +298,36 @@ def test_stateful_accumulates_across_batches(spark, tmp_path):
     assert final[2]["n_events"] == 2 and final[2]["min_value"] == 0.5
 
 
-def test_rocksdb_state_store_matches_default(spark):
+def test_rocksdb_state_store_matches_default(spark, monkeypatch):
     """The RocksDB state store provider (the 100 TB choice: state spills
     to local disk instead of living on the executor heap) produces
     byte-identical windowed-aggregation results to the default provider.
     Provider is picked per-query at checkpoint creation, so flipping the
-    conf between runs is safe with fresh checkpoints."""
+    conf between runs is safe with fresh checkpoints. The provider is a
+    caller conf: the drain runs on a clone of the caller's session, so
+    the test also checks, from the drain's last progress, that the
+    clone's state store was RocksDB."""
     from makerdao_dw_spark.queries.streaming import streaming_windowed_counts
+    from makerdao_dw_spark.streaming import jobs
 
-    from .conftest import SF_DIR
+    from .conftest import SF_DIR, conf_override
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
+    progress = []
+    real = jobs._await_available_now
+    monkeypatch.setattr(
+        jobs, "_await_available_now", lambda w, what: progress.append(real(w, what)) or progress[-1]
+    )
+
+    def rocksdb_metrics() -> set[str]:
+        ops = progress[-1]["stateOperators"]
+        return {k for op in ops for k in op.get("customMetrics", {}) if k.startswith("rocksdb")}
+
     base = [tuple(r) for r in streaming_windowed_counts(spark, SF_DIR).collect()]
-    try:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    assert not rocksdb_metrics()
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_override(spark, {"spark.sql.streaming.stateStore.providerClass": provider}):
         rocks = [tuple(r) for r in streaming_windowed_counts(spark, SF_DIR).collect()]
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    assert rocksdb_metrics()
     assert sorted(base) == sorted(rocks)
 
 
@@ -338,7 +344,7 @@ def test_stream_table_reads_directory_shaped_tables(spark, tmp_path):
     d = str(tmp_path / "scaled")
     src.repartition(4).write.parquet(os.path.join(d, "events.parquet"))
 
-    got = drain(stream_table(spark, d, "events").groupBy().count(), "complete")
+    got = drain(stream_table(spark, d, "events").groupBy().count(), "complete", spark)
     assert got.collect()[0][0] == n
 
 
@@ -366,7 +372,7 @@ def test_stream_table_reads_hive_partitioned_tables(spark, tmp_path):
     by_part = {
         r["block_range"]: r["n"]
         for r in drain(
-            df.groupBy("block_range").agg(F.count("*").alias("n")), "complete"
+            df.groupBy("block_range").agg(F.count("*").alias("n")), "complete", spark
         ).collect()
     }
     assert sum(by_part.values()) == n and len(by_part) == 4
@@ -417,7 +423,7 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     deduped = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = drain(deduped.select("event_id"), "append")
+    out = drain(deduped.select("event_id"), "append", spark)
     got = sorted(r.event_id for r in out.collect())
     assert got == [1, 2, 3], got
 
@@ -457,15 +463,17 @@ def test_dedup_state_stays_bounded_across_micro_batches(spark, sf_dir, tmp_path)
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     schema = spark.read.parquet(src).schema
 
+    stream_spark = jobs.drain_session(spark, 2)
+
     def leg():
-        return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        return stream_spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
 
     state = {}
     for form, dedup in (
         ("bounded", dedup_events),
         ("unbounded", lambda sdf: sdf.dropDuplicates(["event_id"])),
     ):
-        out = jobs.drain(dedup(leg().unionByName(leg())).select("event_id"), "append", state_parts=2)
+        out = jobs.drain(dedup(leg().unionByName(leg())).select("event_id"), "append", spark)
         assert out.count() == out.distinct().count() == n_keys, form
         state[form] = jobs.LAST_STATE_ROWS
     assert state["unbounded"] == n_keys, state
@@ -474,11 +482,13 @@ def test_dedup_state_stays_bounded_across_micro_batches(spark, sf_dir, tmp_path)
 
 def test_drain_leaves_no_temp_entries(spark, sf_dir):
     """A finished drain removes its checkpoint dir and its memory-sink
-    temp view: the temp dir holds the same entries after a drain as
-    before it, no `stream_sink_*` view is left in the catalog, and the
-    returned frame still counts."""
+    views: the temp dir holds the same entries after a drain as before
+    it, no `stream_sink_*` view is left in the catalog of the caller,
+    of its kept clones or of the global temp views, and the returned
+    frame still counts."""
     import tempfile
 
+    from makerdao_dw_spark import session as S
     from makerdao_dw_spark.queries.streaming import streaming_windowed_counts
 
     tmp = tempfile.gettempdir()
@@ -486,5 +496,13 @@ def test_drain_leaves_no_temp_entries(spark, sf_dir):
     before = set(os.listdir(tmp))
     assert streaming_windowed_counts(spark, sf_dir).count() > 0
     assert set(os.listdir(tmp)) ^ before == set()
-    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    sessions = [spark, *spark.__dict__[S._CLONES_ATTR].values()]
+    global_db = spark.conf.get("spark.sql.globalTempDatabase")
+    views = [
+        t.name
+        for s in sessions
+        for db in (None, global_db)
+        for t in s.catalog.listTables(db)
+        if t.name.startswith("stream_sink_")
+    ]
     assert views == [], views

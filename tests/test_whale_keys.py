@@ -21,6 +21,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import conf_override
+
 N_WHALE = 1_000_000
 WHALE_CAP = 1_000  # small cap so truncation actually triggers
 
@@ -157,17 +159,10 @@ def test_salted_join_spreads_whale_and_matches_unsalted(spark):
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
         "spark.sql.shuffle.partitions": "64",
     }
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, overrides):
         out = salted_join(fact, dim, "k", salt=16, salt_source=F.col("id"))
         pid = out.select(F.spark_partition_id().alias("pid"))
         counts = {r["pid"]: r["count"] for r in pid.groupBy("pid").count().collect()}
-    finally:
-        for k, v in prev.items():
-            if v is not None:
-                spark.conf.set(k, v)
 
     assert sum(counts.values()) == n
     # 16 salts hashed into 64 shuffle partitions: the whale must not

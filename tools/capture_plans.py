@@ -29,7 +29,7 @@ def main() -> None:
         "--conf",
         action="append",
         default=[],
-        help="extra session conf key=value (e.g. spark.makerdao.rank.parallel=true)",
+        help="extra session conf key=value (e.g. spark.sql.autoBroadcastJoinThreshold=-1)",
     )
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
