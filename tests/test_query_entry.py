@@ -263,20 +263,38 @@ CONF_SENSITIVE = [
 def test_conf_sensitive_queries_keep_one_clone_per_conf_set(spark, sf_dir):
     """Three rounds of the conf-sensitive queries make one clone per
     distinct conf set (the drains' state partitions, the drain without
-    them, the CTE loop's), all in round 1. Listeners: Spark itself adds
-    one to the context's bus per stateful stream start (each streaming
-    query runs on its own internal session, whatever session started
-    it), so rounds 2 and 3 add exactly one per drain; a clone made per
-    drain would add a second."""
+    them, the CTE loop's), all in round 1.
+
+    Listeners: the test counts the `StreamingQueryListenerBus` entries
+    on the context's bus, which nothing removes. Spark itself adds one
+    per stateful stream start (each streaming query runs on its own
+    internal session, whatever session started it), so rounds 2 and 3
+    add exactly one per drain; a new clone per drain would add a second.
+    It does not count the bus's total size: once a session holds a
+    `QueryExecutionListener` (the `ObservationManager` registers one at
+    its first `observe`), every `cloneSession()` of it, a stream start's
+    internal one too, adds an `ExecutionListenerBus` that the
+    `ContextCleaner` removes when the clone is garbage-collected. The
+    `observe` below puts the session in that state whatever ran
+    before."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    spark.range(1).observe(Observation("clone_test"), F.count(F.lit(1))).count()
     spark.__dict__.pop(S._CLONES_ATTR, None)
     bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def stream_buses():
+        return sum(l.getClass().getSimpleName() == "StreamingQueryListenerBus"
+                   for l in bus.listeners())
+
     qd = queries_dict()
-    clones, listeners = [], [bus.listeners().size()]
+    clones, listeners = [], [stream_buses()]
     for _ in range(3):
         for name in CONF_SENSITIVE:
             assert qd[name](spark, sf_dir).count() > 0, name
         clones.append(len(spark.__dict__[S._CLONES_ATTR]))
-        listeners.append(bus.listeners().size())
+        listeners.append(stream_buses())
     assert clones == [3, 3, 3]
     drains = len(CONF_SENSITIVE) - 1
     assert listeners[2] - listeners[1] == listeners[3] - listeners[2] == drains, listeners
